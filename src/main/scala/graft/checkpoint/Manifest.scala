@@ -5,19 +5,25 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
 /** Checkpointed partition manifest for resumable validation runs
   * (north-star requirement: "resumes from a checkpointed manifest of
   * completed Iceberg partitions carrying per-partition lineage
   * (snapshot-id, file list) and metrics").
   *
-  * Format: one JSON object per line (append-only JSONL) —
+  * Format: JSONL, one object per completed partition, sorted by
+  * partition —
   * `{"partition":"3","rows":N,"violations":M,"pass":true,
   *   "snapshot_id":"...","files":[...],"completed_at_ms":T}`.
-  * Writes are atomic (temp file + ATOMIC_MOVE of the whole manifest) so
-  * a crash mid-write never records a partition whose violations were not
-  * fully emitted (SURVEY.md §7.4 hard part 5) — the violations parquet is
-  * written (and committed by Spark's output committer) BEFORE the
-  * manifest line is added.
+  * Each [[commit]] rewrites the whole file atomically (temp file +
+  * ATOMIC_MOVE), so a crash mid-write never records a partition whose
+  * violations were not fully emitted (SURVEY.md §7.4 hard part 5) — the
+  * violations parquet is written (and committed by Spark's output
+  * committer) BEFORE the manifest is rewritten.
   *
   * Resume = anti-filter: partitions present in the manifest are skipped;
   * everything else reprocesses. Idempotent because each partition's
@@ -35,72 +41,54 @@ object Manifest {
 
   def empty: State = State(Map.empty)
 
+  // snake_case keeps the on-disk keys (snapshot_id, completed_at_ms);
+  // a line missing a key or holding a null is malformed, not a default
+  private val mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .enable(DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+    .build()
+
+  /** Reads the manifest at `path` (empty when the file does not exist).
+    * A line that does not parse as an [[Entry]] fails the load with the
+    * file and line number: a silently dropped entry would re-validate
+    * the partition, a defaulted one would skip it. */
   def load(path: String): State = {
     val p = Paths.get(path)
     if (!Files.exists(p)) return empty
-    val entries = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.trim.nonEmpty)
-      .map(parseLine)
-      .map(e => e.partition -> e)
+    val entries = Files.readAllLines(p, StandardCharsets.UTF_8).asScala.zipWithIndex
+      .filter(_._1.trim.nonEmpty)
+      .map { case (line, i) =>
+        val e = try mapper.readValue(line, classOf[Entry]) catch {
+          case ex: JsonProcessingException =>
+            throw new IllegalArgumentException(
+              s"malformed manifest entry at $path:${i + 1}: ${ex.getOriginalMessage}", ex)
+        }
+        e.partition -> e
+      }
       .toMap
     State(entries)
   }
 
-  /** Append one completed partition, atomically rewriting the manifest. */
-  def markComplete(
-      path: String, partition: String, rows: Long, violations: Long, pass: Boolean,
-      snapshotId: String = "", files: Seq[String] = Nil): Unit = synchronized {
-    val now = System.currentTimeMillis()
-    val entry = Entry(partition, rows, violations, pass, snapshotId, files, now)
-    val existing = load(path).entries + (partition -> entry)
+  /** Records `entries` as complete (replacing any earlier entry of the
+    * same partition) in one atomic rewrite of the manifest. */
+  def commit(path: String, entries: Seq[Entry]): Unit = synchronized {
+    val merged = load(path).entries ++ entries.map(e => e.partition -> e)
     val p = Paths.get(path)
     Option(p.getParent).foreach(Files.createDirectories(_))
     val tmp: Path = Files.createTempFile(
       Option(p.getParent).getOrElse(Paths.get(".")), ".manifest", ".tmp")
-    val body = existing.values.toSeq.sortBy(_.partition).map(render).mkString("", "\n", "\n")
+    val body = merged.values.toSeq.sortBy(_.partition)
+      .map(mapper.writeValueAsString).mkString("", "\n", "\n")
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def render(e: Entry): String = {
-    val fs = e.files.map(f => "\"" + esc(f) + "\"").mkString("[", ",", "]")
-    s"""{"partition":"${esc(e.partition)}","rows":${e.rows},"violations":${e.violations},""" +
-      s""""pass":${e.pass},"snapshot_id":"${esc(e.snapshotId)}","files":$fs,""" +
-      s""""completed_at_ms":${e.completedAtMs}}"""
-  }
-
-  /** Minimal JSONL parser for our own fixed shape (no external deps). */
-  private def parseLine(line: String): Entry = {
-    def str(key: String): String = {
-      val m = ("\"" + key + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-        .findFirstMatchIn(line)
-      m.map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).getOrElse("")
-    }
-    def num(key: String): Long = {
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(line)
-        .map(_.group(1).toLong).getOrElse(0L)
-    }
-    def bool(key: String): Boolean =
-      ("\"" + key + "\":(true|false)").r.findFirstMatchIn(line)
-        .exists(_.group(1) == "true")
-    def arr(key: String): Seq[String] = {
-      ("\"" + key + "\":\\[(.*?)\\](,|\\})").r.findFirstMatchIn(line)
-        .map(_.group(1)).filter(_.nonEmpty)
-        .map(inner => "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(inner)
-          .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-          .toSeq)
-        .getOrElse(Nil)
-    }
-    Entry(str("partition"), num("rows"), num("violations"), bool("pass"),
-      str("snapshot_id"), arr("files"), num("completed_at_ms"))
-  }
+  /** Records one completed partition: a one-entry [[commit]]. */
+  def markComplete(
+      path: String, partition: String, rows: Long, violations: Long, pass: Boolean,
+      snapshotId: String = "", files: Seq[String] = Nil): Unit =
+    commit(path, Seq(Entry(partition, rows, violations, pass, snapshotId, files,
+      System.currentTimeMillis())))
 }

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Violation
@@ -13,13 +13,11 @@ import graft.sources.SeqTableGen
   * Modes:
   *   gen      <path> <nRows> [nBuckets]     — write a deterministic
   *            partitioned tokenized-sequence table (Iceberg stand-in)
-  *   validate <path> <reportOut> [manifest] — run the full check suite
-  *            over a partitioned sequence table; emits violations
-  *            parquet + markdown report; resumes from <manifest> if
-  *            given (see [[graft.checkpoint.Manifest]])
-  *   validate-batch <path> <out> [manifest] — same checks, ONE job for
-  *            all pending partitions (scales past 10^4 partitions where
-  *            the per-partition loop is driver-bound; coarser resume)
+  *   validate <path> <out> [manifest]       — run the full check suite
+  *            over a sequence table ([[validateBatch]]); emits violations
+  *            parquet + per-partition verdicts; resumes from <manifest>
+  *            if given (see [[graft.checkpoint.Manifest]])
+  *   validate-batch <path> <out> [manifest] — the same mode, same path
   *   stream-validate <path> <out>           — constraint pass as a file
   *            stream with exactly-once checkpoint resume
   *   drift-baseline <path> <out> [lo hi]    — store n_tok/source
@@ -60,9 +58,7 @@ object Main {
         val buckets = rest.headOption.map(_.toInt).getOrElse(16)
         SeqTableGen.writePartitioned(SeqTableGen.generate(spark, n.toLong), path, buckets)
         println(s"""{"mode":"gen","path":"$path","rows":$n,"buckets":$buckets}""")
-      case "validate" :: path :: out :: rest =>
-        validatePath(spark, path, out, rest.headOption)
-      case "validate-batch" :: path :: out :: rest =>
+      case ("validate" | "validate-batch") :: path :: out :: rest =>
         validateBatch(spark, path, out, rest.headOption)
       case "demo" :: rest =>
         val n = rest.headOption.map(_.toLong).getOrElse(100000L)
@@ -195,13 +191,6 @@ object Main {
     spark.stop()
   }
 
-  /** Feed-health battery over `<dir>/events.parquet` — the operational
-    * readout an ingest owner checks before trusting a snapshot: is the
-    * stream growing or churning (growth accounting), which types are
-    * still producing (decayed volume), is the mix stationary or still
-    * drifting (Markov stationarity), how weekly is it (η²), who leads
-    * whom (lead–lag), and the rolling-distinct trend. Each signal is
-    * one JSON line so a supervisor can grep/parse them independently. */
   /** Physical-design advisor battery over the documents table: one
     * JSON line per signal — per-column encoding recommendation,
     * sortedness, the stored table's file skew, and the actionable
@@ -264,6 +253,13 @@ object Main {
     }
   }
 
+  /** Feed-health battery over `<dir>/events.parquet` — the operational
+    * readout an ingest owner checks before trusting a snapshot: is the
+    * stream growing or churning (growth accounting), which types are
+    * still producing (decayed volume), is the mix stationary or still
+    * drifting (Markov stationarity), how weekly is it (η²), who leads
+    * whom (lead–lag), and the rolling-distinct trend. Each signal is
+    * one JSON line so a supervisor can grep/parse them independently. */
   def health(spark: SparkSession, dir: String): Unit = {
     import graft.operators.{Profile, Sessionize}
     val ev = spark.read.parquet(s"$dir/events.parquet")
@@ -313,64 +309,41 @@ object Main {
       s""""rolling_7d":${rd.getLong(3)}}""")
   }
 
-  /** Full check suite over a stored partitioned table. */
-  def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
+  private val BucketDir = "part_bucket=([^/]+)/".r.unanchored
+
+  /** Full check suite over a stored sequence table: one set of Spark
+    * jobs computes every pending partition's violations and verdicts,
+    * writes the violations `partitionBy(part_bucket)` under
+    * `<out>/violations`, and then commits every verdict to the manifest
+    * in one atomic rewrite. A table without a `part_bucket` column
+    * validates as the single partition `all`.
+    *
+    * Verdicts are a groupBy(part_bucket) aggregate, so the job count
+    * does not grow with the partition count. Resume is per run: a crash
+    * before the manifest commit marks nothing, and the rerun redoes
+    * every still-pending partition.
+    *
+    * The referential allowlist is driver-sized (a literal Seq), so the
+    * check compiles into the same fused predicate pass as the other
+    * constraints — a broadcast hash join against a 3-row dimension would
+    * buy nothing and cost another full scan of the corpus.
+    * [[graft.operators.Referential.violations]] remains the path for
+    * allowlists that live in a real dimension table. */
+  def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
     import graft.checkpoint.Manifest
-    val df = spark.read.parquet(path)
-    val partitions: Seq[String] =
-      if (df.columns.contains("part_bucket"))
-        df.select("part_bucket").distinct().collect().map(_.get(0).toString).sorted.toSeq
+    val stored = spark.read.parquet(path)
+    val partitioned = stored.columns.contains("part_bucket")
+    val df = if (partitioned) stored else stored.withColumn("part_bucket", lit("all"))
+    val partitions =
+      if (partitioned) df.select("part_bucket").distinct()
+        .collect().map(_.get(0).toString).sorted.toSeq
       else Seq("all")
     val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
     val todo = partitions.filterNot(mf.isComplete)
     println(s"""{"mode":"validate","partitions":${partitions.size},"todo":${todo.size}}""")
-    todo.foreach { p =>
-      val slice = if (p == "all") df else df.where(col("part_bucket") === p.toInt)
-      // same directory layout as validate-batch (part_bucket=N), so one
-      // out dir can be shared across modes without ambiguity
-      val (verdict, nViol, nRows) = runChecks(spark, slice, s"$out/violations/part_bucket=$p")
-      manifest.foreach { mfPath =>
-        // lineage: the concrete files this partition's verdict was read
-        // from (Iceberg snapshot-id slot carries the scan timestamp for
-        // the parquet stand-in)
-        // inputFiles reports the whole relation, not the pruned scan —
-        // restrict lineage to this partition's directory
-        val partFiles =
-          if (p == "all") slice.inputFiles.toSeq
-          else slice.inputFiles.toSeq.filter(_.contains(s"part_bucket=$p/"))
-        Manifest.markComplete(mfPath, p, nRows, nViol, verdict,
-          snapshotId = s"scan-${System.currentTimeMillis()}",
-          files = partFiles.sorted)
-      }
-      println(s"""{"partition":"$p","rows":$nRows,"violations":$nViol,"pass":$verdict}""")
-    }
-  }
-
-  /** Batch flavor of [[validatePath]]: ONE Spark job computes every
-    * pending partition's violations and verdicts, with the violations
-    * written `partitionBy(part_bucket)` and the manifest marked per
-    * partition afterwards.
-    *
-    * Trade vs the per-partition loop: the loop gives fine-grained resume
-    * (each partition commits independently) but runs one driver-
-    * scheduled job per partition — at 10^4+ partitions the driver loop,
-    * not the cluster, is the bottleneck. Batch mode scales to any
-    * partition count (verdicts are a groupBy(part_bucket) aggregate) at
-    * the cost of coarser resume: a crash before the write commits marks
-    * nothing, and the rerun redoes all still-pending partitions.
-    * Completed partitions from EITHER mode are skipped by both. */
-  def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
-    import graft.checkpoint.Manifest
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("part_bucket"),
-      "validate-batch needs a part_bucket-partitioned table (gen mode writes one)")
-    val partitions = df.select("part_bucket").distinct()
-      .collect().map(_.get(0).toString).sorted.toSeq
-    val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
-    val todo = partitions.filterNot(mf.isComplete)
-    println(s"""{"mode":"validate-batch","partitions":${partitions.size},"todo":${todo.size}}""")
     if (todo.isEmpty) return
-    val slice = df.where(col("part_bucket").isin(todo.map(_.toInt): _*))
+    val slice =
+      if (partitioned) df.where(col("part_bucket").isin(todo.map(_.toInt): _*)) else df
 
     val constraints =
       ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources) :+
@@ -380,15 +353,13 @@ object Main {
     val vio = ValidationPass.seqViolations(slice, constraints, carryCols = Seq("part_bucket"))
     // global uniqueness in one shuffle (the bucketing co-locates equal
     // keys, so per-bucket == global; computed over the whole slice here)
-    val dups = Uniqueness.duplicatesSimple(slice, "doc_id")
-    val uniq = slice.join(dups, Seq("doc_id"))
-      .select(col("part_bucket"), col("doc_id"),
-        lit("R_UNIQUE_DOCID").as("rule_id"),
-        concat(lit("n_occurrences="), col("n_occurrences").cast("string"))
-          .as("offending_value"))
+    val uniq = Uniqueness.violations(slice, "doc_id", carryCols = Seq("part_bucket"))
     // persist the (small, violations-only) frame once: the write and the
-    // per-partition counts both read the cached copy, so the corpus scans
-    // ONCE and the counts come from THIS run's rows — never from the sink.
+    // per-partition counts both read the cached copy, so the counts come
+    // from THIS run's rows — never from the sink. Building it reads the
+    // slice three times (the fused constraint pass, the uniqueness
+    // aggregate and its join-back); the partition list and the row
+    // counts each scan the partition column once more.
     // (Re-reading $out/violations was wrong: a pending partition with
     // zero violations writes no directory, so stale files from an earlier
     // run into the same out dir would be counted and the partition
@@ -413,53 +384,34 @@ object Main {
       .parquet(s"$out/violations")
 
     // per-partition verdicts: two tiny aggregates (shuffle rows =
-    // O(partitions)), then the manifest commits each partition
+    // O(partitions))
     val rowsByPart = slice.groupBy("part_bucket").agg(count(lit(1)).as("n"))
       .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
     val violByPart = all
       .groupBy("part_bucket").agg(count(lit(1)).as("n"))
       .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
     all.unpersist()
-    val snapshot = s"scan-${System.currentTimeMillis()}"
-    todo.foreach { p =>
-      val nRows = rowsByPart.getOrElse(p, 0L)
-      val nViol = violByPart.getOrElse(p, 0L)
-      manifest.foreach { mfPath =>
-        val partFiles = slice.inputFiles.toSeq.filter(_.contains(s"part_bucket=$p/"))
-        Manifest.markComplete(mfPath, p, nRows, nViol, nViol == 0,
-          snapshotId = snapshot, files = partFiles.sorted)
+    val verdicts = todo.map { p =>
+      (p, rowsByPart.getOrElse(p, 0L), violByPart.getOrElse(p, 0L))
+    }
+    manifest.foreach { mfPath =>
+      // lineage: the concrete files each partition's verdict was read
+      // from (the Iceberg snapshot-id slot carries the scan timestamp for
+      // the parquet stand-in). inputFiles lists the whole relation, not
+      // the pruned scan, so it is listed once and split by directory.
+      val filesByPart = stored.inputFiles.toSeq.sorted.groupBy {
+        case BucketDir(p) if partitioned => p
+        case _ => "all"
       }
+      val now = System.currentTimeMillis()
+      Manifest.commit(mfPath, verdicts.map { case (p, nRows, nViol) =>
+        Manifest.Entry(p, nRows, nViol, nViol == 0, s"scan-$now",
+          filesByPart.getOrElse(p, Nil), now)
+      })
+    }
+    verdicts.foreach { case (p, nRows, nViol) =>
       println(s"""{"partition":"$p","rows":$nRows,"violations":$nViol,"pass":${nViol == 0}}""")
     }
-  }
-
-  /** The five constraint checks + referential fused into ONE scan, plus
-    * the uniqueness aggregate (the only check that must shuffle);
-    * returns (pass, nViolations, nRows).
-    *
-    * The referential allowlist here is driver-sized (a literal Seq), so
-    * the check compiles into the same fused predicate pass as the other
-    * constraints — a broadcast hash join against a 3-row dimension would
-    * buy nothing and cost a THIRD full scan of the corpus.
-    * [[Referential.violations]] remains the path for allowlists that
-    * live in a real dimension table. */
-  def runChecks(spark: SparkSession, df: DataFrame, violOut: String): (Boolean, Long, Long) = {
-    val constraints =
-      ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources) :+
-      ValidationPass.SeqConstraint("R_REF_SOURCE",
-        col("source").isin(SeqTableGen.RefAllowlist: _*),
-        coalesce(col("source"), lit("<null>")))
-    val vio = ValidationPass.seqViolations(df, constraints)
-    val uniq = Uniqueness.violations(df, "doc_id")
-    val all = vio.unionByName(uniq)
-    // count rides the write job via CollectMetrics — no second read of
-    // the violations parquet (round-1 VERDICT "What's wrong" #6)
-    val obs = org.apache.spark.sql.Observation()
-    all.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(violOut)
-    val nViol = obs.get("n").asInstanceOf[Long]
-    val nRows = df.count()
-    (nViol == 0, nViol, nRows)
   }
 
   /** Training-data pipeline pass over a testdata dir: dedup, similarity,

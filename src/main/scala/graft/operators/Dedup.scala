@@ -347,21 +347,6 @@ object Dedup {
 
   // ---------- MinHash + LSH ----------
 
-  /** k MinHash values over word shingles via the native
-    * [[graft.functions.MinHashSignature]] expression (one string hash per
-    * shingle + k affine rehashes — see its Scaladoc for why the
-    * HOF-composition alternative is 100×+ slower under CollapseProject).
-    * Callers must have registered [[graft.functions.MinHashExpression]]. */
-  def minhashSignature(text: Column, k: Int = 64, shingleN: Int = 3): Column =
-    graft.functions.MinHashExpression.minhash(
-      array_distinct(shingles(text, shingleN)), k)
-
-  /** LSH band keys: bands × (hash of r consecutive signature values).
-    * Jaccard-similar docs (s ≈ 1 - (1 - s^r)^b) collide in ≥1 band. */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), b))
-
   /** Candidate near-duplicate pairs via banded MinHash-LSH, verified with
     * exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
     * id_a < id_b, jaccard ≥ threshold.
@@ -878,18 +863,6 @@ object Dedup {
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         VectorExpressions.cosine(col("v_a"), col("v_b")).as("cosine"))
-      .where(col("cosine") >= threshold)
-  }
-
-  /** Brute-force exact variant (correctness oracle; O(n²) — small inputs
-    * or per-bucket use only). */
-  def embeddingNearDuplicatesExact(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
-    val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        VectorExpressions.cosine(col("a.v"), col("b.v")).as("cosine"))
       .where(col("cosine") >= threshold)
   }
 

@@ -48,29 +48,18 @@ object TextAnalysis {
     * expression on the session lazily via [[analyze]]/callers. */
   def textProfile(text: Column): Column = TextExpressions.textProfile(text)
 
-  /** BPE-ish token count: maximal alphanumeric runs plus single
-    * non-alphanumeric marks each count as one token (the pre-merge
-    * word-splitting regime of byte-pair tokenizers). */
-  def bpeishTokenCount(text: Column): Column =
-    textProfile(text).getField("n_bpeish")
-
   /** Heuristic language ID: argmax of per-language stopword-hit counts
     * (zh by character containment); "und" when no profile hits. */
   def langId(text: Column): Column =
     textProfile(text).getField("lang")
 
-  /** Quality features + a composite score ∈ [0,1]:
-    * length, word count, mean word length, punctuation ratio, stopword
-    * ratio, uppercase ratio, digit ratio — the standard cheap filters
-    * (Gopher/C4-style) as one struct, computed from a single
-    * [[textProfile]] evaluation. */
-  def qualityFeatures(text: Column): Column =
-    qualityFeaturesFrom(text, textProfile(text))
-
-  /** Build the feature struct from an already-projected profile column —
-    * callers that need several derived columns (see [[analyze]]) project
-    * the profile ONCE and feed the attribute here, so the per-row work is
-    * not repeated per consumer. */
+  /** Quality features (length, word count, mean word length and the
+    * punctuation/uppercase/digit/stopword ratios — the cheap
+    * Gopher/C4-style filters) as one struct, built from an
+    * already-projected profile column — callers that need several
+    * derived columns (see [[analyze]]) project the profile ONCE and feed
+    * the attribute here, so the per-row work is not repeated per
+    * consumer. */
   def qualityFeaturesFrom(text: Column, tp: Column): Column = struct(
     length(text).cast("double").as("n_chars"),
     tp.getField("n_words").cast("double").as("n_words"),
@@ -93,8 +82,6 @@ object TextAnalysis {
     val stopFloor = when(round(tp.getField("stopword_ratio"), 4) >= 0.05, 1.0).otherwise(0.7)
     round(wordBand * lenBand * punctCap * stopFloor, 4)
   }
-
-  def qualityScore(text: Column): Column = qualityScoreFrom(textProfile(text))
 
   /** Linear log-odds over TextProfile features with driver-supplied
     * weights — the application half of a FineWeb-style trained quality

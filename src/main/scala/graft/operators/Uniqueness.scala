@@ -63,12 +63,15 @@ object Uniqueness {
     * unbounded (a fully-duplicated corpus has O(distinct keys) entries),
     * and a forced broadcast turns that slow case into a driver OOM —
     * AQE already broadcasts the side when its runtime size qualifies
-    * (round-1 VERDICT "What's wrong" #5). */
-  def violations(df: DataFrame, keyCol: String, ruleId: String = "R_UNIQUE_DOCID"): DataFrame = {
+    * (round-1 VERDICT "What's wrong" #5).
+    * @param carryCols extra input columns passed through to the output,
+    *        as in [[ValidationPass.seqViolations]]. */
+  def violations(df: DataFrame, keyCol: String, ruleId: String = "R_UNIQUE_DOCID",
+                 carryCols: Seq[String] = Nil): DataFrame = {
     val dups = duplicatesSimple(df, keyCol)
     df.join(dups, Seq(keyCol))
-      .select(col(keyCol).as("doc_id"), lit(ruleId).as("rule_id"),
+      .select(carryCols.map(col) ++ Seq(col(keyCol).as("doc_id"), lit(ruleId).as("rule_id"),
         concat(lit("n_occurrences="), col("n_occurrences").cast("string"))
-          .as("offending_value"))
+          .as("offending_value")): _*)
   }
 }

@@ -17,7 +17,6 @@ final class ReportCollector {
   def addError(msg: String): Unit = entries += (("error", msg))
   def addWarning(msg: String): Unit = entries += (("warning", msg))
   def addHeader(msg: String): Unit = entries += (("header", msg))
-  def addSubheader(msg: String): Unit = entries += (("subheader", msg))
   def addDivider(): Unit = entries += (("divider", null))
 
   /** Plain-text log — byte-identical to the reference's get_log. */
@@ -183,15 +182,5 @@ object Report {
     }
 
     (errors, warnings)
-  }
-
-  /** validate_table_core equivalent (validate_core.py:488-531). */
-  def validateTableCore(
-      result: EvalResult,
-      tableName: String,
-      report: ReportCollector = new ReportCollector,
-      includeDetails: Boolean = true): (ReportCollector, Int, Int) = {
-    val (e, w) = compose(result, tableName, report, includeDetails)
-    (report, e, w)
   }
 }

@@ -146,25 +146,53 @@ class SeqEngineSpec extends SparkSpec {
     assert(ValidationPass.seqViolations(clean, constraints).count() === 0)
   }
 
-  test("validate-batch produces the same per-partition verdicts as the loop") {
+  test("validate-batch verdicts, sink and lineage match counts from the operators") {
     import graft.checkpoint.Manifest
     val dir = java.nio.file.Files.createTempDirectory("graft_vb").toString
-    graft.sources.SeqTableGen.writePartitioned(
-      graft.sources.SeqTableGen.generate(spark, 20000), s"$dir/seq", 4)
-    graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out1", Some(s"$dir/m1.jsonl"))
-    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out2", Some(s"$dir/m2.jsonl"))
-    val m1 = Manifest.load(s"$dir/m1.jsonl").entries
-    val m2 = Manifest.load(s"$dir/m2.jsonl").entries
-    assert(m1.keySet === m2.keySet && m1.nonEmpty)
-    m1.keySet.foreach { p =>
-      assert(m1(p).rows === m2(p).rows, s"rows differ for partition $p")
-      assert(m1(p).violations === m2(p).violations, s"violations differ for $p")
-      assert(m1(p).pass === m2(p).pass)
-      assert(m1(p).files === m2(p).files, s"lineage differs for $p")
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 20000), s"$dir/seq", 4)
+    val mf = s"$dir/m.jsonl"
+    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out", Some(mf))
+    val m = Manifest.load(mf).entries
+    val in = spark.read.parquet(s"$dir/seq")
+    val constraints = ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources) :+
+      ValidationPass.SeqConstraint("R_REF_SOURCE",
+        col("source").isin(SeqTableGen.RefAllowlist: _*), coalesce(col("source"), lit("<null>")))
+    def byPart(d: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      d.groupBy("part_bucket").count().collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val rows = byPart(in)
+    val rowVio = byPart(ValidationPass.seqViolations(in, constraints, carryCols = Seq("part_bucket")))
+    val dupVio = byPart(in.join(Uniqueness.duplicatesSimple(in, "doc_id"), Seq("doc_id")))
+    assert(m.keySet === Set("0", "1", "2", "3"))
+    m.foreach { case (p, e) =>
+      val vio = rowVio.getOrElse(p, 0L) + dupVio.getOrElse(p, 0L)
+      assert((e.rows, e.violations, e.pass) === ((rows(p), vio, vio == 0)), s"partition $p")
+      assert(e.files === in.inputFiles.toSeq.filter(_.contains(s"part_bucket=$p/")).sorted)
+      assert(e.files.nonEmpty)
     }
-    // resume: a second batch run has nothing to do (manifest complete)
-    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out2", Some(s"$dir/m2.jsonl"))
-    assert(Manifest.load(s"$dir/m2.jsonl").entries.size === m2.size)
+    assert(byPart(spark.read.parquet(s"$dir/out/violations")) ===
+      m.collect { case (p, e) if e.violations > 0 => p -> e.violations })
+    // resume: a second run has nothing to do and leaves the manifest as is
+    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out", Some(mf))
+    assert(Manifest.load(mf).entries === m)
+  }
+
+  test("validate runs a table without part_bucket as the single partition all") {
+    import graft.checkpoint.Manifest
+    val dir = java.nio.file.Files.createTempDirectory("graft_vall").toString
+    SeqTableGen.generate(spark, 5000).write.parquet(s"$dir/seq")
+    val mf = s"$dir/m.jsonl"
+    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out", Some(mf))
+    val m = Manifest.load(mf).entries
+    assert(m.keySet === Set("all"))
+    val e = m("all")
+    val sink = spark.read.parquet(s"$dir/out/violations/part_bucket=all").count()
+    assert(e.rows === 5000 && e.violations === sink && sink > 0 && !e.pass)
+    assert(e.files === spark.read.parquet(s"$dir/seq").inputFiles.toSeq.sorted)
+    val rerun = new java.io.ByteArrayOutputStream()
+    Console.withOut(rerun) {
+      graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out", Some(mf))
+    }
+    assert(rerun.toString.contains("\"todo\":0"), rerun.toString)
   }
 
   test("validate-batch partial resume: completed sinks untouched, todo sinks purged") {
