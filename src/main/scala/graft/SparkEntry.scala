@@ -1,127 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HistogramAgg, Predicates, TextExpressions, VectorExpressions}
-import graft.model.{Requirement, Rule, RuleType}
-import graft.operators._
-import graft.sources.{Bucketing, JsonIngest, SeqTableGen}
+import graft.operators.ValidationPass
+import graft.queries._
+import graft.sources.SeqTableGen
 
-/** Driver contract — one `queries` entry per implemented operator
-  * (SURVEY.md §2 + the training-pipeline additions), each with a DuckDB
-  * oracle in `oracleSql` where ANSI-SQL-expressible. Every query orders
-  * its rows and aliases every computed column identically on both sides
-  * (the driver compare hashes values under sorted column names).
+/** Driver contract — one [[queries.QuerySpec]] per implemented operator
+  * (SURVEY.md §2 + the training-pipeline additions). Each query is
+  * defined once, in a `graft.queries` family object, next to its DuckDB
+  * oracle where ANSI-SQL-expressible, or marked rows-only with a reason.
+  * Every query orders its rows and aliases every computed column
+  * identically on both sides (the driver compare hashes values under
+  * sorted column names).
   */
 object SparkEntry {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Total-order a frame whose sort input is an expensive, un-exchanged
-    * projection (text profiles, codecs, fingerprints): range
-    * partitioning SAMPLES its child with a separate pass first, so
-    * without a shuffle boundary between them the projection evaluates
-    * TWICE per action. A hash repartition on the leading sort key
-    * materializes the projection once as shuffle files that the sampler
-    * and the sort both read (measured on q_winnow: 1.15 → 0.78 s warm,
-    * 2.2 → 1.1 s cold at sf0.1). Execution-shape only — the trailing
-    * Sort alone defines the result. */
-  private def orderedOnce(df: DataFrame, keys: String*): DataFrame =
-    df.repartition(col(keys.head)).orderBy(keys.map(col): _*)
-
-  /** Oracle-visible tokenized-sequence table derived deterministically
-    * from `documents.doc_id` by pure integer arithmetic, so DuckDB can
-    * rebuild the byte-identical table from the same parquet and the
-    * flagship validation gets a hash-verified CORRECTNESS row (round-1
-    * judge item #1). Same (doc_id, tokens, n_tok, source) shape and the
-    * same five seeded violation classes as [[SeqTableGen]], at mod-97
-    * density. */
-  private[graft] def seqFromDocs(s: SparkSession, dir: String): DataFrame = {
-    val id = col("__id")
-    val len = (id % 7 + 5).cast("int") // 5..11 tokens
-    val toks = transform(sequence(lit(0), len - 1),
-      i => ((id * 31 + i * 17) % 50000).cast("int"))
-    t(s, dir, "documents").select(col("doc_id").as("__id")).select(
-      when(id % 97 === 0, lit("  ")) // blank → R_NONNULL_DOCID (+ regex)
-        .when(id % 97 === 1, concat(lit("DOC-"), id.cast("string"))) // R_REGEX_DOCID
-        .otherwise(format_string("doc_%012d", id)).as("doc_id"),
-      when(id % 97 === 3, concat(array(lit(50007)), slice(toks, 2, 1000000)))
-        .otherwise(toks).as("tokens"), // vocab overflow → R_TOKEN_RANGE
-      when(id % 97 === 2, len + 1).otherwise(len).cast("int").as("n_tok"), // R_NTOK_EQ_SIZE
-      when(id % 97 === 4, lit("scraped")) // R_ENUM_SOURCE
-        .otherwise(element_at(
-          array(lit("web"), lit("books"), lit("code"), lit("wiki")),
-          (id % 4).cast("int") + 1)).as("source"))
-  }
-
-  /** Decontamination corpus: the derived seq table restricted to
-    * well-formed ids (the planted '  '/'DOC-' rows share one literal id
-    * value each, which would merge unrelated docs under one groupBy
-    * key). */
-  private def decontamCorpus(s: SparkSession, d: String): DataFrame =
-    seqFromDocs(s, d).where(col("doc_id").startsWith("doc_"))
-
-  /** Multi-annotator ratings fixture shared by q_krippendorff /
-    * q_label_consensus / q_rater_agreement: item = doc_id div 3, raters
-    * 0..2, value item-determined (agreement) except rater 2 dissents on
-    * %5 docs ('X'); %7 ratings missing. */
-  private def krippRatings(s: SparkSession, d: String): DataFrame = {
-    val item = expr("doc_id div 3")
-    val rater = col("doc_id") % 3
-    val base = when(item % 4 === 0, lit("A"))
-      .when(item % 4 === 1, lit("B")).otherwise(lit("C"))
-    t(s, d, "documents")
-      .where(col("doc_id") % 7 =!= 0)
-      .select(item.as("item"), rater.as("rater"),
-        when(col("doc_id") % 5 === 0 && rater === 2, lit("X"))
-          .otherwise(base).as("value"))
-  }
-
-  /** Deterministic planted benchmark: the suffix (positions 1..len-1) of
-    * every mod-89 doc's CLEAN token formula — each bench row shares all
-    * its 3-grams with its corpus doc, so contamination is guaranteed and
-    * oracle-computable. */
-  private def decontamBench(s: SparkSession, d: String): DataFrame = {
-    val id = col("doc_id")
-    t(s, d, "documents").where(id % 89 === 0)
-      .select(transform(sequence(lit(1), ((id % 7) + 4).cast("int")),
-        i => ((id * 31 + i * 17) % 50000).cast("int")).as("tokens"))
-  }
-
-  /** Shared body of q_psi_source / q_jsd_source: a categorical drift
-    * statistic of documents.source vs its even-doc_id half-sample,
-    * rounded HALF_UP to match SQL round(). */
-  private def sourceDriftStat(
-      s: SparkSession, d: String, alias: String,
-      stat: (Drift.CategoricalProfile, Drift.CategoricalProfile) => Double): DataFrame = {
-    val docs = t(s, d, "documents")
-    val base = Drift.categoricalFreq(docs.where(col("doc_id") % 2 === 0), "source")
-    val obs = Drift.categoricalFreq(docs, "source")
-    import s.implicits._
-    Seq(BigDecimal(stat(obs, base))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      .toDF(alias)
-  }
-
-  /** Shared body of q_asof_clicks / q_asof_next: purchases stamped with
-    * the prior (backward) or next (forward) click of the same user. */
-  private def asofClicksQuery(s: SparkSession, d: String, forward: Boolean): DataFrame = {
-    val prefix = if (forward) "next_" else "click_"
-    val ev = t(s, d, "events")
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts", "value")
-    val clicks = ev.where(col("event_type") === "click")
-      .select("user_id", "ts", "value")
-    AsOfJoin.asOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-        Seq("value"), prefix = prefix, forward = forward)
-      .select(col("event_id"), col("user_id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"), col("value"),
-        date_format(col(s"${prefix}ts"), "yyyy-MM-dd HH:mm:ss").as(s"${prefix}ts"),
-        col(s"${prefix}value"))
-      .orderBy("event_id")
-  }
 
   /** Flagship: full constraint suite over the deterministic tokenized-
     * sequence table — per-rule violation counts (driver smoke-checks
@@ -134,11766 +28,20 @@ object SparkEntry {
       .orderBy("rule_id")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- column profiling (A1/A2/A5 + north-star stats) ----
-
-    "q_colstats_lineitem" -> ((s, d) =>
-      Profile.exactNumericProfileDf(t(s, d, "lineitem"),
-          Seq("l_quantity", "l_extendedprice", "l_discount"))
-        .orderBy("field")),
-
-    "q_approx_profile" -> ((s, d) => { // HLL++ / t-digest sketches: rows-only
-      // scalar columns only — array columns are unhashable for the
-      // driver's pandas-based row sort (round-1 red row)
-      val li = t(s, d, "lineitem")
-      li.agg(
-          count(lit(1)).as("n_rows"),
-          approx_count_distinct(col("l_orderkey")).as("approx_orders"),
-          approx_count_distinct(col("l_partkey")).as("approx_parts"),
-          percentile_approx(col("l_quantity"), array(lit(0.5), lit(0.99)), lit(2500))
-            .as("qs"))
-        .select(col("n_rows"), col("approx_orders"), col("approx_parts"),
-          element_at(col("qs"), 1).as("p50"), element_at(col("qs"), 2).as("p99"))
-    }),
-
-    // exact companion of q_approx_profile: the SAME profile shape with
-    // the sketches swapped for their exact kernels (count_distinct /
-    // interpolated percentile) — SQL-oracle-able vs DuckDB, so the
-    // profile CONTRACT carries a green row while the sketch variant
-    // above stays the documented rows-only path (HLL/t-digest internals
-    // are engine-specific)
-    "q_profile_exact" -> ((s, d) => {
-      // two count_distincts in ONE agg plan as Expand ×3 → a 170k-group
-      // ObjectHashAggregate whose exchange drags the percentile buffers
-      // along; three single-purpose subtrees (each a 2-stage aggregate
-      // over its own pruned column) crossJoined as 1-row frames compute
-      // the identical values with no Expand and 1-row exchanges
-      val li = t(s, d, "lineitem")
-      val a = li.agg(count(lit(1)).as("n_rows"),
-        expr("percentile(CAST(l_quantity AS DOUBLE), array(0.5D, 0.99D))")
-          .as("qs"))
-      val b = li.agg(count_distinct(col("l_orderkey")).as("n_orders"))
-      val c = li.agg(count_distinct(col("l_partkey")).as("n_parts"))
-      a.crossJoin(broadcast(b)).crossJoin(broadcast(c))
-        .select(col("n_rows"), col("n_orders"), col("n_parts"),
-          round(element_at(col("qs"), 1), 4).as("p50"),
-          round(element_at(col("qs"), 2), 4).as("p99"))
-    }),
-
-    // ---- predicate checks (P8-P13 re-expressed over typed tables) ----
-
-    "q_enum_violations" -> ((s, d) => {
-      val rule = Rule("orders", "o_orderpriority", RuleType.EnumT, Requirement.Required,
-        validation = Seq("1-URGENT", "2-HIGH", "3-MEDIUM"))
-      t(s, d, "orders")
-        .where(Predicates.invalid(rule, col("o_orderpriority")))
-        .groupBy(col("o_orderpriority").as("offending_value"))
-        .agg(count(lit(1)).as("n_cells"))
-        .orderBy("offending_value")
-    }),
-
-    "q_regex_check" -> ((s, d) => {
-      val rule = Rule("part", "p_name", RuleType.RegexT, Requirement.Required,
-        pattern = "(small|red|blue) \\w+")
-      t(s, d, "part").agg(
-        sum(when(Predicates.valid(rule, col("p_name")), 1L).otherwise(0L)).as("n_valid"),
-        sum(when(Predicates.invalid(rule, col("p_name")), 1L).otherwise(0L)).as("n_invalid"))
-    }),
-
-    "q_integer_check" -> ((s, d) => {
-      val rule = Rule("events", "value", RuleType.IntegerT, Requirement.Required)
-      t(s, d, "events")
-        .select(col("value").cast("string").as("v"))
-        .agg(
-          sum(when(Predicates.valid(rule, col("v")), 1L).otherwise(0L)).as("n_intlike"),
-          sum(when(Predicates.invalid(rule, col("v")), 1L).otherwise(0L)).as("n_frac"))
-    }),
-
-    "q_multienum_check" -> ((s, d) => {
-      Predicates.register(s)
-      // synthesize a ';'-joined multi-value cell and validate it with the
-      // multi-enum predicate (P11): every trimmed token must be in vocab
-      val rule = Rule("documents", "dirty", RuleType.EnumT, Requirement.Required,
-        validation = Seq("en", "es", "de", "fr", "zh",
-          "src0", "src1", "src2", "src3", "src4"),
-        allowMultiEnum = true)
-      val docs = t(s, d, "documents").select(
-        col("doc_id"),
-        when(col("doc_id") % 2 === 0, concat(col("lang"), lit(";"), col("source")))
-          .otherwise(col("lang")).as("dirty"))
-      docs.agg(
-        sum(when(Predicates.valid(rule, col("dirty")), 1L).otherwise(0L)).as("n_valid"),
-        sum(when(Predicates.invalid(rule, col("dirty")), 1L).otherwise(0L)).as("n_invalid"))
-    }),
-
-    "q_fill_missing" -> ((s, d) => {
-      // fill-choice semantics (P7): blanks refill, textual 'NA' does not
-      val docs = t(s, d, "documents").select(
-        col("doc_id"),
-        when(col("doc_id") % 5 === 0, lit(""))
-          .when(col("doc_id") % 5 === 1, lit("NA"))
-          .otherwise(col("lang")).as("dirty"))
-      docs.select(graft.norm.Normalize.fillMissing(col("dirty"), "FILLED").as("v"))
-        .groupBy("v").agg(count(lit(1)).as("n")).orderBy("v")
-    }),
-
-    "q_window_topk" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-      t(s, d, "orders").where(col("o_custkey") < 50)
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 3)
-        .select(col("o_custkey"), col("rk"), col("o_orderkey"),
-          round(col("o_totalprice"), 2).as("total"))
-        .orderBy("o_custkey", "rk")
-    }),
-
-    "q_null_normalize" -> ((s, d) => {
-      // null-like normalization semantics over a synthesized dirty column
-      val docs = t(s, d, "documents").select(
-        col("doc_id"),
-        when(col("doc_id") % 7 === 0, lit("  "))
-          .when(col("doc_id") % 7 === 1, lit("N/A"))
-          .when(col("doc_id") % 7 === 2, lit("nan"))
-          .otherwise(col("lang")).as("dirty"))
-      docs.select(graft.norm.Normalize.normalizeNullLike(col("dirty")).as("norm"))
-        .groupBy("norm").agg(count(lit(1)).as("n"))
-        .orderBy("norm")
-    }),
-
-    // ---- uniqueness (salted two-level agg) ----
-
-    "q_unique_orderkey" -> ((s, d) => {
-      val o = t(s, d, "orders")
-      val dups = Uniqueness.duplicatesSimple(o, "o_orderkey")
-      o.agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("o_orderkey")).as("n_distinct"))
-        .crossJoin(dups.agg(count(lit(1)).as("n_dup_keys")))
-    }),
-
-    "q_dup_custkeys" -> ((s, d) =>
-      Uniqueness.duplicates(t(s, d, "orders"), "o_custkey")
-        .orderBy("o_custkey")),
-
-    // ---- referential (broadcast anti join) ----
-
-    "q_referential_orphans" -> ((s, d) => {
-      val allow = t(s, d, "nation").where(col("n_regionkey") === 0)
-      Referential.orphans(t(s, d, "customer"), "c_nationkey", allow, "n_nationkey")
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_orphans"))
-        .orderBy("c_nationkey")
-    }),
-
-    "q_orphan_lineitems" -> ((s, d) =>
-      Referential.orphans(t(s, d, "lineitem"), "l_orderkey", t(s, d, "orders"), "o_orderkey")
-        .agg(count(lit(1)).as("n_orphans"))),
-
-    // ---- drift: histogram sketch + chi-square ----
-
-    "q_histogram_quantity" -> ((s, d) => {
-      HistogramAgg.register(s)
-      t(s, d, "lineitem")
-        .agg(HistogramAgg.histogram(col("l_quantity"), 0.0, 50.0, 25).as("h"))
-        .select(posexplode(col("h")).as(Seq("bin_idx", "n")))
-        .where(col("n") > 0) // SQL GROUP BY only yields non-empty bins
-        .orderBy("bin_idx")
-    }),
-
-    "q_quantiles_quantity" -> ((s, d) =>
-      t(s, d, "lineitem").agg(
-        percentile(col("l_quantity"), array(lit(0.25), lit(0.5), lit(0.75)))
-          .as("qs"))
-        .select(
-          element_at(col("qs"), 1).as("p25"),
-          element_at(col("qs"), 2).as("p50"),
-          element_at(col("qs"), 3).as("p75"))),
-
-    "q_source_freq" -> ((s, d) =>
-      t(s, d, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n")).orderBy("source")),
-
-    "q_chi_uniform" -> ((s, d) => {
-      // Pearson chi-square of documents.source vs uniform expectation —
-      // fully inside Catalyst: the total row count is a cross-joined
-      // single-row aggregate over the (tiny) grouped frame, not a
-      // separate driver-side count() pass over the corpus
-      val grouped = t(s, d, "documents").groupBy("source")
-        .agg(count(lit(1)).as("obs"))
-      val total = grouped.agg(sum(col("obs")).cast("double").as("n"))
-      grouped.crossJoin(total)
-        .select((col("n") / 20.0).as("exp"), col("obs"))
-        .agg(round(sum((col("obs") - col("exp")) * (col("obs") - col("exp"))
-          / col("exp")), 6).as("chi_square"))
-    }),
-
-    // per-group drift verdicts from ONE grouped sketch aggregation:
-    // each l_returnflag's l_quantity distribution KS-tested against the
-    // global baseline (the per-partition pass/fail pattern at sketch
-    // cost); the oracle rebuilds every per-group ECDF exactly
-    "q_ks_by_flag" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val base = Drift.numericHistogram(li, "l_quantity", 0.0, 55.0, 64)
-      Drift.ksByGroup(li, "l_returnflag", "l_quantity", base)
-        .orderBy("l_returnflag")
-    }),
-
-    // value-unit drift: Wasserstein-1 (earth mover) of each return
-    // flag's quantity distribution vs the whole-corpus baseline — KS's
-    // integral companion on the SAME aligned histogram sketches (KS
-    // reads the worst CDF gap, W1 the area between the CDFs, i.e. how
-    // far mass actually moved in value units)
-    "q_wasserstein" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val base = Drift.numericHistogram(li, "l_quantity", 0.0, 55.0, 64)
-      Drift.wasserstein1ByGroup(li, "l_returnflag", "l_quantity", base)
-        .orderBy("l_returnflag")
-    }),
-
-    // trend-aware ingest forecast: Holt linear smoothing over daily
-    // event volume (EWMA's trend-carrying sibling — a steady ramp reads
-    // as trend, not a perpetual level alarm) + the one-step horizon row
-    // tomorrow's volume-anomaly gate compares against; recursion folds
-    // driver-side over the O(days) frame, replayed by a recursive CTE
-    "q_holt_forecast" -> ((s, d) =>
-      Drift.holtLinear(t(s, d, "events"), "ts")
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy(col("day").asc_nulls_last)),
-
-    // bivariate consistency outliers: OLS residuals of n_chars on the
-    // whitespace token count — documents far off the corpus's
-    // chars~tokens line (mis-tokenized / non-text) even when both
-    // marginals look normal; one sufficient-stats pass, closed-form
-    // slope broadcast into a stateless projection, TakeOrdered top-20
-    "q_ols_residuals" -> ((s, d) =>
-      Profile.olsResiduals(
-        t(s, d, "documents").select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_words"),
-          col("n_chars")),
-        Seq("doc_id"), "n_words", "n_chars", k = 20)),
-
-    // categorical drift of documents.source vs a half-sample baseline —
-    // PSI (eps-floored) and its floor-free bounded companion JSD, both
-    // recomputed exactly in SQL (sketches are metadata-sized; the
-    // statistics are driver-side)
-    "q_psi_source" -> ((s, d) => sourceDriftStat(s, d, "psi", Drift.psi(_, _))),
-    "q_jsd_source" -> ((s, d) => sourceDriftStat(s, d, "jsd", Drift.jsd)),
-
-    // directional categorical drift: KL(observed ‖ baseline) with the
-    // PSI eps floor — the quantity importance weighting / cross-entropy
-    // monitoring actually bound; rides the same merged O(categories)
-    // profiles as psi/jsd
-    "q_kl_source" -> ((s, d) => sourceDriftStat(s, d, "kl", Drift.kl(_, _))),
-
-    // per-category PSI attribution: WHICH categories carry the drift,
-    // ranked by contribution — the triage between "PSI fired" and
-    // knowing what to do; driver math on the merged O(categories)
-    // profiles, same inputs as q_psi_source
-    "q_psi_breakdown" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Drift.psiBreakdown(s,
-        Drift.categoricalFreq(docs, "source"),
-        Drift.categoricalFreq(docs.where(col("doc_id") % 2 === 0),
-          "source"))
-    }),
-
-    // total variation distance — the tight, floor-free drift bound
-    // ("no downstream rate can move by more than TV"); same merged
-    // O(categories) profiles as psi/jsd/kl
-    "q_tv_source" -> ((s, d) =>
-      sourceDriftStat(s, d, "tv", Drift.totalVariation)),
-
-    // information-theoretic column association: MI + BOTH uncertainty
-    // coefficients (Theil's U is asymmetric — "source determines lang
-    // but not back" is a droppable-column finding); exact integer
-    // counts, driver arithmetic in sorted key order
-    "q_mutual_info" -> ((s, d) =>
-      Profile.mutualInformation(t(s, d, "documents"), "lang", "source")),
-
-    // guaranteed-balance stratified k-folds: within-stratum rank by the
-    // overflow-safe multiplicative key, fold = (rank-1) mod k — every
-    // (source, fold) cell within 1 of n_s/k BY CONSTRUCTION (hash-mod
-    // only balances in expectation); output is the balance audit
-    "q_stratified_folds" -> ((s, d) =>
-      Mixing.foldBalance(
-        Mixing.stratifiedFolds(t(s, d, "documents"), "doc_id", "source",
-          k = 5, seed = 7L), "source")),
-
-    // recency-weighted source volume: each event decays by half per 7
-    // days back from the corpus's own newest day (never wall-clock) —
-    // ranks what is STILL PRODUCING, not what has the biggest archive
-    "q_decayed_volume" -> ((s, d) =>
-      Drift.decayedVolume(t(s, d, "events"), "ts", "event_type",
-        halfLifeDays = 7.0)),
-
-    // normalization gain for exact dedup: planted disguised copies
-    // (upper-case + trailing whitespace on %13 keys) invisible to raw
-    // hashing, caught after lower+trim+ws-collapse — "does the exact
-    // tier need to normalize before hashing" as one number
-    "q_norm_dups" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val variants = docs.where(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"),
-          concat(upper(col("text")), lit("  ")).as("text"))
-      Dedup.normalizationGain(
-        docs.select("doc_id", "text").unionByName(variants),
-        "doc_id", "text")
-    }),
-
-    // capture-recapture corpus-size estimate (Chapman): two overlapping
-    // snapshot key sets as two "captures" — what fraction of the
-    // reachable corpus does the crawl actually cover; three narrow
-    // distinct-key aggregates, payloads never move
-    "q_capture_recapture" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Profile.captureRecapture(
-        docs.where(col("doc_id") % 3 =!= 0),
-        docs.where(col("doc_id") % 5 =!= 0), "doc_id")
-    }),
-
-    // which slice moved the mean: Welch's unequal-variance t of each
-    // source's n_chars vs its complement — ONE sufficient-stats
-    // aggregate, complements free (grand − group), stats driver-side
-    "q_welch_t" -> ((s, d) =>
-      Drift.welchT(t(s, d, "documents"), "source", "n_chars")
-        .orderBy("source")),
-
-    // nonparametric location drift: Mann–Whitney U (tie-corrected z)
-    // of English vs non-English n_chars — exact global ranks from a
-    // value-keyed aggregate (O(distinct values)), never a global sort
-    "q_mannwhitney" -> ((s, d) =>
-      Drift.mannWhitneyU(t(s, d, "documents"), "n_chars",
-        col("lang") === "en")),
-
-    // dispersion drift: Brown–Forsythe (median-centered Levene) F for
-    // n_chars variance equality across sources — a source fanning out
-    // at constant mean trips this and nothing else in the battery
-    "q_levene" -> ((s, d) =>
-      Drift.brownForsythe(t(s, d, "documents"), "source", "n_chars")),
-
-    // sustained-shift ingest monitor: EWMA control chart over daily
-    // event volume (closed-form statistic + time-varying limits) —
-    // CUSUM's companion: CUSUM localizes a changepoint, EWMA flags
-    // persistent low-level drift
-    "q_ewma_chart" -> ((s, d) =>
-      Drift.ewmaChart(t(s, d, "events"), "ts").orderBy("day")),
-
-    // co-missingness triage: which columns are NULL together (an
-    // upstream join dropping fields on the same rows vs independent
-    // holes) — nulls planted by deterministic doc_id/value arithmetic
-    // since the synthetic tables ship without them; one pattern-keyed
-    // aggregate, ≤ 2^k patterns reach the shuffle
-    "q_missing_pattern" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(
-        when(col("lang") === "zh", lit(null: String))
-          .otherwise(col("lang")).as("lang"),
-        when(col("source") === "src3", lit(null: String))
-          .otherwise(col("source")).as("source"),
-        when(col("doc_id") % 11 === 0, lit(null: java.lang.Long))
-          .otherwise(col("n_chars")).as("n_chars"))
-      Profile.missingnessPatterns(docs, Seq("lang", "source", "n_chars"))
-    }),
-
-    // per-column diversity: Shannon entropy / evenness / Simpson of the
-    // categorical mix — catches mass collapsing to one value at
-    // constant cardinality; O(categories) aggregates, rows seen once
-    "q_entropy_profile" -> ((s, d) =>
-      Profile.entropyProfile(t(s, d, "documents"), Seq("lang", "source"))),
-
-    // HBOS outlier score (Goldstein & Dengel 2012) over three lineitem
-    // numerics: equi-width histograms from one fused min/max pass,
-    // per-row Σ ln(n / binCount) in declared column order (bit-stable
-    // doubles), top-20 sparse-bin rows — the linear-time unsupervised
-    // outlier baseline; corpus never shuffles (broadcast occupancy)
-    "q_hbos" -> ((s, d) =>
-      Profile.hbos(t(s, d, "lineitem"),
-        Seq("l_orderkey", "l_linenumber"),
-        Seq("l_quantity", "l_extendedprice", "l_discount"),
-        bins = 10, k = 20)),
-
-    // RAKE keyphrases (Rose et al. 2010): stopword-delimited candidate
-    // phrases from ONE native RakePhrases eval per row (no token-level
-    // shuffle); word degree/freq over the phrase multiset, phrase score
-    // = Σ degree/freq of member words — top-20 distinct phrases
-    "q_rake" -> ((s, d) =>
-      TextAnalysis.rakeKeyphrases(t(s, d, "documents"), "text",
-        TextAnalysis.StopwordProfiles("en"), maxLen = 4, k = 20)),
-
-    // cross-source unigram cross-entropy matrix: the domain-similarity
-    // observable mixture design reads (low off-diagonal = redundant
-    // sources, high = a domain the mix would starve); add-one smoothing
-    // over the shared vocab, everything after tokenization vocab-bounded
-    "q_source_xent" -> ((s, d) =>
-      TextAnalysis.crossSourceXent(t(s, d, "documents"), "source", "text")),
-
-    // KMV bottom-k distinct sketch vs the exact count — the mergeable
-    // set-size estimator with its error surfaced; overflow-safe Knuth
-    // hash so the SQL replica is exact
-    "q_kmv_distinct" -> ((s, d) =>
-      Profile.kmvDistinct(t(s, d, "lineitem"), "l_partkey", 64)),
-
-    // redundant-signal detector: pairwise Pearson matrix over the four
-    // lineitem numerics from ONE sufficient-stats aggregate
-    "q_corr_matrix" -> ((s, d) =>
-      Profile.corrMatrix(t(s, d, "lineitem"),
-        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"))),
-
-    // multi-format timestamp ingestion QC: strings synthesized from ts
-    // in three formats (+ one malformed slice), re-parsed by the
-    // ordered try_to_timestamp chain, tallied per winning format
-    "q_date_parse" -> ((s, d) => {
-      val raw = when(col("event_id") % 4 === 0,
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
-        .when(col("event_id") % 4 === 1,
-          date_format(col("ts"), "yyyy/MM/dd HH:mm:ss"))
-        .when(col("event_id") % 4 === 2,
-          date_format(col("ts"), "MM-dd-yyyy HH:mm:ss"))
-        .otherwise(lit("not a timestamp"))
-      val withRaw = t(s, d, "events").select(col("event_id"), raw.as("raw_ts"))
-      graft.norm.Normalize.parseTimestamps(withRaw, "raw_ts",
-          Seq("yyyy-MM-dd HH:mm:ss", "yyyy/MM/dd HH:mm:ss",
-            "MM-dd-yyyy HH:mm:ss"))
-        .groupBy(col("parsed_format").as("fmt"))
-        .agg(count(lit(1)).as("n"), min(col("parsed")).as("min_parsed"),
-          max(col("parsed")).as("max_parsed"))
-        .orderBy("fmt")
-    }),
-
-    // retrieval eval, first-hit regime: MRR@10 per source over a
-    // length ranking with planted relevance (doc_id % 17) — the
-    // dedup-candidate-lookup metric NDCG's graded gain obscures
-    "q_mrr" -> ((s, d) =>
-      Profile.mrrAtK(
-        t(s, d, "documents").withColumn("rel", col("doc_id") % 17 === 0),
-        "source", "doc_id", "n_chars", "rel", k = 10)),
-
-    // retrieval eval, coverage regime: precision/recall@10 per source
-    // under the same planted relevance and total-order ranking
-    "q_precision_at_k" -> ((s, d) =>
-      Profile.precisionRecallAtK(
-        t(s, d, "documents").withColumn("rel", col("doc_id") % 17 === 0),
-        "source", "doc_id", "n_chars", "rel", k = 10)),
-
-    // heuristic-gate acceptance: confusion matrix + derived metrics of
-    // a cheap length gate vs a planted noisy truth label — ONE
-    // aggregate, NULL-denominator metrics stay NULL
-    "q_confusion_gate" -> ((s, d) =>
-      Profile.confusionStats(
-        t(s, d, "documents")
-          .withColumn("pred", col("n_chars") >= 300)
-          .withColumn("label", col("n_chars") + col("doc_id") % 97 >= 320),
-        "pred", "label")),
-
-    // effect size at corpus scale: Cohen's d / Hedges' g of each
-    // source's n_chars vs its complement — the "how big is the shift"
-    // companion to q_welch_t's "is there a shift"
-    "q_cohens_d" -> ((s, d) =>
-      Drift.effectSizes(t(s, d, "documents"), "source", "n_chars")
-        .orderBy("source")),
-
-    // association rules lang → source: support / confidence / lift
-    // from one pair-count aggregate with re-aggregated margins — the
-    // "real pairing or two big marginals" read over q_rule_cooccur's
-    // raw counts
-    "q_assoc_rules" -> ((s, d) =>
-      Profile.associationRules(t(s, d, "documents"), "lang", "source",
-        minSupport = 0.004)),
-
-    // leakage-safe split: assignment hashes the CONTENT GROUP (md5 of
-    // text), so planted exact-dup families (%5 docs collapsed onto 7
-    // shared texts) can never span train/val/test — audited by the
-    // splitLeakage pass inside the same query: n_leaked_docs must be 0
-    // BY ARITHMETIC in both engines, not by luck
-    "q_group_split" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        when(col("doc_id") % 5 === 0,
-            concat(lit("duplicated page "),
-              (col("doc_id") % 7).cast("string")))
-          .otherwise(col("text")).as("text"))
-      Dedup.splitLeakage(
-          Mixing.groupAwareSplit(docs, "text"), "text", "split")
-        .orderBy("split")
-    }),
-
-    // temporal split with an embargo gap: train < cutoff−1d, test ≥
-    // cutoff, the day between labeled 'embargo' (returned, not silently
-    // dropped) — boundary-leak hygiene for time-ordered corpora
-    "q_temporal_split" -> ((s, d) =>
-      Mixing.temporalSplit(t(s, d, "events"), "ts",
-          "2024-01-24 00:00:00", embargoSecs = 86400)
-        .groupBy("split").agg(count(lit(1)).as("n"),
-          min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))
-        .orderBy("split")),
-
-    // schema drift between two feed snapshots: url added, source
-    // removed, n_chars bigint→double (%7 rows gain a '.5'), lang nulls
-    // appear (%11) → null_shift, id stays — the upstream-contract diff
-    // over string-typed feeds, one fused regex-profile aggregate/side
-    "q_schema_drift" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val oldSnap = docs.select(
-        col("doc_id").cast("string").as("id"), col("lang"), col("source"),
-        col("n_chars").cast("string").as("n_chars"))
-      val newSnap = docs.where(col("doc_id") % 3 =!= 0).select(
-        col("doc_id").cast("string").as("id"),
-        when(col("doc_id") % 11 === 0, lit(null: String))
-          .otherwise(col("lang")).as("lang"),
-        when(col("doc_id") % 7 === 0,
-            concat(col("n_chars").cast("string"), lit(".5")))
-          .otherwise(col("n_chars").cast("string")).as("n_chars"),
-        concat(lit("https://"), col("source"), lit(".example.com"))
-          .as("url"))
-      Profile.schemaDrift(oldSnap, newSnap)
-    }),
-
-    // clustering quality for the IVF/SemDeDup tier: simplified
-    // silhouette against 4 fixed axis-pattern centroids — one codegen'd
-    // pass (k cosines/row), aggregate to k groups; the oracle replays
-    // the identical double arithmetic via list_cosine_similarity
-    "q_silhouette" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
-      val cents = Array.tabulate(4)(c =>
-        (c, Array.tabulate(64)(i => if (i % 4 == c) 1f else 0f)))
-      Similarity.simplifiedSilhouette(t(s, d, "embeddings"),
-        "vec_id", "embedding", cents)
-    }),
-
-    // reciprocal-rank fusion of two candidate lists (length proxy +
-    // deterministic pseudo-relevance hash), top-50 heads, k=60 — the
-    // BM25⊕ANN merge step; ranks fuse where raw scores don't share a
-    // scale
-    "q_rrf_fuse" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val byLen = docs.select(col("doc_id"),
-        col("n_chars").cast("double").as("score"))
-      val byHash = docs.select(col("doc_id"),
-        conv(substring(md5(col("text")), 1, 15), 16, 10)
-          .cast("long").cast("double").as("score"))
-      Mixing.rrfFuse(Seq(byLen, byHash), "doc_id", "score",
-        topN = 50, k = 60)
-    }),
-
-    // inter-annotator agreement with MISSING ratings and 3 raters —
-    // Krippendorff's alpha (nominal), the regime Cohen's kappa can't
-    // touch: item = doc_id div 3, raters 0..2, value item-determined
-    // (agreement) except rater 2 dissents on %5 docs; %7 ratings
-    // missing, so some items fall to one rating and are excluded BY
-    // DEFINITION (n_items vs n_items_used surfaces the exclusion)
-    "q_krippendorff" -> ((s, d) =>
-      Drift.krippendorffAlpha(krippRatings(s, d), "item", "rater",
-        "value")),
-
-    // gold-label consolidation over the SAME ratings fixture: majority
-    // vote per item (ties → lexicographically smallest), vote share,
-    // unanimity — the step krippendorff's alpha should gate
-    "q_label_consensus" -> ((s, d) =>
-      Drift.consolidateLabels(krippRatings(s, d), "item", "rater",
-        "value")),
-
-    // per-rater reliability vs that consensus: rater 2's planted %5
-    // dissents make them the outlier annotator by construction
-    "q_rater_agreement" -> ((s, d) =>
-      Drift.raterAgreement(krippRatings(s, d), "item", "rater", "value")),
-
-    // online Poisson bootstrap of mean(n_chars): 32 deterministic
-    // hash-weighted replicates in ONE pass (the 10^12-row CI machinery
-    // — classic index-resampling is undistributable); hashKey=false is
-    // the overflow-safe multiplicative draw the SQL oracle replays on
-    // the same integer lattice
-    "q_bootstrap_ci" -> ((s, d) =>
-      Profile.bootstrapMeans(t(s, d, "documents"), "doc_id", "n_chars",
-        nBoot = 32, seed = 7L, hashKey = false)),
-
-    // empirical-Bayes host quality: the q_host_reputation fixture with
-    // beta-binomial shrinkage toward the global keep rate (k = 20
-    // pseudo-counts) — the ranking fix for tiny-host noise
-    "q_host_shrunk" -> ((s, d) => {
-      val host0 = when(col("doc_id") % 3 === 0,
-          concat(lower(col("source")), lit(".example.com")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("www."), lower(col("source")), lit(".example.com")))
-        .otherwise(concat(lower(col("source")), lit(".net")))
-      val withUrl = t(s, d, "documents").select(col("doc_id"),
-        concat(lit("http://"), host0, lit("/p/"), col("doc_id")).as("url"),
-        col("n_chars").between(200, 3000).as("keep"))
-      graft.operators.WebFilter
-        .hostQualityShrunk(withUrl, "url", "keep", priorStrength = 20.0)
-        .orderBy("host")
-    }),
-
-    // per-source boilerplate prefix: even-numbered sources get a cookie
-    // banner prepended to 2/3 of their docs (share ≥ 0.5 → flagged),
-    // odd sources keep natural texts (unique prefixes, tie broken
-    // lexicographically in both engines) — (source, 32-char prefix)
-    // counts combine map-side, full text never shuffles
-    "q_prefix_boilerplate" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("source"),
-        when(expr("try_cast(substr(source, 4) AS INT)") % 2 === 0 &&
-            col("doc_id") % 3 =!= 2,
-          concat(lit("We use cookies to improve your experience. "),
-            col("text"))).otherwise(col("text")).as("text"))
-      TextAnalysis.prefixBoilerplate(docs, "source", "text",
-        k = 32, minShare = 0.5)
-    }),
-
-    // ---- windowed event analytics (streaming plan shape, batch run) ----
-
-    // heavy hitters via the DataSketches frequent-items aggregate
-    // (approx_top_k): sketch-merged two-level, O(partitions × capacity)
-    // shuffle — counts exact while distinct ≤ capacity, so the exact
-    // GROUP BY oracle must match
-    "q_heavy_hitters" -> ((s, d) =>
-      Profile.heavyHitters(t(s, d, "events"), "event_type", k = 3)),
-
-    "q_hourly_events" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy("hour", "event_type")),
-
-    // as-of joins: each purchase stamped with the latest prior (or next
-    // following) click of the same user — union + one running window,
-    // no range-join explosion; oracles are DuckDB's native ASOF LEFT
-    // JOIN with the matching inequality direction
-    "q_asof_clicks" -> ((s, d) => asofClicksQuery(s, d, forward = false)),
-    "q_asof_next" -> ((s, d) => asofClicksQuery(s, d, forward = true)),
-
-    // point-in-interval range join: per-anchor activity in the two
-    // hours after every mod-97 anchor event. Bucketed equi-join (W = 1h
-    // → ≤3 buckets/interval) — the direct BETWEEN spelling plans as a
-    // BroadcastNestedLoopJoin (PlanSpec pins the difference); DuckDB's
-    // IEJoin computes the same theta-join natively as the oracle
-    "q_range_join" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val anchors = ev.where(col("event_id") % 97 === 0)
-        .select(col("event_id").as("anchor_id"), col("ts").as("w_start"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("w_end"))
-      RangeJoin.pointInInterval(
-          ev.select("event_id", "ts", "value"), anchors,
-          "ts", "w_start", "w_end", bucketWidth = 3600L * 1000000L)
-        .groupBy("anchor_id")
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-        .orderBy("anchor_id")
-    }),
-
-    // interval-OVERLAP join (interval×interval sibling of the range
-    // join): every 2h mod-97 anchor window paired with every 90min
-    // mod-89 window it shares an instant with. Both sides fan out to
-    // hour buckets; a pair is kept exactly once — in the bucket holding
-    // max(starts) — by predicate, never a distinct() of the joined
-    // payload. DuckDB's IEJoin computes the theta-join as the oracle.
-    "q_interval_overlap" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val a = ev.where(col("event_id") % 97 === 0)
-        .select(col("event_id").as("a_id"), col("ts").as("a_start"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("a_end"))
-      val b = ev.where(col("event_id") % 89 === 0)
-        .select(col("event_id").as("b_id"), col("ts").as("b_start"),
-          (col("ts") + expr("INTERVAL 90 MINUTES")).as("b_end"))
-      RangeJoin.intervalOverlap(a, b, "a_start", "a_end",
-          "b_start", "b_end", bucketWidth = 3600L * 1000000L)
-        .groupBy("a_id")
-        .agg(count(lit(1)).as("n_overlaps"), sum(col("b_id")).as("sum_b"))
-        .orderBy("a_id")
-    }),
-
-    // exact order statistics WITHOUT a global sort: radix select — ≤8
-    // counting passes, each one map-side-combined 256-bucket histogram
-    // of the next byte, O(1) driver state. The exact companion to
-    // approx_percentile where a bit-exact median/kth is contractually
-    // required (billing, SLA percentiles) and a 10^12-row range
-    // exchange is not an option; DuckDB's median replays it bit-exactly
-    "q_exact_median" -> ((s, d) => {
-      val v = t(s, d, "lineitem")
-        .select(((col("l_orderkey") * 37) % 1001 - 500).cast("long").as("v"))
-      // fused (n, med, min, max): one bounds aggregate + one bounded-
-      // span histogram — the three-call spelling paid the bounds
-      // aggregate 3× and, because this domain straddles the sign byte
-      // (no byte-skip), ~8 full counting passes per order statistic
-      val (n, med, mn, mx) = Profile.exactOrderStatsLong(v, "v")
-      import s.implicits._
-      Seq((n, med.getOrElse(0.0), mn.getOrElse(0L), mx.getOrElse(0L)))
-        .toDF("n", "med", "min_v", "max_v")
-    }),
-
-    // gap-based sessionization: per-user activity sessions with a
-    // 30-minute inactivity close, via Spark's native session_window
-    // aggregate; the oracle reconstructs the identical sessions with
-    // lag + cumulative break counting (new session iff gap STRICTLY
-    // exceeds 30 min — session_window merges at exactly prev+gap,
-    // SessionizeSpec pins the boundary)
-    "q_sessions" -> ((s, d) =>
-      Sessionize.sessionize(t(s, d, "events"), Seq("user_id"), "ts",
-          "30 minutes",
-          Seq(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value")))
-        .select(col("user_id"),
-          date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          date_format(col("session_last"), "yyyy-MM-dd HH:mm:ss").as("session_last"),
-          col("n"), col("sum_value"))
-        .orderBy("user_id", "session_start")),
-
-    // SCD2 value-run compaction: each user's event stream compressed
-    // into constant-event_type intervals (valid_from / half-open
-    // valid_to, NULL = current) — the change-log → bitemporal-lookup
-    // build; runs split on null-safe value change, (ts, event_id)
-    // ordered so ties compact deterministically
-    "q_scd2" -> ((s, d) =>
-      Sessionize.scd2Compact(t(s, d, "events"), "user_id", "event_type",
-          "ts", "event_id")
-        .select(col("user_id"), col("event_type"),
-          date_format(col("valid_from"), "yyyy-MM-dd HH:mm:ss")
-            .as("valid_from"),
-          date_format(col("valid_to"), "yyyy-MM-dd HH:mm:ss")
-            .as("valid_to"),
-          col("n_events"))
-        .orderBy("user_id", "valid_from")),
-
-    // Benjamini-Hochberg step-up FDR over a 97-rule check battery
-    // (planted p-values: 10 strong signals, 6 unscored NULLs, the rest
-    // a deterministic uniform spread) — the multiple-testing control a
-    // 288-check validation battery needs; k* step-up, NULLs excluded
-    // from m and carried with NULL verdicts
-    "q_bh_fdr" -> ((s, d) => {
-      val rules = t(s, d, "documents")
-        .select((col("doc_id") % 97).as("rule_id")).distinct()
-      val pv = rules.select(col("rule_id"),
-        when(col("rule_id") < 10,
-            col("rule_id").cast("double") / lit(10000.0))
-          .when(col("rule_id") % 13 === 7, lit(null: java.lang.Double))
-          .otherwise(((col("rule_id") * lit(2654435761L)) % lit(4294967296L))
-            .cast("double") / lit(4294967296.0)).as("p"))
-      Drift.benjaminiHochberg(pv, "rule_id", "p", q = 0.05)
-    }),
-
-    // nucleus (top-p) vocabulary coverage: smallest word count whose
-    // mass reaches 50/90/99% of tokens — zipfFit's operational readout
-    // (k(0.9) collapsing across snapshots = template spam); cumsum
-    // window over the vocab-bounded frequency frame only
-    "q_nucleus_vocab" -> ((s, d) =>
-      TextAnalysis.nucleusVocab(t(s, d, "documents"), "text")),
-
-    // quality-ranked token-budget selection: keep the best-scored docs
-    // until the corpus-wide budget fills (exclusive-prefix-sum < budget
-    // keeps the boundary doc). Two-level distributed prefix sum on the
-    // (-score, id) walk — never a SinglePartition window; the
-    // Knuth-hash pseudo-score is the SQL-replicable oracle spelling
-    "q_budget_select" -> ((s, d) => {
-      val score = (col("doc_id") * lit(2654435761L) + lit(99L)) % lit(4294967296L)
-      Selection.tokenBudget(t(s, d, "documents"), "doc_id", "n_chars",
-          score, budget = 80000L)
-        .select(col("doc_id"), col("cum_before"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- text analysis ----
-
-    "q_token_counts" -> ((s, d) => {
-      TextExpressions.register(s)
-      t(s, d, "documents")
-        .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_words"))
-        .orderBy("doc_id")
-    }),
-
-    "q_digit_punct" -> ((s, d) =>
-      orderedOnce(
-        t(s, d, "documents").select(
-          col("doc_id"),
-          length(col("text")).as("n_chars"),
-          (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            .as("n_digits"),
-          (length(col("text")) - length(regexp_replace(col("text"), "[a-z]", "")))
-            .as("n_lower")),
-        "doc_id")),
-
-    "q_shingle_count" -> ((s, d) => {
-      graft.functions.ShingleExpression.register(s)
-      t(s, d, "documents")
-        .select(explode(Dedup.shingles(col("text"), 3)).as("s"))
-        .agg(countDistinct(col("s")).as("n_distinct_shingles"))
-    }),
-
-    "q_langid_dist" -> ((s, d) => {
-      // oracle-checked: TextProfile's language argmax is deterministic
-      // integer arithmetic, replicated exactly in SQL (stopword-distinct
-      // intersection per language, zh by substring containment, ties to
-      // the lexicographically greatest language)
-      TextExpressions.register(s)
-      t(s, d, "documents")
-        .select(TextAnalysis.langId(col("text")).as("lang_pred"))
-        .groupBy("lang_pred").agg(count(lit(1)).as("n")).orderBy("lang_pred")
-    }),
-
-    "q_quality_scores" -> ((s, d) =>
-      // oracle-checked: word/char-class arithmetic + banded score are
-      // SQL-replicable; the hash-based fingerprint lives in its own
-      // rows-only query (q_fingerprints)
-      orderedOnce(
-        TextAnalysis.analyze(t(s, d, "documents"), "doc_id", "text")
-          .select("doc_id", "n_words", "n_bpeish_tokens", "quality_score"),
-        "doc_id")),
-
-    // the downstream FILTER stage over the quality signals: Gopher-style
-    // per-rule verdicts (word count, mean word length, punct/stopword/
-    // digit/upper ratios, repetition) + the keep conjunction, every flag
-    // oracle-replicated rule by rule
-    "q_gopher_filter" -> ((s, d) =>
-      orderedOnce(
-        TextAnalysis.qualityFilterReport(t(s, d, "documents"), "doc_id",
-          "text"),
-        "doc_id")),
-
-    // domain-blocklist gate: suffix matching (entry blocks itself + all
-    // subdomains) over hosts synthesized deterministically from source —
-    // predicate path (arrays_overlap on the substring_index suffix
-    // chain); the join path is differential-tested in PipelineOpsSpec
-    "q_domain_filter" -> ((s, d) => {
-      val host0 = when(col("doc_id") % 3 === 0,
-          concat(lower(col("source")), lit(".example.com")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("www."), lower(col("source")), lit(".example.com")))
-        .otherwise(concat(lower(col("source")), lit(".net")))
-      val withUrl = t(s, d, "documents")
-        .select(col("doc_id"),
-          concat(lit("http://"), host0, lit("/p/"), col("doc_id")).as("url"))
-      graft.operators.WebFilter
-        .filterBlockedHosts(withUrl, "url",
-          Seq("src3.example.com", "src7.net", "src11.example.com"))
-        .select(col("doc_id"),
-          graft.operators.WebFilter.hostOf(col("url")).as("host"))
-        .orderBy("doc_id")
-    }),
-
-    // top-3 TF-IDF terms per document — topical keyword extraction for
-    // corpus-composition reports; unsmoothed idf = ln(N/df) so the SQL
-    // oracle replicates the math exactly (ties break on word asc)
-    "q_tfidf" -> ((s, d) =>
-      TextAnalysis.tfIdfTopTerms(t(s, d, "documents"), "doc_id", "text", k = 3)
-        .orderBy("doc_id", "rank")),
-
-    // temperature-based source rebalancing (p ∝ n^(1/T), T = 2 lifts
-    // the tail): keep-fractions from integer counts through fixed IEEE
-    // ops, applied as the stateless modulo predicate — realized mix
-    // per source verified exactly
-    "q_temperature_mix" -> ((s, d) =>
-      Mixing.sampleByTemperature(t(s, d, "documents"), "doc_id", "source",
-          temperature = 2.0, granularity = 10000, hashKey = false)
-        .groupBy("source").agg(count(lit(1)).as("n_kept"))
-        .orderBy("source")),
-
-    // Efraimidis–Spirakis weighted sampling without replacement,
-    // deterministic draw (multiplicative-hash oracle mode): top-50 by
-    // ln(u)/w — char-mass-weighted corpus subsample
-    "q_weighted_sample" -> ((s, d) =>
-      Mixing.weightedSample(t(s, d, "documents"), "doc_id", "n_chars",
-          k = 50, seed = 7L, hashKey = false)
-        .select("doc_id", "n_chars").orderBy("doc_id")),
-
-    // per-source z-score normalization from integer-exact sufficient
-    // statistics (n, Σx, Σx²) — identical expression order in the
-    // oracle makes the doubles bit-equal
-    "q_group_zscore" -> ((s, d) =>
-      Profile.groupZScores(t(s, d, "documents"), "n_chars", "source")
-        .select(col("doc_id"), col("source"), round(col("z"), 6).as("z"))
-        .orderBy("doc_id")),
-
-    // curation-funnel observability: per-stage survivor counts + char
-    // mass as CollectMetrics of ONE pass (the count() below is the only
-    // job; no per-stage rescans) — each gate replicated in SQL
-    "q_funnel" -> ((s, d) => {
-      TextExpressions.register(s)
-      val f = Funnel(t(s, d, "documents"), massCol = Some("n_chars"))
-        .stage("len_gate", _.where(col("n_chars") >= 200))
-        .stage("word_gate",
-          _.where(TextAnalysis.tokenCount(col("text")) >= 30))
-        .stage("source_gate", _.where(!col("source").isin("src3", "src7")))
-      f.df.count() // the single pass; metrics accumulate as a side effect
-      f.reportDf().orderBy("stage")
-    }),
-
-    // token-balanced output sharding over the distributed prefix sum:
-    // contiguous offset ranges → 8 shards of near-equal char mass
-    // (imbalance bounded by one document); oracle replays the cumsum.
-    // Shared-offsets + releaseOffsets: the prefix sum's checkpoint
-    // blocks are freed as soon as the 8-row summary is materialized —
-    // the `offsets = None` convenience path pins them for the session,
-    // which accumulates across bench replays (round-4 ADVICE).
-    "q_balanced_shards" -> ((s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "n_chars")
-      val offs = Packing.globalOffsets(docs, "doc_id", "n_chars")
-      val sizes = Packing.shardSizes(
-        Packing.balancedShards(docs, "doc_id", "n_chars", nShards = 8,
-          offsets = Some(offs)), "n_chars")
-      val rows = sizes.collect() // nShards rows — driver-bounded
-      Packing.releaseOffsets(offs)
-      s.createDataFrame(
-        s.sparkContext.parallelize(rows.toIndexedSeq, 1), sizes.schema)
-    }),
-
-    // curriculum difficulty buckets: exact interpolated quartile
-    // thresholds broadcast into a stateless projection (never ntile's
-    // SinglePartition sort); dyadic quantile positions on an integer
-    // score make the thresholds bit-exact in both engines
-    "q_difficulty_buckets" -> ((s, d) =>
-      Mixing.quantileBuckets(t(s, d, "documents"), "n_chars",
-          nBuckets = 4, exact = true)
-        .groupBy("bucket").agg(count(lit(1)).as("n_docs"),
-          min(col("n_chars")).as("min_chars"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy("bucket")),
-
-    // HTML → text extraction over deterministically synthesized markup
-    // (script/style subtrees, attributes, entities, comments) — the
-    // identical RE2-compatible regex chain runs in the oracle
-    "q_html_extract" -> ((s, d) => {
-      val html = concat(
-        lit("<html><head><style type=\"text/css\">body{x:1}</style>"),
-        lit("<!-- crawler note --></head><body><h1 class=\"t\">"),
-        col("source"), lit("</h1><p>"), col("text"),
-        lit(" &amp; more&nbsp;&#39;quoted&#39;</p>"),
-        lit("<script>var a = 1 < 2;</script></body></html>"))
-      orderedOnce(
-        t(s, d, "documents")
-          .select(col("doc_id"),
-            TextAnalysis.htmlToText(html).as("text_extracted")),
-        "doc_id")
-    }),
-
-    // main-content extraction (readability-class block scoring): pages
-    // synthesized with planted boilerplate — nav bar, cookie banner,
-    // short headline/teaser, link-heavy footer — around the document
-    // text as the article paragraph. Length + link-density gates must
-    // keep exactly the article (when it is long enough) and drop every
-    // planted block; the oracle replays the identical RE2-safe chain
-    "q_main_content" -> ((s, d) => {
-      val page = concat(
-        lit("<html><head><title>Page</title><script>nav.init(1 < 2);" +
-          "</script></head><body><nav><a href=\"/\">Home</a> " +
-          "<a href=\"/about\">About</a> <a href=\"/contact\">Contact</a> " +
-          "<a href=\"/faq\">FAQ</a></nav><div class=\"cookie\">We use " +
-          "cookies to improve your experience. " +
-          "<a href=\"/accept\">Accept</a></div><h1>"),
-        col("source"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><p>Short teaser.</p><footer>" +
-          "<a href=\"/tos\">Terms of Service</a> " +
-          "<a href=\"/privacy\">Privacy Policy</a> (c) Example Corp" +
-          "</footer></body></html>"))
-      orderedOnce(
-        t(s, d, "documents")
-          .select(col("doc_id"),
-            TextAnalysis.mainContent(page).as("main_text")),
-        "doc_id")
-    }),
-
-    // Gopher character-level repetition: most-frequent-2-gram char
-    // coverage + duplicated-3-gram char mass, integer-ratio arithmetic
-    // from ONE native RepetitionSignals eval — SQL-replicable exactly
-    "q_char_repetition" -> ((s, d) => {
-      TextExpressions.register(s)
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          TextExpressions.repetitionSignals(col("text"), 2, 3).as("__r"))
-        .select(col("doc_id"),
-          round(col("__r").getField("top_ngram_char_frac"), 6)
-            .as("top2_char_frac"),
-          round(col("__r").getField("dup_ngram_char_frac"), 6)
-            .as("dup3_char_frac"))
-        .transform(orderedOnce(_, "doc_id"))
-    }),
-
-    // DSIR importance weights (Xie et al. 2023): per-doc unigram
-    // log-likelihood ratio of a target exemplar set (src1/src2) vs the
-    // raw corpus, add-one smoothing — word-keyed oracle mode (the
-    // hashed-bucket production path is differential-tested in
-    // CurationSpec with its bounded-broadcast weight table)
-    "q_dsir_weights" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Curation.dsirLogWeights(docs, "doc_id", "text",
-          docs.where(col("source").isin("src1", "src2")), "text",
-          hashed = false)
-        .orderBy("doc_id")
-    }),
-
-    // WITHIN-doc repetition removal (word granularity on the synthetic
-    // single-line corpus — same code path as the newline default):
-    // first occurrence survives, later repeats drop, volume observable
-    "q_intradoc_dedup" -> ((s, d) =>
-      orderedOnce(
-        LineDedup.dedupLinesWithinDoc(t(s, d, "documents")
-          .select("doc_id", "text"), "text", delim = " "),
-        "doc_id")),
-
-    // CROSS-doc chunk dedup (Dolma/RefinedWeb paragraph scrub on a
-    // punctuation-free corpus): every duplicated 12-word chunk keeps one
-    // copy corpus-wide at its first (doc_id, pos); the oracle replays
-    // the winner selection on chunk CONTENT (hash-equality == content-
-    // equality absent 64-bit collisions, the TokenGramHashes argument)
-    "q_chunk_dedup" -> ((s, d) =>
-      LineDedup.dedupChunksAcrossDocs(t(s, d, "documents")
-          .select("doc_id", "text"), "doc_id", "text", chunkWords = 12)
-        .orderBy("doc_id")),
-
-    // BM25 top-20 docs for a fixed term set — the retrieval primitive
-    // for mining benchmark near-matches; scores round to 6dp BEFORE
-    // ranking so the selected set is bit-stable across engines
-    "q_bm25" -> ((s, d) =>
-      TextAnalysis.bm25TopK(t(s, d, "documents").select("doc_id", "text"),
-        "doc_id", "text", terms = Seq("spark", "window", "merge"), k = 20)),
-
-    // CCNet-style order-1 LM quality proxy: mean ln p(word) under the
-    // corpus's own unigram distribution
-    "q_unigram_logprob" -> ((s, d) =>
-      TextAnalysis.unigramLogProb(t(s, d, "documents")
-          .select("doc_id", "text"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // Zipf fit of the corpus token-frequency curve: OLS slope/R² of
-    // ln(freq) on ln(rank) over the vocab-sized frequency frame
-    "q_zipf_fit" -> ((s, d) =>
-      TextAnalysis.zipfFit(t(s, d, "documents").select("text"), "text")),
-
-    // distributed inverted-index build: df + total tf + capped posting
-    // sample (10 smallest doc_ids) per word, via the O(k)-state
-    // CollectMinK aggregate — map-side partials ship ≤ k ids per word
-    "q_postings" -> ((s, d) =>
-      TextAnalysis.invertedIndex(t(s, d, "documents")
-          .select("doc_id", "text"), "doc_id", "text", k = 10)
-        .orderBy("word")),
-
-    // order-2 LM quality proxy: mean ln p(w|prev) under the corpus's
-    // own MLE bigram model — scores word ORDER, one rung above
-    // q_unigram_logprob's bag-of-words floor
-    "q_bigram_logprob" -> ((s, d) =>
-      TextAnalysis.bigramLogProb(t(s, d, "documents")
-          .select("doc_id", "text"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // web-graph tier, extraction half: pages synthesized with internal
-    // doc:// links from doc_id arithmetic (doc_id%17==0 pages are
-    // link-free → the isolated/dangling path), hrefs pulled back out by
-    // LinkGraph.extractDocLinks and rolled to per-doc degrees. The
-    // oracle replays the SAME regex in DuckDB's independent regex
-    // engine — extraction is verified, not just the arithmetic
-    "q_outlinks" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val n = docs.count()
-      val id = col("doc_id").cast("long")
-      val pages = docs.select(id.as("doc_id"), concat(
-        lit("<html><body><nav><a href=\"/home\">Home</a></nav>" +
-          "<p>filler</p>"),
-        when(id % 17 =!= 0, concat(
-          lit("<a href=\"doc://"), ((id * 7 + 1) % n).cast("string"),
-          lit("\">a</a> <a href=\"doc://"), ((id * 13 + 3) % n).cast("string"),
-          lit("\">b</a> <a href=\"doc://"), ((id + 1) % n).cast("string"),
-          lit("\">c</a>"))).otherwise(lit("")),
-        lit("</body></html>")).as("__html"))
-      val edges = LinkGraph.extractDocLinks(pages, "doc_id", "__html")
-      LinkGraph.degrees(edges, Some(docs.select(id.as("id"))))
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // web-graph tier, iteration half: PageRank (4 iterations, d=0.85,
-    // dangling mass redistributed) over the same arithmetic edge set —
-    // centrality as a curation quality signal; the oracle replays all
-    // four iterations as chained CTEs
-    "q_pagerank" -> ((s, d) => {
-      val (edges, verts) = syntheticEdges(t(s, d, "documents"))
-      // result frame is localCheckpoint-backed (Packing.releaseOffsets
-      // ownership convention); at N=|docs| rows the pin is result-sized
-      LinkGraph.pageRank(edges, iterations = 4, damping = 0.85,
-          vertices = Some(verts))
-        .select(col("id").as("doc_id"), round(col("rank"), 6).as("rank"))
-        .orderBy("doc_id")
-    }),
-
-    // ingest-volume anomaly detection: hourly counts per event_type
-    // z-scored against the trailing 6 buckets of the same type (cold
-    // start / flat history → NULL z, never flagged)
-    "q_volume_anomaly" -> ((s, d) =>
-      Drift.volumeAnomalies(t(s, d, "events"), "ts", "event_type",
-          trailing = 6, zThreshold = 2.0)
-        .orderBy("event_type", "hour")),
-
-    // key-skew diagnostics on the orders join key: hot-key share, HHI
-    // concentration, entropy — the "measure before you shuffle" op
-    "q_key_skew" -> ((s, d) =>
-      Profile.keySkew(t(s, d, "orders"), "o_custkey")),
-
-    // HITS hubs/authorities over the same arithmetic edge set as
-    // q_pagerank (2 iterations, L1 sum-normalized) — the oracle replays
-    // both iterations as chained CTEs; with hub₀=1 the first authority
-    // pass is exactly in-degree, so every score is a ratio of sums
-    "q_hits" -> ((s, d) => {
-      val (edges, verts) = syntheticEdges(t(s, d, "documents"))
-      LinkGraph.hits(edges, iterations = 2, vertices = Some(verts))
-        .select(col("id").as("doc_id"), round(col("hub"), 6).as("hub"),
-          round(col("authority"), 6).as("authority"))
-        .orderBy("doc_id")
-    }),
-
-    // power-of-two in-degree histogram of the same link graph — the
-    // one-glance web-graph shape check (bucket -1 = isolated docs)
-    "q_degree_dist" -> ((s, d) => {
-      val (edges, verts) = syntheticEdges(t(s, d, "documents"))
-      LinkGraph.degreeDistribution(
-        LinkGraph.degrees(edges.distinct(), Some(verts)), "in_degree")
-    }),
-
-    // top-k word pairs by document-level PMI over the head vocabulary —
-    // collocation strength / template-spam tell; every ln input is an
-    // exact integer ratio, ranked on the ROUNDED score
-    "q_pmi" -> ((s, d) =>
-      TextAnalysis.pmiPairs(t(s, d, "documents"), "doc_id", "text",
-        vocabSize = 30, minPairCount = 2, k = 25)),
-
-    // asymmetric word-set containment: each doc's first-half prefix as
-    // the query against (a) its own full text — containment exactly 1 —
-    // and (b) its successor doc — the realistic partial-overlap case
-    "q_containment" -> ((s, d) => {
-      val docs = t(s, d, "documents").where(col("doc_id") < 200)
-      val ws = TextAnalysis.words(col("text"))
-      val qs = docs.select((col("doc_id") + 1000000L).as("q_id"),
-        array_join(slice(ws, lit(1),
-          floor((size(ws) + 1) / lit(2)).cast("int")), " ").as("q_text"))
-      val pairs = docs.select((col("doc_id") + 1000000L).as("q_id"),
-          col("doc_id").as("d_id"))
-        .unionByName(docs.select((col("doc_id") + 1000000L).as("q_id"),
-          ((col("doc_id") + 1) % 200).as("d_id")))
-      TextAnalysis.wordContainment(qs, "q_id", "q_text",
-          docs.select(col("doc_id").as("d_id"), col("text")), "d_id", "text",
-          pairs)
-        .orderBy("q_id", "d_id")
-    }),
-
-    // within-source quantile normalization of doc length — the step
-    // that makes one global "keep the top X%" threshold mean the same
-    // thing in every source
-    "q_quantile_norm" -> ((s, d) =>
-      Mixing.quantileNormalize(t(s, d, "documents")
-          .select(col("doc_id"), col("source"), col("n_chars")),
-        "source", "n_chars")
-        .orderBy("doc_id")),
-
-    // day-grain retention cohorts over the event stream: users bucketed
-    // by first-seen day, counted at each day offset they return
-    "q_retention" -> ((s, d) =>
-      Sessionize.retentionCohorts(t(s, d, "events"), "user_id", "ts")
-        // ISO string day: a raw DATE column round-trips as python date
-        // objects on the Spark side but datetime64 from DuckDB — the
-        // compare sees different value types; strings are unambiguous
-        .select(date_format(col("cohort_day"), "yyyy-MM-dd").as("cohort_day"),
-          col("day_offset"), col("n_users"))
-        .orderBy("cohort_day", "day_offset")),
-
-    // structural URL features (scheme/host/path depth/params/fragment)
-    // on URLs synthesized from doc arithmetic — crawl-frontier scoring
-    "q_url_features" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val url = concat(
-        when(id % 2 === 0, lit("https://")).otherwise(lit("http://")),
-        lit("www."), lower(col("source")), lit(".example.com"),
-        when(id % 5 === 0, lit(":8080")).otherwise(lit("")),
-        lit("/a/b"), when(id % 4 === 0, lit("/c/d")).otherwise(lit("")),
-        when(id % 3 === 0, lit("?x=1&y=2&")).otherwise(lit("")),
-        when(id % 7 === 0, lit("#frag")).otherwise(lit("")))
-      t(s, d, "documents")
-        .select(id.as("doc_id"), WebFilter.urlFeatures(url).as("f"))
-        .select(col("doc_id"), col("f.scheme"), col("f.host"),
-          col("f.path_depth"), col("f.n_params"), col("f.has_fragment"))
-        .orderBy("doc_id")
-    }),
-
-    // per-source data card: the composition rollup a corpus release
-    // publishes, in one grouped aggregate
-    "q_data_card" -> ((s, d) =>
-      Profile.dataCard(t(s, d, "documents"), "source", "text", "lang")),
-
-    // ordered conversion funnel view→click→purchase: stage k counts
-    // only events strictly after the user's first stage-(k-1) hit
-    "q_conversion" -> ((s, d) =>
-      Sessionize.conversionFunnel(t(s, d, "events"), "user_id", "ts",
-        "event_type", Seq("view", "click", "purchase"))),
-
-    // language-ID confusion matrix against the table's lang label —
-    // the evaluation half of q_langid_dist (same deterministic scoring)
-    "q_lang_confusion" -> ((s, d) => {
-      TextExpressions.register(s)
-      t(s, d, "documents")
-        .select(col("lang"), TextAnalysis.langId(col("text")).as("lang_pred"))
-        .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_pred")
-    }),
-
-    // exact per-source length percentiles at dyadic probabilities —
-    // interpolation is exactly representable in both engines
-    "q_len_percentiles" -> ((s, d) =>
-      Profile.groupPercentiles(t(s, d, "documents"), "source", "n_chars")),
-
-    // exact-dup cluster-size histogram: the dedup planning number
-    // (docs planted: every doc_id%10==0 text appears twice, %20==0
-    // three times — the histogram must see sizes 1, 2 AND 3)
-    "q_dup_hist" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val planted = docs
-        .unionByName(docs.where(col("doc_id") % 10 === 0))
-        .unionByName(docs.where(col("doc_id") % 20 === 0))
-      Dedup.duplicateClusterHistogram(planted, "text")
-    }),
-
-    // Gini concentration of per-source token mass — corpus balance
-    "q_token_gini" -> ((s, d) =>
-      Profile.giniConcentration(t(s, d, "documents"), "source",
-        size(TextAnalysis.words(col("text"))).cast("long"))),
-
-    // day-over-day event-volume trend ratios per type (first day NULL)
-    "q_daily_trend" -> ((s, d) =>
-      Drift.dailyTrend(t(s, d, "events"), "ts", "event_type")
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("event_type", "day")),
-
-    // rolling 7-day distinct users from MERGEABLE per-day HLL sketches
-    // (hll_union_agg over a gap-correct RANGE window on the day
-    // number) — N-day distincts from stored kilobyte sketches, no
-    // corpus rescan; DataSketches HLL is exact in coupon mode, which
-    // the exact-distinct oracle exploits at test scale
-    "q_rolling_distinct" -> ((s, d) =>
-      Profile.rollingDistinct(t(s, d, "events"), "ts", "user_id",
-          windowDays = 7)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day")),
-
-    // growth accounting: DAU decomposed into new / retained /
-    // resurrected (+ churned = yesterday's actives minus retained) —
-    // the feed-health diagnosis behind a flat daily-active line
-    "q_growth_accounting" -> ((s, d) =>
-      Sessionize.growthAccounting(t(s, d, "events"), "user_id", "ts")
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day")),
-
-    // curation-gate significance: two-proportion z of each source's
-    // length-gate pass rate vs its complement (pooled variance, NULL z
-    // on degenerate pools) — "3 points below the rest: noise or signal"
-    "q_gate_ztest" -> ((s, d) =>
-      Drift.twoProportionZ(t(s, d, "documents"), "source",
-        col("n_chars") >= 200)),
-
-    // per-node triangle counts + local clustering on a deterministic
-    // ring-with-chords graph (chord absent on %17 nodes, so triangle
-    // closure varies) — the community-density readout PageRank can't
-    // see; canonical a<b<c two-join enumeration
-    "q_clustering" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val n = docs.count()
-      val id = col("doc_id").cast("long")
-      val edges = docs.select(id.as("src"), ((id + 1) % n).as("dst"))
-        .unionByName(docs.where(id % 17 =!= 0)
-          .select(id.as("src"), ((id + 2) % n).as("dst")))
-      LinkGraph.triangleStats(edges)
-    }),
-
-    // degree assortativity (Newman 2002) of the same graph: Pearson of
-    // endpoint degrees over symmetrized edges, from EXACT integer
-    // sufficient sums (never two engines' streaming corr)
-    "q_assortativity" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val n = docs.count()
-      val id = col("doc_id").cast("long")
-      val edges = docs.select(id.as("src"), ((id + 1) % n).as("dst"))
-        .unionByName(docs.where(id % 17 =!= 0)
-          .select(id.as("src"), ((id + 2) % n).as("dst")))
-      LinkGraph.assortativity(edges)
-    }),
-
-    // pairwise audience overlap from the per-group HLL sketches:
-    // inclusion-exclusion |A|+|B|-|A union B| on kilobyte sketches —
-    // the shared-users matrix without O(pairs) intersection scans;
-    // coupon-mode exactness drives the exact oracle at test scale
-    "q_audience_overlap" -> ((s, d) =>
-      Profile.sketchOverlap(t(s, d, "events"), "event_type", "user_id")),
-
-    // BPE tokenizer-vocabulary training, first 4 merges: corpus touched
-    // once (word-frequency agg); each merge runs on the vocab-bounded
-    // frame. The oracle replays all 4 rounds as chained CTEs — both
-    // engines' literal replace is leftmost-first non-overlapping,
-    // which IS the BPE within-iteration rule
-    "q_bpe_merges" -> ((s, d) =>
-      TextAnalysis.bpeTrain(t(s, d, "documents"), "text", nMerges = 4)),
-
-    // BPE APPLY (train → freeze → encode): the 4 trained merges encode
-    // every document via the native rank-order merge expression; the
-    // oracle re-derives the same merges and replays the stacked-replace
-    // chain per word — the two spellings agree on any corpus whose
-    // repeat runs stay under 2^BpePasses (differential-pinned)
-    "q_bpe_encode" -> ((s, d) => {
-      val merges = TextAnalysis.bpeTrain(t(s, d, "documents"), "text",
-          nMerges = 4)
-        .orderBy("merge_idx").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      // NOT orderedOnce: bpeTokenCounts ends in a per-doc aggregate, so
-      // the sort's child already sits on an exchange — the sampler
-      // re-reads those shuffle files, and an extra repartition only
-      // adds a third exchange (measured 1.16 → 1.24 s warm, reverted)
-      TextAnalysis.bpeTokenCounts(t(s, d, "documents"), "doc_id", "text",
-          merges)
-        .orderBy("doc_id")
-    }),
-
-    // tokenizer fertility per source (subword tokens per word under the
-    // same 4 trained merges) — the number multilingual vocab decisions
-    // are made on; text never enters an exchange (one (source, word)
-    // explode, sizes aggregate map-side)
-    "q_bpe_fertility" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val merges = TextAnalysis.bpeTrain(docs, "text", nMerges = 4)
-        .orderBy("merge_idx").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextAnalysis.bpeFertility(docs, "text", "source", merges)
-        .orderBy("source")
-    }),
-
-    // OOV coverage vs a frozen top-100 corpus vocabulary: the
-    // tokenizer-health metric per doc — vocab is a plan literal through
-    // the native WordIds expression, scoring is a pure projection
-    "q_oov_rate" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val vocab = TextAnalysis.buildVocab(docs, "text", 100)
-      orderedOnce(TextAnalysis.oovStats(docs, "doc_id", "text", vocab),
-        "doc_id")
-    }),
-
-    // rank-ensemble quality: mean within-source percent_rank of two
-    // scale-incomparable signals (chars, words) — nulls rank worst;
-    // one group-keyed exchange shared by both signal windows
-    "q_rank_ensemble" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val sig = docs.select(col("doc_id"), col("source"), col("n_chars"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n_words"))
-      Mixing.rankEnsemble(sig, "source", Seq("n_chars", "n_words"))
-        .select(col("doc_id"), col("source"), col("ensemble_score"))
-        .orderBy("doc_id")
-    }),
-
-    // --- token-structure health tier (round-5 continuation 5) -------
-
-    // BOS/EOS framing validation per source: sequences framed as
-    // [BOS] body [EOS] with planted defects (id%23==5 missing BOS,
-    // ==7 missing EOS, ==11 an interior EOS — the packed-corpus
-    // cross-document bleed signal); one flags projection + one
-    // map-side-combined aggregate, token arrays never shuffle
-    "q_token_boundaries" -> ((s, d) => {
-      val bos = 50001; val eos = 50002
-      val idNum = substring(col("doc_id"), 5, 12).cast("long")
-      val framed = decontamCorpus(s, d)
-        .withColumn("__id", idNum)
-        .withColumn("framed",
-          when(col("__id") % 23 === 5,
-            concat(col("tokens"), array(lit(eos))))
-          .when(col("__id") % 23 === 7,
-            concat(array(lit(bos)), col("tokens")))
-          .when(col("__id") % 23 === 11,
-            concat(array(lit(bos)), slice(col("tokens"), 1, 2),
-              array(lit(eos)), slice(col("tokens"), 3, 1000000),
-              array(lit(eos))))
-          .otherwise(concat(array(lit(bos)), col("tokens"),
-            array(lit(eos)))))
-      TokenHealth.framingSummary(framed, "framed", "source", bos, eos)
-        .orderBy("source")
-    }),
-
-    // per-position token-ID distribution over the first 4 positions:
-    // exact distinct counts plus bucketed entropy / top-share — the
-    // packing-corruption detector (a position whose entropy collapses
-    // is receiving a constant token)
-    "q_position_entropy" -> ((s, d) =>
-      TokenHealth.positionStats(seqFromDocs(s, d), "tokens",
-          k = 4, nBuckets = 64)
-        .select(col("pos"), col("n_seqs"), col("n_distinct_tokens"),
-          col("bucket_entropy"), col("top_bucket_share"))),
-
-    // vocabulary coverage per source: distinct token IDs vs the 50k
-    // vocab plus the type/token ratio — the tokenizer-audit number
-    // (two-level aggregate, exchange ≤ sources × vocab int pairs)
-    "q_vocab_coverage" -> ((s, d) =>
-      TokenHealth.vocabCoverage(seqFromDocs(s, d), "tokens", "source",
-          vocabSize = 50000)
-        .orderBy("source")),
-
-    // duplicated token-3-gram mass: the token-space dedup-regression
-    // number (fraction of gram occurrences whose gram repeats)
-    "q_token_dup_mass" -> ((s, d) =>
-      TokenHealth.dupGramMass(seqFromDocs(s, d), "tokens", n = 3)),
-
-    // token-ID histogram drift between snapshots: even-id docs are the
-    // baseline, odd-id docs get a planted tokenizer swap (IDs halved →
-    // mass compressed into the low vocab) — KS over 64-bin sketches,
-    // exactly the stored-baseline drift path of the north star
-    "q_token_drift" -> ((s, d) => {
-      val seqs = decontamCorpus(s, d)
-        .withColumn("__id", substring(col("doc_id"), 5, 12).cast("long"))
-      val base = seqs.where(col("__id") % 2 === 0).select(col("tokens"))
-      val cur = seqs.where(col("__id") % 2 === 1)
-        .select(transform(col("tokens"),
-          t => floor(t / 2.0).cast("int")).as("tokens"))
-      TokenHealth.tokenIdDrift(base, cur, "tokens",
-        lo = 0.0, hi = 50000.0, nBins = 64)
-    }),
-
-    // inbound anchor-text aggregation per link target: volume, text
-    // diversity, distinct linking docs, top anchor (the free target
-    // description web search indexes); pages synthesized like
-    // q_outlinks but with varied anchor words
-    "q_anchor_text" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val n = docs.count()
-      val id = col("doc_id").cast("long")
-      val words = array(lit("home"), lit("read more"), lit("reference"),
-        lit("details"), lit("source"))
-      def w(e: Column) = element_at(words, (e % 5).cast("int") + 1)
-      val pages = docs.select(id.as("doc_id"), concat(
-        lit("<html><body><nav><a href=\"/home\">Home</a></nav><p>filler</p>"),
-        when(id % 17 =!= 0, concat(
-          lit("<a href=\"doc://"), ((id * 7 + 1) % n).cast("string"),
-          lit("\">"), w(id), lit("</a> <a href=\"doc://"),
-          ((id * 13 + 3) % n).cast("string"),
-          lit("\">"), w(id * 3 + 1), lit("</a> <a href=\"doc://"),
-          ((id + 1) % n).cast("string"),
-          lit("\">"), w(id * 11 + 2), lit("</a>"))).otherwise(lit("")),
-        lit("</body></html>")).as("__html"))
-      LinkGraph.anchorSummary(
-          LinkGraph.extractAnchors(pages, "doc_id", "__html"))
-        .withColumnRenamed("dst", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // train/test contamination: exact copies planted ACROSS the split
-    // boundary (mod-31 docs re-keyed +999983 → different mod-100 split
-    // bucket), then the per-split leaked-document audit — the check a
-    // release gate runs after splitting
-    "q_split_leakage" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      val planted = docs.where(col("doc_id") % 31 === 0)
-        .select((col("doc_id") + 999983L).as("doc_id"), col("text"))
-      val corpus = docs.unionByName(planted)
-        .withColumn("split",
-          when(col("doc_id") % 100 < 80, "train")
-            .when(col("doc_id") % 100 < 90, "val")
-            .otherwise("test"))
-      Dedup.splitLeakage(corpus, "text", "split").orderBy("split")
-    }),
-
-    // packing-efficiency audit over the greedy doc-boundary packer:
-    // fill rate and under/oversize pack counts per source — the padding
-    // bill a trainer pays (all integer ratios)
-    "q_pack_efficiency" -> ((s, d) =>
-      Packing.packEfficiency(
-          Packing.greedyPack(t(s, d, "documents"), "source", "doc_id",
-            "n_chars", budget = 1000),
-          "source", "n_chars", budget = 1000)
-        .orderBy("source")),
-
-    // token-budget epoch table: 1M-token budget against the LLaMA-style
-    // normalized mixture — per-source epochs (memorization flag) from
-    // one count aggregate + a broadcast weight literal; the planted
-    // 'scraped' source shows up with weight 0 (unweighted-corpus loud
-    // path)
-    "q_epoch_budget" -> ((s, d) =>
-      Mixing.epochBudget(seqFromDocs(s, d), "source", "n_tok",
-          budgetTokens = 1000000L,
-          weights = Seq("web" -> 0.5, "books" -> 0.25, "code" -> 0.15,
-            "wiki" -> 0.1))
-        .orderBy("source")),
-
-    // signal-redundancy audit: per-source Pearson r between n_chars and
-    // the canonical word count, from exact decimal sufficient stats
-    // (deterministic across engines, unlike streaming corr)
-    "q_signal_corr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val sig = docs.select(col("source"), col("n_chars"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n_words"))
-      Profile.correlationByGroup(sig, "source", "n_chars", "n_words")
-        .orderBy("source")
-    }),
-
-    // conditional mix-shift: source × lang independence chi-square —
-    // both marginals can be stable while the joint drifts (a source
-    // switching language); fully in-plan, one (a,b) count exchange
-    "q_chi_contingency" -> ((s, d) =>
-      Drift.contingencyChiSquare(t(s, d, "documents"), "source", "lang")),
-
-    // classifier calibration: sigmoid of the ROUNDED log-odds (the
-    // q_logistic_quality anchor) binned against a deterministic
-    // integer label (n_chars >= 500) — reliability diagram + gap per
-    // bin; ECE is the n-weighted gap sum over these rows
-    "q_calibration" -> ((s, d) => {
-      TextExpressions.register(s)
-      val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
-        "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
-      val scored = t(s, d, "documents")
-        .select(col("n_chars"),
-          TextAnalysis.textProfile(col("text")).as("__tp"))
-        .select(col("n_chars"),
-          round(TextAnalysis.logOddsFrom(col("__tp"), bias = -2.0, w), 6)
-            .as("__lo"))
-        .select(
-          (lit(1.0) / (lit(1.0) + exp(-col("__lo")))).as("score"),
-          when(coalesce(col("n_chars"), lit(0L)) >= 500, 1L).otherwise(0L)
-            .as("label"))
-      Profile.calibrationBins(scored, "score", "label", nBins = 10)
-    }),
-
-    // crawl novelty trend: deterministic ingest day (doc_id % 30),
-    // first-seen content fraction per day — the stuck-crawler detector
-    "q_novelty_curve" -> ((s, d) =>
-      Dedup.noveltyCurve(
-          t(s, d, "documents")
-            .withColumn("day", (col("doc_id") % 30).cast("int")),
-          "text", "day")
-        .orderBy("day")),
-
-    // content-defined chunking (md5 oracle mode, window 8, hex-'0'
-    // boundary ≈ 16-char chunks): per-doc chunk counts — CDC boundaries
-    // are local functions of content, so chunk hashes survive prefix
-    // insertions (the shift q_cdc_shift_recall plants)
-    "q_cdc_chunks" -> ((s, d) =>
-      CdcChunking.chunks(t(s, d, "documents"), "doc_id", "text",
-          window = 8, maskBits = 0)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          countDistinct(col("chunk_hash")).as("n_distinct_chunks"),
-          max(col("chunk_len")).cast("long").as("max_chunk_len"))
-        .orderBy("doc_id")),
-
-    // CDC shift-robustness, FULLY oracled (md5 boundaries are
-    // deterministic — unlike the seed-dependent MinHash/SimHash planted
-    // rows, DuckDB replays chunking + capped overlap pairs exactly):
-    // plant prefix-shifted copies, count recovered (id, id+1e6) pairs
-    // at overlap ≥ 0.5
-    "q_cdc_shift_recall" -> ((s, d) => {
-      val base = t(s, d, "documents")
-        .where(col("text").isNotNull && length(col("text")) > 0)
-        .select(col("doc_id"), col("text"))
-      val planted = base
-        .where(col("doc_id") % 29 === 0 && length(col("text")) >= 64)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(lit("BOILERPLATE HEADER INSERTED. "), col("text"))
-            .as("text"))
-      val corpus = base.unionByName(planted)
-      val chunked = CdcChunking.chunks(corpus, "doc_id", "text",
-        window = 8, maskBits = 0)
-      val pairs = CdcChunking.overlapPairs(chunked, "doc_id",
-        minOverlap = 0.5, maxBucket = 200)
-      val nPlanted = planted.count()
-      pairs.where(col("id_b") === col("id_a") + 1000000L)
-        .agg(lit(nPlanted).as("n_planted"),
-          count(lit(1)).as("n_recovered"))
-    }),
-
-    // JSONL-column ingest QC: deterministic JSON records built from the
-    // documents row (doc_id%13 prefixed-corrupt), field extraction +
-    // parse-probe validity as ONE projection — malformed rows flagged,
-    // never dropped
-    "q_json_extract" -> ((s, d) => {
-      val j0 = concat(lit("{\"doc_id\":"), col("doc_id"),
-        lit(",\"lang\":\""), coalesce(col("lang"), lit("und")),
-        lit("\",\"source\":\""), coalesce(col("source"), lit("unknown")),
-        lit("\",\"n_chars\":"), coalesce(col("n_chars"), lit(-1L)),
-        lit("}"))
-      val withJson = t(s, d, "documents").withColumn("js",
-        when(col("doc_id") % 13 === 0, concat(lit("X"), j0)).otherwise(j0))
-      graft.sources.JsonIngest.extractFields(withJson, "js",
-          Seq(("ex_lang", "$.lang", "string"),
-            ("ex_source", "$.source", "string"),
-            ("ex_n", "$.n_chars", "bigint")),
-          probePath = "$.doc_id")
-        .select(col("doc_id"), col("json_ok"), col("ex_lang"),
-          col("ex_source"), col("ex_n"))
-        .transform(orderedOnce(_, "doc_id"))
-    }),
-
-    // the one-pass QC rollup over the same parsed frame: malformed
-    // count + per-field null counts among well-formed records
-    "q_json_qc" -> ((s, d) => {
-      val j0 = concat(lit("{\"doc_id\":"), col("doc_id"),
-        lit(",\"lang\":\""), coalesce(col("lang"), lit("und")),
-        lit("\",\"source\":\""), coalesce(col("source"), lit("unknown")),
-        lit("\",\"n_chars\":"), coalesce(col("n_chars"), lit(-1L)),
-        lit("}"))
-      val withJson = t(s, d, "documents").withColumn("js",
-        when(col("doc_id") % 13 === 0, concat(lit("X"), j0)).otherwise(j0))
-      val parsed = graft.sources.JsonIngest.extractFields(withJson, "js",
-        Seq(("ex_lang", "$.lang", "string"),
-          ("ex_source", "$.source", "string"),
-          ("ex_n", "$.n_chars", "bigint")),
-        probePath = "$.doc_id")
-      graft.sources.JsonIngest.qcStats(parsed,
-        Seq("ex_lang", "ex_source", "ex_n"))
-    }),
-
-    // salted skew join vs the plain-join oracle: the hot-key mitigation
-    // must be RESULT-INVISIBLE — same rows, same aggregates
-    "q_skew_join" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey").as("okey"), col("l_quantity"))
-      val ord = t(s, d, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus"))
-      graft.operators.SkewJoin.saltedEquiJoin(li, ord, "okey", saltFactor = 8)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).cast("double").as("sum_qty"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // encoding/mojibake QC on planted defects: U+FFFD keyed doc_id%11,
-    // a BEL control char keyed %13, an accented char keyed %17 — counts
-    // and printable ratio must match the oracle exactly
-    "q_encoding_qc" -> ((s, d) => {
-      val planted = concat(col("text"),
-        when(col("doc_id") % 11 === 0, lit("\uFFFD")).otherwise(lit("")),
-        when(col("doc_id") % 13 === 0, lit("\u0007")).otherwise(lit("")),
-        when(col("doc_id") % 17 === 0, lit("é")).otherwise(lit("")))
-      t(s, d, "documents")
-        .select(col("doc_id"), TextAnalysis.encodingQc(planted).as("qc"))
-        .select(col("doc_id"), col("qc.n_replacement"), col("qc.n_control"),
-          col("qc.n_non_ascii"), col("qc.printable_ratio"))
-        .transform(orderedOnce(_, "doc_id"))
-    }),
-
-    // text → token ids with a corpus-learned vocabulary (top-20 words,
-    // rank = id, deterministic tie order) — the step that PRODUCES the
-    // engine's north-star input shape (doc_id, tokens); the oracle
-    // learns the same vocab and tokenizes with a word join
-    "q_tokenize" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val vocab = TextAnalysis.buildVocab(docs, "text", size = 20)
-      // NOT orderedOnce: every boundary placement was measured slower —
-      // post-explode repartition ships ~500k exploded rows (0.59 →
-      // 0.72 s warm) and a pre-explode array exchange ships text-sized
-      // token arrays (0.85 s); the double tokenize eval under the
-      // sort's sampler is the cheapest of the three
-      docs.select(col("doc_id"),
-          posexplode(TextAnalysis.tokenize(col("text"), vocab, unkId = -1)))
-        .withColumnRenamed("col", "token_id")
-        .orderBy("doc_id", "pos")
-    }),
-
-    // crawl-URL canonicalization: case/port/tracking-param/fragment/
-    // param-order noise collapsed before URL-keyed dedup; the oracle
-    // computes the expected canonical string directly
-    "q_canonical_url" -> ((s, d) => {
-      val raw = concat(lit("HTTP://WWW."), upper(col("source")),
-        lit(".Example.COM:80/docs/"), col("doc_id"),
-        lit("?b=2&utm_source=feed&a=1&fbclid=xyz#frag"))
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.functions.CanonicalUrl.canonicalUrl(raw).as("url"))
-        .orderBy("doc_id")
-    }),
-
-    "q_unicode_nfc" -> ((s, d) => {
-      // Unicode NFC normalization (native expression) cross-validated
-      // against DuckDB's nfc_normalize on synthesized composed/decomposed
-      // suffixes — visually identical strings must hash identically
-      // downstream, so normalization precedes dedup/fingerprinting
-      TextExpressions.register(s)
-      t(s, d, "documents").select(
-          col("doc_id"),
-          when(col("doc_id") % 3 === 0, concat(col("text"), lit(" cafe" + "\u0301")))
-            .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" caf" + "\u00e9")))
-            .otherwise(col("text")).as("dirty"))
-        .select(col("doc_id"),
-          TextExpressions.normalizeText(col("dirty"), "NFC").as("norm"))
-        .select(col("doc_id"), col("norm"), length(col("norm")).as("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // rows-only: deflate byte counts aren't SQL-expressible; the
-    // SQL-expressible halves are oracled by q_compression_meta below
-    "q_compression_ratio" -> ((s, d) => { // deflate size: rows-only
-      TextExpressions.register(s)
-      orderedOnce(
-        t(s, d, "documents")
-          .select(col("doc_id"),
-            round(TextExpressions.compressionRatio(col("text")), 4)
-              .as("deflate_ratio")),
-        "doc_id")
-    }),
-
-    // the oracle companion for q_compression_ratio (the
-    // q_multimodal_meta pattern): everything ABOUT the deflate signal
-    // that SQL can state — per-doc determinism across a repartition
-    // (every row must reproduce its ratio bit-for-bit on a reshuffled
-    // copy) and the input byte mass the ratio denominates over — leaving
-    // only the compressed byte count itself rows-only
-    "q_compression_meta" -> ((s, d) => {
-      TextExpressions.register(s)
-      val docs = t(s, d, "documents")
-      val a = docs.select(col("doc_id"),
-        round(TextExpressions.compressionRatio(col("text")), 4).as("r1"),
-        octet_length(col("text")).as("__nb"))
-      val b = docs.repartition(7, col("doc_id")).select(col("doc_id"),
-        round(TextExpressions.compressionRatio(col("text")), 4).as("r2"))
-      a.join(b, Seq("doc_id")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("r1") === col("r2"), 1L).otherwise(0L))
-          .as("n_deterministic"),
-        sum(col("__nb").cast("long")).as("total_text_bytes"))
-    }),
-
-    "q_repetition" -> ((s, d) => {
-      // word-repetition filter signal (1 − distinct/total words), from
-      // the same one-pass TextProfile — SQL-replicable exactly. The
-      // profile is projected ONCE then read field-wise (the one-arg
-      // repetitionRatio(text) convenience would instantiate the
-      // non-codegen profile expression per field reference)
-      TextExpressions.register(s)
-      t(s, d, "documents")
-        .select(col("doc_id"), TextAnalysis.textProfile(col("text")).as("__tp"))
-        .select(col("doc_id"),
-          TextAnalysis.repetitionRatioFrom(col("__tp")).as("rep_ratio"))
-        .orderBy("doc_id")
-    }),
-
-    "q_pii" -> ((s, d) => {
-      // PII detect + redact over a synthesized dirty column (the clean
-      // corpus has no PII): counts and the redacted length, per doc —
-      // regexes are RE2-compatible so DuckDB replicates them literally
-      val docs = t(s, d, "documents").select(
-        col("doc_id"),
-        when(col("doc_id") % 10 === 0,
-            concat(col("text"), lit(" contact user"), col("doc_id"), lit("@example.com")))
-          .when(col("doc_id") % 10 === 1,
-            concat(col("text"), lit(" call 555-123-4567 or 555 987 6543")))
-          .when(col("doc_id") % 10 === 2,
-            concat(col("text"), lit(" from 192.168.1.99")))
-          .otherwise(col("text")).as("dirty"))
-      docs.select(col("doc_id"),
-          TextAnalysis.piiCounts(col("dirty")).as("__p"),
-          length(TextAnalysis.redactPii(col("dirty"))).as("redacted_len"))
-        .select(col("doc_id"), col("__p.n_emails").as("n_emails"),
-          col("__p.n_phones").as("n_phones"), col("__p.n_ips").as("n_ips"),
-          col("redacted_len"))
-        .transform(orderedOnce(_, "doc_id"))
-    }),
-
-    "q_logistic_quality" -> ((s, d) => {
-      // classifier application at scale: linear log-odds over the
-      // rounded TextProfile features (sorted-name term order), exactly
-      // SQL-replicable; the sigmoid is monotone so threshold-filtering
-      // on log-odds ≡ filtering on the calibrated score
-      TextExpressions.register(s)
-      val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
-        "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
-      t(s, d, "documents")
-        .select(col("doc_id"), TextAnalysis.textProfile(col("text")).as("__tp"))
-        .select(col("doc_id"),
-          round(TextAnalysis.logOddsFrom(col("__tp"), bias = -2.0, w), 6)
-            .as("log_odds"))
-        .transform(orderedOnce(_, "doc_id"))
-    }),
-
-    "q_mixing" -> ((s, d) => {
-      // deterministic dataset mixing: per-source keep-fractions via the
-      // modulo-bucket path (hash path is production; modulo is the
-      // oracle-replicable spelling) + realized-mix observability
-      val docs = t(s, d, "documents")
-      val weights = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25)
-      val sampled = Mixing.sampleByWeights(docs, "doc_id", "source",
-        weights, defaultWeight = 0.05, granularity = 100, hashKey = false)
-      Mixing.realizedMix(sampled, "source").orderBy("source")
-    }),
-
-    // per-key document cap ("at most N pages per domain"): keep the cap
-    // smallest (rank, id) rows per source — salted two-phase threshold
-    // on a narrow frame, payload filtered via broadcast join; the
-    // multiplicative-mix rank is the SQL-replicable oracle spelling
-    // (production default ranks by xxhash64(id, seed))
-    "q_cap_per_source" -> ((s, d) => {
-      val h = (col("doc_id") * lit(2654435761L) + lit(7L)) % lit(4294967296L)
-      Mixing.capPerKey(t(s, d, "documents"), "source", "doc_id", 15,
-          rankExpr = Some(h))
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // deterministic train/val/test assignment: modulo-bucket oracle mode
-    // (granularity 100 so all three splits appear at sf0.01's id range)
-    "q_split_sets" -> ((s, d) =>
-      Mixing.assignSplits(t(s, d, "documents"), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-          granularity = 100, hashKey = false)
-        .groupBy("split").agg(count(lit(1)).as("n"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-        .orderBy("split")),
-
-    // seed-keyed deterministic epoch shuffle: top-100 of the permutation
-    // order (orderBy+limit = TakeOrderedAndProject, no global sort
-    // materialized for the check; the full sort is one range exchange).
-    // Knuth multiplicative hash here because it's plain-SQL-replicable;
-    // xxhash64 is the production default in Mixing.epochOrder
-    "q_epoch_order" -> ((s, d) => {
-      def h(c: Column) = (c * lit(2654435761L) + lit(42L)) % lit(4294967296L)
-      Mixing.epochOrder(t(s, d, "documents"), "doc_id", 42L,
-          hashExpr = Some(h(col("doc_id"))))
-        .select(col("doc_id"), h(col("doc_id")).as("h"))
-        .limit(100)
-    }),
-
-    // token-window chunking with overlap (maxLen=4, stride=3) over the
-    // oracle-visible derived sequence table; scalar projections of each
-    // chunk so the oracle compares values, not array encodings
-    "q_chunk_tokens" -> ((s, d) => {
-      val ch = Chunking.chunkTokens(seqFromDocs(s, d), "doc_id", "tokens",
-        maxLen = 4, overlap = 1)
-      ch.select(col("doc_id"), col("chunk_id"), col("chunk_start"),
-          col("n_chunk_tok"),
-          element_at(col("chunk_tokens"), 1).cast("long").as("first_tok"),
-          element_at(col("chunk_tokens"), col("n_chunk_tok")).cast("long")
-            .as("last_tok"),
-          aggregate(col("chunk_tokens"), lit(0L), (a, x) => a + x).as("tok_sum"))
-        .orderBy("doc_id", "chunk_id", "chunk_start", "n_chunk_tok",
-          "first_tok", "last_tok", "tok_sum")
-    }),
-
-    // embedding-column QC: violations over deterministically planted
-    // defects (NaN poison / zero vector / truncated dim / NULL whole
-    // vector by vec_id arithmetic — same planting pattern as seqFromDocs)
-    "q_embedding_qc" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val v = col("vec_id")
-      val emb = col("embedding")
-      val planted = e.select(v,
-        when(v % 101 === 1, concat(slice(emb, 1, 1),
-            array(lit(Float.NaN)), slice(emb, 3, 100000)))
-          .when(v % 101 === 2, transform(emb, _ => lit(0.0f)))
-          .when(v % 101 === 3, slice(emb, 1, 5))
-          .when(v % 101 === 4, lit(null).cast("array<float>"))
-          .otherwise(emb).as("embedding"))
-      EmbeddingQC.violations(planted, "vec_id", "embedding", expectedDim = 64)
-        .orderBy("vec_id", "rule_id")
-    }),
-
-    // robust median/MAD outlier fence on l_extendedprice: the fence is
-    // estimated on a deterministic 10% sample (the at-scale pattern —
-    // exact order statistics over a pinned subset), outliers counted on
-    // every row; approx_percentile is the sketch alternative
-    "q_outliers_price" -> ((s, d) =>
-      Profile.robustOutliers(t(s, d, "lineitem"), "l_extendedprice", k = 3.5,
-        sampleFilter = Some(col("l_orderkey") % 10 === 0))),
-
-    // exact dedup keyed on the TOKEN payload (the engine's north-star
-    // input shape — no detokenization needed; xxhash64 hashes the array
-    // directly): a doubled corpus must collapse pairwise
-    "q_seq_dedup" -> ((s, d) => {
-      val seq = seqFromDocs(s, d).select(col("doc_id"), col("tokens"))
-      val doubled = seq.unionByName(
-        seq.withColumn("doc_id", concat(lit("dup_"), col("doc_id"))))
-      Dedup.exactDuplicates(doubled, "doc_id", "tokens")
-        .agg(count(lit(1)).as("n_groups"),
-          sum(col("n_docs")).as("n_docs_total"))
-    }),
-
-    // concat-and-chunk packing placement: every doc's global token
-    // offset (two-level distributed prefix sum — no SinglePartition
-    // window) and the fixed 512-token training windows it spans
-    "q_concat_pack" -> ((s, d) =>
-      Packing.concatChunk(
-          decontamCorpus(s, d).select(col("doc_id"), col("n_tok")),
-          "doc_id", "n_tok", windowLen = 512L)
-        .select(col("doc_id"), col("n_tok"), col("offset").as("tok_offset"),
-          col("first_window"), col("last_window"))
-        .orderBy("doc_id")),
-
-    // the assembled packed windows: scalar projections of each window's
-    // token array (size / sum / ends) verify CONTENT AND ORDER of the
-    // reassembly against the oracle's global-position replica
-    // cost = ACTUAL array size (the planted n_tok≠size rows must not
-    // drift the reassembly offsets)
-    "q_pack_windows" -> ((s, d) =>
-      Packing.materializeWindows(
-          decontamCorpus(s, d).select(col("doc_id"), col("tokens"))
-            .withColumn("sz", size(col("tokens"))),
-          "doc_id", "tokens", "sz", windowLen = 512L)
-        .select(col("window_id"),
-          size(col("tokens")).cast("long").as("n_tok"),
-          aggregate(col("tokens"), lit(0L), (a, x) => a + x).as("tok_sum"),
-          element_at(col("tokens"), 1).cast("long").as("first_tok"),
-          element_at(col("tokens"), -1).cast("long").as("last_tok"))
-        .orderBy("window_id")),
-
-    // token-level benchmark decontamination over the derived seq table:
-    // the "benchmark" is a deterministic suffix-slice of every mod-89
-    // doc's clean token sequence, so leaked 3-grams are planted by
-    // construction; Spark matches on native gram HASHES, the oracle on
-    // gram CONTENT (DuckDB list slices) — equal counts prove the hash
-    // path finds exactly the true overlaps
-    "q_decontaminate" -> ((s, d) => {
-      Decontamination.contaminated(
-          decontamCorpus(s, d), "doc_id", "tokens",
-          decontamBench(s, d), "tokens", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // the apply step: corpus minus contaminated docs, with a payload
-    // checksum (sum of n_tok) proving the survivors are the right rows
-    "q_decontam_clean" -> ((s, d) =>
-      Decontamination.removeContaminated(
-          decontamCorpus(s, d), "doc_id", "tokens",
-          decontamBench(s, d), "tokens", n = 3)
-        .agg(count(lit(1)).as("n_clean"),
-          sum(col("n_tok")).as("sum_ntok"))),
-
-    // C4-style line-level dedup: corpus-frequent boilerplate lines
-    // (planted by doc_id arithmetic) are scrubbed, document bodies kept
-    "q_line_dedup" -> ((s, d) => {
-      val aug = t(s, d, "documents").select(col("doc_id"), concat(col("text"),
-          when(col("doc_id") % 3 === 0, lit("\nfollow us on example social"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 7 === 0, lit("\nall rights reserved"))
-            .otherwise(lit(""))).as("text"))
-      LineDedup.removeDuplicateLines(aug, "doc_id", "text", minOccurrences = 3)
-        .select("doc_id", "text").orderBy("doc_id")
-    }),
-
-    // rows-only: the Karp–Rabin hash values are seed-specific; the
-    // SQL-expressible halves are oracled by q_fingerprint_meta below
-    "q_fingerprints" -> ((s, d) => { // hash-specific: rows-only
-      TextExpressions.register(s)
-      t(s, d, "documents")
-        .select(col("doc_id"), TextExpressions.fingerprint(col("text"), 32).as("fingerprint"))
-        .orderBy("doc_id")
-    }),
-
-    // the oracle companion for q_fingerprints: per-doc determinism
-    // across a repartition, plus content-functionality — every group of
-    // EQUAL texts must carry exactly one distinct fingerprint (the
-    // fingerprint is a pure function of content, never of id/partition/
-    // evaluation order). Distinct-fp-equals-distinct-text is NOT
-    // claimed: a windowed fingerprint legitimately collides docs that
-    // share their minimizing window, so only the hash values themselves
-    // stay rows-only (q_fingerprints).
-    "q_fingerprint_meta" -> ((s, d) => {
-      TextExpressions.register(s)
-      val docs = t(s, d, "documents")
-      val a = docs.select(col("doc_id"), col("text"),
-        TextExpressions.fingerprint(col("text"), 32).as("f1"))
-      val b = docs.repartition(5, col("doc_id")).select(col("doc_id"),
-        TextExpressions.fingerprint(col("text"), 32).as("f2"))
-      val det = a.join(b, Seq("doc_id")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("f1") === col("f2"), 1L).otherwise(0L))
-          .as("n_deterministic"))
-      val multi = a.groupBy(col("text"))
-        .agg(countDistinct(col("f1")).as("__nf"))
-        .agg(coalesce(sum(when(col("__nf") > 1, 1L).otherwise(0L)), lit(0L))
-          .as("n_multi_fp_texts"))
-      det.crossJoin(multi)
-    }),
-
-    // ---- dedup ----
-
-    "q_word_jaccard" -> ((s, d) => {
-      val docs = t(s, d, "documents").where(col("doc_id") < 100)
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 1, threshold = 0.5)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    "q_dedup_clusters" -> ((s, d) => {
-      // transitive closure of the (oracled) word-jaccard pairs: every
-      // vertex labeled with its component's min id — hash-min label
-      // propagation vs a recursive-CTE reachability oracle
-      val docs = t(s, d, "documents").where(col("doc_id") < 100)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 1, threshold = 0.5)
-      Dedup.nearDupClusters(pairs).orderBy("id")
-    }),
-
-    "q_minhash_pairs" -> ((s, d) => // hash-specific: rows-only
-      Dedup.minhashNearDuplicates(
-          t(s, d, "documents"), "doc_id", "text", k = 32, bands = 8, threshold = 0.7)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")),
-
-    "q_simhash_pairs" -> ((s, d) => // hash-specific: rows-only
-      Dedup.simhashNearDuplicates(t(s, d, "documents"), "doc_id", "text", maxHamming = 3)
-        .orderBy("id_a", "id_b")),
-
-    // ---- planted-recall oracles: every self-unioned exact duplicate
-    // MUST surface through the LSH path (jaccard 1 / hamming 0 / cosine
-    // 1 pairs collide in every band/bucket by construction), so the
-    // recovered-planted-pair count is oracle-computable exactly — this
-    // converts "LSH runs" into "LSH finds what it must find" ----
-
-    "q_minhash_recall" -> ((s, d) => {
-      val docs = t(s, d, "documents").where(col("doc_id") < 500)
-      val doubled = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000))
-      // maxBucket > corpus size: the cap must not eat planted pairs
-      Dedup.minhashNearDuplicates(doubled, "doc_id", "text",
-          k = 32, bands = 8, threshold = 0.9, maxBucket = 5000)
-        .where(col("id_b") === col("id_a") + 1000000 && col("jaccard") === 1.0)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    "q_simhash_recall" -> ((s, d) => {
-      val docs = t(s, d, "documents").where(col("doc_id") < 500)
-      val doubled = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000))
-      Dedup.simhashNearDuplicates(doubled, "doc_id", "text",
-          maxHamming = 3, maxBucket = 5000)
-        .where(col("id_b") === col("id_a") + 1000000 && col("hamming") === 0)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    "q_embedding_recall" -> ((s, d) => {
-      val embs = t(s, d, "embeddings").where(col("vec_id") < 500)
-      val doubled = embs.unionByName(
-        embs.withColumn("vec_id", col("vec_id") + 1000000))
-      Dedup.embeddingNearDuplicates(doubled, "vec_id", "embedding",
-          dim = 64, threshold = 0.999)
-        .where(col("id_b") === col("id_a") + 1000000)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    // SemDeDup (cluster-then-compare semantic dedup) with a FULL
-    // survivor oracle: at τ=0.999 the only qualifying pairs are the
-    // planted exact copies (max natural pairwise cosine ≈ 0.51, judged
-    // sound at both SFs), identical vectors always share a cluster
-    // (same floats → same argmax), so within-cluster == global and the
-    // oracle can state the drop rule directly with NOT EXISTS
-    "q_semdedup" -> ((s, d) => {
-      val embs = t(s, d, "embeddings").select("vec_id", "embedding")
-      val doubled = embs.unionByName(
-        embs.withColumn("vec_id", col("vec_id") + 1000000))
-      Similarity.semDedup(doubled, "vec_id", "embedding",
-          nCentroids = 8, threshold = 0.999)
-        .select("vec_id").orderBy("vec_id")
-    }),
-
-    "q_exact_dups" -> ((s, d) => {
-      // self-union doubles every doc → every text is an exact-dup group
-      val docs = t(s, d, "documents")
-      val doubled = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000))
-      Dedup.exactDuplicates(doubled, "doc_id", "text")
-        .agg(count(lit(1)).as("n_groups"), sum(col("n_docs")).as("n_docs_total"))
-    }),
-
-    "q_contamination" -> ((s, d) => {
-      // benchmark decontamination: corpus docs sharing ≥2 distinct
-      // 5-gram shingles with the (small) eval set — hash-keyed broadcast
-      // join; oracle replicates the shingle construction and string join
-      val docs = t(s, d, "documents")
-      val bench = docs.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("bid"), col("text"))
-      Dedup.ngramContamination(docs, "doc_id", "text", bench, "bid", "text",
-          n = 5, minHits = 2)
-        .orderBy("corpus_id", "bench_id")
-    }),
-
-    // substring-level dup signal: fraction of each doc's distinct
-    // 5-grams that occur in another doc (hash-keyed; oracle replays the
-    // same shingles as strings)
-    "q_dup_spans" -> ((s, d) =>
-      Dedup.duplicatedSpanFraction(t(s, d, "documents"), "doc_id", "text", n = 5)
-        .orderBy("doc_id")),
-
-    // ---- similarity / ANN ----
-
-    "q_ann_topk" -> ((s, d) => {
-      VectorExpressions.register(s)
-      val embs = t(s, d, "embeddings")
-      val q = embs.orderBy("vec_id").select("embedding").head().getSeq[Float](0).toArray
-      Similarity.bruteForceTopK(embs, "vec_id", "embedding", q, 10)
-        .select(col("vec_id"), round(col("score"), 4).as("score"))
-        .orderBy(desc("score"), col("vec_id"))
-    }),
-
-    "q_ann_ivf" -> ((s, d) => { // rows-only (IVF recall is approximate)
-      val embs = t(s, d, "embeddings")
-      val q = embs.orderBy("vec_id").select("embedding").head().getSeq[Float](0).toArray
-      val idx = Similarity.buildIvf(embs, "vec_id", "embedding", nCentroids = 8)
-      Similarity.ivfTopK(idx, "vec_id", "embedding", q, 10, nProbe = 4)
-        .select(col("vec_id"), round(col("score"), 4).as("score"))
-        .orderBy(desc("score"), col("vec_id"))
-    }),
-
-    // IVF planted-recall companion (the q_minhash_recall pattern for the
-    // ANN scale path): every query vector has an EXACT planted duplicate
-    // (vec_id + 1000000, identical floats) — identical vectors get the
-    // identical nearestCentroid argmax, so the duplicate's cell is BY
-    // CONSTRUCTION the first cell probed, and top-10 at cosine 1.0 must
-    // surface both copies even at nProbe = 2 of 8. The oracle computes
-    // the exact expected hit count (2 per query).
-    "q_ivf_recall" -> ((s, d) => {
-      val embs = t(s, d, "embeddings")
-      val doubled = embs.unionByName(
-        embs.withColumn("vec_id", col("vec_id") + 1000000))
-      val idx = Similarity.buildIvf(doubled, "vec_id", "embedding", nCentroids = 8)
-      val queries = embs.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Similarity.ivfTopKBatch(idx, "vec_id", "embedding",
-          queries, "qid", "embedding", k = 10, nProbe = 2)
-        .where(col("id") === col("query_id") ||
-          col("id") === col("query_id") + 1000000)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    // IVF-PQ planted recall (the q_ivf_recall pattern for the
-    // compressed tier): corpus L2-normalized then PQ-encoded to 8
-    // bytes/vector (32x); each query is a corpus member with an exact
-    // twin — identical floats encode to identical codes
-    // (deterministic argmin tie-break), both score the query's own
-    // ADC maximum neighborhood, and top-10 must surface both
-    "q_ivfpq_recall" -> ((s, d) => {
-      val embs = Similarity.withL2Normalized(
-        t(s, d, "embeddings"), "embedding", "nvec")
-      val doubled = embs.unionByName(
-        embs.withColumn("vec_id", col("vec_id") + 1000000))
-      val model = Similarity.trainPq(doubled, "nvec",
-        nSub = 8, nCodes = 64, iters = 1)
-      val encoded = Similarity.pqEncodeAll(doubled, "nvec", model)
-        .select("vec_id", "pq_codes")
-      // bounded query collect (the ivfTopKBatch contract), then ONE
-      // batched ADC job for all queries — the per-query loop this
-      // replaces scanned the code table |Q| times (17.4 s at sf0.1)
-      val queries = embs.where(col("vec_id") < 8)
-        .select("vec_id", "nvec").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-      Similarity.pqTopKBatch(encoded, "vec_id", "pq_codes", model,
-          queries, k = 10)
-        .where(col("vec_id") === col("query_id") ||
-          col("vec_id") === col("query_id") + 1000000)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    "q_embedding_neardup" -> ((s, d) => { // rows-only
-      val embs = t(s, d, "embeddings")
-      val doubled = embs.unionByName(
-        embs.where(col("vec_id") < 20).withColumn("vec_id", col("vec_id") + 500000))
-      Dedup.embeddingNearDuplicates(doubled, "vec_id", "embedding",
-          dim = 64, threshold = 0.999)
-        .select("id_a", "id_b").orderBy("id_a", "id_b")
-    }),
-
-    "q_dedup_apply" -> ((s, d) => {
-      // doubled corpus → exact-dedup keeps one representative per text
-      val docs = t(s, d, "documents")
-      val doubled = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000))
-      import s.implicits._
-      Seq(Dedup.dropExactDuplicates(doubled, "doc_id", "text").count())
-        .toDF("n_kept")
-    }),
-
-    // exact-dedup keep-BEST: the surviving copy minimizes (keepBy, id)
-    // rather than plain min id — here keepBy = id mod 7, a
-    // SQL-replicable stand-in for "highest quality copy wins"
-    "q_dedup_keep_best" -> ((s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val doubled = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000))
-      Dedup.dropExactDuplicates(doubled, "doc_id", "text",
-          keepBy = Some(pmod(col("doc_id"), lit(7L))))
-        .select("doc_id")
-    }),
-
-    // greedy sequence packing: per-source first-fit into 1000-char
-    // packs, walked in doc_id order — a sequential per-group fold
-    // (typed flatMapSortedGroups); oracle replays the identical fold
-    // as a recursive CTE stepping one row per source per iteration
-    "q_pack_documents" -> ((s, d) =>
-      Packing.greedyPack(t(s, d, "documents"), "source", "doc_id", "n_chars",
-          budget = 1000)
-        .select("source", "doc_id", "n_chars", "pack_id", "pack_pos")
-        .orderBy("source", "doc_id")),
-
-    // incremental dedup: new batch vs an already-ingested corpus —
-    // bloom prefilter (no false negatives) + exact anti-join confirm;
-    // oracle is the plain NOT EXISTS text anti-join
-    "q_incremental_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val seen = docs.where(col("doc_id") < 250)
-      Dedup.dropSeenDuplicates(docs, seen, "text", expectedSeen = 250)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // snapshot diff: per-key added/removed/changed/unchanged between two
-    // derived snapshots (old = id%3≠0 with id%7==0 texts mutated; new =
-    // id%5≠0) — the incremental-crawl refresh classifier; narrow
-    // (key, xxhash64) full-outer join vs a direct-equality SQL oracle.
-    // The mutated set (%7) intersects BOTH snapshots (e.g. id=7: %3≠0,
-    // %5≠0) so all four statuses — including 'changed' — are exercised
-    // end-to-end (a %10 mutation set was a subset of the new-snapshot
-    // exclusion %5, leaving 'changed' untested against the oracle).
-    "q_snapshot_diff" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val oldSnap = docs.where(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-      val newSnap = docs.where(col("doc_id") % 5 =!= 0)
-        .select("doc_id", "text")
-      SnapshotDiff.diff(oldSnap, newSnap, "doc_id", Seq("text"))
-        .orderBy("doc_id")
-    }),
-
-    // column-level change attribution: for every changed key, WHICH
-    // columns differ and how (old/new as strings, null-safe so a
-    // value<->NULL transition attributes) — payloads semi-joined down
-    // to changed keys BEFORE the wide join; fixture mutates text on
-    // %7 keys and nulls lang on %11 keys so both columns attribute
-    "q_diff_columns" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val oldSnap = docs.where(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"),
-          when(col("doc_id") % 11 === 0, lit(null: String))
-            .otherwise(col("lang")).as("lang"))
-      val newSnap = docs.where(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id"), col("text"), col("lang"))
-      SnapshotDiff.changedColumns(oldSnap, newSnap, "doc_id",
-          Seq("text", "lang"))
-        .orderBy("doc_id", "column")
-    }),
-
-    // per-source robust fences: each source judged against ITS OWN
-    // median +- 3.5*1.4826*MAD (a shifted-but-healthy source is not an
-    // outlier factory); three grouped aggregates, medians re-attached
-    // by broadcast, exact-median oracle mode
-    "q_group_fence" -> ((s, d) =>
-      Profile.groupRobustFence(t(s, d, "documents"), "source", "n_chars",
-        k = 3.5, exact = true)),
-
-    // active-learning margin sampler: the 20 documents the quality
-    // classifier is LEAST sure about (|log-odds| closest to 0) — where
-    // a labeling budget buys the most; projection + TakeOrdered
-    "q_active_margin" -> ((s, d) =>
-      TextAnalysis.uncertaintySample(t(s, d, "documents"), "doc_id",
-        "text", bias = -2.0,
-        Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
-          "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0), k = 20)),
-
-    // UCB1 source allocation: mean quality + sqrt(2 ln N / n) per
-    // source — the exploration bonus keeps barely-measured sources in
-    // the curation budget until they've been SEEN (pure mean-ranking
-    // starves them); one sufficient-stats aggregate
-    "q_ucb_alloc" -> ((s, d) => {
-      TextExpressions.register(s)
-      val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
-        "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
-      val scored = t(s, d, "documents").select(col("source"),
-        round(TextAnalysis.logOddsFrom(
-          TextAnalysis.textProfile(col("text")), -2.0, w), 6)
-          .as("reward"))
-      Mixing.ucbAllocation(scored, "source", "reward")
-    }),
-
-    // 2-D Pareto frontier over (length, quality): the best document at
-    // every length budget — the whole selection menu, not one blended
-    // trade-off point; O(distinct lengths) window, corpus never sorts
-    "q_pareto_front" -> ((s, d) => {
-      TextExpressions.register(s)
-      val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
-        "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
-      val scored = t(s, d, "documents").select(col("doc_id"),
-        col("n_chars"),
-        round(TextAnalysis.logOddsFrom(
-          TextAnalysis.textProfile(col("text")), -2.0, w), 6)
-          .as("log_odds"))
-      Selection.paretoFrontier(scored, "doc_id", "n_chars", "log_odds")
-    }),
-
-    // sequence predictability: order-1 transition entropy of per-user
-    // event streams vs the marginal — the scripted-traffic detector
-    // (a bot's state machine has near-1 predictability at any volume)
-    "q_transition_entropy" -> ((s, d) =>
-      Sessionize.transitionEntropy(t(s, d, "events"), "user_id", "ts",
-        "event_type", "event_id")),
-
-    // within-session market baskets: which event types happen in the
-    // SAME VISIT (30-min gap sessions), lift over session baskets —
-    // associationRules smears a month into one basket; this doesn't
-    "q_session_baskets" -> ((s, d) =>
-      Sessionize.sessionBaskets(t(s, d, "events"), "user_id", "ts",
-        "event_type", gapMinutes = 30)),
-
-    // Markov stationarity: the long-run mix implied by the observed
-    // transition matrix (3 power steps from uniform) vs the observed
-    // mix — a gap means the stream is still drifting toward a
-    // different regime, which no frequency snapshot can see
-    "q_stationary_mix" -> ((s, d) =>
-      Sessionize.stationaryMix(t(s, d, "events"), "user_id", "ts",
-        "event_type", "event_id", iters = 3)),
-
-    // Kish effective sample size under length-weighting: (Σw)²/Σw²
-    // per source — how much data the weights ACTUALLY keep; the
-    // honesty number every weighted-sampling scheme owes its user
-    "q_kish_ess" -> ((s, d) =>
-      Profile.kishEss(t(s, d, "documents"), "source", "n_chars")),
-
-    // Simpson's-paradox screen: per-flag OLS slope vs the pooled slope
-    // with sign-opposition flags — the aggregation trap detector (a
-    // pooled trend that reverses within every stratum is a mix
-    // artifact, and a gate tuned on it does the opposite of intended)
-    "q_simpsons" -> ((s, d) =>
-      Profile.simpsonsCheck(t(s, d, "lineitem"), "l_returnflag",
-        "l_quantity", "l_extendedprice")),
-
-    // lead-lag discovery: corr(clicks(t), purchases(t+lag)) for lag
-    // -3..3 over zero-filled aligned days — which series leads and by
-    // how much; exact integer sums, driver arithmetic over O(days)
-    "q_lead_lag" -> ((s, d) =>
-      Sessionize.leadLagCorr(t(s, d, "events"), "ts", "event_type",
-        "click", "purchase", maxLag = 3)),
-
-    // weekday-seasonality strength: eta-squared of day-of-week over the
-    // zero-filled daily series + peak/trough ISO weekday — how much of
-    // the stream is just a weekly rhythm
-    "q_weekday_effect" -> ((s, d) =>
-      Sessionize.weekdayEffect(t(s, d, "events"), "ts")),
-
-    // in-batch negative collision audit: same-source pairs landing in
-    // the same hash-assigned contrastive batch (the "negatives" that
-    // are secretly positives) — realized rate of THIS batching, not
-    // the i.i.d. approximation
-    "q_inbatch_collisions" -> ((s, d) =>
-      Mixing.inBatchCollisions(t(s, d, "documents"), "doc_id", "source",
-        nBatches = 16, seed = 11L)),
-
-    // per-label embedding centroids vs the corpus centroid: which
-    // labels occupy their own region of embedding space — the
-    // semantic-geometry mixture readout; vectors never shuffle whole
-    "q_label_centroids" -> ((s, d) =>
-      EmbeddingStats.groupCentroids(t(s, d, "embeddings"), "label",
-        "embedding")),
-
-    // deterministic MLM mask planning over the derived seq table:
-    // position i masks iff (i*A + key*31) % 100 < 15 — a function of
-    // the row, so the plan replays identically on any cluster; per-seq
-    // loss-mass accounting
-    "q_mask_plan" -> ((s, d) =>
-      Packing.maskPlan(
-        decontamCorpus(s, d)
-          .withColumn("__idn", substring(col("doc_id"), 5, 12)
-            .cast("long")),
-        "doc_id", "__idn", "n_tok", ratePct = 15, seed = 0L)),
-
-    // data valuation by set membership: what each source UNIQUELY
-    // contributes (words in no other source + their mass; one planted
-    // per-source marker word keeps the signal visible at tiny vocab) —
-    // the hard deletion-candidate readout xent similarity can't give
-    "q_source_exclusivity" -> ((s, d) =>
-      TextAnalysis.sourceExclusivity(
-        t(s, d, "documents").withColumn("text",
-          concat(col("text"), lit(" xsrc"), col("source"))),
-        "source", "text")),
-
-    // Kaplan-Meier user-lifetime survival: product-limit estimator
-    // with final-day actives right-censored (the distinction naive
-    // average-lifetime tables get wrong); ordered running product via
-    // exp-sum-ln — left-to-right in both engines
-    "q_survival" -> ((s, d) =>
-      Sessionize.survivalCurve(t(s, d, "events"), "user_id", "ts")),
-
-    // distribution-free trust radii: each source's gate rate with its
-    // Hoeffding 95/99% epsilon — "0.83 +- 0.19" stops people acting
-    // on small-n noise; valid at ANY n, no normality assumption
-    "q_sample_bounds" -> ((s, d) =>
-      Drift.hoeffdingBounds(t(s, d, "documents"), "source",
-        col("n_chars") >= 200)),
-
-    // violation locality triage: is each rule's fallout concentrated
-    // in one partition (quarantine the shard) or diffuse (fix the
-    // rule/contract)? max-share + Herfindahl over (rule, part) counts
-    // carried through the REAL validation pass
-    "q_rule_locality" -> ((s, d) => {
-      val base = decontamCorpus(s, d)
-        .withColumn("part",
-          substring(col("doc_id"), 5, 12).cast("long") % 7)
-      ValidationPass.ruleLocality(
-        ValidationPass.seqViolations(base,
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources),
-          carryCols = Seq("part")), "part")
-    }),
-
-    // context-window budgeting: token mass lost past K=8 per source —
-    // a source with heavy loss is a different (head-only) corpus after
-    // packing, which no length histogram states directly
-    "q_truncation_loss" -> ((s, d) =>
-      Packing.truncationLoss(seqFromDocs(s, d), "source", "n_tok",
-        window = 8)),
-
-    // distribution-matching plan: per-bin keep fractions that reshape
-    // src1's length distribution into src0's (the length-match-before-
-    // compare step); bottleneck-bin scaling, unmatchable bins surfaced
-    "q_dist_match" -> ((s, d) =>
-      Mixing.distributionMatchPlan(t(s, d, "documents"), "source",
-        "n_chars", refGroup = "src0", targetGroup = "src1",
-        lo = 0.0, hi = 600.0, bins = 12)),
-
-    // contextual rarity: lang rare WITHIN its source but common
-    // globally (a routing bug, not a rare value) — planted by diverting
-    // most of src5's 'en' docs to 'de'; lift = within/global share
-    "q_contextual_rare" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("source"),
-        when(col("source") === "src5" && col("lang") === "en" &&
-          col("doc_id") % 7 =!= 0, lit("de"))
-          .otherwise(col("lang")).as("lang"))
-      Profile.contextualRare(docs, "source", "lang")
-    }),
-
-    // robust per-type volume trend: Theil-Sen slope over the
-    // zero-filled daily series — the decline signal one outage day
-    // cannot drag (OLS flips sign; the pairwise median shrugs)
-    "q_trend_by_type" -> ((s, d) =>
-      Sessionize.trendByGroup(t(s, d, "events"), "ts", "event_type")),
-
-    // MMR diversity-aware selection: greedy lambda*rel - (1-lambda)*
-    // max-sim-to-selected — covers the relevant region instead of
-    // stacking near-duplicates of the top hit; k bounded TakeOrdered
-    // jobs, selected vectors ride the plan as literals
-    "q_mmr" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      Selection.mmrSelect(emb, "vec_id", "embedding", q, k = 5,
-        lambda = 0.7)
-    }),
-
-    // expected shortfall per source: mean of the WORST alpha-tail of
-    // doc length — "the bottom decile averages 41 chars" is actionable
-    // where a p10 alone is not; closed tail, boundary value counts
-    "q_cvar" -> ((s, d) =>
-      Profile.cvarByGroup(t(s, d, "documents"), "source", "n_chars",
-        alpha = 0.1)),
-
-    // order-1 entropy rate of the TOKEN stream (the north-star
-    // payload): H(next|cur) vs H(token) — a predictability ratio that
-    // climbs across snapshots means the corpus is getting more
-    // templated even when the unigram mix is stable; pairs built
-    // in-row, token arrays never explode before pairing
-    "q_token_entropy" -> ((s, d) =>
-      TokenHealth.tokenTransitionEntropy(seqFromDocs(s, d), "tokens")),
-
-    // epoch-shuffle independence: EXACT integer Spearman rho between
-    // two seeds' epoch orders (bijective multiplicative keys -> no
-    // ties, no fp) — are epochs independent reorderings or replays
-    "q_shuffle_quality" -> ((s, d) =>
-      Mixing.shuffleIndependence(t(s, d, "documents"), "doc_id",
-        seed1 = 1L, seed2 = 2L)),
-
-    // two-sample bootstrap of the mean gap: per-replicate src0-vs-src2
-    // length deltas from independent deterministic Poisson draws — the
-    // distribution-free "is that gap noise" readout (no normality, no
-    // equal-variance assumption)
-    "q_boot_diff" -> ((s, d) =>
-      Profile.bootstrapDelta(t(s, d, "documents"), "doc_id", "n_chars",
-        "source", "src0", "src2", nBoot = 32, seed = 7L,
-        hashKey = false)),
-
-    // day-grain burstiness: variance-to-mean of daily volume per type
-    // over zero-filled days (Poisson = 1; >> 1 batch uploads, << 1 a
-    // scheduler) — clumping second-grain burstiness can't see
-    "q_overdispersion" -> ((s, d) =>
-      Sessionize.dispersionIndex(t(s, d, "events"), "ts", "event_type",
-        threshold = 1.5)),
-
-    // label separability in embedding space: pairwise Fisher ratio
-    // ||mu_a - mu_b||^2 / (tr_a + tr_b) — J near 0 means the
-    // representation cannot tell the classes apart (no classifier fix)
-    "q_fisher_ratio" -> ((s, d) =>
-      EmbeddingStats.fisherSeparability(t(s, d, "embeddings"), "label",
-        "embedding")),
-
-    // cross-source copy matrix: distinct texts shared verbatim between
-    // source pairs (planted '_m' mirror sources on %23 keys) — two
-    // sources sharing texts are one source weighted twice
-    "q_cross_copies" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val mirror = docs.where(col("doc_id") % 23 === 0)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("text"),
-          concat(col("source"), lit("_m")).as("source"))
-      Dedup.crossSourceCopies(
-        docs.select("doc_id", "text", "source").unionByName(mirror),
-        "text", "source")
-    }),
-
-    // adversarial dedup laundering: duplicates visible only after
-    // Cyrillic->Latin homoglyph folding (planted confusable-substituted
-    // copies on %19 keys) — visually identical, byte-hash distinct
-    "q_homoglyph_dups" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val variants = docs.where(col("doc_id") % 19 === 0)
-        .select((col("doc_id") + 300000L).as("doc_id"),
-          translate(col("text"), "aeopcxy", "аеорсху").as("text"))
-      Dedup.homoglyphGain(
-        docs.select("doc_id", "text").unionByName(variants),
-        "doc_id", "text")
-    }),
-
-    // partition-digest snapshot comparison — the 100-TB fast path that
-    // makes the row-level diff above incremental: per-partition
-    // (count, bit_xor, sum-mod) digests of a multiplicative row hash
-    // (production: xxhash64 via SnapshotDiff.rowHash — the epoch-order
-    // dual-spelling pattern), compared in O(partitions). Fixture is
-    // engineered so all four statuses appear: partition = doc_id % 7,
-    // the %7==0 text mutation confines 'changed' to partition 0,
-    // partitions 5/6 are excluded from one side each, 1–4 unchanged.
-    "q_partition_digest" -> ((s, d) => {
-      val base = t(s, d, "documents")
-        .where(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 =!= 0)
-        .withColumn("part", col("doc_id") % 7)
-      val oldSnap = base.where(col("part") =!= 6)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-      val newSnap = base.where(col("part") =!= 5)
-      def h(df: DataFrame): Column =
-        (df("doc_id") * lit(2654435761L) +
-          length(df("text")).cast("long") * lit(40503L) + lit(7L)) %
-          lit(4294967296L)
-      SnapshotDiff.changedPartitions(
-          SnapshotDiff.partitionDigests(oldSnap, "part", h(oldSnap)),
-          SnapshotDiff.partitionDigests(newSnap, "part", h(newSnap)))
-        .orderBy("part")
-    }),
-
-    // length-bucketed batching accounting: power-of-two buckets via
-    // integer bin-length (never floor(log2) — double rounding
-    // mis-buckets exact powers), pad-to-longest-in-bucket waste per
-    // bucket — the dataloader regime next to greedy pack / concat-chunk
-    "q_length_buckets" -> ((s, d) =>
-      Packing.lengthBucketStats(t(s, d, "documents"), "n_chars",
-        batchSize = 64)),
-
-    // cross-snapshot NEAR-dup planted recall (the q_minhash_recall
-    // pattern for the asymmetric batch-vs-seen path): every batch row is
-    // an exact copy (id + 1000000) of a seen doc, so each must surface
-    // against its twin at jaccard 1.0 — identical shingle sets collide
-    // in every band by construction, so LSH randomness can't miss.
-    "q_seen_neardup_recall" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val seen = docs.where(col("doc_id") < 500)
-      val batch = seen.withColumn("doc_id", col("doc_id") + 1000000)
-      Dedup.minhashSeenDuplicates(batch, "doc_id", "text",
-          seen, "doc_id", "text",
-          k = 32, bands = 8, threshold = 0.9, maxBucket = 5000)
-        .where(col("batch_id") === col("seen_id") + 1000000 &&
-          col("jaccard") === 1.0)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    // rows-only: JPEG/PNG/WAV decode output isn't SQL-expressible
-    // perceptual image near-dup planted recall: 150 noisy PNGs + exact
-    // byte copies (id + 1000000); identical payloads hash to identical
-    // dHashes, so the banded Hamming join must surface every pair — the
-    // visual analogue of q_simhash_recall
-    "q_image_neardup" -> ((s, _) => {
-      import s.implicits._
-      val base = s.range(150).map { id =>
-        val w = 24 + (id % 5).toInt; val h = 20 + (id % 4).toInt
-        Multimodal.MediaRecord(id, Multimodal.syntheticNoisyPng(id, w, h),
-          "image/png", w, h, 0L)
-      }
-      val doubled = base.union(
-        base.map(r => r.copy(media_id = r.media_id + 1000000)))
-      Dedup.hammingNearDuplicates(
-          Multimodal.imageDHashes(doubled), "media_id", "dhash",
-          maxHamming = 0)
-        .where(col("id_b") === col("id_a") + 1000000)
-        .agg(count(lit(1)).as("n_planted_found"))
-    }),
-
-    "q_multimodal_features" -> ((s, _) => {
-      val feats = Multimodal.extractFeatures(Multimodal.syntheticMedia(s, 300))
-      orderedOnce(
-        feats.toDF().select(col("media_id"), col("mime"), col("n_bytes"),
-          col("frames_sampled")),
-        "media_id")
-    }),
-
-    // oracle companion for the multimodal pass: mime and frames_sampled
-    // ARE SQL-expressible (mime by the generator's id%3 arithmetic;
-    // frames_sampled = 1 for decodable stills/audio, min(frameSample=4,
-    // nFrames≥4) = 4 for video) — so the codec plumbing (every payload
-    // decodes, every mime routes to the right codec) gets a green
-    // CORRECTNESS row; only n_bytes/features stay rows-only (encoder
-    // byte output / pixel math). Ids ride the documents table so the
-    // oracle touches only real parquet.
-    "q_multimodal_meta" -> ((s, _) => {
-      val feats = Multimodal.extractFeatures(Multimodal.syntheticMedia(s, 300))
-      orderedOnce(
-        feats.toDF().select(col("media_id"), col("mime"),
-          col("frames_sampled")),
-        "media_id")
-    }),
-
-    // ---- the flagship sequence-table validation (oracle-checked) ----
-
-    // per-rule violation counts over the oracle-visible derived table —
-    // the real ValidationPass.seqViolations path, hash-verified vs DuckDB
-    "q_seq_validate" -> ((s, d) =>
-      ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources))
-        .groupBy("rule_id").agg(count(lit(1)).as("n_violations"))
-        .orderBy("rule_id")),
-
-    // the violation ROWS themselves (doc_id, rule_id, offending_value) —
-    // the north-star "violations Dataset byte-identical" contract
-    "q_seq_violations" -> ((s, d) =>
-      orderedOnce(
-        ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources)),
-        "doc_id", "rule_id", "offending_value")),
-
-    // substring-level dedup APPLY: tokens covered by a 3-gram occurring
-    // in >= 2 distinct docs are scrubbed (Lee-et-al removal on the token
-    // payload); scalar projections verify content and order of survivors
-    "q_span_scrub" -> ((s, d) => {
-      val scrubbed = Dedup.removeDuplicatedSpans(
-        decontamCorpus(s, d).select(col("doc_id"), col("tokens")),
-        "doc_id", "tokens", n = 3)
-      scrubbed.select(col("doc_id"),
-          size(col("tokens")).cast("long").as("n_orig"),
-          size(col("tokens_clean")).cast("long").as("n_kept"),
-          aggregate(col("tokens_clean"), lit(0L), (a, x) => a + x).as("kept_sum"))
-        .orderBy("doc_id")
-    }),
-
-    // token-payload gram diversity: the token-native repetition signal
-    // (distinct 3-token windows / total windows per doc)
-    "q_token_diversity" -> ((s, d) =>
-      decontamCorpus(s, d)
-        .select(col("doc_id"),
-          TextAnalysis.tokenGramDiversity(col("tokens"), 3).as("gram_diversity"))
-        .orderBy("doc_id")),
-
-    // k-anonymity release gate over quasi-identifiers (source, lang,
-    // kilochar length bucket): cells shared by < 5 rows are
-    // re-identification risks — the privacy audit before any corpus
-    // release; one map-side-combined aggregate, no payload moves
-    "q_k_anonymity" -> ((s, d) =>
-      Governance.kAnonymity(
-        t(s, d, "documents")
-          .withColumn("len_bucket",
-            floor(col("n_chars") / lit(1000L)).cast("long")),
-        Seq("source", "lang", "len_bucket"), k = 5L)
-        .orderBy("source", "lang", "len_bucket")),
-
-    // l-diversity companion: within each (source, len-bucket) cell the
-    // sensitive column (lang) must take >= 2 distinct values or cell
-    // membership itself discloses it; exact distinct via the two-level
-    // (QI, sensitive) pre-aggregate
-    "q_l_diversity" -> ((s, d) =>
-      Governance.lDiversity(
-        t(s, d, "documents")
-          .withColumn("len_bucket",
-            floor(col("n_chars") / lit(1000L)).cast("long")),
-        Seq("source", "len_bucket"), "lang", l = 2L)
-        .orderBy("source", "len_bucket")),
-
-    // one DoReMi multiplicative-weights mixture update: proxy loss =
-    // mean(n_chars mod 97) per source (exact integer sufficient stats,
-    // so both engines divide the same exact sums), reference loss = the
-    // global mean of the same signal, base = raw counts (renormalized
-    // by the update); eta = 0.1 — sources with above-reference loss
-    // gain mixture mass
-    "q_doremi_step" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val lb = docs.groupBy("source")
-        .agg(count(lit(1)).as("n"),
-          (sum(col("n_chars") % 97).cast("double") /
-            count(col("n_chars")).cast("double")).as("loss"))
-        .crossJoin(docs.agg(
-          (sum(col("n_chars") % 97).cast("double") /
-            count(col("n_chars")).cast("double")).as("ref_loss")))
-      Mixing.domainReweight(lb, "source", "n", "loss", "ref_loss", eta = 0.1)
-        .orderBy("source")
-    }),
-
-    // robots-style longest-prefix path rules (RFC 9309 semantics:
-    // longest match decides, ties go to allow, no match = allowed)
-    // over the synthesized host/path grid — the crawl-compliance gate;
-    // rules broadcast, winner via max-of-struct aggregate, no window
-    "q_robots_filter" -> ((s, d) => {
-      import s.implicits._
-      val host0 = when(col("doc_id") % 3 === 0,
-          concat(lower(col("source")), lit(".example.com")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("www."), lower(col("source")), lit(".example.com")))
-        .otherwise(concat(lower(col("source")), lit(".net")))
-      val withUrl = t(s, d, "documents")
-        .select(col("doc_id"),
-          concat(lit("http://"), host0, lit("/p/"), col("doc_id")).as("url"))
-      val rules = Seq(
-        ("src1.example.com", "/", false),
-        ("src1.example.com", "/p/1", true),
-        ("www.src2.example.com", "/p", false),
-        ("src4.net", "/p/4", false),
-        ("src4.net", "/p/44", true),
-        ("src7.net", "/", false),
-        ("src7.net", "/p/7", false)).toDF("host", "prefix", "allow")
-      graft.operators.WebFilter.robotsVerdict(withUrl, "doc_id", "url", rules)
-        .select(col("doc_id"),
-          graft.operators.WebFilter.hostOf(col("url")).as("host"),
-          col("allowed"))
-        .orderBy("doc_id")
-    }),
-
-    // pairwise head-vocabulary (top-30 words) Jaccard between sources —
-    // the mixture-design redundancy/diversity matrix; exchanges carry
-    // (source, word) pairs, text never moves, and everything past the
-    // per-source top-k is bounded at k x |sources| rows
-    "q_vocab_overlap" -> ((s, d) =>
-      TextAnalysis.vocabOverlap(t(s, d, "documents"), "source", "text",
-          k = 30)
-        .orderBy("source_a", "source_b")),
-
-    // embedding centroid drift per label between interleaved snapshot
-    // halves (vec_id parity): cosine of the two snapshot mean vectors —
-    // the embedding-space drift check; one exploded (label, dim)
-    // aggregate, shuffle bounded by |labels| x dim
-    "q_centroid_drift" -> ((s, d) =>
-      graft.operators.EmbeddingQC.centroidDrift(
-        t(s, d, "embeddings")
-          .withColumn("snap", (col("vec_id") % 2).cast("int")),
-        "embedding", "label", "snap")
-        .orderBy("label")),
-
-    // C4-style bad-word gate: word-level blocklist occurrence count,
-    // ratio, and keep verdict — pure zero-shuffle projection, list
-    // rides the plan as a literal
-    "q_badword_filter" -> ((s, d) =>
-      orderedOnce(
-        TextAnalysis.badWordStats(t(s, d, "documents"), "doc_id", "text",
-          Seq("merge", "shuffle", "spill"), maxRatio = 0.05),
-        "doc_id")),
-
-    // exact-count stratified sampling: EXACTLY ceil(0.1 * n_s) docs per
-    // source in deterministic seeded-hash order — the eval-set builder;
-    // per-stratum rank window over narrow rows, payload via semi-join
-    "q_stratified_sample" -> ((s, d) =>
-      Mixing.stratifiedSample(t(s, d, "documents"), "doc_id", "source",
-          fraction = 0.1, seed = 11L, hashKey = false)
-        .select("doc_id", "source").orderBy("doc_id")),
-
-    // stupid-backoff trigram LM (Brants 2007): model trained on even
-    // docs, odd docs scored — unseen trigrams back off to bigram then
-    // Laplace-floored unigram, all exact integer count ratios
-    "q_trigram_backoff" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.trigramBackoff(
-          docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // CCNet head/middle/tail LM-quality terciles per language —
-    // rank-based cuts (exact integer arithmetic), unscorable docs get
-    // a loud NULL bucket
-    "q_ccnet_buckets" -> ((s, d) =>
-      TextAnalysis.lmQualityBuckets(t(s, d, "documents"), "doc_id",
-          "text", "lang")
-        .orderBy("doc_id")),
-
-    // dedup ROI accounting: rows/chars a dedup pass would reclaim per
-    // source (copies planted at doc_id%10==0 via the self-union
-    // pattern); winners by min id, text never enters an exchange
-    "q_dedup_savings" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select("doc_id", "text", "source", "n_chars")
-      val planted = docs.where(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      Dedup.dedupSavings(docs.unionByName(planted), "doc_id", "text",
-          "source", "n_chars")
-        .orderBy("source")
-    }),
-
-    // day-grain PSI trend of the event-type mix vs day one — the drift
-    // dashboard line; one bounded (day, cat) aggregate, in-plan
-    // baseline, grid-bounded joins
-    "q_daily_psi" -> ((s, d) =>
-      Drift.psiTrend(t(s, d, "events"), "ts", "event_type")
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day")),
-
-    // scraped-template detection: dominant 8-word document prefix per
-    // source (template planted on doc_id%4==0 so the winner and its
-    // share are non-trivial); winner via max-of-struct, prefix-level
-    // exchanges only
-    "q_template_headers" -> ((s, d) => {
-      val docs = t(s, d, "documents").withColumn("text",
-        when(col("doc_id") % 4 === 0,
-          concat(lit("tpl hdr one two three four five six "), col("text")))
-          .otherwise(col("text")))
-      TextAnalysis.templateHeaders(docs, "source", "text", prefixWords = 8)
-        .orderBy("source")
-    }),
-
-    // same-content label-conflict audit: identical bytes under
-    // different lang labels (conflicts planted via the self-union
-    // pattern with lang='xx'); (hash, label) pre-aggregate, text never
-    // shuffles
-    "q_lang_conflicts" -> ((s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "text", "lang")
-      val planted = docs.where(col("doc_id") % 25 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .withColumn("lang", lit("xx"))
-      Dedup.contentLabelConflicts(docs.unionByName(planted), "text", "lang")
-        .orderBy("content_hash")
-    }),
-
-    // per-label embedding dispersion: mean/min cosine to the label
-    // centroid — the semantic-diversity dial; centroid from one
-    // (label, dim) aggregate, per-vector sums joined against the
-    // broadcast centroid frame
-    "q_embedding_dispersion" -> ((s, d) =>
-      graft.operators.EmbeddingQC.dispersion(
-        t(s, d, "embeddings"), "vec_id", "embedding", "label")
-        .orderBy("label")),
-
-    // per-doc 3-gram novelty of the odd half against the even half —
-    // the "does it add anything" score; distinct gram sets, word-tuple
-    // joins, text never enters an exchange
-    "q_ngram_novelty" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.ngramNovelty(
-          docs.where(col("doc_id") % 2 === 0),
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // NDCG@10 of the BM25 ranking against graded term-hit relevance —
-    // the retrieval-eval closure of the q_bm25 tier; both rankings are
-    // TakeOrdered folds, position math on the 10 survivors only
-    "q_ndcg" -> ((s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val terms = Seq("spark", "window", "merge")
-      val scored = TextAnalysis.bm25TopK(docs, "doc_id", "text", terms,
-        k = 1000000)
-      val rel = docs.select(col("doc_id"),
-        size(array_intersect(
-          array_distinct(TextAnalysis.words(col("text"))),
-          lit(terms.toArray))).cast("long").as("rel"))
-      Profile.ndcgAtK(scored.join(rel, Seq("doc_id")), "doc_id", "bm25",
-        "rel", k = 10)
-    }),
-
-    // per-host quality reputation (the crawl-frontier domain prior):
-    // pass rate of a length gate per synthesized host — one
-    // map-side-combined aggregate, docs never shuffle
-    "q_host_reputation" -> ((s, d) => {
-      val host0 = when(col("doc_id") % 3 === 0,
-          concat(lower(col("source")), lit(".example.com")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("www."), lower(col("source")), lit(".example.com")))
-        .otherwise(concat(lower(col("source")), lit(".net")))
-      val withUrl = t(s, d, "documents").select(col("doc_id"),
-        concat(lit("http://"), host0, lit("/p/"), col("doc_id")).as("url"),
-        col("n_chars").between(200, 3000).as("keep"))
-      graft.operators.WebFilter.hostQuality(withUrl, "url", "keep")
-        .orderBy("host")
-    }),
-
-    // similarity-score histogram over the word-jaccard candidate pairs
-    // — the dedup-threshold calibration view; bounded aggregate over
-    // the bounded pair frame
-    "q_jaccard_hist" -> ((s, d) => {
-      val docs = t(s, d, "documents").where(col("doc_id") < 100)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 1,
-          threshold = 0.0)
-        .select(round(col("jaccard"), 6).as("jaccard"))
-      Dedup.similarityHistogram(pairs, "jaccard", nBuckets = 10)
-        .orderBy("bucket")
-    }),
-
-    // WARC record header/payload extraction (ISO 28500, the Common
-    // Crawl wire format): records synthesized deterministically per doc
-    // with a garbled-length arm (try_cast NULL) and a missing-separator
-    // arm (payload NULL, len 0); pure codegen'd projection
-    "q_warc_extract" -> ((s, d) => {
-      val crlf = "\r\n"
-      val rec = concat(
-        lit("WARC/1.0" + crlf + "WARC-Type: response" + crlf +
-          "WARC-Target-URI: http://"),
-        lower(col("source")), lit(".example.com/p/"), col("doc_id"),
-        lit(crlf),
-        when(col("doc_id") % 7 === 0,
-          lit("Content-Length: garbled" + crlf))
-          .otherwise(concat(lit("Content-Length: "), col("n_chars"),
-            lit(crlf))),
-        lit("Content-Type: text/plain" + crlf),
-        when(col("doc_id") % 13 === 0, lit(""))
-          .otherwise(concat(lit(crlf), col("text"))))
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.sources.WarcIngest.parseRecord(rec).as("w"))
-        .select(col("doc_id"), col("w.warc_type").as("warc_type"),
-          col("w.target_uri").as("target_uri"),
-          col("w.content_type").as("content_type"),
-          col("w.content_length").as("content_length"),
-          col("w.payload_len").as("payload_len"))
-        .orderBy("doc_id")
-    }),
-
-    // robots.txt parsing (RFC 9309 grammar): comments, blank lines,
-    // multi-group files, empty directives dropped, governing agent by
-    // forward fill — the fetch-side producer of robotsVerdict's rules
-    "q_robots_parse" -> ((s, d) => {
-      val bodies = t(s, d, "documents").select(col("source")).distinct()
-        .select(col("source"), concat(
-          lit("# synthetic robots\nUser-agent: *\n" +
-            "Disallow: /private  # keep out\nAllow: /private/"),
-          lower(col("source")),
-          lit("\nCrawl-delay: 5\nDisallow:\n\n" +
-            "User-agent: badbot\nDisallow: /\n")).as("body"))
-      graft.operators.WebFilter.parseRobots(bodies, "source", "body")
-        .orderBy("source", "line_no")
-    }),
-
-    // row-level quarantine split over the same constraint suite: clean
-    // rows pass through byte-identical (checksummed below), dirty rows
-    // grouped by their violated-rule combination
-    "q_quarantine_clean" -> ((s, d) => {
-      val (clean, _) = ValidationPass.splitValid(seqFromDocs(s, d),
-        ValidationPass.seqConstraints(50000, SeqTableGen.Sources))
-      clean.agg(count(lit(1)).as("n_clean"),
-        sum(col("n_tok")).as("sum_ntok"),
-        sum(size(col("tokens"))).as("sum_size"),
-        min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-    }),
-
-    "q_quarantine_dirty" -> ((s, d) => {
-      val (_, dirty) = ValidationPass.splitValid(seqFromDocs(s, d),
-        ValidationPass.seqConstraints(50000, SeqTableGen.Sources))
-      dirty.groupBy(array_join(col("violated_rules"), ",").as("rules"))
-        .agg(count(lit(1)).as("n_rows"))
-        .orderBy("rules")
-    }),
-
-    // token-id frequency over the derived sequence table: explode →
-    // hash-aggregate (partial agg collapses to ≤vocab rows per partition
-    // BEFORE the shuffle, so shuffle = O(partitions × vocab), not
-    // O(total tokens) — the sublinear sketch-merge shape; PlanSpec pins
-    // partial_count under the Generate)
-    "q_token_freq" -> ((s, d) =>
-      seqFromDocs(s, d)
-        .select(explode(col("tokens")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), col("token")).limit(20)),
-
-    // per-source sequence-length profile (tokenized-payload analytics)
-    "q_seqlen_by_source" -> ((s, d) =>
-      seqFromDocs(s, d)
-        .groupBy("source").agg(
-          count(lit(1)).as("n_seqs"),
-          round(avg(col("n_tok")), 6).as("avg_ntok"),
-          min(col("n_tok")).as("min_ntok"),
-          max(col("n_tok")).as("max_ntok"))
-        .orderBy("source")),
-
-    // KS + chi-square drift over oracle-visible data: shifted l_quantity
-    // vs its own baseline histogram; l_returnflag freq vs a half-sample
-    // baseline (both statistics recomputable exactly in SQL)
-    // ---- hard-negative mining: for each labeled query vector the 3
-    // nearest DIFFERENT-label corpus vectors — broadcast queries,
-    // codegen cosine, label filter as a join predicate (the
-    // contrastive/reward-model training-pair op)
-    "q_hard_negatives" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.hardNegatives(emb, "vec_id", "embedding", "label",
-          emb.where(col("vec_id") < 10), "vec_id", "embedding", "label",
-          k = 3)
-        .select(col("query_id"), col("id"), col("rank"),
-          round(col("score"), 4).as("score"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- mergeable profile algebra: profile each half once, merge
-    // the metadata-sized profiles — profile(A ∪ B) without re-scanning
-    // A (the incremental-snapshot accounting path); oracle replays the
-    // same per-half-then-merge arithmetic
-    "q_profile_merge" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val fields = Seq("l_quantity", "l_extendedprice", "l_discount")
-      val merged = Profile.mergeProfiles(Seq(
-        Profile.mergeableProfile(li.where(col("l_orderkey") % 2 === 0), fields),
-        Profile.mergeableProfile(li.where(col("l_orderkey") % 2 === 1), fields)))
-      merged.select(col("field"), col("cnt"), col("min"), col("max"),
-          round(col("sum"), 4).as("sum"), round(col("avg"), 6).as("avg"))
-        .orderBy("field")
-    }),
-
-    // ---- detokenize round trip: ids → words via the literal vocab;
-    // OOV renders <unk>, in-vocab words reconstruct exactly
-    "q_detokenize" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val vocab = TextAnalysis.buildVocab(docs, "text", size = 20)
-      // NOT orderedOnce: the projection emits the round-trip TEXT, so
-      // the shuffle boundary would move text bytes — measured neutral
-      // warm (0.47 vs 0.49 s) and worse cold; the double tokenize eval
-      // is the cheaper side of this trade
-      docs.select(col("doc_id"),
-          TextAnalysis.detokenize(
-            TextAnalysis.tokenize(col("text"), vocab, unkId = -1), vocab)
-            .as("round_trip"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Flesch reading-ease: regexp-count arithmetic, zero-shuffle
-    // projection; DuckDB's independent regex engine replays the
-    // word/sentence/vowel-group counting
-    "q_readability" -> ((s, d) =>
-      orderedOnce(
-        TextAnalysis.readability(t(s, d, "documents"), "doc_id", "text"),
-        "doc_id")),
-
-    // ---- bucketed co-located join: both sides written hash-bucketed
-    // + sorted on the join key, so the fact⋈fact join and any groupBy
-    // on that key plan with ZERO exchanges (BucketingSpec pins the
-    // plan; this row pins result parity vs DuckDB's plain join). The
-    // write cost is paid once and amortizes over every reuse — the
-    // storage-side answer to a repeated 100 TB join.
-    "q_bucketed_join" -> ((s, d) => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      Bucketing.writeBucketed(t(s, d, "orders"), s"graft_bj_orders_$tag",
-        s"/tmp/graft_bj_$tag/orders", "o_orderkey", 8)
-      Bucketing.writeBucketed(t(s, d, "lineitem"), s"graft_bj_lineitem_$tag",
-        s"/tmp/graft_bj_$tag/lineitem", "l_orderkey", 8)
-      Bucketing.colocatedJoin(s, s"graft_bj_orders_$tag", "o_orderkey",
-          s"graft_bj_lineitem_$tag", "l_orderkey")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity")).as("sum_qty"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // ---- winnowing fingerprints (MOSS): md5 oracle mode — DuckDB
-    // replays gram hashing AND the rightmost-min window selection, so
-    // the full fingerprint SET is hash-verified (the CDC md5 pattern);
-    // the native Karp–Rabin deque is the O(len) scale path
-    // (WinnowingSpec differential). Fixture docs are all ≥ 47 chars,
-    // so the short-doc branch never fires here (unit-tested instead).
-    "q_winnow" -> ((s, d) =>
-      orderedOnce(
-        Winnowing.fingerprintsMd5(t(s, d, "documents"), "doc_id", "text",
-          k = 8, w = 4),
-        "doc_id", "fp")),
-
-    // the detection guarantee, oracle-replayed: a 3-char prefix shift
-    // preserves every length ≥ w+k−1 = 11 match, so each of the 200
-    // planted copies must share fingerprints with its original
-    "q_winnow_pairs" -> ((s, d) => {
-      val docs = t(s, d, "documents").where(col("doc_id") < 200)
-      val union = docs.select(col("doc_id"), col("text"))
-        .union(docs.select((col("doc_id") + 1000000).as("doc_id"),
-          concat(lit("ZQ "), col("text")).as("text")))
-      val fps = Winnowing.fingerprintsMd5(union, "doc_id", "text", 8, 4)
-      val a = fps.where(col("doc_id") < 1000000)
-        .select(col("doc_id").as("a"), col("fp"))
-      val b = fps.where(col("doc_id") >= 1000000)
-        .select((col("doc_id") - 1000000).as("a"), col("fp"))
-      a.join(b, Seq("a", "fp"))
-        .groupBy("a").agg(count(lit(1)).as("n_shared"))
-        .orderBy("a")
-    }),
-
-    // ---- exact embedding covariance (upper triangle, 1-based dims):
-    // ONE VecMomentsAgg scan — sufficient stats combine map-side and
-    // merge as O(partitions × d²) metadata; the oracle replays the
-    // explode + self-join spelling. PCA (jacobiEigen/project) consumes
-    // this matrix driver-side (test-verified — eigensolves aren't SQL).
-    "q_embedding_cov" -> ((s, d) =>
-      EmbeddingStats.covarianceDf(t(s, d, "embeddings"), "embedding", 64)
-        .orderBy("i", "j")),
-
-    // ---- degenerate-generation detection over token arrays: longest
-    // repeated-token run + mode-token share, computed as IN-ROW folds
-    // (zero exchange) while the oracle replays the explode +
-    // gaps-and-islands window spelling. Plants: %43 docs are a constant
-    // array (share 1.0), %41 docs get a 6-token run appended.
-    "q_token_runs" -> ((s, d) =>
-      TokenHealth.runStats(degenTokens(s, d), "doc_id", "tokens")
-        .orderBy("doc_id")),
-
-    "q_degenerate_filter" -> ((s, d) =>
-      TokenHealth.dropDegenerate(degenTokens(s, d), "tokens",
-          maxRun = 20, maxTopShare = 0.5)
-        .select(col("doc_id"), size(col("tokens")).cast("long").as("n_tok"))
-        .orderBy("doc_id")),
-
-    // ---- conversational (SFT) data QC: role structure, shape stats,
-    // preference-pair length bias. Turns synthesized from documents by
-    // pure id arithmetic (conv = doc_id div 4, idx = doc_id mod 4,
-    // alternating roles) with violations planted at prime moduli:
-    // %97 forces 'assistant' (first-turn + alternation breaks), %101
-    // forces 'system' (mid-conversation system), %103 an unknown role,
-    // %89 blanks the content — every rule class fires at sf0.001.
-    "q_chat_roles" -> ((s, d) =>
-      ChatQC.violations(chatTurns(s, d), "conv_id", "turn_idx",
-          "role", "content")
-        .orderBy("conv_id", "turn_idx", "rule_id")),
-
-    "q_chat_stats" -> ((s, d) =>
-      ChatQC.conversationStats(chatTurns(s, d), "conv_id", "turn_idx",
-          "role", "content")
-        .orderBy("conv_id")),
-
-    // RLHF preference pairs from even/odd document pairing; every 50th
-    // pair planted byte-identical (the labeling-bug case)
-    "q_pref_bias" -> ((s, d) =>
-      ChatQC.preferenceBias(prefPairs(s, d), "chosen", "rejected")),
-
-    // ---- ε-DP count release (Laplace mechanism): the third privacy
-    // gate next to k-anonymity / l-diversity. Deterministic seeded
-    // inverse-CDF noise — u from the group ordinal's multiplicative
-    // hash — so DuckDB replays the release bit-exactly (ln parity
-    // holds, the q_tfidf precedent); production swaps xxhash64 draws
-    "q_dp_counts" -> ((s, d) =>
-      Governance.dpCounts(
-        t(s, d, "documents").withColumn("grp", col("doc_id") % 20),
-        "grp", col("grp"), epsilon = 1.0, seed = 101L)
-        .orderBy("grp")),
-
-    // ---- inter-annotator agreement (Cohen's kappa) for labeled-data
-    // QC: two deterministic pseudo-annotators from id arithmetic;
-    // kappa corrects raw agreement by the chance floor p_e
-    "q_cohen_kappa" -> ((s, d) => {
-      val labeled = t(s, d, "documents").select(
-        when(col("doc_id") % 4 <= 1, lit("pos")).otherwise(lit("neg"))
-          .as("a"),
-        when(col("doc_id") % 4 === 0 || col("doc_id") % 7 === 0,
-          lit("pos")).otherwise(lit("neg")).as("b"))
-      Drift.cohenKappa(labeled, "a", "b")
-    }),
-
-    // ---- rendezvous resharding bill: growing 8 → 10 shards moves
-    // ~2/10 of keys (argmax changes only when a NEW shard wins) vs
-    // ~90% for modulo sharding — the difference between topping up an
-    // output layout and rewriting it. Oracle replays the argmax with
-    // a window rank over the same mul-xorshift-mul draw.
-    "q_rendezvous" -> ((s, d) =>
-      Packing.rendezvousMoved(t(s, d, "documents"), "doc_id",
-        fromShards = 8, toShards = 10, seed = 17L)),
-
-    // ---- cross-doc stitch candidates (pagination reassembly): planted
-    // continuation pages whose head is the parent's 16-char tail; exact
-    // mode joins the raw grams so DuckDB replays the candidate set
-    // verbatim (hash mode is the narrow production path, tested)
-    "q_stitch" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .where(col("doc_id") < 300 && length(col("text")) >= 16)
-      val parts = docs.select(col("doc_id"), col("text"))
-        .unionByName(docs.select((col("doc_id") + 1000000).as("doc_id"),
-          concat(expr("substring(text, -16, 16)"),
-            lit(" continuation page")).as("text")))
-      Dedup.stitchCandidates(parts, "doc_id", "text", k = 16,
-          exact = true)
-        .orderBy("tail_id", "head_id")
-    }),
-
-    // ---- cross-field conditional constraints: the validation tier one
-    // level above the reference's per-column rules — a rule fires where
-    // its antecedent is definitely true and its consequent is not; one
-    // sparse filter+explode pass, zero shuffle
-    "q_crossfield" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .withColumn("id", col("l_orderkey") * 100 + col("l_linenumber"))
-      ValidationPass.crossFieldViolations(li, "id", Seq(
-        ("R_HIGH_QTY_DISC", col("l_quantity") >= 45,
-          col("l_discount") <= 0.05),
-        ("R_RETURN_FINISHED", col("l_returnflag") === "R",
-          col("l_linestatus") === "F"),
-        ("R_TAX_PRICE", col("l_tax") > 0.06,
-          col("l_extendedprice") > 20000)))
-        .orderBy("id", "rule_id")
-    }),
-
-    // ---- Benford first-digit conformance on a grown magnitude column;
-    // digit read from the bigint decimal rendering (never floor∘log10 —
-    // float error at powers of ten would mis-bucket per engine)
-    "q_benford" -> ((s, d) =>
-      Profile.benfordTest(t(s, d, "lineitem"), "l_extendedprice")),
-
-    // ---- functional-dependency audit: does partkey determine suppkey?
-    // (here: no — the synthetic data fans suppliers per part; the
-    // summary row quantifies by how much)
-    "q_fd_check" -> ((s, d) =>
-      Profile.fdViolations(t(s, d, "lineitem"), "l_partkey", "l_suppkey")),
-
-    // ---- candidate-key discovery over orders: o_orderkey is a true
-    // key, o_custkey is 10:1, and the status column is categorical —
-    // one multi-distinct aggregate pass, unpivoted driver-side-free
-    "q_key_candidates" -> ((s, d) =>
-      Profile.keyCandidates(t(s, d, "orders"), Seq(
-        ("o_orderkey", col("o_orderkey")),
-        ("o_custkey", col("o_custkey")),
-        ("o_orderkey:o_custkey",
-          concat_ws(":", col("o_orderkey"), col("o_custkey")))))),
-
-    // ---- per-stream freshness: staleness behind the newest event
-    // anywhere + mean arrival rate over each stream's own span
-    "q_freshness" -> ((s, d) =>
-      Drift.freshness(t(s, d, "events"), "event_type", "ts")
-        .select(col("event_type"), col("n_events"),
-          date_format(col("first_ts"), "yyyy-MM-dd HH:mm:ss").as("first_ts"),
-          date_format(col("last_ts"), "yyyy-MM-dd HH:mm:ss").as("last_ts"),
-          col("staleness_s"), col("events_per_hour"))
-        .orderBy("event_type")),
-
-    // ---- edit-distance near-dup (short keys): length-banded
-    // candidate join (W >= maxDist ⇒ qualifying pairs land in same or
-    // adjacent buckets; one side fans {b-1,b,b+1}, the probe bucket
-    // pins to the other side's own bucket ⇒ each pair produced exactly
-    // once) + threshold levenshtein verify. Keys are synthesized short
-    // record labels (same arithmetic in the oracle, which brute-pairs
-    // with the pure length prefilter — same semantics, no banding)
-    "q_editdist_pairs" -> ((s, d) => {
-      val recs = t(s, d, "documents")
-        .where(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), expr(
-          "concat('rec-', lpad(CAST(doc_id % 40 AS STRING), 3, '0'), " +
-          "repeat('z', CAST(doc_id % 4 AS INT)))").as("k"))
-      EditDistance.neardupPairs(recs, "doc_id", "k", maxDist = 2,
-          bucketWidth = 2)
-        .groupBy(col("dist").cast("long").as("dist"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("id_a")).as("sum_a"), sum(col("id_b")).as("sum_b"))
-        .orderBy("dist")
-    }),
-
-    // ---- key-space continuity audit: holes planted at %13==5; both
-    // islands and missing mass via shifted-key anti-joins — never the
-    // textbook islands window, whose unpartitioned ORDER BY is a
-    // SinglePartition sort of the whole table
-    "q_id_gaps" -> ((s, d) =>
-      Continuity.gapSummary(
-        t(s, d, "documents").where(col("doc_id") % 13 =!= 5), "doc_id")),
-
-    // ---- event-time disorder profile (watermark sizing): arrival
-    // order = event_id; event time jittered back 0..7199 s by a
-    // deterministic multiplicative hash so a late tail exists to
-    // measure; dyadic exact percentiles = candidate watermark delays
-    "q_out_of_order" -> ((s, d) => {
-      val ev = t(s, d, "events").withColumn("et", expr(
-        "timestampadd(SECOND, " +
-        "-CAST((event_id * 2654435761) % 7200 AS INT), ts)"))
-      Sessionize.disorderProfile(ev, "user_id", "event_id", "et")
-    }),
-
-    // ---- water-filling budget allocation: deterministic skewed
-    // groups (50/30/15/5 %), budget = 60 % of rows → the level binds
-    // on the two big groups while small groups keep everything; the
-    // oracle replays the sorted level search + remainder rule in SQL
-    "q_waterfill" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val grouped = docs.withColumn("grp",
-        when(col("doc_id") % 20 < 10, "g_half")
-          .when(col("doc_id") % 20 < 16, "g_third")
-          .when(col("doc_id") % 20 < 19, "g_sixth")
-          .otherwise("g_tiny"))
-      Mixing.waterfillAllocation(grouped, "grp",
-          budget = docs.count() * 3 / 5)
-        .orderBy("grp")
-    }),
-
-    // ---- char-entropy gibberish signal: one native HashMap pass per
-    // row, zero shuffle; DuckDB's entropy() aggregate over exploded
-    // chars replays the same log2 formula (ASCII-projected so both
-    // engines count identical codepoints; 4-dp round absorbs
-    // sum-order ulps)
-    "q_char_entropy" -> ((s, d) => {
-      TextExpressions.register(s)
-      orderedOnce(
-        t(s, d, "documents")
-          .select(col("doc_id"),
-            round(TextAnalysis.charEntropy(
-              regexp_replace(col("text"), "[^\\x20-\\x7e]", "")), 4).as("h")),
-        "doc_id")
-    }),
-
-    // ---- raking / IPF: balance the corpus to uniform lang AND group
-    // marginals simultaneously — 3 fixed row/col scaling rounds on the
-    // proportion table, driver arithmetic on one count aggregate; the
-    // oracle replays every scaling as a window-sum CTE
-    "q_raking" -> ((s, d) =>
-      Mixing.rakeWeights(
-          t(s, d, "documents").withColumn("grp",
-            concat(lit("g"), (col("doc_id") % 3).cast("string"))),
-          "lang", "grp", iters = 3)
-        .orderBy("lang", "grp")),
-
-    // ---- class-based TF-IDF (BERTopic formula): the terms that
-    // CHARACTERIZE each source — integer counts through one fixed ln,
-    // so the SQL replica is bit-exact; text never moves past the scan
-    "q_ctfidf" -> ((s, d) =>
-      TextAnalysis.classTfIdfTopTerms(t(s, d, "documents"), "source",
-          "text", k = 3)
-        .orderBy("cls", "rank")),
-
-    // ---- Luhn-validated card candidates: extraction + normalization
-    // + checksum all oracle-replayed (DuckDB spells the check digit as
-    // list arithmetic; Spark uses the codegen'd luhn_check builtin);
-    // candidates synthesized into the text by id arithmetic so ~10 %
-    // pass — the precision gap vs a bare regex is the visible result
-    "q_luhn_pii" -> ((s, d) => {
-      val synth = t(s, d, "documents").select(col("doc_id"), concat(
-        lit("card "),
-        lpad(((col("doc_id") * 48271 + 11) % 100000000000000L)
-          .cast("string"), 14, "0"),
-        lit(" tail")).as("text2"))
-      orderedOnce(TextAnalysis.luhnCandidates(synth, "doc_id", "text2"),
-        "doc_id", "cand")
-    }),
-
-    // ---- cross-source duplication matrix ("who copies whom"):
-    // shared-content groups planted across sources by id arithmetic;
-    // per-pair counts from a distinct (key, source) self-join — text
-    // never moves (the key is a hash)
-    "q_dup_matrix" -> ((s, d) =>
-      Dedup.crossSourceMatrix(
-        t(s, d, "documents").withColumn("key",
-          when(col("doc_id") % 9 < 3,
-            concat(lit("shared-"), (col("doc_id") % 50).cast("string")))
-            .otherwise(md5(col("text")))),
-        "key", "source")),
-
-    // ---- QQ-decile drift observability: WHERE two cohorts differ
-    // (body vs tail), one exact-percentile aggregate per side at
-    // dyadic eighths over integer cents — interpolation products stay
-    // exact in double, so both engines agree bit-for-bit
-    "q_qq_deciles" -> ((s, d) => {
-      val li = t(s, d, "lineitem").withColumn("cents",
-        expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-      // both side-histograms ride ONE scan (the two-frame spelling ran
-      // two separate collect jobs — exchange reuse never crosses jobs)
-      Drift.qqQuantilesSplit(li, col("l_orderkey") % 2 === 0,
-        col("l_orderkey") % 2 =!= 0, "cents",
-        Seq(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875))
-    }),
-
-    // ---- diagonal-Mahalanobis embedding outliers: one VecMomentsAgg
-    // training pass, then one native expression eval per row with
-    // [μ, 1/σ²] riding the plan as a literal — the corpus never joins
-    // for scoring; 4-dp round absorbs the engines' sum-order ulps in
-    // the trained moments
-    "q_embed_outliers" -> ((s, d) =>
-      EmbeddingStats.diagMahalanobisScores(t(s, d, "embeddings"),
-          "vec_id", "embedding", dim = 64)
-        .select(col("vec_id"), round(col("score"), 4).as("score"))
-        .orderBy("vec_id")),
-
-    // ---- Theil–Sen robust trend of daily event volume: median of
-    // pairwise slopes over the O(days) aggregated series — one outlier
-    // day barely moves it; both medians replay exactly in DuckDB
-    "q_theil_sen" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(
-          datediff(col("day"), lit("2024-01-01")).cast("double").as("x"),
-          col("cnt").cast("double").as("y"))
-      Drift.theilSenTrend(daily, "x", "y")
-        .select(col("n_points"), round(col("slope"), 6).as("slope"),
-          round(col("intercept"), 6).as("intercept"))
-    }),
-
-    // ---- percentile ranks without the percent_rank() trap (an
-    // unpartitioned window = one task sorts the table): distinct-value
-    // counts collapse map-side, the ordered window runs over the
-    // O(distinct) frame only
-    "q_pct_rank" -> ((s, d) =>
-      Profile.percentileRanks(
-        t(s, d, "lineitem")
-          .select(col("l_quantity").cast("long").as("q")), "q")),
-
-    // ---- per-user burstiness: integer-second gaps keep Σ and Σ² exact
-    // in both engines; the float stats derive through one fixed
-    // expression order, so the replica is bit-exact
-    "q_burstiness" -> ((s, d) =>
-      Sessionize.interArrivalStats(
-        t(s, d, "events").where(col("user_id") % 10 === 3),
-        "user_id", "ts")),
-
-    // ---- per-source hapax ratio: the Zipf-tail health signal (OCR
-    // noise scores high, template spam low); (class, word) counts
-    // collapse map-side, text never leaves the scan
-    "q_hapax" -> ((s, d) =>
-      TextAnalysis.hapaxStats(t(s, d, "documents"), "source", "text")),
-
-    // ---- exact-threshold set-similarity join via PPJoin prefix
-    // filtering: only rarest-prefix tokens generate candidates (hot
-    // boilerplate tokens sit at the end of every doc's order and never
-    // join); identical jaccard spelling as the inverted-index path, so
-    // the q_word_jaccard-style brute oracle verifies the full pair set
-    "q_ppjoin" -> ((s, d) =>
-      Dedup.prefixFilterJaccardPairs(
-          t(s, d, "documents").where(col("doc_id") < 150),
-          "doc_id", "text", n = 1, threshold = 0.5)
-        .select(col("id_a"), col("id_b"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")),
-
-    // ---- stride-scheduled weighted interleave: the smoothest
-    // w-proportional ORDER (membership is sampleByWeights' job) —
-    // virtual time k/w per source, head-60 shown; identical doubles
-    // both engines, ties broken (grp, id)
-    "q_interleave" -> ((s, d) =>
-      Mixing.interleavePositions(
-          t(s, d, "documents").withColumn("grp",
-            concat(lit("g"), (col("doc_id") % 3).cast("string"))),
-          "doc_id", "grp", Map("g0" -> 0.5, "g1" -> 0.3, "g2" -> 0.2))
-        .orderBy(col("vt"), col("grp"), col("doc_id"))
-        .limit(60)
-        .select(col("doc_id"), col("grp"), col("__k").as("k"),
-          round(col("vt"), 6).as("vt"))),
-
-    // ---- pre-flight join forecast: per-key nₐ·n_b IS the exact inner
-    // equi-join output size — the table you read before choosing plain
-    // vs salted join; self-join of events on user_id, heaviest first
-    "q_join_estimate" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      SkewJoin.joinSizeEstimate(ev, "user_id", ev, "user_id", topK = 10)
-    }),
-
-    // ---- Gonzalez greedy k-center: k−1 bounded argmax jobs, centers
-    // ride the plan as literals (corpus never joins); dimension-order
-    // distance accumulation makes every argmax bit-replayable by the
-    // oracle's unrolled CTE chain
-    "q_kcenter" -> ((s, d) =>
-      Similarity.kCenters(t(s, d, "embeddings"), "vec_id", "embedding",
-          dim = 64, k = 4, startId = 0L)
-        .select(col("step"), col("center_id"),
-          round(col("dist"), 6).as("dist"))
-        .orderBy("step")),
-
-    // ---- k-NN label-noise audit: points whose nearest neighbors
-    // mostly carry a different label — exact audit-sample spelling
-    // (all-pairs cosine + top-k window), require-capped; dimension-
-    // order cosine makes the neighbor ranking bit-replayable
-    "q_label_noise" -> ((s, d) =>
-      Similarity.knnLabelDisagreement(
-        t(s, d, "embeddings").where(col("vec_id") < 200),
-        "vec_id", "embedding", "label", k = 5)),
-
-    // ---- physical-layout audit: rows + file count per partition
-    // directory from input_file_name() inside one aggregate scan — the
-    // small-files/skew check before compaction; DuckDB re-reads the
-    // same directory with filename=true as the oracle
-    "q_layout_audit" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Bucketing.writePartitionedBy(docs, "/tmp/graft_layout_audit",
-        "source")
-      Bucketing.partitionAudit(s, "/tmp/graft_layout_audit", "source")
-    }),
-
-    // ---- site-section rollup: page volume by 2-segment path prefix;
-    // the n_pages/n_paths gap (p{id%50} pagination dupes planted) is
-    // the duplicated-pagination smell
-    "q_path_rollup" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val url = concat(lit("https://ex.com/sec"), (id % 5).cast("string"),
-        lit("/sub"), (id % 17).cast("string"),
-        lit("/p"), (id % 50).cast("string"), lit(".html"),
-        when(id % 3 === 0, lit("?page=2")).otherwise(lit("")))
-      WebFilter.pathPrefixRollup(
-        t(s, d, "documents").select(url.as("url")), "url", depth = 2)
-    }),
-
-    // ---- rank-biased overlap between two top-50 quality rankings
-    // (3/4 shared scores → high but non-1 RBO): rankings built with
-    // TakeOrdered + a window over the 50-row frame, never the corpus
-    "q_rbo" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents")
-      val id = col("doc_id").cast("long")
-      val s1 = (id * 2654435761L + 7L) % 1000000007L
-      val s2 = when(id % 4 === 0,
-        (id * 1099511627L + 13L) % 1000000007L).otherwise(s1)
-      def rank(score: Column): DataFrame =
-        docs.select(col("doc_id"), score.as("__s"))
-          .orderBy(desc("__s"), col("doc_id")).limit(50)
-          .withColumn("rank", row_number().over(
-            Window.orderBy(desc("__s"), col("doc_id"))))
-      Drift.rankBiasedOverlap(rank(s1), rank(s2), "doc_id", "rank",
-        k = 50, p = 0.9)
-    }),
-
-    // ---- blocking-quality meta-eval for the edit-distance banding:
-    // reduction ratio + measured completeness (provably 1.0 — and
-    // measured anyway) on the same synthetic keys as q_editdist_pairs
-    "q_blocking_quality" -> ((s, d) => {
-      val recs = t(s, d, "documents")
-        .where(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), expr(
-          "concat('rec-', lpad(CAST(doc_id % 40 AS STRING), 3, '0'), " +
-          "repeat('z', CAST(doc_id % 4 AS INT)))").as("k"))
-      EditDistance.bandingStats(recs, "doc_id", "k", maxDist = 2,
-        bucketWidth = 2)
-    }),
-
-    // ---- CUBE data card: all four grouping granularities of
-    // (lang, source) in ONE aggregate pass; '<all>' marks roll-ups,
-    // gid carries the grouping bits
-    "q_cube" -> ((s, d) =>
-      Profile.cubeCounts(t(s, d, "documents"), "lang", "source")),
-
-    // ---- mass-weighted length percentiles: where the TOKEN MASS
-    // sits, not where the median document sits — cumulative window
-    // over the O(distinct) frame only, integer masses exact
-    "q_mass_percentiles" -> ((s, d) =>
-      Profile.massWeightedPercentiles(t(s, d, "documents"),
-        "n_chars", "n_chars", Seq(0.5, 0.9, 0.99))),
-
-    // ---- validation-rule co-occurrence: which rules trip TOGETHER
-    // (one defect, not two) — distinct (doc, rule) self-join bounded
-    // by nRules² per doc, over the flagship seq-constraint violations
-    "q_rule_cooccur" -> ((s, d) =>
-      ValidationPass.ruleCooccurrence(
-        ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources)))),
-
-    // ---- Unicode script-mix profile: planted Cyrillic/CJK-dominant
-    // docs and latin+Greek mixed docs by doc_id arithmetic — the
-    // contamination signal stopword langid misses
-    "q_script_mix" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val txt = when(id % 19 === 0,
-          expr("repeat('привет мир данные ', CAST(doc_id % 5 + 2 AS INT))"))
-        .when(id % 23 === 0,
-          expr("repeat('数据质量检查 ', CAST(doc_id % 4 + 2 AS INT))"))
-        .when(id % 7 === 0,
-          concat(substring(col("text"), 1, 30),
-            lit(" αβγδεζηθικλμνξοπρστυφχψω αβγδεζηθικλμνξο")))
-        .otherwise(col("text"))
-      TextAnalysis.scriptMix(
-        t(s, d, "documents").select(col("doc_id"), txt.as("text")),
-        "doc_id", "text")
-    }),
-
-    // ---- Heaps'-law vocab-growth fit (the q_zipf_fit companion):
-    // cumulative vocab vs cumulative tokens in doc_id order, both
-    // cumulatives on the two-level distributed prefix sum
-    "q_heaps_fit" -> ((s, d) =>
-      TextAnalysis.heapsFit(t(s, d, "documents"), "doc_id", "text")),
-
-    // ---- Wald–Wolfowitz runs test on above-median doc length in
-    // doc_id order — "is the pack order actually shuffled?"
-    "q_runs_test" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val med = docs.agg(
-        expr("percentile(CAST(n_chars AS DOUBLE), 0.5D)").as("__med"))
-      val flagged = docs.crossJoin(broadcast(med))
-        .select(col("doc_id"),
-          (col("n_chars").cast("double") > col("__med")).as("__flag"))
-      Profile.runsTest(flagged, "doc_id", "__flag")
-    }),
-
-    // ---- stage conservation audit: length-tier split of documents
-    // must reassemble exactly (counts + char mass + xor id digest;
-    // every residual 0) — the invariant funnel counts can't prove
-    "q_conservation" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Funnel.conservation(docs, Seq(
-          "long" -> docs.where(col("n_chars") >= 500),
-          "mid" -> docs.where(col("n_chars") >= 200 && col("n_chars") < 500),
-          "short" -> docs.where(col("n_chars") < 200)),
-        "doc_id", Some("n_chars")).orderBy(col("stage"))
-    }),
-
-    // ---- lag-k autocorrelation of hourly event volume (seasonality /
-    // double-fire QC); pairs via hash self-join on the O(hours) frame
-    "q_autocorr" -> ((s, d) =>
-      Drift.autocorrelation(t(s, d, "events"), "ts",
-        Seq(1, 2, 3, 6, 12, 24))),
-
-    // ---- Aho–Corasick multi-phrase scan: every phrase of the list
-    // counted in ONE automaton pass per doc (k regexp passes → 1);
-    // borderless phrases so the oracle's replace-count is provably
-    // equal to the automaton's all-positions count
-    "q_phrase_scan" -> ((s, d) =>
-      TextAnalysis.phraseScan(t(s, d, "documents"), "doc_id", "text",
-          Seq("table scan", "batch stream", "slow join", "spark",
-            "data quality"))
-        .orderBy("doc_id", "phrase")),
-
-    // ---- Jaro–Winkler linkage similarity: typo'd name pairs by
-    // doc_id arithmetic (identity / head-drop / append / vowel swap
-    // incl. a multibyte é); the oracle is DuckDB's INDEPENDENT
-    // jaro_winkler_similarity implementation — a true cross-engine
-    // differential of two codebases, fuzz-pinned bit-exact
-    "q_jaro_winkler" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val a = concat(lit("user_"), col("source"), lit("_"),
-        (id % 97).cast("string"))
-      val b = when(id % 4 === 0, a)
-        .when(id % 4 === 1, substring(a, 2, 1000))
-        .when(id % 4 === 2, concat(a, lit("x")))
-        .otherwise(translate(a, "aeu", "eaé"))
-      t(s, d, "documents").select(col("doc_id"),
-          round(graft.functions.MatchExpressions.jaroWinkler(a, b), 6)
-            .as("jw"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Spearman rank correlation (n_chars vs word count): average
-    // ranks kept exact by doubling, sufficient stats as decimal(38,0),
-    // the only ordered windows run over the O(distinct) value frames
-    "q_spearman" -> ((s, d) => {
-      TextExpressions.register(s)
-      Profile.spearman(
-        t(s, d, "documents").select(col("n_chars"),
-          TextAnalysis.tokenCount(col("text")).as("n_words")),
-        "n_chars", "n_words")
-    }),
-
-    // ---- cross-doc attention waste of the packed windows: per window
-    // the fraction of attention pairs crossing a doc boundary — the
-    // bill of packing without attention masking; placement-only, token
-    // arrays never load
-    "q_attention_waste" -> ((s, d) =>
-      Packing.attentionWaste(
-        decontamCorpus(s, d).select(col("doc_id"), col("n_tok")),
-        "doc_id", "n_tok", windowLen = 512L)),
-
-    // ---- parquet zone map of a range-clustered layout: per-file
-    // (rows, min, max) from ONE input_file_name aggregate — the
-    // metadata a pruning reader consults, measured from the rows
-    "q_zone_map" -> ((s, d) => {
-      Bucketing.writeSortedBy(t(s, d, "documents"), "/tmp/graft_zonemap",
-        "n_chars", nFiles = 8)
-      Bucketing.zoneMap(s, "/tmp/graft_zonemap", "n_chars")
-    }),
-
-    // ---- data-skipping effectiveness for n_chars BETWEEN 100 AND 150
-    // on the same clustered layout: how much of the table a pruning
-    // reader never touches
-    "q_zone_skip" -> ((s, d) => {
-      Bucketing.writeSortedBy(t(s, d, "documents"), "/tmp/graft_zoneskip",
-        "n_chars", nFiles = 8)
-      Bucketing.zoneMapSkipStats(s, "/tmp/graft_zoneskip", "n_chars",
-        lo = 100L, hi = 150L)
-    }),
-
-    // ---- Good–Turing count-of-counts: the unseen-probability-mass /
-    // vocabulary-saturation estimate — word counts collapse map-side,
-    // everything after runs on the O(distinct r) frame
-    "q_good_turing" -> ((s, d) =>
-      TextAnalysis.goodTuring(t(s, d, "documents"), "text")),
-
-    // ---- dedup-saturation curve: duplicate rate by crawl position
-    // (planted boilerplate copies at doc_id%10); text hashed in the
-    // scan, cumulative window over the O(buckets) frame
-    "q_dup_saturation" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val txt = when(id % 10 === 0,
-          concat(lit("boilerplate page "), (id % 3).cast("string")))
-        .otherwise(col("text"))
-      Dedup.duplicateSaturation(
-        t(s, d, "documents").select(col("doc_id"), txt.as("text")),
-        "doc_id", "text", bucketWidth = 50L)
-    }),
-
-    // ---- Hill tail index of the price distribution: how heavy is the
-    // heavy tail (α < 2 ⇒ infinite variance ⇒ mean-based sizing is
-    // garbage); one TakeOrdered fold + driver arithmetic on 51 doubles
-    "q_hill_tail" -> ((s, d) =>
-      Profile.hillTailIndex(t(s, d, "lineitem"), "l_extendedprice",
-        k = 50)),
-
-    // ---- join-key containment pre-flight: which customers ever
-    // emitted an event (planted NULL keys at %37) — the "will this
-    // join drop my rows" summary before the join itself
-    "q_key_containment" -> ((s, d) => {
-      val cust = t(s, d, "customer").select(
-        when(col("c_custkey") % 37 === 0, lit(null).cast("long"))
-          .otherwise(col("c_custkey")).as("c_custkey"))
-      Referential.keyContainment(cust, "c_custkey",
-        t(s, d, "events"), "user_id")
-    }),
-
-    // ---- string column type inference: regex-anchored ladder (engines
-    // disagree on numeric coercions; regex classes don't) + calendar
-    // try_cast for dates — one fused aggregate pass over all columns
-    "q_type_infer" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val mixed = when(id % 7 === 0, lit("123"))
-        .when(id % 7 === 1, lit("-4.5e2"))
-        .when(id % 7 === 2, lit("2024-01-15"))
-        .when(id % 7 === 3, lit("2024-13-40"))
-        .when(id % 7 === 4, lit("true"))
-        .when(id % 7 === 5, lit("abc"))
-        .otherwise(lit(null).cast("string"))
-      Profile.typeInference(
-        t(s, d, "documents").select(mixed.as("mixed"),
-          (id % 1000).cast("string").as("ints"),
-          when(id % 2 === 0, lit("1.5")).otherwise(lit("7")).as("dbls"),
-          when(id % 3 === 0, lit("1999-12-31")).otherwise(lit("2000-01-02"))
-            .as("dates")),
-        Seq("dbls", "dates", "ints", "mixed"))
-    }),
-
-    // ---- near-time duplicate events: planted +3 s replays of every
-    // %50 event; time-banded candidates (exactly-once pairing), a hot
-    // key never goes quadratic
-    "q_event_dups" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"))
-      val planted = ev.where(col("event_id") % 50 === 0)
-        .select((col("event_id") + 1000000).as("event_id"),
-          col("user_id"), col("event_type"),
-          (col("ts") + expr("INTERVAL 3 SECONDS")).as("ts"))
-      Sessionize.eventDuplicates(ev.unionByName(planted),
-          Seq("user_id", "event_type"), "ts", "event_id",
-          windowSec = 10L)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- CUSUM changepoint scan on daily volume: cumulative deviation
-    // from the mean, extremum = the level-shift estimate; S_i derived
-    // as cum_int − i·mean so both engines' doubles are bit-identical
-    "q_cusum" -> ((s, d) =>
-      Drift.cusum(t(s, d, "events"), "ts", bucketSecs = 86400L)),
-
-    // ---- Cramér's V between lang and source: the "are these labels
-    // redundant" association number; full r×c grid incl. zero cells
-    "q_cramers_v" -> ((s, d) =>
-      Drift.cramersV(t(s, d, "documents"), "lang", "source")),
-
-    // ---- crawl-trap detection: a planted trap host (7 paths, 125
-    // pages, all under /calendar) against healthy source hosts
-    "q_crawl_traps" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val url = when(id % 4 === 0,
-          concat(lit("https://trap.example.com/calendar/p"),
-            (id % 7).cast("string"), lit("?page="), id.cast("string")))
-        .otherwise(concat(lit("https://"), col("source"),
-          lit(".example.com/sec"), (id % 5).cast("string"),
-          lit("/art"), id.cast("string")))
-      WebFilter.crawlTraps(
-        t(s, d, "documents").select(url.as("url")), "url",
-        depth = 1, minPages = 50L)
-    }),
-
-    // ---- magic-byte sniff vs declared MIME: planted lying headers
-    // (JPEG declared as PNG, garbage declared as PNG); pure projection
-    "q_magic_sniff" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val hx = when(id % 5 === 0, lit("89504E470D0A1A0A0000"))
-        .when(id % 5 === 1, lit("FFD8FFE000104A464946"))
-        .when(id % 5 === 2, lit("524946460800000057415645"))
-        .when(id % 5 === 3, lit("504B030414000000"))
-        .otherwise(lit("DEADBEEF00"))
-      val declared = when(id % 5 === 0, lit("image/png"))
-        .when(id % 5 === 1, lit("image/png")) // lying header
-        .when(id % 5 === 2, lit("audio/wav"))
-        .when(id % 5 === 3, lit(null).cast("string")) // undeclared
-        .otherwise(lit("image/png")) // lying about garbage
-      Multimodal.magicSniff(
-        t(s, d, "documents").select(col("doc_id"), unhex(hx).as("bin"),
-          declared.as("mime")),
-        "doc_id", "bin", "mime").orderBy("doc_id")
-    }),
-
-    // ---- Neyman-optimal audit-budget allocation across sources:
-    // n_h ∝ N_h·σ_h from exact decimal moments, largest-remainder
-    // integers summing exactly to the budget, caps surfaced
-    "q_neyman_alloc" -> ((s, d) =>
-      Mixing.neymanAllocation(t(s, d, "documents"), "source", "n_chars",
-        budget = 100L)),
-
-    // ---- winsorization at the dyadic [1/16, 15/16] fence: thresholds
-    // from one exact-percentile aggregate, clip is a stateless scan
-    "q_winsorize" -> ((s, d) =>
-      Profile.winsorize(t(s, d, "documents"), "doc_id", "n_chars")
-        .orderBy("doc_id")),
-
-    // ---- JSON key discovery over a semi-structured column (planted
-    // extra/utm/ts keys + malformed rows): which keys exist and how
-    // often, before declaring an extraction schema
-    "q_json_keys" -> ((s, d) => {
-      val id = col("doc_id").cast("long")
-      val js = when(id % 13 === 0, lit("{bad"))
-        .when(id % 3 === 0, concat(lit("{\"k\":"), (id % 100).cast("string"),
-          lit(",\"extra\":1}")))
-        .when(id % 5 === 0, concat(lit("{\"k\":"), (id % 100).cast("string"),
-          lit(",\"utm\":\"x\",\"ts\":0}")))
-        .otherwise(concat(lit("{\"k\":"), (id % 100).cast("string"),
-          lit("}")))
-      JsonIngest.topJsonKeys(
-        t(s, d, "documents").select(js.as("props")), "props", k = 10)
-    }),
-
-    // ---- tokenize→detokenize round-trip loss rate: the audit that
-    // the token pipeline is invertible up to OOV — composes the
-    // q_tokenize / q_detokenize surfaces into one corpus number
-    "q_roundtrip_loss" -> ((s, d) => {
-      TextExpressions.register(s)
-      val docs = t(s, d, "documents")
-      val vocab = TextAnalysis.buildVocab(docs, "text", 20)
-      docs.select(
-          TextAnalysis.detokenize(
-            TextAnalysis.tokenize(col("text"), vocab), vocab).as("rt"),
-          array_join(Dedup.words(col("text")), " ").as("canon"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("rt") === col("canon"), 1L).otherwise(0L))
-            .as("n_exact"))
-        .select(col("n_docs"), col("n_exact"),
-          round((col("n_docs") - col("n_exact")).cast("double") /
-            col("n_docs").cast("double"), 6).as("loss_rate"))
-    }),
-
-    // ---- per-shard content manifest: order-independent md5-prefix
-    // XOR digest + row/char counts — the copy-integrity record
-    "q_shard_manifest" -> ((s, d) =>
-      Packing.shardManifest(
-        t(s, d, "documents").select((col("doc_id") % 8).as("shard_id"),
-          col("text")),
-        "shard_id", "text")),
-
-    // ---- Z-order clustered layout: per-dimension data-skipping stats
-    // prove BOTH columns prune on the Morton-interleaved sort (a 1-D
-    // sort buys one dimension and destroys the other)
-    "q_zorder_skip" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        col("n_chars"), (col("doc_id") % 256).as("bucket2"))
-      Bucketing.writeZOrdered(docs, "/tmp/graft_zorder", "n_chars",
-        "bucket2", nFiles = 8)
-      val d1 = Bucketing.zoneMapSkipStats(s, "/tmp/graft_zorder",
-        "n_chars", 100L, 150L).withColumn("dim", lit("n_chars"))
-      val d2 = Bucketing.zoneMapSkipStats(s, "/tmp/graft_zorder",
-        "bucket2", 0L, 31L).withColumn("dim", lit("bucket2"))
-      d1.unionByName(d2).orderBy("dim")
-    }),
-
-    // ---- Hilbert-curve index parity: the native codegen'd xy2d walk
-    // vs a generated 10-level unrolled SQL oracle — verifies the MATH
-    // before any layout trusts it (the rotate/flip state is where
-    // hand-rolled Hilbert implementations silently diverge)
-    "q_hilbert_index" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        col("n_chars").bitwiseAND(lit(1023L)).as("x"),
-        col("doc_id").bitwiseAND(lit(1023L)).as("y"),
-        graft.functions.SpatialExpressions.hilbertIndex(
-          col("n_chars"), col("doc_id"), 10).as("h"))
-        .orderBy("doc_id")),
-
-    // ---- Hilbert-clustered layout: per-dimension data-skipping stats
-    // on the same dims/boxes as q_zorder_skip — the no-diagonal-jump
-    // walk should keep per-file boxes at least as tight as Morton's
-    "q_hilbert_skip" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        col("n_chars"), (col("doc_id") % 256).as("bucket2"))
-      Bucketing.writeHilbert(docs, "/tmp/graft_hilbert", "n_chars",
-        "bucket2", bits = 16, nFiles = 8)
-      val d1 = Bucketing.zoneMapSkipStats(s, "/tmp/graft_hilbert",
-        "n_chars", 100L, 150L).withColumn("dim", lit("n_chars"))
-      val d2 = Bucketing.zoneMapSkipStats(s, "/tmp/graft_hilbert",
-        "bucket2", 0L, 31L).withColumn("dim", lit("bucket2"))
-      d1.unionByName(d2).orderBy("dim")
-    }),
-
-    // ---- per-rule violation triage: counts, distinct docs, bounded
-    // min/max exemplars — O(1) state per rule, never a collect_list
-    "q_rule_examples" -> ((s, d) =>
-      ValidationPass.ruleSummary(
-        ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources)))),
-
-    // ---- rare-category tail: planted one-doc 'exotic' source — where
-    // typos and schema drift hide in a 10¹²-row table
-    "q_rare_categories" -> ((s, d) => {
-      val src = when(col("doc_id") === 499, lit("exotic"))
-        .otherwise(col("source"))
-      Profile.rareCategories(
-        t(s, d, "documents").select(src.as("source")), "source",
-        minShare = 0.02)
-    }),
-
-    // ---- score explanation: top-2 weighted-feature contributions of
-    // the q_logistic_quality classifier — "why was this doc rejected"
-    "q_score_explain" -> ((s, d) => {
-      TextExpressions.register(s)
-      val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
-        "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.textProfile(col("text")).as("__tp"))
-        .select(col("doc_id"),
-          TextAnalysis.scoreExplanation(col("__tp"), -2.0, w).as("__e"),
-          round(TextAnalysis.logOddsFrom(col("__tp"), -2.0, w), 6)
-            .as("log_odds"))
-        .select(col("doc_id"),
-          element_at(col("__e"), 1).getField("feature")
-            .as("top1_feature"),
-          round(lit(0.0) - element_at(col("__e"), 1).getField("negc"), 6)
-            .as("top1_contrib"),
-          element_at(col("__e"), 2).getField("feature")
-            .as("top2_feature"),
-          round(lit(0.0) - element_at(col("__e"), 2).getField("negc"), 6)
-            .as("top2_contrib"),
-          col("log_odds"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- storage-layout advisors (encoding / sortedness / file skew):
-    // the physical-design validation tier for a 100 TB lakehouse ----
-
-    // per-column parquet-encoding advisor (rle / dict / plain) from run
-    // structure + exact cardinality in doc_id storage order — adjacency
-    // via ONE narrow equi-join on id+1 (never a SinglePartition ORDER
-    // BY window) + one aggregate; approx_count_distinct is the 10^12
-    // scale path (the recommendation needs one digit of cardinality)
-    "q_encoding_audit" -> ((s, d) =>
-      StorageAudit.encodingAudit(t(s, d, "documents"), "doc_id",
-        Seq("lang", "source"))),
-
-    // zone-map-effectiveness predictor: fraction of adjacent (by
-    // doc_id) n_chars pairs non-decreasing — 1.0 = min/max pruning
-    // works, ~0.5 = every file overlaps every predicate; same narrow
-    // adjacency join as the encoding audit
-    "q_sortedness" -> ((s, d) =>
-      StorageAudit.sortednessAudit(t(s, d, "documents"), "doc_id",
-        "n_chars")),
-
-    // small-files / straggler-file audit of a lang-partitioned layout
-    // (repartition-by-key before partitionBy ⇒ exactly one file per
-    // lang, skewed by construction): per-file counts from ONE
-    // input_file_name aggregate, summary on the O(files) frame
-    "q_file_skew" -> ((s, d) => {
-      t(s, d, "documents").repartition(col("lang"))
-        .write.mode("overwrite").partitionBy("lang")
-        .parquet("/tmp/graft_fileskew")
-      StorageAudit.fileSkew(s, "/tmp/graft_fileskew")
-    }),
-
-    // LSH banding design table (128 perms, target jaccard 0.8): the
-    // S-curve fp/fn trade per divisor split with the argmin flagged —
-    // the tuning step that must precede a cluster-day of minhash;
-    // pure math on an O(divisors × grid) frame, no data scanned
-    "q_lsh_tuning" -> ((s, d) => Dedup.lshBandPlan(s)),
-
-    // prospective two-proportion power analysis per event_type: rows
-    // per arm needed to detect a 5% relative lift in P(value > 50),
-    // z constants pinned as literals (no inverse normal CDF in either
-    // engine); one sufficient-stats aggregate, O(groups) arithmetic
-    "q_power_analysis" -> ((s, d) =>
-      Drift.powerAnalysis(t(s, d, "events"), "event_type",
-        col("value") > 50)),
-
-    // ---- per-source conformal quantiles: each source gets its own
-    // calibrated n_chars gate (one global threshold over-gates clean
-    // sources, under-gates noisy ones); exact integer ranks, per-group
-    // row_number window (never a SinglePartition global sort)
-    "q_conformal_by_source" -> ((s, d) =>
-      Profile.conformalQuantileByGroup(
-        t(s, d, "documents").where(col("doc_id") % 2 === 0),
-        "source", "n_chars", alphaNum = 1, alphaDen = 10)),
-
-    // ---- Chao1 unseen-vocabulary estimate + Good's coverage: how
-    // many word types the corpus has NOT seen — the vocab-planning
-    // number a tokenizer sized on a sample needs; one word-count
-    // aggregate, single-row summary
-    "q_chao1" -> ((s, d) =>
-      TextAnalysis.chao1(t(s, d, "documents"), "text")),
-
-    // ---- Bloom-filter sizing table at the corpus's LIVE key count:
-    // optimal k and fpr per bits-per-item budget, first budget meeting
-    // 1% flagged — the capacity decision before a 10^12-key filter
-    "q_bloom_plan" -> ((s, d) =>
-      Dedup.bloomPlan(t(s, d, "documents"), "doc_id")),
-
-    // ---- split-conformal calibrated gate on n_chars: the
-    // ceil((n+1)(1-alpha))-th smallest calibration score via the
-    // radix-select kthSmallestLong (no sort, no sketch), rank in
-    // exact integer arithmetic, hold-out coverage in the same row
-    "q_conformal" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Profile.conformalQuantile(
-        docs.where(col("doc_id") % 2 === 0),
-        docs.where(col("doc_id") % 2 === 1),
-        "n_chars", alphaNum = 1, alphaDen = 10)
-    }),
-
-    // ---- effective rank (participation ratio) of the embedding
-    // covariance: (Σλ)²/Σλ² without an eigensolver — the space-
-    // collapse alarm, derived from covarianceDf's one-scan matrix
-    // with decimal-exact sums over the rounded entries
-    "q_effective_rank" -> ((s, d) =>
-      EmbeddingStats.effectiveRank(t(s, d, "embeddings"),
-        "embedding", 64)),
-
-    // ---- RBF-kernel MMD² between label groups 0 and 1: the
-    // distribution-level embedding two-sample test (centroid drift is
-    // blind to shape shifts); γ = 1/128 (exact binary literal, the
-    // 1/(2d) heuristic), bounded-group pair joins
-    "q_mmd" -> ((s, d) =>
-      EmbeddingStats.mmd(t(s, d, "embeddings"), "embedding", "label",
-        0, 1, 1.0 / 128)),
-
-    // ---- Kendall tau-b on daily (volume, reach): exact integer
-    // concordance over the O(distinct-cell) frame — the spearman
-    // discipline applied to pair inversions
-    "q_kendall_tau" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"))
-      Profile.kendallTau(daily, "n_events", "n_users")
-    }),
-
-    // ---- CUPED variance reduction: per-user pre (view spend) vs
-    // post (purchase spend), decimal-exact sufficient stats — how
-    // much experiment sample the covariate buys back
-    "q_cuped" -> ((s, d) => {
-      val dec6 = "decimal(38,6)"
-      val per = t(s, d, "events").groupBy(col("user_id"))
-        .agg(
-          sum(when(col("event_type") === "view",
-            col("value").cast(dec6)).otherwise(lit(0).cast(dec6)))
-            .as("pre"),
-          sum(when(col("event_type") === "purchase",
-            col("value").cast(dec6)).otherwise(lit(0).cast(dec6)))
-            .as("post"))
-      Drift.cuped(per, "pre", "post")
-    }),
-
-    // ---- empirical-Bernstein trust radii next to Hoeffding's: the
-    // variance-adaptive bound that turns "±0.19, unusable" into
-    // "±0.03, actionable" on skewed gate rates; variance exact from
-    // the integer counts
-    "q_eb_radius" -> ((s, d) =>
-      Drift.empiricalBernsteinBounds(t(s, d, "events"), "event_type",
-        col("value") > 50)),
-
-    // ---- day-jackknife SE of a ratio metric (avg event value): the
-    // clustered-data metrology a row bootstrap understates; leave-one-
-    // day-out replicas from complements on the O(days) frame
-    "q_jackknife_ratio" -> ((s, d) =>
-      Drift.jackknifeRatio(t(s, d, "events"), "ts", col("value"))),
-
-    // ---- Wald SPRT per event_type vs the pooled baseline: the
-    // sequential gate that stops collecting the moment the llr
-    // crosses a boundary — powerAnalysis's streaming sibling
-    "q_sprt" -> ((s, d) =>
-      Drift.sprtGate(t(s, d, "events"), "event_type",
-        col("value") > 50)),
-
-    "q_seq_drift" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val base = Drift.numericHistogram(li, "l_quantity", 0.0, 55.0, 64)
-      val baseFreq = Drift.categoricalFreq(
-        li.where(col("l_orderkey") % 2 === 0), "l_returnflag")
-      val shifted = li.withColumn("l_quantity", col("l_quantity") + lit(5.0))
-      val v = Drift.check(shifted, "l_quantity", base, "l_returnflag", baseFreq)
-      import s.implicits._
-      // HALF_UP to match SQL round() semantics exactly
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      Seq((r6(v.ksStatistic), r6(v.ksCritical), v.ksDrifted, r6(v.chiSquare)))
-        .toDF("ks_stat", "ks_critical", "ks_drifted", "chi_square")
-    }))
-
-  /** DuckDB-runnable oracles — identical aliases and ORDER BY as the
-    * Spark plans above. Hash-seed-specific / sketch-approximate /
-    * heuristic queries are intentionally omitted (driver records a
-    * rows-only check for those). */
-  /** Token arrays with planted degenerate repetition for q_token_runs /
-    * q_degenerate_filter (oracle CTE replays the same arithmetic):
-    * %43 docs collapse to a constant array, %41 docs get a 6-token run
-    * appended to the healthy base sequence. */
-  private def degenTokens(s: SparkSession, d: String): DataFrame = {
-    val id = col("doc_id").cast("long")
-    val len = (id % 7 + 5).cast("int")
-    val base = transform(sequence(lit(0), len - 1),
-      i => ((id * 31 + i * 17) % 50000).cast("int"))
-    val toks =
-      when(id % 43 === 0, transform(sequence(lit(0), len - 1), _ => lit(7)))
-        .when(id % 41 === 0,
-          concat(base, array_repeat((id % 50000).cast("int"), 6)))
-        .otherwise(base)
-    t(s, d, "documents").select(col("doc_id"), toks.as("tokens"))
-  }
-
-  /** DuckDB spelling of [[degenTokens]] — shared by both run oracles. */
-  private val degenTokensCte: String =
-    """base AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 43 = 0 THEN
-      |           list_transform(range(0, doc_id % 7 + 5), i -> 7)
-      |         WHEN doc_id % 41 = 0 THEN
-      |           list_concat(
-      |             list_transform(range(0, doc_id % 7 + 5),
-      |               i -> (doc_id * 31 + i * 17) % 50000),
-      |             list_transform(range(0, 6), i -> doc_id % 50000))
-      |         ELSE list_transform(range(0, doc_id % 7 + 5),
-      |                i -> (doc_id * 31 + i * 17) % 50000)
-      |    END AS toks
-      |  FROM documents),
-      |tok AS (
-      |  SELECT doc_id, generate_subscripts(toks, 1) AS pos,
-      |         unnest(toks) AS t
-      |  FROM base),
-      |g AS (
-      |  SELECT doc_id, t, pos,
-      |    pos - row_number() OVER (PARTITION BY doc_id, t ORDER BY pos)
-      |      AS grp
-      |  FROM tok),
-      |runs AS (
-      |  SELECT doc_id, CAST(count(*) AS BIGINT) AS rl
-      |  FROM g GROUP BY doc_id, t, grp),
-      |mr AS (SELECT doc_id, max(rl) AS max_run FROM runs GROUP BY doc_id),
-      |tc AS (
-      |  SELECT doc_id, max(c) AS top_token_count FROM (
-      |    SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
-      |    FROM tok GROUP BY 1, 2) GROUP BY 1),
-      |nn AS (
-      |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
-      |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-      |  FROM base)""".stripMargin
-
-  /** DuckDB spelling of [[chatTurns]] — the shared turns CTE both chat
-    * oracles open with (same arithmetic, same planted moduli). */
-  private val chatTurnsCte: String =
-    """turns AS (
-      |  SELECT doc_id // 4 AS conv_id, doc_id % 4 AS turn_idx,
-      |    CASE WHEN doc_id % 97 = 0 THEN 'assistant'
-      |         WHEN doc_id % 101 = 0 THEN 'system'
-      |         WHEN doc_id % 103 = 0 THEN 'tool'
-      |         WHEN doc_id % 2 = 0 THEN 'user'
-      |         ELSE 'assistant' END AS role,
-      |    CASE WHEN doc_id % 89 = 0 THEN '' ELSE text END AS content
-      |  FROM documents)""".stripMargin
-
-  /** Synthetic chat-turns frame shared by q_chat_roles / q_chat_stats
-    * (oracle CTEs replay the same arithmetic): conversations of four
-    * turns with alternating user/assistant roles, violations planted
-    * at prime moduli (%97 assistant-override, %101 system-override,
-    * %103 unknown role, %89 blank content). */
-  private def chatTurns(s: SparkSession, d: String): DataFrame = {
-    val id = col("doc_id").cast("long")
-    t(s, d, "documents").select(
-      expr("doc_id div 4").as("conv_id"),
-      (id % 4).as("turn_idx"),
-      when(id % 97 === 0, lit("assistant"))
-        .when(id % 101 === 0, lit("system"))
-        .when(id % 103 === 0, lit("tool"))
-        .when(id % 2 === 0, lit("user"))
-        .otherwise(lit("assistant")).as("role"),
-      when(id % 89 === 0, lit("")).otherwise(col("text")).as("content"))
-  }
-
-  /** Synthetic preference pairs for q_pref_bias: even doc = chosen,
-    * odd doc = rejected; every 50th pair planted byte-identical. */
-  private def prefPairs(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    val chosen = docs.where(col("doc_id") % 2 === 0)
-      .select(expr("doc_id div 2").as("pair_id"), col("text").as("chosen"))
-    val rejected = docs.where(col("doc_id") % 2 === 1)
-      .select(expr("doc_id div 2").as("pair_id"), col("text").as("rejected"))
-    chosen.join(rejected, "pair_id")
-      .select(col("pair_id"), col("chosen"),
-        when(col("pair_id") % 50 === 0, col("chosen"))
-          .otherwise(col("rejected")).as("rejected"))
-  }
-
-  /** Synthetic doc-to-doc edge set shared by q_pagerank / q_hits /
-    * q_degree_dist (their oracle CTEs replay the same arithmetic):
-    * three outlinks per page, doc_id%17 pages link-free. Returns
-    * (edges src/dst, vertex ids). ONE spelling so the three graph
-    * queries cannot silently diverge from each other's oracles. */
-  private def syntheticEdges(docs: DataFrame): (DataFrame, DataFrame) = {
-    val n = docs.count()
-    val id = col("doc_id").cast("long")
-    val edges = docs.where(id % 17 =!= 0)
-      .select(id.as("src"), explode(array(
-        (id * 7 + 1) % n, (id * 13 + 3) % n, (id + 1) % n)).as("dst"))
-    (edges, docs.select(id.as("id")))
-  }
-
-  /** The stacked-replace chain both BPE oracles apply per merge level —
-    * the SAME [[TextAnalysis.BpePasses]] literal replaces as the engine
-    * (one replace under-merges delimiter-blocked disjoint repeats). */
-  private def bpeMergedChain(k: Int, start: String = "s") =
-    (1 to TextAnalysis.BpePasses).foldLeft(start) { (c, _) =>
-      s"replace($c, ' ' || m$k.a || ' ' || m$k.b || ' ', " +
-        s"' ' || m$k.a || m$k.b || ' ')"
-    }
-
-  /** Shared training-CTE body for the BPE oracles: word frequencies +
-    * 4 merge levels (m1..m4), each selected by (pair_count desc, a, b). */
-  private def bpeTrainingCtes: String = {
-    def pairs(k: Int) =
-      s"""p$k AS (SELECT l[i] AS a, l[i+1] AS b,
-         |              CAST(sum(freq) AS BIGINT) AS n
-         |       FROM (SELECT freq, l, unnest(range(1, len(l))) AS i
-         |             FROM (SELECT freq, list_filter(string_split(s, ' '),
-         |                     x -> x <> '') AS l FROM wf${k - 1}))
-         |       GROUP BY 1, 2),
-         |m$k AS (SELECT a, b, n FROM p$k ORDER BY n DESC, a, b LIMIT 1)"""
-        .stripMargin
-    def wf(k: Int) =
-      s"wf$k AS (SELECT ${bpeMergedChain(k)} AS s, freq FROM wf${k - 1}, m$k)"
-    val levels = (1 to 4).map(k =>
-      if (k < 4) s"${pairs(k)},\n${wf(k)}" else pairs(k)).mkString(",\n")
-    s"""ws AS (
-       |  SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-       |    '\\s+'), x -> x <> '')) AS w FROM documents),
-       |wf0 AS (
-       |  SELECT ' ' || array_to_string(string_split(w, ''), ' ') || ' '
-       |           AS s,
-       |         CAST(count(*) AS BIGINT) AS freq
-       |  FROM ws GROUP BY w),
-       |$levels""".stripMargin
-  }
-
-  /** q_bpe_merges oracle, generated: 4 merge levels over the shared
-    * training CTEs. */
-  private def bpeOracle: String =
-    s"""WITH $bpeTrainingCtes
-       |SELECT * FROM (
-       |  SELECT CAST(1 AS BIGINT) AS merge_idx, a AS "left", b AS "right",
-       |         n AS pair_count FROM m1
-       |  UNION ALL SELECT 2, a, b, n FROM m2
-       |  UNION ALL SELECT 3, a, b, n FROM m3
-       |  UNION ALL SELECT 4, a, b, n FROM m4)
-       |ORDER BY merge_idx""".stripMargin
-
-  /** q_bpe_encode oracle, generated: re-derive the 4 merges with the
-    * shared training CTEs, then APPLY the same stacked-replace chain to
-    * every document's words and count the resulting subword tokens
-    * (zero-word documents keep a 0 row via the LEFT JOIN, matching
-    * [[TextAnalysis.bpeTokenCounts]]). */
-  private def bpeEncodeOracle: String = {
-    val chain = (1 to 4).foldLeft("s") { (c, k) => bpeMergedChain(k, c) }
-    s"""WITH $bpeTrainingCtes,
-       |dw AS (
-       |  SELECT doc_id, unnest(list_filter(string_split_regex(
-       |    lower(trim(text)), '\\s+'), x -> x <> '')) AS w FROM documents),
-       |ds AS (
-       |  SELECT doc_id,
-       |         ' ' || array_to_string(string_split(w, ''), ' ') || ' '
-       |           AS s
-       |  FROM dw),
-       |enc AS (SELECT doc_id, $chain AS s FROM ds, m1, m2, m3, m4),
-       |cnt AS (
-       |  SELECT doc_id, CAST(sum(len(list_filter(string_split(s, ' '),
-       |    x -> x <> ''))) AS BIGINT) AS n_bpe_tok
-       |  FROM enc GROUP BY doc_id)
-       |SELECT d.doc_id, coalesce(cnt.n_bpe_tok, 0) AS n_bpe_tok
-       |FROM documents d LEFT JOIN cnt USING (doc_id)
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** q_bpe_fertility oracle, generated: re-derive the merges, encode
-    * every (source, word), then per source subword-tokens / words. */
-  private def bpeFertilityOracle: String = {
-    val chain = (1 to 4).foldLeft("s") { (c, k) => bpeMergedChain(k, c) }
-    s"""WITH $bpeTrainingCtes,
-       |dw AS (
-       |  SELECT source, unnest(list_filter(string_split_regex(
-       |    lower(trim(text)), '\\s+'), x -> x <> '')) AS w FROM documents),
-       |ds AS (
-       |  SELECT source,
-       |         ' ' || array_to_string(string_split(w, ''), ' ') || ' '
-       |           AS s
-       |  FROM dw),
-       |enc AS (SELECT source, $chain AS s FROM ds, m1, m2, m3, m4),
-       |c AS (
-       |  SELECT source, CAST(count(*) AS BIGINT) AS n_words,
-       |         CAST(sum(len(list_filter(string_split(s, ' '),
-       |           x -> x <> ''))) AS BIGINT) AS n_bpe_tok
-       |  FROM enc GROUP BY source)
-       |SELECT source, n_words, n_bpe_tok,
-       |       round(CAST(n_bpe_tok AS DOUBLE) / n_words, 6) AS fertility
-       |FROM c ORDER BY source""".stripMargin
-  }
-
-  /** q_mmr oracle, generated: unrolled greedy MMR steps — rel and the
-    * selected-set penalties via DuckDB's list_cosine_similarity (the
-    * q_ann_topk equivalence to the native cosine), greatest-chain
-    * penalty (max is exact, nesting-order-free), explicit NOT IN
-    * exclusion of picked ids, (score DESC, vec_id ASC) tie-break. */
-  private def mmrOracle(k: Int): String = {
-    def cos(b: String) =
-      s"list_cosine_similarity(e.embedding::DOUBLE[], $b::DOUBLE[])"
-    val steps = (2 to k).map { s =>
-      val pens = (1 until s).map(i => cos(s"c$i.qv"))
-      val pen = if (pens.size == 1) pens.head
-        else s"greatest(${pens.mkString(", ")})"
-      val picked = (1 until s).map(i => s"(SELECT vec_id FROM p$i)")
-        .mkString(", ")
-      val cTabs = (1 until s).map(i => s"c$i").mkString(", ")
-      s"""sc$s AS (SELECT e.vec_id,
-         |  0.7::DOUBLE * r.rel - (1.0::DOUBLE - 0.7::DOUBLE) * $pen AS sc
-         |  FROM e JOIN r USING (vec_id), $cTabs
-         |  WHERE e.vec_id NOT IN ($picked)),
-         |p$s AS (SELECT vec_id, sc FROM sc$s ORDER BY sc DESC, vec_id
-         |        LIMIT 1),
-         |c$s AS (SELECT e.embedding AS qv FROM e, p$s
-         |        WHERE e.vec_id = p$s.vec_id)""".stripMargin
-    }.mkString(",\n")
-    val rows = (1 to k).map { s =>
-      s"SELECT CAST($s AS BIGINT) AS step, CAST(vec_id AS BIGINT) AS " +
-        s"vec_id, round(sc, 6) AS score FROM p$s"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |q AS (SELECT embedding AS qv FROM e WHERE vec_id = 0),
-       |r AS (SELECT e.vec_id, ${cos("q.qv")} AS rel FROM e, q),
-       |p1 AS (SELECT vec_id, 0.7::DOUBLE * rel
-       |         - (1.0::DOUBLE - 0.7::DOUBLE) * 0.0::DOUBLE AS sc
-       |       FROM r ORDER BY sc DESC, vec_id LIMIT 1),
-       |c1 AS (SELECT e.embedding AS qv FROM e, p1
-       |       WHERE e.vec_id = p1.vec_id),
-       |$steps
-       |$rows
-       |ORDER BY step""".stripMargin
-  }
-
-  /** q_kcenter oracle, generated: unrolled Gonzalez steps — each round
-    * computes squared-L2 to the newest center in DIMENSION ORDER (the
-    * same accumulation order as DiagMahalanobis), folds it into the
-    * running min, and argmaxes with the (d DESC, vec_id ASC)
-    * tie-break. */
-  private def kCenterOracle(k: Int): String = {
-    def dist(eAlias: String, cAlias: String): String =
-      s"""list_sum(list_transform(range(1, 65), i ->
-         |  (CAST($eAlias.embedding[CAST(i AS INT)] AS DOUBLE) -
-         |   CAST($cAlias.embedding[CAST(i AS INT)] AS DOUBLE)) *
-         |  (CAST($eAlias.embedding[CAST(i AS INT)] AS DOUBLE) -
-         |   CAST($cAlias.embedding[CAST(i AS INT)] AS DOUBLE))))"""
-        .stripMargin
-    val steps = (2 to k).map { s =>
-      val prev = if (s == 2) s"s1" else s"s${s - 1}"
-      val cDef =
-        if (s == 2)
-          s"c2 AS (SELECT e.vec_id, e.embedding FROM e, p2 " +
-            s"WHERE e.vec_id = p2.cid)"
-        else
-          s"c$s AS (SELECT e.vec_id, e.embedding FROM e, p$s " +
-            s"WHERE e.vec_id = p$s.cid)"
-      val pDef =
-        s"p$s AS (SELECT vec_id AS cid, d FROM $prev " +
-          s"ORDER BY d DESC, vec_id LIMIT 1)"
-      val sDef = if (s < k)
-        s"""s$s AS (
-           |  SELECT $prev.vec_id, least($prev.d, ${dist("e", s"c$s")}) AS d
-           |  FROM $prev JOIN e USING (vec_id), c$s)""".stripMargin
-      else ""
-      Seq(pDef, cDef, sDef).filter(_.nonEmpty).mkString(",\n")
-    }.mkString(",\n")
-    val rows = (2 to k).map { s =>
-      s"SELECT CAST($s AS BIGINT) AS step, CAST(cid AS BIGINT) AS " +
-        s"center_id, round(d, 6) AS dist FROM p$s"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |c1 AS (SELECT vec_id, embedding FROM e WHERE vec_id = 0),
-       |s1 AS (SELECT e.vec_id, ${dist("e", "c1")} AS d FROM e, c1),
-       |$steps
-       |SELECT CAST(1 AS BIGINT) AS step, CAST(0 AS BIGINT) AS center_id,
-       |       CAST(0.0 AS DOUBLE) AS dist
-       |UNION ALL
-       |$rows
-       |ORDER BY step""".stripMargin
-  }
-
-  /** q_hilbert_index oracle, generated: the xy2d walk unrolled to one
-    * CTE per level with per-level column names (x_k, y_k, d_k — DuckDB
-    * lateral alias references would otherwise shadow the input columns
-    * mid-SELECT). Flip-then-swap rotation, masked inputs, xor() on the
-    * quadrant code — the exact arithmetic of the native expression. */
-  private def hilbertOracle(bits: Int): String = {
-    val side = 1L << bits
-    val levels = (1 to bits).map { k =>
-      val s = side >> k
-      val px = s"x${k - 1}"; val py = s"y${k - 1}"; val pd = s"d${k - 1}"
-      s"""h$k AS (
-         |  SELECT doc_id, x0, y0,
-         |    CASE WHEN ($py & $s) = 0 THEN
-         |           (CASE WHEN ($px & $s) > 0 THEN $s - 1 - $py
-         |                 ELSE $py END)
-         |         ELSE $px END AS x$k,
-         |    CASE WHEN ($py & $s) = 0 THEN
-         |           (CASE WHEN ($px & $s) > 0 THEN $s - 1 - $px
-         |                 ELSE $px END)
-         |         ELSE $py END AS y$k,
-         |    $pd + $s * $s * xor(
-         |      3 * (CASE WHEN ($px & $s) > 0 THEN 1 ELSE 0 END),
-         |      (CASE WHEN ($py & $s) > 0 THEN 1 ELSE 0 END)) AS d$k
-         |  FROM h${k - 1})""".stripMargin
-    }.mkString(",\n")
-    s"""WITH h0 AS (
-       |  SELECT doc_id, n_chars & ${side - 1} AS x0,
-       |         doc_id & ${side - 1} AS y0, CAST(0 AS BIGINT) AS d0
-       |  FROM documents),
-       |$levels
-       |SELECT doc_id, CAST(x0 AS BIGINT) AS x, CAST(y0 AS BIGINT) AS y,
-       |  CAST(CASE WHEN x0 IS NULL OR y0 IS NULL THEN NULL
-       |            ELSE d$bits END AS BIGINT) AS h
-       |FROM h$bits ORDER BY doc_id""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q_hilbert_index" -> hilbertOracle(10),
-
-    "q_hilbert_skip" ->
-      """WITH zm AS (
-        |  SELECT filename, CAST(count(*) AS BIGINT) AS n_rows,
-        |         min(n_chars) AS mn1, max(n_chars) AS mx1,
-        |         min(bucket2) AS mn2, max(bucket2) AS mx2
-        |  FROM read_parquet('/tmp/graft_hilbert/*.parquet',
-        |                    filename=true)
-        |  GROUP BY filename),
-        |d1 AS (
-        |  SELECT 'n_chars' AS dim, CAST(count(*) AS BIGINT) AS n_files,
-        |    CAST(sum(n_rows) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN mx1 < 100 OR mn1 > 150 THEN 1 ELSE 0
-        |             END) AS BIGINT) AS n_files_skipped,
-        |    CAST(sum(CASE WHEN mx1 < 100 OR mn1 > 150 THEN n_rows
-        |             ELSE 0 END) AS BIGINT) AS n_rows_skipped
-        |  FROM zm),
-        |d2 AS (
-        |  SELECT 'bucket2' AS dim, CAST(count(*) AS BIGINT) AS n_files,
-        |    CAST(sum(n_rows) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN mx2 < 0 OR mn2 > 31 THEN 1 ELSE 0
-        |             END) AS BIGINT) AS n_files_skipped,
-        |    CAST(sum(CASE WHEN mx2 < 0 OR mn2 > 31 THEN n_rows
-        |             ELSE 0 END) AS BIGINT) AS n_rows_skipped
-        |  FROM zm),
-        |u AS (SELECT * FROM d1 UNION ALL SELECT * FROM d2)
-        |SELECT n_files, n_rows, n_files_skipped, n_rows_skipped,
-        |  CASE WHEN n_files > 0
-        |       THEN round(CAST(n_files_skipped AS DOUBLE)
-        |                  / CAST(n_files AS DOUBLE), 6)
-        |  END AS skip_fraction,
-        |  CASE WHEN n_rows > 0
-        |       THEN round(CAST(n_rows_skipped AS DOUBLE)
-        |                  / CAST(n_rows AS DOUBLE), 6)
-        |  END AS row_skip_fraction,
-        |  dim
-        |FROM u ORDER BY dim""".stripMargin,
-
-    "q_conformal_by_source" ->
-      """WITH cal AS (
-        |  SELECT coalesce(CAST(source AS VARCHAR), '<null>') AS g,
-        |         CAST(n_chars AS BIGINT) AS s
-        |  FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-        |r AS (
-        |  SELECT g, s, row_number() OVER (PARTITION BY g ORDER BY s)
-        |           AS rn
-        |  FROM cal),
-        |ks AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS n_cal,
-        |    least(((count(*) + 1) * 9 + 9) // 10, count(*)) AS k,
-        |    ((count(*) + 1) * 9 + 9) // 10 > count(*) AS clamped
-        |  FROM cal GROUP BY g)
-        |SELECT r.g AS source, ks.n_cal, CAST(ks.k AS BIGINT) AS k,
-        |  r.s AS q_hat, ks.clamped
-        |FROM r JOIN ks ON r.g = ks.g AND r.rn = ks.k
-        |ORDER BY source""".stripMargin,
-
-    "q_chao1" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |wc AS (SELECT w, CAST(count(*) AS BIGINT) AS r
-        |       FROM tok GROUP BY w),
-        |a AS (
-        |  SELECT CAST(sum(r) AS BIGINT) AS n_tokens,
-        |         CAST(count(*) AS BIGINT) AS s_obs,
-        |         CAST(sum(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS f1,
-        |         CAST(sum(CASE WHEN r = 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS f2
-        |  FROM wc)
-        |SELECT n_tokens, s_obs, f1, f2,
-        |  round(CAST(s_obs AS DOUBLE)
-        |        + CAST(f1 AS DOUBLE) * CAST(f1 - 1 AS DOUBLE)
-        |          / (2.0 * CAST(f2 + 1 AS DOUBLE)), 6) AS chao1,
-        |  CASE WHEN n_tokens > 0
-        |       THEN round(1.0 - CAST(f1 AS DOUBLE)
-        |                  / CAST(n_tokens AS DOUBLE), 6) END AS coverage
-        |FROM a""".stripMargin,
-
-    "q_bloom_plan" ->
-      """WITH n AS (
-        |  SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_items
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |b AS (SELECT unnest([4,6,8,10,12,16,20,24]) AS bits_per_item),
-        |c AS (
-        |  SELECT bits_per_item, n_items,
-        |    greatest(1.0, round(CAST(bits_per_item AS DOUBLE) * ln(2.0)))
-        |      AS k
-        |  FROM b, n)
-        |SELECT bits_per_item, n_items,
-        |  CAST(bits_per_item AS BIGINT) * n_items AS m_bits,
-        |  CAST(k AS BIGINT) AS k_hashes,
-        |  round(pow(1.0 - exp(-1.0 * k / CAST(bits_per_item AS DOUBLE)),
-        |            k), 6) AS fpr,
-        |  round(pow(1.0 - exp(-1.0 * k / CAST(bits_per_item AS DOUBLE)),
-        |            k), 6) <= 0.01 AS acceptable
-        |FROM c ORDER BY bits_per_item""".stripMargin,
-
-    "q_conformal" ->
-      """WITH cal AS (
-        |  SELECT n_chars FROM documents
-        |  WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-        |tst AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 1),
-        |p AS (SELECT CAST(count(*) AS BIGINT) AS n_cal FROM cal),
-        |kk AS (
-        |  SELECT n_cal,
-        |    least(((n_cal + 1) * 9 + 9) // 10, n_cal) AS k,
-        |    ((n_cal + 1) * 9 + 9) // 10 > n_cal AS clamped
-        |  FROM p),
-        |r AS (
-        |  SELECT n_chars, row_number() OVER (ORDER BY n_chars) AS rn
-        |  FROM cal),
-        |q AS (SELECT n_chars AS q_hat FROM r, kk WHERE rn = kk.k),
-        |c AS (
-        |  SELECT CAST(count(tst.n_chars) AS BIGINT) AS n_test,
-        |    CAST(sum(CASE WHEN tst.n_chars <= q.q_hat THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_covered
-        |  FROM tst, q)
-        |SELECT kk.n_cal, CAST(kk.k AS BIGINT) AS k,
-        |  CAST(q.q_hat AS BIGINT) AS q_hat, kk.clamped,
-        |  c.n_test, c.n_covered,
-        |  CASE WHEN c.n_test > 0
-        |       THEN round(CAST(c.n_covered AS DOUBLE) / c.n_test, 6) END
-        |    AS coverage
-        |FROM kk, q, c""".stripMargin,
-
-    "q_effective_rank" ->
-      """WITH x AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |c AS (
-        |  SELECT a.i AS i, b.i AS j,
-        |    CAST(round(avg(a.v * b.v) - avg(a.v) * avg(b.v), 6) + 0
-        |         AS DECIMAL(18,6)) AS cov
-        |  FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |  GROUP BY a.i, b.i),
-        |t AS (
-        |  SELECT
-        |    sum(CASE WHEN i = j THEN cov
-        |             ELSE CAST(0 AS DECIMAL(18,6)) END) AS tr,
-        |    sum(cov * cov) AS sall,
-        |    sum(CASE WHEN i = j THEN cov * cov
-        |             ELSE CAST(0 AS DECIMAL(18,6))
-        |                  * CAST(0 AS DECIMAL(18,6)) END) AS sdiag
-        |  FROM c)
-        |SELECT CAST(64 AS INTEGER) AS n_dims,
-        |  round(CAST(tr AS DOUBLE), 6) AS trace,
-        |  CASE WHEN 2.0 * CAST(sall AS DOUBLE) - CAST(sdiag AS DOUBLE) > 0
-        |       THEN round(CAST(tr AS DOUBLE) * CAST(tr AS DOUBLE)
-        |                  / (2.0 * CAST(sall AS DOUBLE)
-        |                     - CAST(sdiag AS DOUBLE)), 6) END
-        |    AS effective_rank
-        |FROM t""".stripMargin,
-
-    "q_mmd" ->
-      """WITH a AS (
-        |  SELECT embedding::DOUBLE[] AS x,
-        |    list_inner_product(embedding::DOUBLE[],
-        |                       embedding::DOUBLE[]) AS nx
-        |  FROM embeddings WHERE label = 0 AND embedding IS NOT NULL),
-        |b AS (
-        |  SELECT embedding::DOUBLE[] AS y,
-        |    list_inner_product(embedding::DOUBLE[],
-        |                       embedding::DOUBLE[]) AS ny
-        |  FROM embeddings WHERE label = 1 AND embedding IS NOT NULL),
-        |kaa AS (
-        |  SELECT avg(exp(-(1.0/128) * (p.nx + q.nx
-        |    - 2.0 * list_inner_product(p.x, q.x)))) AS m FROM a p, a q),
-        |kbb AS (
-        |  SELECT avg(exp(-(1.0/128) * (p.ny + q.ny
-        |    - 2.0 * list_inner_product(p.y, q.y)))) AS m FROM b p, b q),
-        |kab AS (
-        |  SELECT avg(exp(-(1.0/128) * (p.nx + q.ny
-        |    - 2.0 * list_inner_product(p.x, q.y)))) AS m FROM a p, b q),
-        |na AS (SELECT CAST(count(*) AS BIGINT) AS n_a FROM a),
-        |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_b FROM b)
-        |SELECT n_a, n_b,
-        |  round(kaa.m + kbb.m - 2.0 * kab.m, 6) AS mmd2
-        |FROM na, nb, kaa, kbb, kab""".stripMargin,
-
-    "q_kendall_tau" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day,
-        |         CAST(count(*) AS BIGINT) AS x,
-        |         CAST(count(DISTINCT user_id) AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
-        |cells AS (
-        |  SELECT x, y, CAST(count(*) AS BIGINT) AS c
-        |  FROM daily GROUP BY 1, 2),
-        |p AS (
-        |  SELECT a.y AS y1, b.y AS y2, a.c AS c1, b.c AS c2
-        |  FROM cells a JOIN cells b ON a.x < b.x),
-        |cd AS (
-        |  SELECT
-        |    coalesce(sum(CASE WHEN y1 < y2 THEN c1 * c2 ELSE 0 END), 0)
-        |      AS cc,
-        |    coalesce(sum(CASE WHEN y1 > y2 THEN c1 * c2 ELSE 0 END), 0)
-        |      AS dd
-        |  FROM p),
-        |tx AS (
-        |  SELECT sum(nx * (nx - 1) // 2) AS n1, sum(nx) AS n
-        |  FROM (SELECT sum(c) AS nx FROM cells GROUP BY x)),
-        |ty AS (
-        |  SELECT sum(ny * (ny - 1) // 2) AS n2
-        |  FROM (SELECT sum(c) AS ny FROM cells GROUP BY y))
-        |SELECT CAST(n AS BIGINT) AS n, CAST(cc AS BIGINT) AS n_concordant,
-        |  CAST(dd AS BIGINT) AS n_discordant,
-        |  CAST(n1 AS BIGINT) AS tie_pairs_x,
-        |  CAST(n2 AS BIGINT) AS tie_pairs_y,
-        |  CASE WHEN sqrt((CAST(n AS DOUBLE) * (n - 1) / 2 - n1)
-        |                 * (CAST(n AS DOUBLE) * (n - 1) / 2 - n2)) > 0
-        |       THEN round((CAST(cc AS DOUBLE) - CAST(dd AS DOUBLE))
-        |                  / sqrt((CAST(n AS DOUBLE) * (n - 1) / 2 - n1)
-        |                         * (CAST(n AS DOUBLE) * (n - 1) / 2 - n2)),
-        |                  6)
-        |  END AS tau_b,
-        |  CASE WHEN CAST(cc AS DOUBLE) + CAST(dd AS DOUBLE) > 0
-        |       THEN round((CAST(cc AS DOUBLE) - CAST(dd AS DOUBLE))
-        |                  / (CAST(cc AS DOUBLE) + CAST(dd AS DOUBLE)), 6)
-        |  END AS gamma
-        |FROM cd, tx, ty""".stripMargin,
-
-    "q_cuped" ->
-      """WITH per AS (
-        |  SELECT user_id,
-        |    sum(CASE WHEN event_type = 'view'
-        |             THEN CAST(value AS DECIMAL(38,6))
-        |             ELSE CAST(0 AS DECIMAL(38,6)) END) AS x,
-        |    sum(CASE WHEN event_type = 'purchase'
-        |             THEN CAST(value AS DECIMAL(38,6))
-        |             ELSE CAST(0 AS DECIMAL(38,6)) END) AS y
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT x, y FROM per
-        |      WHERE x IS NOT NULL AND y IS NOT NULL),
-        |a AS (
-        |  SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM b),
-        |f AS (
-        |  SELECT n,
-        |    CAST(n * sxy - sx * sy AS DOUBLE) AS cov,
-        |    CAST(n * sxx - sx * sx AS DOUBLE) AS vx,
-        |    CAST(n * syy - sy * sy AS DOUBLE) AS vy
-        |  FROM a)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  CASE WHEN vx > 0 THEN round(cov / vx, 6) END AS theta,
-        |  CASE WHEN vx > 0 AND vy > 0
-        |       THEN round(cov * cov / (vx * vy), 6) END AS var_reduction
-        |FROM f""".stripMargin,
-
-    "q_eb_radius" ->
-      """WITH per AS (
-        |  SELECT coalesce(CAST(event_type AS VARCHAR), '<null>')
-        |           AS event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN value > 50 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS k
-        |  FROM events GROUP BY 1)
-        |SELECT event_type, n, round(CAST(k AS DOUBLE) / n, 6) AS rate,
-        |  round(sqrt(ln(2.0 / 0.05) / (2.0 * n)), 6) AS eps_hoeffding,
-        |  CASE WHEN n > 1 THEN round(
-        |    sqrt(2.0 * (CAST(k AS DOUBLE) * (n - k)
-        |                / (CAST(n AS DOUBLE) * greatest(n - 1.0, 1.0)))
-        |         * ln(3.0 / 0.05) / n)
-        |    + 3.0 * ln(3.0 / 0.05) / n, 6) END AS eps_bernstein
-        |FROM per ORDER BY event_type""".stripMargin,
-
-    "q_jackknife_ratio" ->
-      """WITH days AS (
-        |  SELECT CAST(ts AS DATE) AS d,
-        |         sum(CAST(value AS DECIMAL(38,6))) AS x,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |tot AS (
-        |  SELECT sum(x) AS tx, sum(y) AS ty,
-        |         CAST(count(*) AS BIGINT) AS n_days
-        |  FROM days),
-        |loo AS (
-        |  SELECT n_days, tx, ty,
-        |    CAST(tx - x AS DOUBLE) / CAST(ty - y AS DOUBLE) AS ri
-        |  FROM days, tot),
-        |a AS (
-        |  SELECT n_days, tx, ty, avg(ri) AS rbar, sum(ri * ri) AS rsq
-        |  FROM loo GROUP BY 1, 2, 3)
-        |SELECT n_days,
-        |  round(CAST(tx AS DOUBLE) / CAST(ty AS DOUBLE), 6) AS ratio,
-        |  CASE WHEN n_days > 1 THEN round(sqrt(greatest(0.0,
-        |    (CAST(n_days AS DOUBLE) - 1.0) / CAST(n_days AS DOUBLE)
-        |    * (rsq - CAST(n_days AS DOUBLE) * rbar * rbar))), 6)
-        |  END AS se_jackknife
-        |FROM a""".stripMargin,
-
-    "q_sprt" ->
-      """WITH per AS (
-        |  SELECT coalesce(CAST(event_type AS VARCHAR), '<null>')
-        |           AS event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN value > 50 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS k
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT sum(n) AS nn, sum(k) AS kk FROM per),
-        |c AS (
-        |  SELECT event_type, n, k,
-        |    CAST(kk AS DOUBLE) / nn AS p0,
-        |    CAST(kk AS DOUBLE) / nn * 1.05 AS p1
-        |  FROM per, t),
-        |r AS (
-        |  SELECT event_type, n, k, p0, p1,
-        |    CASE WHEN p0 <= 0 OR p1 >= 1 THEN NULL
-        |         ELSE round(k * ln(p1 / p0)
-        |                    + (n - k) * ln((1.0 - p1) / (1.0 - p0)), 6)
-        |    END AS llr
-        |  FROM c)
-        |SELECT event_type, n, k AS n_success,
-        |  round(CAST(k AS DOUBLE) / n, 6) AS rate, llr,
-        |  round(ln(0.2 / (1.0 - 0.05)), 6) AS lower,
-        |  round(ln((1.0 - 0.2) / 0.05), 6) AS upper,
-        |  CASE WHEN p0 <= 0 OR p1 >= 1 THEN 'untestable'
-        |       WHEN llr >= round(ln((1.0 - 0.2) / 0.05), 6)
-        |         THEN 'accept_h1'
-        |       WHEN llr <= round(ln(0.2 / (1.0 - 0.05)), 6)
-        |         THEN 'accept_h0'
-        |       ELSE 'continue' END AS verdict
-        |FROM r ORDER BY event_type""".stripMargin,
-
-    "q_encoding_audit" ->
-      """WITH n AS (
-        |  SELECT doc_id, CAST(lang AS VARCHAR) AS lang,
-        |         CAST(source AS VARCHAR) AS source FROM documents),
-        |j AS (
-        |  SELECT a.lang AS l1, b.lang AS l2, a.source AS s1,
-        |         b.source AS s2, b.doc_id IS NOT NULL AS hn
-        |  FROM n a LEFT JOIN n b ON b.doc_id = a.doc_id + 1),
-        |agg AS (
-        |  SELECT count(*) AS n_rows,
-        |    count(DISTINCT l1) AS nd_lang, count(DISTINCT s1) AS nd_src,
-        |    sum(CASE WHEN hn AND (l1 IS DISTINCT FROM l2)
-        |             THEN 1 ELSE 0 END) AS chg_lang,
-        |    sum(CASE WHEN hn AND (s1 IS DISTINCT FROM s2)
-        |             THEN 1 ELSE 0 END) AS chg_src
-        |  FROM j),
-        |per AS (
-        |  SELECT 'lang' AS col_name, n_rows, nd_lang AS nd,
-        |         chg_lang AS chg FROM agg
-        |  UNION ALL
-        |  SELECT 'source', n_rows, nd_src, chg_src FROM agg)
-        |SELECT col_name AS "column", CAST(n_rows AS BIGINT) AS n_rows,
-        |  CAST(nd AS BIGINT) AS n_distinct,
-        |  CAST(CASE WHEN n_rows = 0 THEN 0 ELSE chg + 1 END AS BIGINT)
-        |    AS n_runs,
-        |  CASE WHEN n_rows = 0 THEN NULL
-        |       ELSE round(CAST(n_rows AS DOUBLE) / (chg + 1), 6) END
-        |    AS avg_run_len,
-        |  CASE WHEN n_rows = 0 THEN NULL
-        |       ELSE round(CAST(nd AS DOUBLE) / n_rows, 6) END
-        |    AS distinct_ratio,
-        |  CASE WHEN n_rows = 0 THEN 'plain'
-        |       WHEN round(CAST(n_rows AS DOUBLE) / (chg + 1), 6) >= 4.0
-        |         THEN 'rle'
-        |       WHEN round(CAST(nd AS DOUBLE) / n_rows, 6) <= 0.01
-        |         THEN 'dict'
-        |       ELSE 'plain' END AS encoding
-        |FROM per ORDER BY "column"""".stripMargin,
-
-    "q_sortedness" ->
-      """WITH n AS (
-        |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS v FROM documents),
-        |j AS (
-        |  SELECT a.v AS v1, b.v AS v2
-        |  FROM n a JOIN n b ON b.doc_id = a.doc_id + 1),
-        |s AS (
-        |  SELECT
-        |    sum(CASE WHEN v1 IS NOT NULL AND v2 IS NOT NULL
-        |             THEN 1 ELSE 0 END) AS np,
-        |    sum(CASE WHEN v1 IS NULL OR v2 IS NULL
-        |             THEN 1 ELSE 0 END) AS nn,
-        |    sum(CASE WHEN v1 IS NOT NULL AND v2 IS NOT NULL AND v2 >= v1
-        |             THEN 1 ELSE 0 END) AS nd
-        |  FROM j)
-        |SELECT CAST(np AS BIGINT) AS n_pairs,
-        |  CAST(nn AS BIGINT) AS n_null_pairs,
-        |  CAST(nd AS BIGINT) AS n_nondecreasing,
-        |  CASE WHEN np = 0 THEN NULL
-        |       ELSE round(CAST(nd AS DOUBLE) / np, 6) END
-        |    AS sorted_fraction
-        |FROM s""".stripMargin,
-
-    "q_file_skew" ->
-      """WITH pf AS (
-        |  SELECT filename, CAST(count(*) AS BIGINT) AS n
-        |  FROM read_parquet('/tmp/graft_fileskew/*/*.parquet',
-        |                    filename=true)
-        |  GROUP BY filename),
-        |s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_files,
-        |         CAST(sum(n) AS BIGINT) AS n_rows,
-        |         CAST(min(n) AS BIGINT) AS rows_min,
-        |         CAST(max(n) AS BIGINT) AS rows_max,
-        |         avg(n) AS a
-        |  FROM pf)
-        |SELECT n_files, n_rows, rows_min, rows_max,
-        |  round(a, 6) AS rows_avg,
-        |  round(CAST(rows_max AS DOUBLE) / a, 6) AS skew,
-        |  CAST((SELECT count(*) FROM pf, s
-        |        WHERE CAST(pf.n AS DOUBLE) < 0.5 * s.a) AS BIGINT)
-        |    AS n_small_files
-        |FROM s""".stripMargin,
-
-    "q_lsh_tuning" ->
-      """WITH sp AS (
-        |  SELECT CAST(128 // r AS INTEGER) AS n_bands,
-        |         CAST(r AS INTEGER) AS n_rows
-        |  FROM (SELECT unnest([1,2,4,8,16,32,64,128]) AS r)),
-        |g AS (SELECT n_bands, n_rows, unnest(range(1, 20)) AS i FROM sp),
-        |p AS (
-        |  SELECT n_bands, n_rows, CAST(i AS DOUBLE) / 20 AS s,
-        |    1.0 - pow(1.0 - pow(CAST(i AS DOUBLE) / 20,
-        |                        CAST(n_rows AS DOUBLE)),
-        |              CAST(n_bands AS DOUBLE)) AS pc
-        |  FROM g),
-        |a AS (
-        |  SELECT n_bands, n_rows,
-        |    sum(CASE WHEN s < 0.8 THEN pc * (1.0 / 20) ELSE 0 END) AS fp,
-        |    sum(CASE WHEN s >= 0.8 THEN (1.0 - pc) * (1.0 / 20)
-        |             ELSE 0 END) AS fn
-        |  FROM p GROUP BY 1, 2),
-        |sc AS (
-        |  SELECT n_bands, n_rows,
-        |    round(pow(1.0 / CAST(n_bands AS DOUBLE),
-        |              1.0 / CAST(n_rows AS DOUBLE)), 6) AS s_star,
-        |    round(1.0 - pow(1.0 - pow(0.8, CAST(n_rows AS DOUBLE)),
-        |                    CAST(n_bands AS DOUBLE)), 6)
-        |      AS p_at_threshold,
-        |    round(fp, 6) AS fp_area, round(fn, 6) AS fn_area,
-        |    round(fp + fn, 6) AS total_cost
-        |  FROM a),
-        |mc AS (SELECT min(total_cost) AS mc FROM sc),
-        |mb AS (SELECT min(n_bands) AS mb FROM sc, mc
-        |       WHERE total_cost = mc.mc)
-        |SELECT sc.n_bands, sc.n_rows, s_star, p_at_threshold, fp_area,
-        |  fn_area, total_cost,
-        |  (total_cost = mc.mc AND sc.n_bands = mb.mb) AS recommended
-        |FROM sc, mc, mb ORDER BY sc.n_bands""".stripMargin,
-
-    "q_power_analysis" ->
-      """WITH per AS (
-        |  SELECT coalesce(CAST(event_type AS VARCHAR), '<null>')
-        |           AS event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN value > 50 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_success
-        |  FROM events GROUP BY 1),
-        |f AS (
-        |  SELECT event_type, n, n_success,
-        |    CAST(n_success AS DOUBLE) / n AS p1,
-        |    CAST(n_success AS DOUBLE) / n * 1.05 AS p2
-        |  FROM per),
-        |r AS (
-        |  SELECT event_type, n, n_success, p1, p2,
-        |    CASE WHEN p1 <= 0 OR p1 >= 1 OR p2 >= 1 OR p2 <= 0 THEN NULL
-        |         ELSE CAST(ceil(
-        |           pow(1.9599639845400545
-        |                 * sqrt(2.0 * ((p1 + p2) / 2.0)
-        |                        * (1.0 - (p1 + p2) / 2.0))
-        |               + 0.8416212335729143
-        |                 * sqrt(p1 * (1.0 - p1) + p2 * (1.0 - p2)), 2)
-        |           / pow(p2 - p1, 2)) AS BIGINT) END AS n_required
-        |  FROM f)
-        |SELECT event_type, n, n_success, round(p1, 6) AS rate,
-        |  CASE WHEN n_required IS NULL THEN NULL
-        |       ELSE round(p2, 6) END AS target_rate,
-        |  n_required,
-        |  CASE WHEN n_required IS NULL THEN NULL
-        |       ELSE n >= n_required END AS sufficient
-        |FROM r ORDER BY event_type""".stripMargin,
-
-    "q_colstats_lineitem" ->
-      """SELECT * FROM (
-        |  SELECT 'l_quantity' AS field, count(l_quantity) AS cnt,
-        |         min(l_quantity) AS min, max(l_quantity) AS max,
-        |         round(avg(l_quantity), 4) AS avg FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', count(l_extendedprice),
-        |         min(l_extendedprice), max(l_extendedprice),
-        |         round(avg(l_extendedprice), 4) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_discount', count(l_discount), min(l_discount),
-        |         max(l_discount), round(avg(l_discount), 4) FROM lineitem
-        |) ORDER BY field""".stripMargin,
-
-    "q_enum_violations" ->
-      """SELECT o_orderpriority AS offending_value, count(*) AS n_cells
-        |FROM orders
-        |WHERE o_orderpriority NOT IN ('1-URGENT','2-HIGH','3-MEDIUM')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_regex_check" ->
-      """SELECT
-        |  sum(CASE WHEN regexp_full_match(p_name, '(small|red|blue) \w+')
-        |      THEN 1 ELSE 0 END)::BIGINT AS n_valid,
-        |  sum(CASE WHEN regexp_full_match(p_name, '(small|red|blue) \w+')
-        |      THEN 0 ELSE 1 END)::BIGINT AS n_invalid
-        |FROM part""".stripMargin,
-
-    "q_integer_check" ->
-      """SELECT
-        |  sum(CASE WHEN value = floor(value) THEN 1 ELSE 0 END)::BIGINT AS n_intlike,
-        |  sum(CASE WHEN value = floor(value) THEN 0 ELSE 1 END)::BIGINT AS n_frac
-        |FROM events""".stripMargin,
-
-    "q_multienum_check" ->
-      """WITH d AS (
-        |  SELECT CASE WHEN doc_id % 2 = 0 THEN lang || ';' || source
-        |         ELSE lang END AS dirty
-        |  FROM documents),
-        |v AS (
-        |  SELECT dirty,
-        |    (dirty = 'NA') OR (
-        |      len(list_filter(string_split(dirty, ';'), t -> trim(t) <> '')) > 0
-        |      AND len(list_filter(string_split(dirty, ';'),
-        |            t -> trim(t) <> ''
-        |            AND trim(t) NOT IN ('en','es','de','fr','zh',
-        |                 'src0','src1','src2','src3','src4'))) = 0
-        |    ) AS ok
-        |  FROM d)
-        |SELECT sum(CASE WHEN ok THEN 1 ELSE 0 END)::BIGINT AS n_valid,
-        |       sum(CASE WHEN ok THEN 0 ELSE 1 END)::BIGINT AS n_invalid
-        |FROM v""".stripMargin,
-
-    "q_fill_missing" ->
-      """SELECT CASE
-        |    WHEN doc_id % 5 = 0 THEN 'FILLED'
-        |    WHEN doc_id % 5 = 1 THEN 'NA'
-        |    ELSE lang END AS v,
-        |  count(*) AS n
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_window_topk" ->
-      """SELECT o_custkey, rk, o_orderkey, total FROM (
-        |  SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS total,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |           ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders WHERE o_custkey < 50)
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-
-    "q_null_normalize" ->
-      """SELECT CASE
-        |    WHEN doc_id % 7 = 0 THEN 'NA'
-        |    WHEN doc_id % 7 = 1 THEN 'NA'
-        |    WHEN doc_id % 7 = 2 THEN 'NA'
-        |    ELSE lang END AS norm,
-        |  count(*) AS n
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_unique_orderkey" ->
-      """SELECT count(*) AS n_rows,
-        |       count(DISTINCT o_orderkey) AS n_distinct,
-        |       (SELECT count(*) FROM (
-        |          SELECT o_orderkey FROM orders GROUP BY 1 HAVING count(*) > 1
-        |       )) AS n_dup_keys
-        |FROM orders""".stripMargin,
-
-    "q_dup_custkeys" ->
-      """SELECT o_custkey, count(*) AS n_occurrences
-        |FROM orders GROUP BY 1 HAVING count(*) > 1 ORDER BY o_custkey""".stripMargin,
-
-    "q_referential_orphans" ->
-      """SELECT c_nationkey, count(*) AS n_orphans
-        |FROM customer
-        |WHERE c_nationkey NOT IN (
-        |  SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_orphan_lineitems" ->
-      """SELECT count(*) AS n_orphans FROM lineitem
-        |WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)""".stripMargin,
-
-    "q_histogram_quantity" ->
-      """SELECT bin_idx, count(*) AS n FROM (
-        |  SELECT CASE
-        |    WHEN l_quantity < 0 THEN 0
-        |    WHEN l_quantity >= 50 THEN 26
-        |    ELSE 1 + least(24, CAST(floor((l_quantity - 0) / 50.0 * 25) AS INT))
-        |  END AS bin_idx FROM lineitem)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_quantiles_quantity" ->
-      """SELECT quantile_cont(l_quantity, 0.25) AS p25,
-        |       quantile_cont(l_quantity, 0.5)  AS p50,
-        |       quantile_cont(l_quantity, 0.75) AS p75
-        |FROM lineitem""".stripMargin,
-
-    "q_source_freq" ->
-      "SELECT source, count(*) AS n FROM documents GROUP BY 1 ORDER BY 1",
-
-    "q_chi_uniform" ->
-      """SELECT round(sum((obs - exp) * (obs - exp) / exp), 6) AS chi_square
-        |FROM (
-        |  SELECT count(*)::DOUBLE AS obs,
-        |         (SELECT count(*) FROM documents) / 20.0 AS exp
-        |  FROM documents GROUP BY source)""".stripMargin,
-
-    "q_psi_source" ->
-      """WITH o AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |           FROM documents GROUP BY 1),
-        |b AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |      FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |ot AS (SELECT sum(n) AS t FROM o), bt AS (SELECT sum(n) AS t FROM b)
-        |SELECT round(sum(
-        |    (greatest(coalesce(o.n, 0) / ot.t, 0.0001)
-        |     - greatest(coalesce(b.n, 0) / bt.t, 0.0001))
-        |  * ln(greatest(coalesce(o.n, 0) / ot.t, 0.0001)
-        |     / greatest(coalesce(b.n, 0) / bt.t, 0.0001))), 6) AS psi
-        |FROM o FULL JOIN b ON o.k = b.k, ot, bt""".stripMargin,
-
-    "q_psi_breakdown" ->
-      """WITH o AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |           FROM documents GROUP BY 1),
-        |b AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |      FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |ot AS (SELECT sum(n) AS t FROM o), bt AS (SELECT sum(n) AS t FROM b),
-        |terms AS (
-        |  SELECT coalesce(o.k, b.k) AS category,
-        |    greatest(coalesce(o.n, 0) / ot.t, 0.0001) AS po,
-        |    greatest(coalesce(b.n, 0) / bt.t, 0.0001) AS pb,
-        |    (greatest(coalesce(o.n, 0) / ot.t, 0.0001)
-        |     - greatest(coalesce(b.n, 0) / bt.t, 0.0001))
-        |    * ln(greatest(coalesce(o.n, 0) / ot.t, 0.0001)
-        |       / greatest(coalesce(b.n, 0) / bt.t, 0.0001)) AS term
-        |  FROM o FULL JOIN b ON o.k = b.k, ot, bt)
-        |SELECT category, round(po, 6) AS p_obs, round(pb, 6) AS p_base,
-        |  round(term, 6) AS psi_term,
-        |  CASE WHEN sum(term) OVER () > 0
-        |       THEN round(term / sum(term) OVER (), 6) END AS share
-        |FROM terms
-        |ORDER BY round(term, 6) DESC, category""".stripMargin,
-
-    "q_kl_source" ->
-      """WITH o AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |           FROM documents GROUP BY 1),
-        |b AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |      FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |ot AS (SELECT sum(n) AS t FROM o), bt AS (SELECT sum(n) AS t FROM b)
-        |SELECT round(sum(
-        |    greatest(coalesce(o.n, 0) / ot.t, 0.0001)
-        |  * ln(greatest(coalesce(o.n, 0) / ot.t, 0.0001)
-        |     / greatest(coalesce(b.n, 0) / bt.t, 0.0001))), 6) AS kl
-        |FROM o FULL JOIN b ON o.k = b.k, ot, bt""".stripMargin,
-
-    "q_tv_source" ->
-      """WITH o AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |           FROM documents GROUP BY 1),
-        |b AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |      FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |ot AS (SELECT sum(n) AS t FROM o), bt AS (SELECT sum(n) AS t FROM b)
-        |SELECT round(sum(
-        |    abs(coalesce(o.n, 0) / ot.t - coalesce(b.n, 0) / bt.t)) / 2, 6)
-        |  AS tv
-        |FROM o FULL JOIN b ON o.k = b.k, ot, bt""".stripMargin,
-
-    "q_mutual_info" ->
-      """WITH j AS (
-        |  SELECT coalesce(lang, '<null>') AS x,
-        |         coalesce(source, '<null>') AS y, count(*) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |n AS (SELECT sum(c)::DOUBLE AS n FROM j),
-        |px AS (SELECT x, sum(c) AS cx FROM j GROUP BY 1),
-        |py AS (SELECT y, sum(c) AS cy FROM j GROUP BY 1),
-        |hx AS (SELECT sum(-(cx / n.n) * ln(cx / n.n)) AS h FROM px, n),
-        |hy AS (SELECT sum(-(cy / n.n) * ln(cy / n.n)) AS h FROM py, n),
-        |mi AS (SELECT sum((c / n.n)
-        |         * ln((c / n.n) / ((cx / n.n) * (cy / n.n)))) AS mi
-        |       FROM j JOIN px USING (x) JOIN py USING (y), n)
-        |SELECT CAST((SELECT sum(c) FROM j) AS BIGINT) AS n,
-        |  round(mi.mi, 6) AS mi, round(hx.h, 6) AS h_x,
-        |  round(hy.h, 6) AS h_y,
-        |  CASE WHEN hx.h > 0 THEN round(mi.mi / hx.h, 6) END
-        |    AS u_x_given_y,
-        |  CASE WHEN hy.h > 0 THEN round(mi.mi / hy.h, 6) END
-        |    AS u_y_given_x
-        |FROM mi, hx, hy""".stripMargin,
-
-    "q_stratified_folds" ->
-      """WITH kdf AS (
-        |  SELECT doc_id, source,
-        |    (doc_id * 2654435761 + 7) % 4294967296 AS key
-        |  FROM documents),
-        |f AS (SELECT source,
-        |        (row_number() OVER (PARTITION BY source
-        |                            ORDER BY key, doc_id) - 1) % 5
-        |          AS fold
-        |      FROM kdf)
-        |SELECT source, CAST(fold AS INT) AS fold, count(*) AS n_rows
-        |FROM f GROUP BY 1, 2 ORDER BY source, fold""".stripMargin,
-
-    "q_decayed_volume" ->
-      """WITH base AS (
-        |  SELECT coalesce(event_type, '<null>') AS g,
-        |         CAST(date_trunc('day', ts) AS DATE) AS d
-        |  FROM events WHERE ts IS NOT NULL),
-        |r AS (SELECT max(d) AS ref FROM base)
-        |SELECT g AS event_type, count(*) AS n_events,
-        |  round(sum(pow(0.5::DOUBLE, (r.ref - d)::DOUBLE / 7.0::DOUBLE)),
-        |        6) AS decayed_mass,
-        |  round(sum(pow(0.5::DOUBLE, (r.ref - d)::DOUBLE / 7.0::DOUBLE))
-        |        / count(*), 6) AS freshness
-        |FROM base, r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_norm_dups" ->
-      """WITH aug AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, upper(text) || '  ' FROM documents
-        |  WHERE doc_id % 13 = 0),
-        |raw AS (SELECT coalesce(sum(n), 0) AS d FROM (
-        |  SELECT count(*) AS n FROM aug WHERE text IS NOT NULL
-        |  GROUP BY text HAVING count(*) > 1)),
-        |nrm AS (SELECT coalesce(sum(n), 0) AS d FROM (
-        |  SELECT count(*) AS n FROM aug WHERE text IS NOT NULL
-        |  GROUP BY regexp_replace(lower(trim(text)), '\s+', ' ', 'g')
-        |  HAVING count(*) > 1)),
-        |nn AS (SELECT count(*) AS n FROM aug WHERE text IS NOT NULL)
-        |SELECT nn.n AS n_rows, CAST(raw.d AS BIGINT) AS raw_dup_rows,
-        |  CAST(nrm.d AS BIGINT) AS norm_dup_rows,
-        |  CAST(nrm.d - raw.d AS BIGINT) AS gain_rows
-        |FROM nn, raw, nrm""".stripMargin,
-
-    "q_capture_recapture" ->
-      """WITH a AS (SELECT DISTINCT doc_id FROM documents
-        |           WHERE doc_id % 3 <> 0),
-        |b AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 5 <> 0),
-        |st AS (SELECT (SELECT count(*) FROM a) AS na,
-        |              (SELECT count(*) FROM b) AS nb,
-        |              (SELECT count(*) FROM a JOIN b USING (doc_id)) AS m)
-        |SELECT na AS n_a, nb AS n_b, m AS n_overlap,
-        |  round((na + 1.0::DOUBLE) * (nb + 1.0::DOUBLE)
-        |        / (m + 1.0::DOUBLE) - 1.0::DOUBLE, 6) AS est_population,
-        |  round(CASE WHEN ((na + 1.0::DOUBLE) * (nb + 1.0::DOUBLE)
-        |                   / (m + 1.0::DOUBLE) - 1.0::DOUBLE) > 0
-        |             THEN na / ((na + 1.0::DOUBLE) * (nb + 1.0::DOUBLE)
-        |                        / (m + 1.0::DOUBLE) - 1.0::DOUBLE)
-        |             ELSE 1.0::DOUBLE END, 6) AS coverage_a
-        |FROM st""".stripMargin,
-
-    "q_welch_t" ->
-      """WITH st AS (
-        |  SELECT coalesce(source, '<null>') AS g, count(*) AS n,
-        |         sum(n_chars)::DOUBLE AS s,
-        |         sum(n_chars * n_chars)::DOUBLE AS ss
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n, sum(s) AS s,
-        |               sum(ss) AS ss FROM st),
-        |w AS (
-        |  SELECT st.g, st.n AS na, tot.n - st.n AS nb,
-        |         st.s / st.n AS ma,
-        |         (tot.s - st.s) / (tot.n - st.n) AS mb,
-        |         (st.ss - st.s * st.s / st.n) / (st.n - 1) AS va,
-        |         ((tot.ss - st.ss)
-        |          - (tot.s - st.s) * (tot.s - st.s) / (tot.n - st.n))
-        |           / (tot.n - st.n - 1) AS vb
-        |  FROM st, tot)
-        |SELECT g AS source, na AS n_a, nb AS n_b,
-        |  CASE WHEN na < 2 OR nb < 2 THEN NULL
-        |       ELSE round((ma - mb) / sqrt(va / na + vb / nb), 6)
-        |  END AS t_stat,
-        |  CASE WHEN na < 2 OR nb < 2 THEN NULL
-        |       ELSE round((va / na + vb / nb) * (va / na + vb / nb)
-        |              / ((va / na) * (va / na) / (na - 1)
-        |               + (vb / nb) * (vb / nb) / (nb - 1)), 6)
-        |  END AS welch_df
-        |FROM w ORDER BY 1""".stripMargin,
-
-    "q_mannwhitney" ->
-      """WITH v AS (
-        |  SELECT n_chars::DOUBLE AS x,
-        |         sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS na_v,
-        |         count(*) AS n_v
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |r AS (
-        |  SELECT na_v, n_v,
-        |    coalesce(sum(n_v) OVER (ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      + (n_v + 1) / 2.0 AS ar
-        |  FROM v),
-        |agg AS (
-        |  SELECT sum(na_v * ar) AS ra,
-        |         CAST(sum(na_v) AS BIGINT) AS na,
-        |         CAST(sum(n_v) AS BIGINT) AS n,
-        |         sum(n_v::DOUBLE * n_v * n_v - n_v) AS tie
-        |  FROM r)
-        |SELECT na AS n_a, n - na AS n_b,
-        |  round(ra - na * (na + 1) / 2.0, 6) AS u_stat,
-        |  round((ra - na * (na + 1) / 2.0 - na::DOUBLE * (n - na) / 2.0)
-        |    / sqrt(na::DOUBLE * (n - na) / 12.0
-        |         * (n + 1.0 - tie / (n::DOUBLE * (n - 1)))), 6) AS z_stat
-        |FROM agg""".stripMargin,
-
-    "q_levene" ->
-      """WITH ctr AS (
-        |  SELECT coalesce(source, '<null>') AS g,
-        |         median(n_chars::DOUBLE) AS c
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |z AS (
-        |  SELECT ctr.g, abs(d.n_chars::DOUBLE - ctr.c) AS z
-        |  FROM documents d
-        |  JOIN ctr ON coalesce(d.source, '<null>') = ctr.g
-        |  WHERE d.n_chars IS NOT NULL),
-        |st AS (SELECT g, count(*) AS n, sum(z) AS s, sum(z * z) AS ss
-        |       FROM z GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n,
-        |               CAST(count(*) AS BIGINT) AS k, sum(s) AS s FROM st),
-        |parts AS (
-        |  SELECT sum(st.n * (st.s / st.n - tot.s / tot.n)
-        |              * (st.s / st.n - tot.s / tot.n)) AS ssb,
-        |         sum(st.ss - st.s * st.s / st.n) AS ssw
-        |  FROM st, tot)
-        |SELECT tot.n AS n, CAST(tot.k AS INT) AS k,
-        |  CASE WHEN parts.ssw <= 0 THEN NULL
-        |       ELSE round((parts.ssb / (tot.k - 1))
-        |                  / (parts.ssw / (tot.n - tot.k)), 6) END AS f_stat,
-        |  CAST(tot.k - 1 AS INT) AS df1,
-        |  CAST(tot.n - tot.k AS BIGINT) AS df2
-        |FROM parts, tot""".stripMargin,
-
-    "q_ewma_chart" ->
-      """WITH d AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        |         count(*) AS x
-        |  FROM events GROUP BY 1),
-        |idx AS (SELECT day, x, row_number() OVER (ORDER BY day) AS t FROM d),
-        |base AS (
-        |  SELECT sum(x)::DOUBLE / count(*) AS z0,
-        |         sqrt((sum(x::DOUBLE * x)
-        |               - sum(x)::DOUBLE * sum(x) / count(*))
-        |              / (count(*) - 1)) AS sg
-        |  FROM d),
-        |e AS (
-        |  SELECT a.day, a.x, a.t, base.z0, base.sg,
-        |    base.z0 * pow(1.0::DOUBLE - 0.2::DOUBLE, a.t)
-        |      + sum(b.x * 0.2::DOUBLE
-        |            * pow(1.0::DOUBLE - 0.2::DOUBLE, a.t - b.t)) AS ew,
-        |    3.0 * base.sg * sqrt(0.2::DOUBLE / (2.0::DOUBLE - 0.2::DOUBLE)
-        |      * (1.0 - pow(1.0::DOUBLE - 0.2::DOUBLE, 2.0 * a.t))) AS band
-        |  FROM idx a JOIN idx b ON b.t <= a.t, base
-        |  GROUP BY a.day, a.x, a.t, base.z0, base.sg)
-        |SELECT day, x, round(ew, 6) AS ewma,
-        |  round(z0 - band, 6) AS lcl, round(z0 + band, 6) AS ucl,
-        |  (ew < z0 - band OR ew > z0 + band) AS out_of_control
-        |FROM e ORDER BY day""".stripMargin,
-
-    "q_missing_pattern" ->
-      """WITH planted AS (
-        |  SELECT CASE WHEN lang = 'zh' THEN NULL ELSE lang END AS lang,
-        |         CASE WHEN source = 'src3' THEN NULL ELSE source END AS source,
-        |         CASE WHEN doc_id % 11 = 0 THEN NULL ELSE n_chars END AS n_chars
-        |  FROM documents),
-        |pat AS (
-        |  SELECT (CASE WHEN lang IS NULL THEN '1' ELSE '0' END
-        |       || CASE WHEN source IS NULL THEN '1' ELSE '0' END
-        |       || CASE WHEN n_chars IS NULL THEN '1' ELSE '0' END) AS pattern
-        |  FROM planted),
-        |cnt AS (SELECT pattern, count(*) AS n FROM pat GROUP BY 1),
-        |tot AS (SELECT sum(n)::DOUBLE AS t FROM cnt)
-        |SELECT pattern, n, round(n::DOUBLE / tot.t, 6) AS share
-        |FROM cnt, tot ORDER BY n DESC, pattern""".stripMargin,
-
-    "q_entropy_profile" ->
-      """WITH c1 AS (SELECT coalesce(lang, '<null>') AS k, count(*) AS n
-        |            FROM documents GROUP BY 1),
-        |c2 AS (SELECT coalesce(source, '<null>') AS k, count(*) AS n
-        |       FROM documents GROUP BY 1),
-        |e1 AS (
-        |  SELECT 'lang' AS "column", CAST(sum(n) AS BIGINT) AS n,
-        |         count(*) AS n_distinct,
-        |         sum(n::DOUBLE * ln(n::DOUBLE)) AS nln,
-        |         sum(n::DOUBLE * n::DOUBLE) AS n2
-        |  FROM c1),
-        |e2 AS (
-        |  SELECT 'source' AS "column", CAST(sum(n) AS BIGINT) AS n,
-        |         count(*) AS n_distinct,
-        |         sum(n::DOUBLE * ln(n::DOUBLE)) AS nln,
-        |         sum(n::DOUBLE * n::DOUBLE) AS n2
-        |  FROM c2),
-        |u AS (SELECT * FROM e1 UNION ALL SELECT * FROM e2)
-        |SELECT "column", n, n_distinct,
-        |  round(ln(n::DOUBLE) - nln / n::DOUBLE, 6) AS entropy,
-        |  CASE WHEN n_distinct > 1
-        |       THEN round((ln(n::DOUBLE) - nln / n::DOUBLE)
-        |                  / ln(n_distinct::DOUBLE), 6) END AS evenness,
-        |  round(1.0 - n2 / (n::DOUBLE * n::DOUBLE), 6) AS simpson
-        |FROM u ORDER BY "column"""".stripMargin,
-
-    "q_hbos" ->
-      """WITH st AS (
-        |  SELECT min(l_quantity * 1.0) AS q0, max(l_quantity * 1.0) AS q1,
-        |         min(l_extendedprice * 1.0) AS e0,
-        |         max(l_extendedprice * 1.0) AS e1,
-        |         min(l_discount * 1.0) AS d0, max(l_discount * 1.0) AS d1,
-        |         count(l_quantity) AS nq, count(l_extendedprice) AS ne,
-        |         count(l_discount) AS nd
-        |  FROM lineitem),
-        |b AS (
-        |  SELECT l_orderkey, l_linenumber, nq, ne, nd,
-        |    CASE WHEN l_quantity IS NULL THEN NULL WHEN q1 <= q0 THEN 0
-        |         ELSE least(floor((l_quantity * 1.0 - q0)
-        |                          / ((q1 - q0) / 10)), 9) END AS bq,
-        |    CASE WHEN l_extendedprice IS NULL THEN NULL WHEN e1 <= e0 THEN 0
-        |         ELSE least(floor((l_extendedprice * 1.0 - e0)
-        |                          / ((e1 - e0) / 10)), 9) END AS be,
-        |    CASE WHEN l_discount IS NULL THEN NULL WHEN d1 <= d0 THEN 0
-        |         ELSE least(floor((l_discount * 1.0 - d0)
-        |                          / ((d1 - d0) / 10)), 9) END AS bd
-        |  FROM lineitem, st),
-        |cq AS (SELECT bq AS bin, count(*) AS c FROM b
-        |       WHERE bq IS NOT NULL GROUP BY 1),
-        |ce AS (SELECT be AS bin, count(*) AS c FROM b
-        |       WHERE be IS NOT NULL GROUP BY 1),
-        |cd AS (SELECT bd AS bin, count(*) AS c FROM b
-        |       WHERE bd IS NOT NULL GROUP BY 1)
-        |SELECT l_orderkey, l_linenumber,
-        |  round(coalesce(ln(nq * 1.0 / cq.c), 0)
-        |        + coalesce(ln(ne * 1.0 / ce.c), 0)
-        |        + coalesce(ln(nd * 1.0 / cd.c), 0), 6) AS hbos
-        |FROM b LEFT JOIN cq ON cq.bin = b.bq
-        |       LEFT JOIN ce ON ce.bin = b.be
-        |       LEFT JOIN cd ON cd.bin = b.bd
-        |ORDER BY hbos DESC, l_orderkey, l_linenumber
-        |LIMIT 20""".stripMargin,
-
-    "q_rake" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '') AS ws
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(ws) AS word,
-        |         unnest(range(len(ws))) AS pos
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id, pos, word,
-        |    CASE WHEN word IN ('the','and','of','to','in','is','that',
-        |                       'it','was','for')
-        |         THEN 1 ELSE 0 END AS st
-        |  FROM tok),
-        |runs AS (
-        |  SELECT doc_id, pos, word, st,
-        |    sum(st) OVER (PARTITION BY doc_id ORDER BY pos) AS run
-        |  FROM m),
-        |phr AS (
-        |  SELECT doc_id, run,
-        |    string_agg(word, ' ' ORDER BY pos) AS phrase,
-        |    count(*) AS len
-        |  FROM runs WHERE st = 0 GROUP BY doc_id, run),
-        |cand AS (SELECT phrase, len FROM phr WHERE len <= 4),
-        |wrd AS (SELECT unnest(string_split(phrase, ' ')) AS w, len
-        |        FROM cand),
-        |wstat AS (SELECT w, count(*) AS freq, sum(len) AS deg
-        |          FROM wrd GROUP BY 1),
-        |dp AS (SELECT DISTINCT phrase FROM cand),
-        |pw AS (SELECT dp.phrase, unnest(string_split(dp.phrase, ' ')) AS w
-        |       FROM dp)
-        |SELECT pw.phrase,
-        |  round(sum(wstat.deg * 1.0 / wstat.freq), 6) AS rake_score,
-        |  count(*) AS n_words
-        |FROM pw JOIN wstat USING (w)
-        |GROUP BY pw.phrase
-        |ORDER BY rake_score DESC, phrase
-        |LIMIT 20""".stripMargin,
-
-    "q_source_xent" ->
-      """WITH tok AS (
-        |  SELECT coalesce(source, '<null>') AS g,
-        |    unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS w
-        |  FROM documents),
-        |c AS (SELECT g, w, count(*) AS c FROM tok GROUP BY 1, 2),
-        |t AS (SELECT g, sum(c) AS n FROM c GROUP BY 1),
-        |v AS (SELECT count(DISTINCT w) AS vs FROM c),
-        |p AS (
-        |  SELECT d.g AS data_source, m.g AS model_source, d.c,
-        |         mc.c AS cm, m.n AS nm
-        |  FROM c d
-        |  CROSS JOIN t m
-        |  LEFT JOIN c mc ON mc.g = m.g AND mc.w = d.w)
-        |SELECT p.data_source, p.model_source,
-        |  round(-sum(p.c * 1.0 * ln((coalesce(p.cm, 0) * 1.0 + 1.0)
-        |                            / (p.nm * 1.0 + v.vs))) / dt.n, 6)
-        |    AS cross_entropy
-        |FROM p, v, t dt
-        |WHERE dt.g = p.data_source
-        |GROUP BY p.data_source, p.model_source, dt.n, v.vs
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT ((((l_partkey % 4294967296) * 40503) % 4294967296)
-        |           * 65536 + (l_partkey % 4294967296) * 31153)
-        |          % 4294967296 AS h
-        |  FROM lineitem WHERE l_partkey IS NOT NULL),
-        |b AS (SELECT h FROM h ORDER BY h LIMIT 64),
-        |kth AS (SELECT max(h) AS kh FROM b),
-        |ex AS (SELECT count(*) AS exact FROM h)
-        |SELECT 64 AS k, kth.kh AS kth_hash,
-        |  round(63.0 * 4294967296.0 / kth.kh, 6) AS est_distinct,
-        |  ex.exact AS exact_distinct,
-        |  round(abs(63.0 * 4294967296.0 / kth.kh - ex.exact::DOUBLE)
-        |        / ex.exact::DOUBLE, 6) AS rel_error
-        |FROM kth, ex""".stripMargin,
-
-    "q_corr_matrix" -> {
-      val pairs = Seq(
-        ("l_discount", "l_extendedprice"), ("l_discount", "l_quantity"),
-        ("l_discount", "l_tax"), ("l_extendedprice", "l_quantity"),
-        ("l_extendedprice", "l_tax"), ("l_quantity", "l_tax"))
-      pairs.map { case (a, b) =>
-        s"""SELECT '$a' AS col_a, '$b' AS col_b, count(*) AS n,
-           |  round((count(*) * sum($a * $b) - sum($a) * sum($b))
-           |    / (sqrt(count(*) * sum($a * $a) - sum($a) * sum($a))
-           |     * sqrt(count(*) * sum($b * $b) - sum($b) * sum($b))), 6)
-           |    AS pearson_r
-           |FROM lineitem
-           |WHERE $a IS NOT NULL AND $b IS NOT NULL""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_a, col_b")
-    },
-
-    "q_date_parse" ->
-      """WITH raw AS (
-        |  SELECT CASE
-        |    WHEN event_id % 4 = 0 THEN strftime(ts, '%Y-%m-%d %H:%M:%S')
-        |    WHEN event_id % 4 = 1 THEN strftime(ts, '%Y/%m/%d %H:%M:%S')
-        |    WHEN event_id % 4 = 2 THEN strftime(ts, '%m-%d-%Y %H:%M:%S')
-        |    ELSE 'not a timestamp' END AS raw_ts
-        |  FROM events),
-        |p AS (
-        |  SELECT
-        |    coalesce(try_strptime(raw_ts, '%Y-%m-%d %H:%M:%S'),
-        |             try_strptime(raw_ts, '%Y/%m/%d %H:%M:%S'),
-        |             try_strptime(raw_ts, '%m-%d-%Y %H:%M:%S')) AS parsed,
-        |    CASE
-        |      WHEN try_strptime(raw_ts, '%Y-%m-%d %H:%M:%S') IS NOT NULL
-        |        THEN 'yyyy-MM-dd HH:mm:ss'
-        |      WHEN try_strptime(raw_ts, '%Y/%m/%d %H:%M:%S') IS NOT NULL
-        |        THEN 'yyyy/MM/dd HH:mm:ss'
-        |      WHEN try_strptime(raw_ts, '%m-%d-%Y %H:%M:%S') IS NOT NULL
-        |        THEN 'MM-dd-yyyy HH:mm:ss'
-        |      WHEN raw_ts IS NULL THEN '<null>'
-        |      ELSE '<unparsed>' END AS fmt
-        |  FROM raw)
-        |SELECT fmt, count(*) AS n, min(parsed) AS min_parsed,
-        |       max(parsed) AS max_parsed
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_mrr" ->
-      """WITH r AS (
-        |  SELECT source, (doc_id % 17 = 0) AS rel,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents),
-        |g AS (
-        |  SELECT source,
-        |    max(CASE WHEN rel AND rk <= 10 THEN 1.0::DOUBLE / rk END) AS rr
-        |  FROM r GROUP BY 1)
-        |SELECT count(*) AS n_groups,
-        |       round(avg(coalesce(rr, 0.0)), 6) AS mrr FROM g""".stripMargin,
-
-    "q_precision_at_k" ->
-      """WITH r AS (
-        |  SELECT source, (doc_id % 17 = 0) AS rel,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents),
-        |g AS (
-        |  SELECT source,
-        |    CAST(sum(CASE WHEN rel THEN 1 ELSE 0 END) AS BIGINT) AS n_rel,
-        |    CAST(sum(CASE WHEN rel AND rk <= 10 THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS hits
-        |  FROM r GROUP BY 1)
-        |SELECT source, n_rel, hits,
-        |  round(hits::DOUBLE / 10, 6) AS precision_at_k,
-        |  CASE WHEN n_rel > 0
-        |       THEN round(hits::DOUBLE / n_rel::DOUBLE, 6) END AS recall_at_k
-        |FROM g ORDER BY source""".stripMargin,
-
-    "q_confusion_gate" ->
-      """WITH c AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN p AND l THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(sum(CASE WHEN p AND NOT l THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |    CAST(sum(CASE WHEN NOT p AND l THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |    CAST(sum(CASE WHEN NOT p AND NOT l THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS tn,
-        |    CAST(sum(CASE WHEN p IS NULL OR l IS NULL THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_null
-        |  FROM (SELECT n_chars >= 300 AS p,
-        |               n_chars + doc_id % 97 >= 320 AS l
-        |        FROM documents)),
-        |m AS (
-        |  SELECT *,
-        |    CASE WHEN tp + fp > 0 THEN tp::DOUBLE / (tp + fp) END AS pr,
-        |    CASE WHEN tp + fn > 0 THEN tp::DOUBLE / (tp + fn) END AS rc
-        |  FROM c)
-        |SELECT tp, fp, fn, tn, n_null,
-        |  round((tp + tn)::DOUBLE / (tp + fp + fn + tn), 6) AS accuracy,
-        |  round(pr, 6) AS precision, round(rc, 6) AS recall,
-        |  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tp > 0
-        |       THEN round(2.0 * pr * rc / (pr + rc), 6) END AS f1
-        |FROM m""".stripMargin,
-
-    "q_cohens_d" ->
-      """WITH st AS (
-        |  SELECT coalesce(source, '<null>') AS g, count(*) AS n,
-        |         sum(n_chars)::DOUBLE AS s,
-        |         sum(n_chars * n_chars)::DOUBLE AS ss
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n, sum(s) AS s,
-        |               sum(ss) AS ss FROM st),
-        |w AS (
-        |  SELECT st.g, st.n AS na, tot.n - st.n AS nb,
-        |         st.s / st.n AS ma,
-        |         (tot.s - st.s) / (tot.n - st.n) AS mb,
-        |         (st.ss - st.s * st.s / st.n) / (st.n - 1) AS va,
-        |         ((tot.ss - st.ss)
-        |          - (tot.s - st.s) * (tot.s - st.s) / (tot.n - st.n))
-        |           / (tot.n - st.n - 1) AS vb
-        |  FROM st, tot),
-        |sp AS (
-        |  SELECT g, na, nb, ma, mb,
-        |    ((na - 1) * va + (nb - 1) * vb) / (na + nb - 2) AS sp2
-        |  FROM w)
-        |SELECT g AS source, na AS n_a, nb AS n_b,
-        |  CASE WHEN na >= 2 AND nb >= 2 AND sp2 > 0
-        |       THEN round((ma - mb) / sqrt(sp2), 6) END AS cohens_d,
-        |  CASE WHEN na >= 2 AND nb >= 2 AND sp2 > 0
-        |       THEN round((ma - mb) / sqrt(sp2)
-        |              * (1.0 - 3.0::DOUBLE / (4.0::DOUBLE * (na + nb)
-        |                                      - 9.0::DOUBLE)), 6)
-        |  END AS hedges_g
-        |FROM sp ORDER BY 1""".stripMargin,
-
-    "q_assoc_rules" ->
-      """WITH pairs AS (
-        |  SELECT coalesce(lang, '<null>') AS a,
-        |         coalesce(source, '<null>') AS b,
-        |         count(*) AS n_ab
-        |  FROM documents GROUP BY 1, 2),
-        |na AS (SELECT a, CAST(sum(n_ab) AS BIGINT) AS n_a FROM pairs GROUP BY 1),
-        |nb AS (SELECT b, CAST(sum(n_ab) AS BIGINT) AS n_b FROM pairs GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n_ab) AS BIGINT) AS n FROM pairs)
-        |SELECT pairs.a, pairs.b, pairs.n_ab,
-        |  round(pairs.n_ab::DOUBLE / tot.n::DOUBLE, 6) AS support,
-        |  round(pairs.n_ab::DOUBLE / na.n_a::DOUBLE, 6) AS confidence,
-        |  round(pairs.n_ab::DOUBLE * tot.n::DOUBLE
-        |        / (na.n_a::DOUBLE * nb.n_b::DOUBLE), 6) AS lift
-        |FROM pairs JOIN na USING (a) JOIN nb USING (b), tot
-        |WHERE round(pairs.n_ab::DOUBLE / tot.n::DOUBLE, 6) >= 0.004
-        |ORDER BY a, b""".stripMargin,
-
-    "q_group_split" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |         THEN 'duplicated page ' || CAST(doc_id % 7 AS VARCHAR)
-        |         ELSE text END AS text
-        |  FROM documents),
-        |lab AS (
-        |  SELECT md5(coalesce(text, '<null>')) AS h,
-        |    CASE WHEN CAST(('0x' || substr(md5(coalesce(text, '<null>')),
-        |                    1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-        |         WHEN CAST(('0x' || substr(md5(coalesce(text, '<null>')),
-        |                    1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM docs WHERE text IS NOT NULL),
-        |psh AS (SELECT split, h, count(*) AS n FROM lab GROUP BY 1, 2),
-        |spn AS (SELECT h, count(*) AS ns FROM psh GROUP BY 1)
-        |SELECT split, CAST(sum(n) AS BIGINT) AS n_docs,
-        |  count(*) AS n_distinct_texts,
-        |  CAST(sum(CASE WHEN ns > 1 THEN n ELSE 0 END) AS BIGINT)
-        |    AS n_leaked_docs,
-        |  CAST(sum(CASE WHEN ns > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_leaked_texts,
-        |  round(sum(CASE WHEN ns > 1 THEN n ELSE 0 END)::DOUBLE
-        |        / sum(n)::DOUBLE, 6) AS leak_rate
-        |FROM psh JOIN spn USING (h)
-        |GROUP BY split ORDER BY split""".stripMargin,
-
-    "q_temporal_split" ->
-      """SELECT split, count(*) AS n, min(ts) AS min_ts, max(ts) AS max_ts
-        |FROM (
-        |  SELECT ts,
-        |    CASE WHEN ts IS NULL THEN NULL
-        |         WHEN ts < TIMESTAMP '2024-01-23 00:00:00' THEN 'train'
-        |         WHEN ts >= TIMESTAMP '2024-01-24 00:00:00' THEN 'test'
-        |         ELSE 'embargo' END AS split
-        |  FROM events)
-        |GROUP BY split ORDER BY split""".stripMargin,
-
-    "q_schema_drift" ->
-      """WITH o AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS id, lang, source,
-        |         CAST(n_chars AS VARCHAR) AS n_chars
-        |  FROM documents),
-        |n AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS id,
-        |    CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang,
-        |    CASE WHEN doc_id % 7 = 0 THEN CAST(n_chars AS VARCHAR) || '.5'
-        |         ELSE CAST(n_chars AS VARCHAR) END AS n_chars,
-        |    'https://' || source || '.example.com' AS url
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |ocols AS (
-        |  SELECT 'id' AS c, id AS v FROM o UNION ALL
-        |  SELECT 'lang', lang FROM o UNION ALL
-        |  SELECT 'source', source FROM o UNION ALL
-        |  SELECT 'n_chars', n_chars FROM o),
-        |ncols AS (
-        |  SELECT 'id' AS c, id AS v FROM n UNION ALL
-        |  SELECT 'lang', lang FROM n UNION ALL
-        |  SELECT 'n_chars', n_chars FROM n UNION ALL
-        |  SELECT 'url', url FROM n),
-        |oprof AS (
-        |  SELECT c, count(*) AS n_rows,
-        |    sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS n_null,
-        |    sum(CASE WHEN regexp_matches(v, '^[+-]?[0-9]+$')
-        |        THEN 1 ELSE 0 END) AS n_int,
-        |    sum(CASE WHEN regexp_matches(v,
-        |        '^[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?$')
-        |        THEN 1 ELSE 0 END) AS n_dbl,
-        |    sum(CASE WHEN regexp_matches(v, '^[0-9]{4}-[0-9]{2}-[0-9]{2}$')
-        |          AND try_cast(v AS DATE) IS NOT NULL
-        |        THEN 1 ELSE 0 END) AS n_date,
-        |    sum(CASE WHEN lower(v) IN ('true', 'false')
-        |        THEN 1 ELSE 0 END) AS n_bool
-        |  FROM ocols GROUP BY 1),
-        |nprof AS (
-        |  SELECT c, count(*) AS n_rows,
-        |    sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS n_null,
-        |    sum(CASE WHEN regexp_matches(v, '^[+-]?[0-9]+$')
-        |        THEN 1 ELSE 0 END) AS n_int,
-        |    sum(CASE WHEN regexp_matches(v,
-        |        '^[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?$')
-        |        THEN 1 ELSE 0 END) AS n_dbl,
-        |    sum(CASE WHEN regexp_matches(v, '^[0-9]{4}-[0-9]{2}-[0-9]{2}$')
-        |          AND try_cast(v AS DATE) IS NOT NULL
-        |        THEN 1 ELSE 0 END) AS n_date,
-        |    sum(CASE WHEN lower(v) IN ('true', 'false')
-        |        THEN 1 ELSE 0 END) AS n_bool
-        |  FROM ncols GROUP BY 1),
-        |os AS (
-        |  SELECT c,
-        |    CASE WHEN n_rows - n_null = 0 THEN 'empty'
-        |         WHEN n_int = n_rows - n_null THEN 'bigint'
-        |         WHEN n_dbl = n_rows - n_null THEN 'double'
-        |         WHEN n_date = n_rows - n_null THEN 'date'
-        |         WHEN n_bool = n_rows - n_null THEN 'boolean'
-        |         ELSE 'string' END AS old_type,
-        |    round(n_null::DOUBLE / greatest(n_rows, 1)::DOUBLE, 6)
-        |      AS old_null_rate
-        |  FROM oprof),
-        |ns AS (
-        |  SELECT c,
-        |    CASE WHEN n_rows - n_null = 0 THEN 'empty'
-        |         WHEN n_int = n_rows - n_null THEN 'bigint'
-        |         WHEN n_dbl = n_rows - n_null THEN 'double'
-        |         WHEN n_date = n_rows - n_null THEN 'date'
-        |         WHEN n_bool = n_rows - n_null THEN 'boolean'
-        |         ELSE 'string' END AS new_type,
-        |    round(n_null::DOUBLE / greatest(n_rows, 1)::DOUBLE, 6)
-        |      AS new_null_rate
-        |  FROM nprof)
-        |SELECT coalesce(os.c, ns.c) AS "column",
-        |  CASE WHEN old_type IS NULL THEN 'added'
-        |       WHEN new_type IS NULL THEN 'removed'
-        |       WHEN old_type <> new_type THEN 'type_changed'
-        |       WHEN abs(new_null_rate - old_null_rate) > 0.05
-        |         THEN 'null_shift'
-        |       ELSE 'unchanged' END AS status,
-        |  old_type, new_type, old_null_rate, new_null_rate
-        |FROM os FULL JOIN ns ON os.c = ns.c
-        |ORDER BY 1""".stripMargin,
-
-    "q_silhouette" ->
-      """WITH cents AS (
-        |  SELECT c, list_transform(range(0, 64),
-        |      i -> CASE WHEN i % 4 = c THEN 1.0 ELSE 0.0 END)::DOUBLE[]
-        |    AS cv
-        |  FROM (SELECT unnest(range(0, 4)) AS c)),
-        |scored AS (
-        |  SELECT e.vec_id, cents.c AS cid,
-        |    list_cosine_similarity(e.embedding::DOUBLE[], cents.cv)
-        |      AS score
-        |  FROM embeddings e CROSS JOIN cents),
-        |rk AS (
-        |  SELECT vec_id, cid, score, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS r
-        |  FROM scored),
-        |pair AS (
-        |  SELECT a.vec_id, CAST(a.cid AS INTEGER) AS cluster_id,
-        |    1 - a.score AS ad, 1 - b.score AS bd
-        |  FROM rk a JOIN rk b ON a.vec_id = b.vec_id
-        |  WHERE a.r = 1 AND b.r = 2),
-        |s AS (
-        |  SELECT cluster_id,
-        |    CASE WHEN greatest(ad, bd) <= 0 THEN 0.0
-        |         ELSE (bd - ad) / greatest(ad, bd) END AS sil
-        |  FROM pair)
-        |SELECT cluster_id, count(*) AS n_vectors,
-        |  round(avg(sil), 6) AS mean_silhouette
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_rrf_fuse" ->
-      """WITH a AS (
-        |  SELECT doc_id, n_chars::DOUBLE AS sc FROM documents
-        |  WHERE n_chars IS NOT NULL),
-        |b AS (
-        |  SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT)
-        |      AS DOUBLE) AS sc
-        |  FROM documents WHERE text IS NOT NULL),
-        |ar AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (ORDER BY sc DESC, doc_id) AS r
-        |  FROM a QUALIFY r <= 50),
-        |br AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (ORDER BY sc DESC, doc_id) AS r
-        |  FROM b QUALIFY r <= 50),
-        |u AS (SELECT * FROM ar UNION ALL SELECT * FROM br)
-        |SELECT doc_id, count(*) AS n_lists,
-        |  round(sum(1.0 / (r + 60)), 6) AS rrf_score
-        |FROM u GROUP BY 1
-        |ORDER BY rrf_score DESC, doc_id""".stripMargin,
-
-    "q_krippendorff" ->
-      """WITH r AS (
-        |  SELECT doc_id // 3 AS it, doc_id % 3 AS ra,
-        |    CASE WHEN doc_id % 5 = 0 AND doc_id % 3 = 2 THEN 'X'
-        |         WHEN (doc_id // 3) % 4 = 0 THEN 'A'
-        |         WHEN (doc_id // 3) % 4 = 1 THEN 'B'
-        |         ELSE 'C' END AS v
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |m AS (SELECT it, count(*) AS m FROM r GROUP BY 1),
-        |rr AS (SELECT r.it, r.ra, r.v, m.m
-        |       FROM r JOIN m USING (it) WHERE m.m >= 2),
-        |coin AS (
-        |  SELECT a.v AS c1, b.v AS c2, sum(1.0 / (a.m - 1)) AS o
-        |  FROM rr a JOIN rr b ON a.it = b.it AND a.ra <> b.ra
-        |  GROUP BY 1, 2),
-        |marg AS (SELECT c1, sum(o) AS n_c FROM coin GROUP BY 1),
-        |tot AS (SELECT sum(n_c) AS n FROM marg),
-        |itc AS (SELECT count(DISTINCT it) AS k FROM r),
-        |itu AS (SELECT count(DISTINCT it) AS k FROM rr),
-        |dd AS (SELECT sum(CASE WHEN c1 <> c2 THEN o ELSE 0 END) AS don
-        |       FROM coin),
-        |de AS (SELECT sum(a.n_c * b.n_c) AS den
-        |       FROM marg a JOIN marg b ON a.c1 <> b.c1)
-        |SELECT itc.k AS n_items, itu.k AS n_items_used,
-        |  CAST(round(tot.n) AS BIGINT) AS n_pairable_ratings,
-        |  round(dd.don / tot.n, 6) AS d_observed,
-        |  round(de.den / (tot.n * (tot.n - 1)), 6) AS d_expected,
-        |  round(1 - (dd.don / tot.n)
-        |          / (de.den / (tot.n * (tot.n - 1))), 6) AS alpha
-        |FROM itc, itu, tot, dd, de""".stripMargin,
-
-    "q_label_consensus" ->
-      """WITH r AS (
-        |  SELECT doc_id // 3 AS item, doc_id % 3 AS rater,
-        |    CASE WHEN doc_id % 5 = 0 AND doc_id % 3 = 2 THEN 'X'
-        |         WHEN (doc_id // 3) % 4 = 0 THEN 'A'
-        |         WHEN (doc_id // 3) % 4 = 1 THEN 'B'
-        |         ELSE 'C' END AS v
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |c AS (SELECT item, v AS label, count(*) AS k FROM r GROUP BY 1, 2),
-        |w AS (
-        |  SELECT item, label, k,
-        |    row_number() OVER (PARTITION BY item
-        |                       ORDER BY k DESC, label ASC) AS rk,
-        |    CAST(sum(k) OVER (PARTITION BY item) AS BIGINT) AS n,
-        |    count(*) OVER (PARTITION BY item) AS d
-        |  FROM c)
-        |SELECT item, label, n AS n_ratings, k AS n_votes,
-        |  round(k::DOUBLE / n::DOUBLE, 6) AS vote_share,
-        |  d = 1 AS unanimous
-        |FROM w WHERE rk = 1 ORDER BY item""".stripMargin,
-
-    "q_rater_agreement" ->
-      """WITH r AS (
-        |  SELECT doc_id // 3 AS item, doc_id % 3 AS rater,
-        |    CASE WHEN doc_id % 5 = 0 AND doc_id % 3 = 2 THEN 'X'
-        |         WHEN (doc_id // 3) % 4 = 0 THEN 'A'
-        |         WHEN (doc_id // 3) % 4 = 1 THEN 'B'
-        |         ELSE 'C' END AS v
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |c AS (SELECT item, v AS label, count(*) AS k FROM r GROUP BY 1, 2),
-        |w AS (
-        |  SELECT item, label,
-        |    row_number() OVER (PARTITION BY item
-        |                       ORDER BY k DESC, label ASC) AS rk
-        |  FROM c),
-        |g AS (SELECT item, label AS gold FROM w WHERE rk = 1)
-        |SELECT rater, count(*) AS n_rated,
-        |  CAST(sum(CASE WHEN v = gold THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_agree,
-        |  round(sum(CASE WHEN v = gold THEN 1 ELSE 0 END)::DOUBLE
-        |        / count(*)::DOUBLE, 6) AS agree_rate
-        |FROM r JOIN g USING (item)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_bootstrap_ci" ->
-      """WITH f AS (
-        |  SELECT b, n_chars::DOUBLE AS x,
-        |    ((doc_id % 2147483648) * 4096 + b + 7 * 81) % 4294967296 AS k0
-        |  FROM documents, (SELECT unnest(range(0, 32)) AS b)
-        |  WHERE n_chars IS NOT NULL),
-        |h1 AS (SELECT b, x,
-        |  (xor(k0, k0 >> 16) * 569557677) % 4294967296 AS ha FROM f),
-        |h2 AS (SELECT b, x,
-        |  (xor(ha, ha >> 15) * 1935933847) % 4294967296 AS hb FROM h1),
-        |hh AS (SELECT b, x, xor(hb, hb >> 15) AS u FROM h2),
-        |w AS (SELECT b, x,
-        |  CASE WHEN u < 1580030168 THEN 0 WHEN u < 3160060337 THEN 1
-        |       WHEN u < 3950075421 THEN 2 WHEN u < 4213413783 THEN 3
-        |       WHEN u < 4279248373 THEN 4 WHEN u < 4292415291 THEN 5
-        |       WHEN u < 4294609777 THEN 6 WHEN u < 4294923276 THEN 7
-        |       WHEN u < 4294962463 THEN 8 ELSE 9 END AS w
-        |  FROM hh)
-        |SELECT CAST(b AS INTEGER) AS b, CAST(sum(w) AS BIGINT) AS n_eff,
-        |  round(sum(w * x) / sum(w), 6) AS boot_mean
-        |FROM w GROUP BY b ORDER BY b""".stripMargin,
-
-    "q_host_shrunk" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN lower(source) || '.example.com'
-        |         WHEN doc_id % 3 = 1
-        |           THEN 'www.' || lower(source) || '.example.com'
-        |         ELSE lower(source) || '.net' END AS host,
-        |    n_chars BETWEEN 200 AND 3000 AS keep
-        |  FROM documents),
-        |h AS (
-        |  SELECT host, count(*) AS n_docs,
-        |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
-        |  FROM u GROUP BY 1),
-        |g AS (SELECT CAST(sum(n_docs) AS DOUBLE) AS nn,
-        |             CAST(sum(n_keep) AS DOUBLE) AS kk FROM h)
-        |SELECT host, n_docs, n_keep,
-        |  round(CAST(n_keep AS DOUBLE) / n_docs, 6) AS keep_rate,
-        |  round((CAST(n_keep AS DOUBLE) + 20.0 * (g.kk / g.nn))
-        |        / (CAST(n_docs AS DOUBLE) + 20.0), 6) AS shrunk_rate
-        |FROM h, g ORDER BY host""".stripMargin,
-
-    "q_prefix_boilerplate" ->
-      """WITH docs AS (
-        |  SELECT source,
-        |    CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
-        |              AND doc_id % 3 <> 2
-        |         THEN 'We use cookies to improve your experience. ' || text
-        |         ELSE text END AS text
-        |  FROM documents),
-        |c AS (
-        |  SELECT coalesce(source, '<null>') AS source,
-        |         coalesce(substr(text, 1, 32), '<null>') AS prefix,
-        |         count(*) AS n_docs
-        |  FROM docs GROUP BY 1, 2),
-        |t AS (SELECT source, CAST(sum(n_docs) AS BIGINT) AS tt
-        |      FROM c GROUP BY 1),
-        |r AS (
-        |  SELECT source, prefix, n_docs,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_docs DESC, prefix ASC) AS rk
-        |  FROM c)
-        |SELECT r.source, prefix, n_docs,
-        |  round(n_docs::DOUBLE / tt::DOUBLE, 6) AS share,
-        |  round(n_docs::DOUBLE / tt::DOUBLE, 6) >= 0.5 AS boilerplate
-        |FROM r JOIN t ON r.source = t.source
-        |WHERE rk = 1 ORDER BY r.source""".stripMargin,
-
-    "q_ks_by_flag" ->
-      """WITH binned AS (
-        |  SELECT l_returnflag AS g,
-        |         CASE WHEN l_quantity < 0 THEN 0
-        |              WHEN l_quantity >= 55.0 THEN 65
-        |              ELSE 1 + least(63, CAST(floor((l_quantity / 55.0) * 64)
-        |                                      AS INT)) END AS b
-        |  FROM lineitem),
-        |bins AS (SELECT unnest(range(0, 66)) AS b),
-        |grps AS (SELECT DISTINCT g FROM binned),
-        |cnt AS (SELECT g, b, count(*) AS n FROM binned GROUP BY 1, 2),
-        |filled AS (
-        |  SELECT grps.g, bins.b, coalesce(cnt.n, 0) AS n
-        |  FROM grps CROSS JOIN bins
-        |  LEFT JOIN cnt ON cnt.g = grps.g AND cnt.b = bins.b),
-        |base AS (SELECT bins.b, coalesce(t.n, 0) AS n FROM bins
-        |         LEFT JOIN (SELECT b, count(*) AS n FROM binned GROUP BY 1) t
-        |           ON bins.b = t.b),
-        |ec AS (
-        |  SELECT f.g, f.b,
-        |    sum(f.n) OVER (PARTITION BY f.g ORDER BY f.b)
-        |      / (sum(f.n) OVER (PARTITION BY f.g))::DOUBLE AS fg,
-        |    sum(bf.n) OVER (PARTITION BY f.g ORDER BY f.b)
-        |      / (SELECT sum(n) FROM base)::DOUBLE AS fb
-        |  FROM filled f JOIN base bf USING (b)),
-        |stats AS (SELECT g, max(abs(fg - fb)) AS stat FROM ec GROUP BY g),
-        |ns AS (SELECT g, count(*)::DOUBLE AS n FROM binned GROUP BY 1),
-        |tot AS (SELECT count(*)::DOUBLE AS n FROM binned)
-        |SELECT s.g AS l_returnflag, CAST(ns.n AS BIGINT) AS n,
-        |       round(s.stat, 6) AS ks_stat,
-        |       round(sqrt(-0.5 * ln(0.005))
-        |             * sqrt((ns.n + tot.n) / (ns.n * tot.n)), 6) AS ks_critical,
-        |       s.stat > sqrt(-0.5 * ln(0.005))
-        |                * sqrt((ns.n + tot.n) / (ns.n * tot.n)) AS ks_drifted
-        |FROM stats s JOIN ns USING (g), tot
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_wasserstein" ->
-      """WITH binned AS (
-        |  SELECT l_returnflag AS g,
-        |         CASE WHEN l_quantity < 0 THEN 0
-        |              WHEN l_quantity >= 55.0 THEN 63
-        |              ELSE least(63, CAST(floor((l_quantity / 55.0) * 64)
-        |                                  AS INT)) END AS b
-        |  FROM lineitem),
-        |bins AS (SELECT unnest(range(0, 64)) AS b),
-        |grps AS (SELECT DISTINCT g FROM binned),
-        |cnt AS (SELECT g, b, count(*) AS n FROM binned GROUP BY 1, 2),
-        |filled AS (
-        |  SELECT grps.g, bins.b, coalesce(cnt.n, 0) AS n
-        |  FROM grps CROSS JOIN bins
-        |  LEFT JOIN cnt ON cnt.g = grps.g AND cnt.b = bins.b),
-        |base AS (SELECT bins.b, coalesce(t.n, 0) AS n FROM bins
-        |         LEFT JOIN (SELECT b, count(*) AS n FROM binned GROUP BY 1) t
-        |           ON bins.b = t.b),
-        |ec AS (
-        |  SELECT f.g, f.b,
-        |    sum(f.n) OVER (PARTITION BY f.g ORDER BY f.b)
-        |      / (sum(f.n) OVER (PARTITION BY f.g))::DOUBLE AS cg,
-        |    sum(bf.n) OVER (PARTITION BY f.g ORDER BY f.b)
-        |      / (SELECT sum(n) FROM base)::DOUBLE AS cb
-        |  FROM filled f JOIN base bf USING (b)),
-        |stats AS (SELECT g, sum(abs(cg - cb)) AS s FROM ec
-        |          WHERE b < 63 GROUP BY g),
-        |ns AS (SELECT g, count(*) AS n FROM binned GROUP BY 1)
-        |SELECT s.g AS l_returnflag, CAST(ns.n AS BIGINT) AS n,
-        |       round(s.s * (55.0 / 64), 6) AS w1
-        |FROM stats s JOIN ns USING (g)
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_holt_forecast" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, count(*) AS y
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |idx AS (SELECT day, y, row_number() OVER (ORDER BY day) AS t
-        |        FROM daily),
-        |nmax AS (SELECT max(t) AS tmax FROM idx),
-        |h AS (
-        |  SELECT i.t, i.day, i.y, i.y::DOUBLE AS level,
-        |         coalesce((SELECT y::DOUBLE FROM idx WHERE t = 2) - i.y,
-        |                  0.0::DOUBLE) AS trend,
-        |         i.y::DOUBLE AS fitted
-        |  FROM idx i WHERE i.t = 1
-        |  UNION ALL
-        |  SELECT i.t, i.day, i.y,
-        |    0.5::DOUBLE * i.y + 0.5::DOUBLE * (h.level + h.trend) AS level,
-        |    0.25::DOUBLE * ((0.5::DOUBLE * i.y
-        |                     + 0.5::DOUBLE * (h.level + h.trend)) - h.level)
-        |      + 0.75::DOUBLE * h.trend AS trend,
-        |    h.level + h.trend AS fitted
-        |  FROM idx i JOIN h ON i.t = h.t + 1)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, y,
-        |       round(level, 6) AS level, round(trend, 6) AS trend,
-        |       round(fitted, 6) AS fitted
-        |FROM h
-        |UNION ALL
-        |SELECT NULL, NULL, NULL, NULL, round(level + trend, 6)
-        |FROM h, nmax WHERE t = tmax
-        |ORDER BY day NULLS LAST""".stripMargin,
-
-    "q_ols_residuals" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(trim(text), '\s+'),
-        |        x -> x <> '')) AS n_words,
-        |    n_chars
-        |  FROM documents),
-        |st AS (
-        |  SELECT count(*) AS n, sum(n_words * 1.0) AS sx,
-        |         sum(n_chars * 1.0) AS sy,
-        |         sum(n_words * 1.0 * n_chars) AS sxy,
-        |         sum(n_words * 1.0 * n_words) AS sxx
-        |  FROM d WHERE n_words IS NOT NULL AND n_chars IS NOT NULL),
-        |co AS (
-        |  SELECT n, sx, sy,
-        |    CASE WHEN n * sxx - sx * sx <= 0 THEN 0.0
-        |         ELSE (n * sxy - sx * sy) / (n * sxx - sx * sx) END AS b
-        |  FROM st),
-        |c2 AS (SELECT n, b, (sy - b * sx) / n AS a FROM co)
-        |SELECT doc_id, n_words, n_chars,
-        |  round(n_chars * 1.0 - (a + b * n_words), 6) AS residual,
-        |  round(abs(n_chars * 1.0 - (a + b * n_words)), 6) AS abs_residual
-        |FROM d, c2
-        |ORDER BY abs_residual DESC, doc_id
-        |LIMIT 20""".stripMargin,
-
-    "q_jsd_source" ->
-      """WITH o AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |           FROM documents GROUP BY 1),
-        |b AS (SELECT coalesce(source, '<null>') AS k, count(*)::DOUBLE AS n
-        |      FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |ot AS (SELECT sum(n) AS t FROM o), bt AS (SELECT sum(n) AS t FROM b),
-        |p AS (SELECT coalesce(o.n, 0) / ot.t AS po, coalesce(b.n, 0) / bt.t AS pb
-        |      FROM o FULL JOIN b ON o.k = b.k, ot, bt)
-        |SELECT round(sum(
-        |    (CASE WHEN po > 0 THEN po * ln(po / ((po + pb) / 2)) ELSE 0 END
-        |   + CASE WHEN pb > 0 THEN pb * ln(pb / ((po + pb) / 2)) ELSE 0 END)
-        |    / 2), 6) AS jsd
-        |FROM p""".stripMargin,
-
-    "q_heavy_hitters" ->
-      """SELECT event_type AS item, count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY n DESC, item LIMIT 3""".stripMargin,
-
-    "q_hourly_events" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        |       event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_asof_clicks" ->
-      """WITH l AS (SELECT event_id, user_id, ts, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |     r0 AS (SELECT user_id, ts, value,
-        |              row_number() OVER (PARTITION BY user_id, ts
-        |                                 ORDER BY value DESC) AS rn
-        |            FROM events WHERE event_type = 'click' AND ts IS NOT NULL),
-        |     r AS (SELECT user_id, ts, value FROM r0 WHERE rn = 1)
-        |SELECT l.event_id, l.user_id,
-        |       strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS ts, l.value,
-        |       strftime(r.ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
-        |       r.value AS click_value
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
-
-    "q_asof_next" ->
-      """WITH l AS (SELECT event_id, user_id, ts, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |     r0 AS (SELECT user_id, ts, value,
-        |              row_number() OVER (PARTITION BY user_id, ts
-        |                                 ORDER BY value DESC) AS rn
-        |            FROM events WHERE event_type = 'click' AND ts IS NOT NULL),
-        |     r AS (SELECT user_id, ts, value FROM r0 WHERE rn = 1)
-        |SELECT l.event_id, l.user_id,
-        |       strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS ts, l.value,
-        |       strftime(r.ts, '%Y-%m-%d %H:%M:%S') AS next_ts,
-        |       r.value AS next_value
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-        |ORDER BY event_id""".stripMargin,
-
-    "q_range_join" ->
-      """WITH iv AS (SELECT event_id AS anchor_id, ts AS w_start,
-        |                   ts + INTERVAL 2 HOUR AS w_end
-        |            FROM events WHERE event_id % 97 = 0)
-        |SELECT iv.anchor_id, count(*) AS n, round(sum(p.value), 4) AS sum_value
-        |FROM events p JOIN iv
-        |  ON p.ts >= iv.w_start AND p.ts <= iv.w_end
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_interval_overlap" ->
-      """WITH a AS (SELECT event_id AS a_id, ts AS a_start,
-        |                  ts + INTERVAL 2 HOUR AS a_end
-        |           FROM events WHERE event_id % 97 = 0),
-        |     b AS (SELECT event_id AS b_id, ts AS b_start,
-        |                  ts + INTERVAL 90 MINUTE AS b_end
-        |           FROM events WHERE event_id % 89 = 0)
-        |SELECT a.a_id, count(*) AS n_overlaps,
-        |       CAST(sum(b.b_id) AS BIGINT) AS sum_b
-        |FROM a JOIN b ON a.a_start <= b.b_end AND b.b_start <= a.a_end
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_exact_median" ->
-      """WITH v AS (SELECT (l_orderkey * 37) % 1001 - 500 AS v FROM lineitem)
-        |SELECT count(*) AS n, CAST(median(v) AS DOUBLE) AS med,
-        |       min(v) AS min_v, max(v) AS max_v FROM v""".stripMargin,
-
-    "q_sessions" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-        |              THEN 1 ELSE 0 END AS brk
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (SELECT user_id, ts, value,
-        |             sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                            ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM o)
-        |SELECT user_id,
-        |       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |       strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_last,
-        |       count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    "q_scd2" ->
-      """WITH o AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |    CASE WHEN event_type IS NOT DISTINCT FROM
-        |              lag(event_type) OVER w
-        |         THEN 0 ELSE 1 END AS chg
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |r AS (
-        |  SELECT user_id, event_type, ts,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS run
-        |  FROM o),
-        |g AS (
-        |  SELECT user_id, event_type, min(ts) AS vf, count(*) AS n_events
-        |  FROM r GROUP BY user_id, run, event_type)
-        |SELECT user_id, event_type,
-        |  strftime(vf, '%Y-%m-%d %H:%M:%S') AS valid_from,
-        |  strftime(lead(vf) OVER (PARTITION BY user_id ORDER BY vf),
-        |           '%Y-%m-%d %H:%M:%S') AS valid_to,
-        |  n_events
-        |FROM g ORDER BY user_id, valid_from""".stripMargin,
-
-    "q_bh_fdr" ->
-      """WITH ru AS (SELECT DISTINCT doc_id % 97 AS rule_id FROM documents),
-        |pv AS (
-        |  SELECT rule_id,
-        |    CASE WHEN rule_id < 10 THEN rule_id / 10000.0::DOUBLE
-        |         WHEN rule_id % 13 = 7 THEN NULL
-        |         ELSE ((rule_id * 2654435761) % 4294967296)::DOUBLE
-        |              / 4294967296.0::DOUBLE
-        |    END AS p
-        |  FROM ru),
-        |sc AS (SELECT rule_id, p FROM pv WHERE p IS NOT NULL),
-        |m AS (SELECT count(*)::DOUBLE AS m FROM sc),
-        |rk AS (SELECT rule_id, p,
-        |         CAST(row_number() OVER (ORDER BY p, rule_id) AS INT)
-        |           AS rank
-        |       FROM sc),
-        |k AS (SELECT coalesce(max(CASE WHEN rk.p <= rk.rank
-        |                                    * 0.05::DOUBLE / m.m
-        |                               THEN rk.rank END), 0) AS ks
-        |      FROM rk, m)
-        |SELECT rk.rule_id, round(rk.p, 6) AS p, rk.rank,
-        |       round(rk.rank * 0.05::DOUBLE / m.m, 6) AS bh_threshold,
-        |       rk.rank <= k.ks AS reject
-        |FROM rk, m, k
-        |UNION ALL
-        |SELECT rule_id, NULL, NULL, NULL, NULL FROM pv WHERE p IS NULL
-        |ORDER BY rank NULLS LAST""".stripMargin,
-
-    "q_nucleus_vocab" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |f AS (SELECT w, count(*) AS n FROM tok GROUP BY 1),
-        |rk AS (
-        |  SELECT n,
-        |    sum(n) OVER (ORDER BY n DESC, w ROWS UNBOUNDED PRECEDING)
-        |      AS cum,
-        |    CAST(row_number() OVER (ORDER BY n DESC, w) AS INT) AS k
-        |  FROM f),
-        |tot AS (SELECT sum(n) AS tot, count(*) AS vocab_size FROM f),
-        |ps AS (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE])
-        |         AS p)
-        |SELECT ps.p, CAST(min(rk.k) AS INT) AS k_words,
-        |       round(min_by(rk.cum, rk.k)::DOUBLE / tot.tot, 6)
-        |         AS mass_covered,
-        |       tot.vocab_size
-        |FROM rk, tot, ps
-        |WHERE rk.cum::DOUBLE >= ps.p * tot.tot::DOUBLE
-        |GROUP BY ps.p, tot.tot, tot.vocab_size
-        |ORDER BY ps.p""".stripMargin,
-
-    "q_budget_select" ->
-      """WITH r AS (
-        |  SELECT doc_id, n_chars,
-        |         (doc_id * 2654435761 + 99) % 4294967296 AS score
-        |  FROM documents),
-        |o AS (
-        |  SELECT doc_id,
-        |         CAST(coalesce(sum(n_chars) OVER (ORDER BY score DESC, doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS BIGINT) AS cum_before
-        |  FROM r)
-        |SELECT doc_id, cum_before FROM o
-        |WHERE cum_before < 80000 ORDER BY doc_id""".stripMargin,
-
-    "q_token_counts" ->
-      """SELECT doc_id,
-        |       len(list_filter(string_split_regex(trim(text), '\s+'),
-        |           x -> x <> '')) AS n_words
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_digit_punct" ->
-      """SELECT doc_id, length(text) AS n_chars,
-        |       length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits,
-        |       length(text) - length(regexp_replace(text, '[a-z]', '', 'g')) AS n_lower
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_shingle_count" ->
-      """WITH t AS (
-        |  SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS ws
-        |  FROM documents)
-        |SELECT count(DISTINCT s) AS n_distinct_shingles FROM (
-        |  SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |  FROM t, LATERAL (SELECT unnest(range(1, len(ws) - 1)) AS i)
-        |  WHERE len(ws) >= 3
-        |  UNION ALL
-        |  SELECT array_to_string(ws, ' ') AS s FROM t WHERE len(ws) < 3)""".stripMargin,
-
-    "q_dedup_apply" ->
-      "SELECT count(*) AS n_kept FROM documents",
-
-    "q_dedup_keep_best" ->
-      """WITH doubled AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents)
-        |SELECT doc_id FROM (
-        |  SELECT doc_id, row_number() OVER (PARTITION BY text
-        |           ORDER BY doc_id % 7, doc_id) AS rn
-        |  FROM doubled) WHERE rn = 1""".stripMargin,
-
-    "q_dup_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> x <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(ws) >= 5
-        |    THEN list_transform(range(1, len(ws) - 3),
-        |                        i -> array_to_string(ws[i:i+4], ' '))
-        |    ELSE [array_to_string(ws, ' ')] END)) AS s
-        |  FROM t),
-        |cnt AS (SELECT s, count(*) AS n_docs FROM sh GROUP BY 1)
-        |SELECT doc_id, count(*) AS n_grams,
-        |       CAST(sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_shared,
-        |       round(CAST(sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / count(*), 6) AS dup_fraction
-        |FROM sh JOIN cnt USING (s)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_pack_documents" ->
-      """WITH RECURSIVE ordered AS (
-        |  SELECT source, doc_id, n_chars,
-        |         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |packed AS (
-        |  SELECT source, doc_id, n_chars, rn,
-        |         CAST(0 AS BIGINT) AS pack_id, 0 AS pack_pos, n_chars AS acc
-        |  FROM ordered WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.source, o.doc_id, o.n_chars, o.rn,
-        |         CASE WHEN p.acc + o.n_chars <= 1000
-        |              THEN p.pack_id ELSE p.pack_id + 1 END,
-        |         CASE WHEN p.acc + o.n_chars <= 1000
-        |              THEN p.pack_pos + 1 ELSE 0 END,
-        |         CASE WHEN p.acc + o.n_chars <= 1000
-        |              THEN p.acc + o.n_chars ELSE o.n_chars END
-        |  FROM packed p JOIN ordered o
-        |    ON o.source = p.source AND o.rn = p.rn + 1)
-        |SELECT source, doc_id, n_chars, pack_id, pack_pos
-        |FROM packed ORDER BY source, doc_id""".stripMargin,
-
-    "q_incremental_dedup" ->
-      """SELECT b.doc_id FROM documents b
-        |WHERE NOT EXISTS (SELECT 1 FROM documents s
-        |                  WHERE s.doc_id < 250 AND s.text = b.text)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // planted-recall: the expected recovered-pair count is exactly the
-    // number of planted duplicates (one (id, id+1000000) pair per doc)
-    "q_minhash_recall" ->
-      "SELECT count(*) AS n_planted_found FROM documents WHERE doc_id < 500",
-
-    "q_simhash_recall" ->
-      "SELECT count(*) AS n_planted_found FROM documents WHERE doc_id < 500",
-
-    "q_seen_neardup_recall" ->
-      "SELECT count(*) AS n_planted_found FROM documents WHERE doc_id < 500",
-
-    // planted image pairs: one (id, id+1000000) exact-copy pair per
-    // synthetic PNG — identical bytes ⇒ identical dHash ⇒ Hamming 0
-    "q_image_neardup" ->
-      "SELECT count(*) AS n_planted_found FROM documents WHERE doc_id < 150",
-
-    "q_embedding_recall" ->
-      "SELECT count(*) AS n_planted_found FROM embeddings WHERE vec_id < 500",
-
-    // IVF planted recall: 2 guaranteed hits (query + its exact duplicate,
-    // both cosine 1.0, same coarse cell by argmax determinism) per query
-    "q_ivf_recall" ->
-      """SELECT CAST(2 * count(*) AS BIGINT) AS n_planted_found
-        |FROM embeddings WHERE vec_id < 8""".stripMargin,
-
-    // IVF-PQ planted recall: identical twins quantize to identical
-    // codes, so ADC top-10 finds both per query — 2 hits each
-    "q_ivfpq_recall" ->
-      """SELECT CAST(2 * count(*) AS BIGINT) AS n_planted_found
-        |FROM embeddings WHERE vec_id < 8""".stripMargin,
-
-    // deflate determinism: every doc must reproduce its ratio on the
-    // reshuffled copy, and the input byte mass is plain SQL
-    "q_compression_meta" ->
-      """SELECT count(*) AS n_docs, count(*) AS n_deterministic,
-        |  CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_text_bytes
-        |FROM documents""".stripMargin,
-
-    // fingerprint determinism + content-functionality: every doc
-    // reproduces its fingerprint on a reshuffled copy, and no group of
-    // equal texts ever splits across fingerprints (pure function of
-    // content) — the hash values themselves stay rows-only
-    "q_fingerprint_meta" ->
-      """SELECT count(*) AS n_docs, count(*) AS n_deterministic,
-        |  CAST(0 AS BIGINT) AS n_multi_fp_texts
-        |FROM documents""".stripMargin,
-
-    "q_profile_exact" ->
-      """SELECT count(*) AS n_rows,
-        |  count(DISTINCT l_orderkey) AS n_orders,
-        |  count(DISTINCT l_partkey) AS n_parts,
-        |  round(quantile_cont(CAST(l_quantity AS DOUBLE), 0.5), 4) AS p50,
-        |  round(quantile_cont(CAST(l_quantity AS DOUBLE), 0.99), 4) AS p99
-        |FROM lineitem""".stripMargin,
-
-    // multimodal metadata: the generator's id%3 mime routing and the
-    // decode contract (stills/audio sample 1 frame; 4-6-frame MJPEG
-    // clips sample min(frameSample=4, nFrames) = 4) replicated in SQL;
-    // ids ride the dense documents.doc_id domain
-    "q_multimodal_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'image/png'
-        |       WHEN doc_id % 3 = 1 THEN 'audio/wav'
-        |       ELSE 'video/x-msvideo' END AS mime,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 4 ELSE 1 END AS INTEGER)
-        |    AS frames_sampled
-        |FROM documents WHERE doc_id < 300 ORDER BY media_id""".stripMargin,
-
-    // TextProfile language argmax replicated exactly: per-language
-    // |distinct words ∩ stopword profile| (zh by substring containment),
-    // argmax over (score, lang) structs — ties go to the
-    // lexicographically greatest language, 'und' when no score > 0
-    "q_langid_dist" ->
-      """WITH dw AS (
-        |  SELECT DISTINCT doc_id, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> '')) AS word
-        |  FROM documents),
-        |sc AS (
-        |  SELECT doc_id,
-        |    sum(CASE WHEN word IN ('der','die','und','das','ist','von','den','mit','für','auf') THEN 1 ELSE 0 END) AS s_de,
-        |    sum(CASE WHEN word IN ('the','and','of','to','in','is','that','it','was','for') THEN 1 ELSE 0 END) AS s_en,
-        |    sum(CASE WHEN word IN ('el','la','de','que','y','en','los','se','del','las') THEN 1 ELSE 0 END) AS s_es,
-        |    sum(CASE WHEN word IN ('le','la','les','de','des','et','est','dans','que','une') THEN 1 ELSE 0 END) AS s_fr
-        |  FROM dw GROUP BY doc_id),
-        |zh AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN strpos(text,'的')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'了')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'是')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'在')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'我')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'有')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'他')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'这')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'中')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'大')>0 THEN 1 ELSE 0 END)::BIGINT AS s_zh
-        |  FROM documents),
-        |pick AS (
-        |  SELECT d.doc_id,
-        |    list_max([
-        |      {'s': coalesce(sc.s_de, 0)::BIGINT, 'l': 'de'},
-        |      {'s': coalesce(sc.s_en, 0)::BIGINT, 'l': 'en'},
-        |      {'s': coalesce(sc.s_es, 0)::BIGINT, 'l': 'es'},
-        |      {'s': coalesce(sc.s_fr, 0)::BIGINT, 'l': 'fr'},
-        |      {'s': zh.s_zh, 'l': 'zh'}]) AS best
-        |  FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |  JOIN zh ON d.doc_id = zh.doc_id)
-        |SELECT lang_pred, count(*) AS n FROM (
-        |  SELECT CASE WHEN best.s > 0 THEN best.l ELSE 'und' END AS lang_pred FROM pick)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tokenize" ->
-      """WITH wl AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS l
-        |  FROM documents),
-        |words AS (
-        |  SELECT doc_id, unnest(l) AS word,
-        |         CAST(unnest(range(0, len(l))) AS INTEGER) AS pos
-        |  FROM wl),
-        |vocab AS (
-        |  SELECT word,
-        |         CAST(row_number() OVER (ORDER BY n DESC, word) - 1
-        |              AS INTEGER) AS id
-        |  FROM (SELECT word, count(*) AS n FROM words
-        |        GROUP BY 1 ORDER BY n DESC, word LIMIT 20))
-        |SELECT w.doc_id, w.pos, coalesce(v.id, -1) AS token_id
-        |FROM words w LEFT JOIN vocab v USING (word)
-        |ORDER BY doc_id, pos""".stripMargin,
-
-    "q_canonical_url" ->
-      """SELECT doc_id,
-        |       'http://www.' || lower(source) || '.example.com/docs/'
-        |         || doc_id || '?a=1&b=2' AS url
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_unicode_nfc" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE
-        |    WHEN doc_id % 3 = 0 THEN text || ' cafe' || chr(769)
-        |    WHEN doc_id % 3 = 1 THEN text || ' caf' || chr(233)
-        |    ELSE text END AS dirty
-        |  FROM documents)
-        |SELECT doc_id, nfc_normalize(dirty) AS norm,
-        |       length(nfc_normalize(dirty)) AS n_chars
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q_repetition" ->
-      """SELECT doc_id, CASE WHEN len(ws) > 0
-        |  THEN round(1.0 - len(list_distinct(ws))::DOUBLE / len(ws), 6)
-        |  ELSE 0.0 END AS rep_ratio
-        |FROM (SELECT doc_id,
-        |        list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                    x -> x <> '') AS ws
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_pii" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE
-        |    WHEN doc_id % 10 = 0 THEN text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-        |    WHEN doc_id % 10 = 1 THEN text || ' call 555-123-4567 or 555 987 6543'
-        |    WHEN doc_id % 10 = 2 THEN text || ' from 192.168.1.99'
-        |    ELSE text END AS dirty
-        |  FROM documents)
-        |SELECT doc_id,
-        |  len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |  len(regexp_extract_all(dirty, '[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}')) AS n_phones,
-        |  len(regexp_extract_all(dirty, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS n_ips,
-        |  length(regexp_replace(regexp_replace(regexp_replace(dirty,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}', '[PHONE]', 'g'),
-        |    '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '[IP]', 'g')) AS redacted_len
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // classifier application: same feature CTE as q_quality_scores, the
-    // linear score in the exact sorted-name term order the Spark plan uses
-    "q_logistic_quality" ->
-      """WITH feat AS (
-        |  SELECT doc_id,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents))
-        |SELECT doc_id,
-        |  round(mwl * 0.5 + n_words * 0.02 + punct_ratio * -8.0
-        |        + stop_ratio * 4.0 + -2.0, 6) AS log_odds
-        |FROM feat ORDER BY doc_id""".stripMargin,
-
-    "q_active_margin" ->
-      """WITH feat AS (
-        |  SELECT doc_id,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |lo AS (
-        |  SELECT doc_id,
-        |    round(mwl * 0.5 + n_words * 0.02 + punct_ratio * -8.0
-        |          + stop_ratio * 4.0 + -2.0, 6) AS log_odds
-        |  FROM feat)
-        |SELECT doc_id, log_odds, abs(log_odds) AS margin
-        |FROM lo ORDER BY margin, doc_id LIMIT 20""".stripMargin,
-
-    "q_ucb_alloc" ->
-      """WITH feat AS (
-        |  SELECT doc_id, source,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, source, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |lo AS (
-        |  SELECT doc_id, coalesce(source, '<null>') AS g,
-        |    round(mwl * 0.5 + n_words * 0.02 + punct_ratio * -8.0
-        |          + stop_ratio * 4.0 + -2.0, 6) AS reward
-        |  FROM feat),
-        |per AS (SELECT g, count(reward) AS n, sum(reward) AS s
-        |        FROM lo GROUP BY 1),
-        |tot AS (SELECT sum(n) AS nn FROM per)
-        |SELECT per.g AS source, per.n,
-        |  round(per.s / per.n, 6) AS mean_reward,
-        |  round(per.s / per.n
-        |        + sqrt(2.0::DOUBLE * ln(tot.nn::DOUBLE) / per.n), 6)
-        |    AS ucb
-        |FROM per, tot ORDER BY ucb DESC, source""".stripMargin,
-
-    "q_pareto_front" ->
-      """WITH feat AS (
-        |  SELECT doc_id, n_chars,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, n_chars, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |base AS (
-        |  SELECT doc_id, n_chars,
-        |    round(mwl * 0.5 + n_words * 0.02 + punct_ratio * -8.0
-        |          + stop_ratio * 4.0 + -2.0, 6) AS log_odds
-        |  FROM feat WHERE n_chars IS NOT NULL),
-        |grp AS (SELECT n_chars, max(log_odds) AS gy FROM base GROUP BY 1),
-        |pref AS (SELECT n_chars, gy,
-        |           max(gy) OVER (ORDER BY n_chars DESC
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |             AS strict
-        |         FROM grp)
-        |SELECT b.doc_id, b.n_chars, b.log_odds
-        |FROM base b JOIN pref p USING (n_chars)
-        |WHERE (p.strict IS NULL OR p.strict < b.log_odds)
-        |  AND b.log_odds = p.gy
-        |ORDER BY n_chars DESC, log_odds DESC, doc_id""".stripMargin,
-
-    "q_transition_entropy" ->
-      """WITH p AS (
-        |  SELECT event_type AS y,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS x
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |j AS (SELECT x, y, count(*) AS c FROM p WHERE x IS NOT NULL
-        |      GROUP BY 1, 2),
-        |n AS (SELECT sum(c)::DOUBLE AS n FROM j),
-        |cx AS (SELECT x, sum(c) AS cx FROM j GROUP BY 1),
-        |cy AS (SELECT y, sum(c) AS cy FROM j GROUP BY 1),
-        |hc AS (SELECT sum(-(j.c / n.n) * ln(j.c::DOUBLE / cx.cx)) AS h
-        |       FROM j JOIN cx USING (x), n),
-        |hm AS (SELECT sum(-(cy.cy / n.n) * ln(cy.cy / n.n)) AS h
-        |       FROM cy, n)
-        |SELECT CAST((SELECT sum(c) FROM j) AS BIGINT) AS n_transitions,
-        |  round(hc.h, 6) AS h_conditional, round(hm.h, 6) AS h_marginal,
-        |  CASE WHEN hm.h > 0 THEN round(1.0::DOUBLE - hc.h / hm.h, 6) END
-        |    AS predictability
-        |FROM hc, hm""".stripMargin,
-
-    "q_session_baskets" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_type,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (SELECT user_id, event_type,
-        |        sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                       ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM o),
-        |b AS (SELECT DISTINCT user_id, sid, event_type FROM s),
-        |ns AS (SELECT count(*) AS s FROM
-        |        (SELECT DISTINCT user_id, sid FROM b)),
-        |tc AS (SELECT event_type, count(*) AS c FROM b GROUP BY 1),
-        |p AS (SELECT a.event_type AS ta, bb.event_type AS tb,
-        |        count(*) AS n
-        |      FROM b a JOIN b bb ON a.user_id = bb.user_id
-        |        AND a.sid = bb.sid AND a.event_type < bb.event_type
-        |      GROUP BY 1, 2)
-        |SELECT p.ta AS type_a, p.tb AS type_b, p.n AS n_together,
-        |  round(ns.s::DOUBLE * p.n / (ca.c * cb.c), 6) AS lift
-        |FROM p JOIN tc ca ON ca.event_type = p.ta
-        |       JOIN tc cb ON cb.event_type = p.tb, ns
-        |ORDER BY type_a, type_b""".stripMargin,
-
-    "q_stationary_mix" ->
-      """WITH p AS (
-        |  SELECT event_type AS y,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS x
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |obs AS (SELECT y, count(*) AS n FROM p GROUP BY 1),
-        |tr AS (SELECT x, y, count(*) AS c FROM p WHERE x IS NOT NULL
-        |       GROUP BY 1, 2),
-        |ct AS (SELECT x, sum(c) AS ct FROM tr GROUP BY 1),
-        |ty AS (SELECT y AS t FROM obs),
-        |tcount AS (SELECT count(*)::DOUBLE AS tn FROM ty),
-        |pm AS (
-        |  SELECT s.t AS s, y.t AS yy,
-        |    CASE WHEN ct.ct IS NULL OR ct.ct = 0
-        |         THEN CASE WHEN s.t = y.t THEN 1.0::DOUBLE
-        |                   ELSE 0.0::DOUBLE END
-        |         ELSE coalesce(tr.c, 0)::DOUBLE / ct.ct END AS p
-        |  FROM ty s CROSS JOIN ty y
-        |  LEFT JOIN ct ON ct.x = s.t
-        |  LEFT JOIN tr ON tr.x = s.t AND tr.y = y.t),
-        |x0 AS (SELECT t, 1.0::DOUBLE / tcount.tn AS v FROM ty, tcount),
-        |x1 AS (SELECT pm.yy AS t, sum(x0.v * pm.p) AS v FROM pm
-        |       JOIN x0 ON x0.t = pm.s GROUP BY 1),
-        |x2 AS (SELECT pm.yy AS t, sum(x1.v * pm.p) AS v FROM pm
-        |       JOIN x1 ON x1.t = pm.s GROUP BY 1),
-        |x3 AS (SELECT pm.yy AS t, sum(x2.v * pm.p) AS v FROM pm
-        |       JOIN x2 ON x2.t = pm.s GROUP BY 1),
-        |tot AS (SELECT sum(n)::DOUBLE AS n FROM obs)
-        |SELECT obs.y AS event_type,
-        |  round(obs.n / tot.n, 6) AS observed_share,
-        |  round(x3.v, 6) AS stationary_share,
-        |  round(abs(obs.n / tot.n - x3.v), 6) AS delta
-        |FROM obs JOIN x3 ON x3.t = obs.y, tot
-        |ORDER BY event_type""".stripMargin,
-
-    "q_kish_ess" ->
-      """WITH per AS (
-        |  SELECT coalesce(source, '<null>') AS g, count(*) AS n_rows,
-        |    sum(CASE WHEN n_chars IS NULL OR n_chars <= 0
-        |             THEN 1 ELSE 0 END) AS n_invalid,
-        |    sum(CASE WHEN n_chars > 0
-        |             THEN n_chars * 1.0::DOUBLE END) AS sw,
-        |    sum(CASE WHEN n_chars > 0
-        |             THEN n_chars * 1.0::DOUBLE * n_chars END) AS sw2,
-        |    sum(CASE WHEN n_chars > 0 THEN 1 ELSE 0 END) AS nv
-        |  FROM documents GROUP BY 1)
-        |SELECT g AS source, n_rows,
-        |  CAST(n_invalid AS BIGINT) AS n_invalid,
-        |  CASE WHEN nv > 0 THEN round(sw * sw / sw2, 6) END AS ess,
-        |  CASE WHEN nv > 0 THEN round(sw * sw / sw2 / nv, 6) END
-        |    AS ess_ratio
-        |FROM per ORDER BY source""".stripMargin,
-
-    "q_simpsons" ->
-      """WITH per AS (
-        |  SELECT coalesce(l_returnflag, '<null>') AS g, count(*) AS n,
-        |    sum(l_quantity * 1.0) AS sx, sum(l_extendedprice * 1.0) AS sy,
-        |    sum(l_quantity * 1.0 * l_extendedprice) AS sxy,
-        |    sum(l_quantity * 1.0 * l_quantity) AS sxx
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |  GROUP BY 1),
-        |tot AS (SELECT sum(n) AS tn, sum(sx) AS tsx, sum(sy) AS tsy,
-        |        sum(sxy) AS tsxy, sum(sxx) AS tsxx FROM per)
-        |SELECT per.g AS l_returnflag, per.n,
-        |  round(CASE WHEN per.n * sxx - sx * sx <= 0 THEN NULL
-        |        ELSE (per.n * sxy - sx * sy) / (per.n * sxx - sx * sx)
-        |        END, 6) AS slope,
-        |  round(CASE WHEN tn * tsxx - tsx * tsx <= 0 THEN NULL
-        |        ELSE (tn * tsxy - tsx * tsy) / (tn * tsxx - tsx * tsx)
-        |        END, 6) AS pooled_slope,
-        |  CASE WHEN per.n * sxx - sx * sx <= 0
-        |         OR tn * tsxx - tsx * tsx <= 0 THEN false
-        |       ELSE ((per.n * sxy - sx * sy) / (per.n * sxx - sx * sx))
-        |            * ((tn * tsxy - tsx * tsy) / (tn * tsxx - tsx * tsx))
-        |            < 0 END AS opposes
-        |FROM per, tot ORDER BY l_returnflag""".stripMargin,
-
-    "q_lead_lag" ->
-      """WITH e AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
-        |         event_type AS t
-        |  FROM events WHERE ts IS NOT NULL
-        |    AND event_type IN ('click', 'purchase')),
-        |bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
-        |days AS (SELECT unnest(generate_series(d0, d1,
-        |           INTERVAL 1 DAY))::DATE AS d FROM bounds),
-        |a AS (SELECT days.d, coalesce(c.n, 0) AS v FROM days LEFT JOIN
-        |      (SELECT d, count(*) AS n FROM e WHERE t = 'click'
-        |       GROUP BY 1) c USING (d)),
-        |b AS (SELECT days.d, coalesce(c.n, 0) AS v FROM days LEFT JOIN
-        |      (SELECT d, count(*) AS n FROM e WHERE t = 'purchase'
-        |       GROUP BY 1) c USING (d)),
-        |lags AS (SELECT unnest(range(-3, 4)) AS lag),
-        |pairs AS (SELECT lags.lag, a.v AS x, b.v AS y
-        |          FROM lags JOIN a ON true
-        |          JOIN b ON b.d = a.d + lags.lag::INT),
-        |st AS (SELECT lag, count(*) AS n, sum(x * 1.0) AS sx,
-        |         sum(y * 1.0) AS sy, sum(x * 1.0 * y) AS sxy,
-        |         sum(x * 1.0 * x) AS sxx, sum(y * 1.0 * y) AS syy
-        |       FROM pairs GROUP BY 1)
-        |SELECT CAST(lag AS INT) AS lag, n AS n_days,
-        |  CASE WHEN n * sxx - sx * sx <= 0 OR n * syy - sy * sy <= 0
-        |       THEN NULL
-        |       ELSE round((n * sxy - sx * sy)
-        |            / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-        |  END AS corr
-        |FROM st ORDER BY lag""".stripMargin,
-
-    "q_weekday_effect" ->
-      """WITH e AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS n
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
-        |days AS (SELECT unnest(generate_series(d0, d1,
-        |           INTERVAL 1 DAY))::DATE AS d FROM bounds),
-        |f AS (SELECT days.d, isodow(days.d) AS dow,
-        |        coalesce(e.n, 0) * 1.0 AS v
-        |      FROM days LEFT JOIN e USING (d)),
-        |t AS (SELECT count(*) AS n, sum(v) AS s, sum(v * v) AS ss FROM f),
-        |g AS (SELECT dow, count(*) * 1.0 AS gn, sum(v) AS gs
-        |      FROM f GROUP BY 1),
-        |bt AS (SELECT sum(gs * gs / gn) AS sb FROM g),
-        |pk AS (SELECT dow FROM g ORDER BY gs / gn DESC, dow LIMIT 1),
-        |tr AS (SELECT dow FROM g ORDER BY gs / gn ASC, dow LIMIT 1)
-        |SELECT t.n AS n_days,
-        |  CASE WHEN t.ss - t.s * t.s / t.n <= 0 THEN NULL
-        |       ELSE round((bt.sb - t.s * t.s / t.n)
-        |                  / (t.ss - t.s * t.s / t.n), 6) END
-        |    AS eta_squared,
-        |  CAST(pk.dow AS INT) AS peak_dow, CAST(tr.dow AS INT) AS trough_dow
-        |FROM t, bt, pk, tr""".stripMargin,
-
-    "q_inbatch_collisions" ->
-      """WITH b AS (
-        |  SELECT ((doc_id * 2654435761 + 11) % 4294967296) % 16 AS b,
-        |         coalesce(source, '<null>') AS g
-        |  FROM documents),
-        |bg AS (SELECT b, g, count(*) AS n FROM b GROUP BY 1, 2),
-        |st AS (SELECT sum(n) AS n_docs, count(DISTINCT b) AS nb,
-        |         sum((n * (n - 1)) // 2) AS sp FROM bg),
-        |pb AS (SELECT sum((nb2 * (nb2 - 1)) // 2) AS tp FROM
-        |        (SELECT b, sum(n) AS nb2 FROM bg GROUP BY 1))
-        |SELECT CAST(st.n_docs AS BIGINT) AS n_docs,
-        |  CAST(st.nb AS BIGINT) AS n_batches_used,
-        |  CAST(st.sp AS BIGINT) AS same_group_pairs,
-        |  CAST(pb.tp AS BIGINT) AS total_pairs,
-        |  CASE WHEN pb.tp > 0 THEN round(st.sp::DOUBLE / pb.tp, 6) END
-        |    AS collision_rate
-        |FROM st, pb""".stripMargin,
-
-    "q_label_centroids" ->
-      """WITH d AS (
-        |  SELECT coalesce(label::VARCHAR, '<null>') AS g,
-        |    unnest(embedding) AS x, unnest(range(len(embedding))) AS p
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |pl AS (SELECT g, p, sum(x::DOUBLE) AS s, count(*) AS c
-        |       FROM d GROUP BY 1, 2),
-        |gl AS (SELECT p, sum(s) / sum(c) AS gx FROM pl GROUP BY 1),
-        |lc AS (SELECT g, p, s / c AS lx FROM pl),
-        |dots AS (SELECT lc.g, sum(lc.lx * gl.gx) AS dot,
-        |         sum(lc.lx * lc.lx) AS na, sum(gl.gx * gl.gx) AS nb
-        |         FROM lc JOIN gl USING (p) GROUP BY 1),
-        |nv AS (SELECT g, max(c) AS n FROM pl GROUP BY 1)
-        |SELECT dots.g AS label, CAST(nv.n AS BIGINT) AS n_vecs,
-        |  round(dot / (sqrt(na) * sqrt(nb) + 1e-30), 6) AS cos_to_global
-        |FROM dots JOIN nv USING (g) ORDER BY label""".stripMargin,
-
-    "q_mask_plan" ->
-      """WITH s AS (
-        |  SELECT doc_id AS idn, printf('doc_%012d', doc_id) AS did,
-        |    CASE WHEN doc_id % 97 = 2 THEN (doc_id % 7 + 5) + 1
-        |         ELSE doc_id % 7 + 5 END AS n_tok
-        |  FROM documents
-        |  WHERE doc_id % 97 <> 0 AND doc_id % 97 <> 1)
-        |SELECT did AS doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-        |  CAST(len(list_filter(range(n_tok), i ->
-        |    (i * 2654435761 + idn * 31) % 100 < 15)) AS BIGINT)
-        |    AS n_masked,
-        |  CASE WHEN n_tok > 0 THEN
-        |    round(len(list_filter(range(n_tok), i ->
-        |      (i * 2654435761 + idn * 31) % 100 < 15))::DOUBLE / n_tok, 6)
-        |  END AS mask_rate
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "q_source_exclusivity" ->
-      """WITH c AS (
-        |  SELECT coalesce(source, '<null>') AS g,
-        |    unnest(list_filter(string_split_regex(
-        |      lower(trim(text || ' xsrc' || source)), '\s+'),
-        |      x -> x <> '')) AS w
-        |  FROM documents),
-        |cnt AS (SELECT g, w, count(*) AS c FROM c GROUP BY 1, 2),
-        |sp AS (SELECT w, count(*) AS ns FROM cnt GROUP BY 1)
-        |SELECT cnt.g AS source, count(*) AS n_words,
-        |  CAST(sum(CASE WHEN sp.ns = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_exclusive_words,
-        |  CAST(sum(cnt.c) AS BIGINT) AS token_mass,
-        |  CAST(sum(CASE WHEN sp.ns = 1 THEN cnt.c ELSE 0 END) AS BIGINT)
-        |    AS exclusive_mass,
-        |  round(sum(CASE WHEN sp.ns = 1 THEN cnt.c ELSE 0 END)::DOUBLE
-        |        / sum(cnt.c), 6) AS exclusive_share
-        |FROM cnt JOIN sp USING (w) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_survival" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |    min(CAST(date_trunc('day', ts) AS DATE)) AS f,
-        |    max(CAST(date_trunc('day', ts) AS DATE)) AS l
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1),
-        |mx AS (SELECT max(l) AS ref FROM pu),
-        |lv AS (SELECT (l - f) AS t, (l = mx.ref) AS cen FROM pu, mx),
-        |bt AS (SELECT t,
-        |         sum(CASE WHEN NOT cen THEN 1 ELSE 0 END) AS n_churned,
-        |         sum(CASE WHEN cen THEN 1 ELSE 0 END) AS n_censored
-        |       FROM lv GROUP BY 1),
-        |tot AS (SELECT count(*) AS n FROM lv),
-        |r AS (SELECT t, n_churned, n_censored,
-        |        tot.n - coalesce(sum(n_churned + n_censored) OVER
-        |          (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-        |           AND 1 PRECEDING), 0) AS n_at_risk
-        |      FROM bt, tot)
-        |SELECT CAST(t AS BIGINT) AS lifetime_days,
-        |  CAST(n_at_risk AS BIGINT) AS n_at_risk,
-        |  CAST(n_churned AS BIGINT) AS n_churned,
-        |  CAST(n_censored AS BIGINT) AS n_censored,
-        |  round(exp(sum(ln(1.0::DOUBLE - n_churned::DOUBLE / n_at_risk))
-        |    OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)), 6) AS survival
-        |FROM r ORDER BY lifetime_days""".stripMargin,
-
-    "q_sample_bounds" ->
-      """SELECT coalesce(source, '<null>') AS source, count(*) AS n,
-        |  round(sum(CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END)::DOUBLE
-        |        / count(*), 6) AS rate,
-        |  round(sqrt(ln(2.0::DOUBLE / 0.05::DOUBLE)
-        |             / (2.0::DOUBLE * count(*))), 6) AS eps_95,
-        |  round(sqrt(ln(2.0::DOUBLE / 0.01::DOUBLE)
-        |             / (2.0::DOUBLE * count(*))), 6) AS eps_99
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_rule_locality" ->
-      """WITH s AS (
-        |  SELECT doc_id AS idn,
-        |    CASE WHEN doc_id % 97 = 2 THEN 'R_NTOK_EQ_SIZE'
-        |         WHEN doc_id % 97 = 3 THEN 'R_TOKEN_RANGE'
-        |         WHEN doc_id % 97 = 4 THEN 'R_ENUM_SOURCE' END AS rule_id,
-        |    doc_id % 7 AS part
-        |  FROM documents WHERE doc_id % 97 IN (2, 3, 4)),
-        |rp AS (SELECT rule_id, part, count(*) AS n FROM s GROUP BY 1, 2)
-        |SELECT rule_id, CAST(sum(n) AS BIGINT) AS n_violations,
-        |  count(*) AS n_partitions,
-        |  round(max(n)::DOUBLE / sum(n), 6) AS max_share,
-        |  round(sum(n * n)::DOUBLE / (sum(n) * sum(n)), 6) AS hhi
-        |FROM rp GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_truncation_loss" ->
-      s"""WITH $SeqTableCte
-        |SELECT source, count(*) AS n_seqs,
-        |  CAST(sum(CASE WHEN n_tok > 8 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_truncated,
-        |  CAST(sum(n_tok) AS BIGINT) AS tokens_total,
-        |  CAST(sum(greatest(n_tok - 8, 0)) AS BIGINT) AS tokens_lost,
-        |  round(sum(greatest(n_tok - 8, 0))::DOUBLE / sum(n_tok), 6)
-        |    AS loss_share
-        |FROM s2 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_dist_match" ->
-      """WITH b AS (
-        |  SELECT CAST(CASE WHEN n_chars < 0 THEN 0
-        |              WHEN n_chars >= 600.0 THEN 11
-        |              ELSE least(11, CAST(floor((n_chars - 0.0::DOUBLE)
-        |                / ((600.0::DOUBLE - 0.0::DOUBLE) / 12)) AS INT))
-        |         END AS BIGINT) AS bin, source
-        |  FROM documents
-        |  WHERE source IN ('src0', 'src1') AND n_chars IS NOT NULL),
-        |c AS (SELECT bin, source, count(*) AS n FROM b GROUP BY 1, 2),
-        |tot AS (SELECT sum(CASE WHEN source = 'src0' THEN n END) AS na,
-        |               sum(CASE WHEN source = 'src1' THEN n END) AS nb
-        |        FROM c),
-        |bins2 AS (SELECT DISTINCT bin FROM c),
-        |sh AS (SELECT bins2.bin,
-        |         coalesce((SELECT n FROM c WHERE c.bin = bins2.bin
-        |                   AND source = 'src0'), 0)::DOUBLE / tot.na AS a,
-        |         coalesce((SELECT n FROM c WHERE c.bin = bins2.bin
-        |                   AND source = 'src1'), 0)::DOUBLE / tot.nb AS bb,
-        |         coalesce((SELECT n FROM c WHERE c.bin = bins2.bin
-        |                   AND source = 'src1'), 0) AS nbr
-        |       FROM bins2, tot),
-        |s AS (SELECT min(bb / a) AS s FROM sh WHERE a > 0 AND bb > 0)
-        |SELECT bin, round(a, 6) AS ref_share,
-        |  round(bb, 6) AS target_share,
-        |  round(CASE WHEN bb = 0 THEN 0
-        |        ELSE least(1.0::DOUBLE, a / bb * s.s) END, 6)
-        |    AS keep_fraction,
-        |  CAST(round(CASE WHEN bb = 0 THEN 0
-        |        ELSE least(1.0::DOUBLE, a / bb * s.s) END * nbr, 0)
-        |    AS BIGINT) AS expected_kept,
-        |  (a > 0 AND bb = 0) AS unmatchable
-        |FROM sh, s ORDER BY bin""".stripMargin,
-
-    "q_contextual_rare" ->
-      """WITH d AS (
-        |  SELECT coalesce(source, '<null>') AS g,
-        |    CASE WHEN source = 'src5' AND lang = 'en' AND doc_id % 7 <> 0
-        |         THEN 'de' ELSE coalesce(lang, '<null>') END AS v
-        |  FROM documents),
-        |cells AS (SELECT g, v, count(*) AS n FROM d GROUP BY 1, 2),
-        |gt AS (SELECT g, sum(n) AS gn FROM cells GROUP BY 1),
-        |vt AS (SELECT v, sum(n) AS vn FROM cells GROUP BY 1),
-        |t AS (SELECT sum(n) AS t FROM cells)
-        |SELECT cells.g AS source, cells.v AS lang, cells.n,
-        |  round(cells.n::DOUBLE / gt.gn, 6) AS within_share,
-        |  round(vt.vn::DOUBLE / t.t, 6) AS global_share,
-        |  round((cells.n::DOUBLE / gt.gn) / (vt.vn::DOUBLE / t.t), 6)
-        |    AS lift,
-        |  ((cells.n::DOUBLE / gt.gn) / (vt.vn::DOUBLE / t.t) < 0.25
-        |   AND vt.vn::DOUBLE / t.t >= 0.05) AS flagged
-        |FROM cells JOIN gt USING (g) JOIN vt USING (v), t
-        |ORDER BY source, lang""".stripMargin,
-
-    "q_trend_by_type" ->
-      """WITH e AS (
-        |  SELECT coalesce(event_type, '<null>') AS g,
-        |         CAST(date_trunc('day', ts) AS DATE) AS d
-        |  FROM events WHERE ts IS NOT NULL),
-        |bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
-        |days AS (SELECT unnest(generate_series(d0, d1,
-        |           INTERVAL 1 DAY))::DATE AS d FROM bounds),
-        |grps AS (SELECT DISTINCT g FROM e),
-        |cnt AS (SELECT g, d, count(*) AS n FROM e GROUP BY 1, 2),
-        |f AS (SELECT grps.g, days.d, coalesce(cnt.n, 0) AS n,
-        |        row_number() OVER (PARTITION BY grps.g
-        |                           ORDER BY days.d) - 1 AS i
-        |      FROM grps CROSS JOIN days
-        |      LEFT JOIN cnt ON cnt.g = grps.g AND cnt.d = days.d),
-        |p AS (SELECT a.g, (b.n - a.n)::DOUBLE / (b.i - a.i) AS s
-        |      FROM f a JOIN f b ON a.g = b.g AND b.i > a.i),
-        |m AS (SELECT g, count(*) AS nd FROM f GROUP BY 1)
-        |SELECT p.g AS event_type, m.nd AS n_days,
-        |  round(median(p.s), 6) AS sen_slope
-        |FROM p JOIN m USING (g) GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-    "q_homoglyph_dups" ->
-      """WITH aug AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 300000,
-        |         translate(text, 'aeopcxy', 'аеорсху')
-        |  FROM documents WHERE doc_id % 19 = 0),
-        |raw AS (SELECT coalesce(sum(n), 0) AS d FROM (
-        |  SELECT count(*) AS n FROM aug WHERE text IS NOT NULL
-        |  GROUP BY text HAVING count(*) > 1)),
-        |fold AS (SELECT coalesce(sum(n), 0) AS d FROM (
-        |  SELECT count(*) AS n FROM aug WHERE text IS NOT NULL
-        |  GROUP BY translate(text, 'аеорсхуАЕОРСХУ', 'aeopcxyAEOPCXY')
-        |  HAVING count(*) > 1)),
-        |nn AS (SELECT count(*) AS n FROM aug WHERE text IS NOT NULL)
-        |SELECT nn.n AS n_rows, CAST(raw.d AS BIGINT) AS raw_dup_rows,
-        |  CAST(fold.d AS BIGINT) AS folded_dup_rows,
-        |  CAST(fold.d - raw.d AS BIGINT) AS gain_rows
-        |FROM nn, raw, fold""".stripMargin,
-
-    "q_diff_columns" ->
-      """WITH oldsnap AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END
-        |      AS text,
-        |    CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |newsnap AS (SELECT doc_id, text, lang FROM documents
-        |            WHERE doc_id % 5 <> 0),
-        |j AS (SELECT o.doc_id, o.text AS ot, n.text AS nt,
-        |             o.lang AS ol, n.lang AS nl
-        |      FROM oldsnap o JOIN newsnap n USING (doc_id))
-        |SELECT doc_id, 'text' AS "column", ot AS old_value,
-        |       nt AS new_value
-        |FROM j WHERE ot IS DISTINCT FROM nt
-        |UNION ALL
-        |SELECT doc_id, 'lang', ol, nl FROM j WHERE ol IS DISTINCT FROM nl
-        |ORDER BY doc_id, "column"""".stripMargin,
-
-    "q_group_fence" ->
-      """WITH m AS (SELECT source AS g, median(n_chars) AS med
-        |           FROM documents GROUP BY 1),
-        |md AS (SELECT d.source AS g, m.med,
-        |         median(abs(d.n_chars - m.med)) AS mad
-        |       FROM documents d JOIN m ON m.g = d.source GROUP BY 1, 2),
-        |c AS (SELECT d.source AS g, count(d.n_chars) AS n_rows,
-        |        sum(CASE WHEN d.n_chars < md.med - 3.5 * 1.4826 * md.mad
-        |                   OR d.n_chars > md.med + 3.5 * 1.4826 * md.mad
-        |                 THEN 1 ELSE 0 END) AS n_outliers
-        |      FROM documents d JOIN md ON md.g = d.source GROUP BY 1)
-        |SELECT c.g AS source, c.n_rows, round(md.med, 4) AS median,
-        |  round(md.mad, 4) AS mad,
-        |  round(md.med - 3.5 * 1.4826 * md.mad, 4) AS lo,
-        |  round(md.med + 3.5 * 1.4826 * md.mad, 4) AS hi, c.n_outliers
-        |FROM c JOIN md USING (g) ORDER BY source""".stripMargin,
-
-    "q_mixing" ->
-      """WITH sampled AS (
-        |  SELECT * FROM documents
-        |  WHERE (doc_id % 100) < (CASE source WHEN 'src0' THEN 100
-        |    WHEN 'src1' THEN 50 WHEN 'src2' THEN 25 ELSE 5 END)),
-        |c AS (SELECT source, count(*) AS n FROM sampled GROUP BY 1),
-        |t AS (SELECT sum(n)::DOUBLE AS t FROM c)
-        |SELECT source, n, round(n / t.t, 6) AS fraction
-        |FROM c, t ORDER BY source""".stripMargin,
-
-    "q_cap_per_source" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY (doc_id * 2654435761 + 7) % 4294967296, doc_id)
-        |           AS rn
-        |  FROM documents) WHERE rn <= 15""".stripMargin,
-
-    "q_epoch_order" ->
-      """SELECT doc_id, (doc_id * 2654435761 + 42) % 4294967296 AS h
-        |FROM documents ORDER BY h, doc_id LIMIT 100""".stripMargin,
-
-    "q_split_sets" ->
-      """SELECT split, count(*) AS n, min(doc_id) AS min_id,
-        |       max(doc_id) AS max_id
-        |FROM (SELECT doc_id,
-        |        CASE WHEN doc_id % 100 < 80 THEN 'train'
-        |             WHEN doc_id % 100 < 90 THEN 'val'
-        |             ELSE 'test' END AS split
-        |      FROM documents)
-        |GROUP BY split ORDER BY split""".stripMargin,
-
-    "q_chunk_tokens" ->
-      s"""WITH $SeqTableCte,
-        |ch AS (
-        |  SELECT toks, len(toks) AS n,
-        |    unnest(range(0, CASE WHEN len(toks) <= 4 THEN 1
-        |      ELSE CAST(ceil((len(toks) - 4) / 3.0) AS INT) + 1 END)) AS cid,
-        |    did
-        |  FROM s2 WHERE len(toks) > 0)
-        |SELECT did AS doc_id, CAST(cid AS INTEGER) AS chunk_id,
-        |  CAST(cid * 3 AS INTEGER) AS chunk_start,
-        |  CAST(least(4, n - cid * 3) AS INTEGER) AS n_chunk_tok,
-        |  CAST(toks[cid * 3 + 1] AS BIGINT) AS first_tok,
-        |  CAST(toks[least(cid * 3 + 4, n)] AS BIGINT) AS last_tok,
-        |  CAST(list_sum(toks[cid * 3 + 1 : cid * 3 + 4]) AS BIGINT) AS tok_sum
-        |FROM ch
-        |ORDER BY doc_id, chunk_id, chunk_start, n_chunk_tok,
-        |         first_tok, last_tok, tok_sum""".stripMargin,
-
-    "q_embedding_qc" ->
-      """WITH p AS (
-        |  SELECT vec_id,
-        |    CASE WHEN vec_id % 101 = 1 THEN
-        |           list_concat(list_concat(embedding[1:1], [CAST('nan' AS FLOAT)]),
-        |                       embedding[3:])
-        |         WHEN vec_id % 101 = 2 THEN
-        |           list_transform(embedding, x -> CAST(0 AS FLOAT))
-        |         WHEN vec_id % 101 = 3 THEN embedding[1:5]
-        |         WHEN vec_id % 101 = 4 THEN NULL
-        |         ELSE embedding END AS emb
-        |  FROM embeddings),
-        |st AS (
-        |  SELECT vec_id, len(emb) AS dim,
-        |    len(list_filter(emb, x -> x IS NULL OR isnan(x) OR isinf(x))) AS nonf,
-        |    len(emb) > 0
-        |      AND len(list_filter(emb, x -> x IS NULL OR isnan(x) OR isinf(x))) = 0
-        |      AND len(list_filter(emb, x -> x <> 0)) = 0 AS zero
-        |  FROM p WHERE emb IS NOT NULL)
-        |SELECT vec_id, rule_id, offending_value FROM (
-        |  SELECT vec_id, 'R_EMB_NULL' AS rule_id,
-        |         'null_embedding' AS offending_value FROM p WHERE emb IS NULL
-        |  UNION ALL
-        |  SELECT vec_id, 'R_EMB_DIM', 'dim=' || dim FROM st WHERE dim <> 64
-        |  UNION ALL
-        |  SELECT vec_id, 'R_EMB_NONFINITE', 'n_nonfinite=' || nonf
-        |  FROM st WHERE nonf > 0
-        |  UNION ALL
-        |  SELECT vec_id, 'R_EMB_ZERO', 'all_zero' FROM st WHERE zero)
-        |ORDER BY vec_id, rule_id""".stripMargin,
-
-    "q_outliers_price" ->
-      """WITH est AS (SELECT l_extendedprice FROM lineitem WHERE l_orderkey % 10 = 0),
-        |m AS (SELECT median(l_extendedprice) AS m FROM est),
-        |md AS (SELECT median(abs(l_extendedprice - m.m)) AS mad
-        |       FROM est, m),
-        |b AS (SELECT m.m AS m, md.mad AS mad,
-        |             m.m - 3.5 * 1.4826 * md.mad AS lo,
-        |             m.m + 3.5 * 1.4826 * md.mad AS hi FROM m, md)
-        |SELECT 'l_extendedprice' AS field, round(m, 4) AS median,
-        |  round(mad, 4) AS mad, round(lo, 4) AS lo, round(hi, 4) AS hi,
-        |  (SELECT count(*) FROM lineitem, b
-        |   WHERE l_extendedprice < b.lo OR l_extendedprice > b.hi) AS n_outliers,
-        |  (SELECT count(l_extendedprice) FROM lineitem) AS n_rows
-        |FROM b""".stripMargin,
-
-    "q_seq_dedup" ->
-      s"""WITH $SeqTableCte,
-        |doubled AS (
-        |  SELECT did AS doc_id, toks FROM s2
-        |  UNION ALL
-        |  SELECT 'dup_' || did, toks FROM s2)
-        |SELECT count(*) AS n_groups, sum(n_docs)::BIGINT AS n_docs_total FROM (
-        |  SELECT toks, count(*) AS n_docs FROM doubled
-        |  GROUP BY toks HAVING count(*) > 1)""".stripMargin,
-
-    "q_pack_windows" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, toks FROM s2 WHERE starts_with(did, 'doc_')),
-        |o AS (SELECT did, toks,
-        |        CAST(coalesce(sum(len(toks)) OVER (ORDER BY did
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS BIGINT) AS toff
-        |      FROM corpus),
-        |t AS (SELECT toff + pos AS gpos, tok FROM (
-        |        SELECT toff, unnest(toks) AS tok,
-        |               unnest(range(0, len(toks))) AS pos FROM o))
-        |SELECT gpos // 512 AS window_id, count(*) AS n_tok,
-        |       CAST(sum(tok) AS BIGINT) AS tok_sum,
-        |       CAST(arg_min(tok, gpos) AS BIGINT) AS first_tok,
-        |       CAST(arg_max(tok, gpos) AS BIGINT) AS last_tok
-        |FROM t GROUP BY 1 ORDER BY window_id""".stripMargin,
-
-    "q_span_scrub" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, toks FROM s2 WHERE starts_with(did, 'doc_')),
-        |gp AS (SELECT did, pos, toks[pos + 1 : pos + 3] AS g FROM (
-        |         SELECT did, toks,
-        |                unnest(range(0, greatest(len(toks) - 2, 0))) AS pos
-        |         FROM corpus)),
-        |dup AS (SELECT g FROM (
-        |          SELECT g, count(DISTINCT did) AS nd FROM gp GROUP BY g)
-        |        WHERE nd >= 2),
-        |st AS (SELECT did, list_sort(list(pos)) AS starts
-        |       FROM gp JOIN dup USING (g) GROUP BY did),
-        |r AS (SELECT c.did, c.toks, coalesce(s.starts, []) AS starts
-        |      FROM corpus c LEFT JOIN st s USING (did)),
-        |k AS (SELECT did, toks,
-        |        list_transform(
-        |          list_filter(range(0, len(toks)),
-        |            p -> len(list_filter(starts,
-        |                   q -> q <= p AND p < q + 3)) = 0),
-        |          p -> toks[p + 1]) AS kept
-        |      FROM r)
-        |SELECT did AS doc_id, CAST(len(toks) AS BIGINT) AS n_orig,
-        |       CAST(len(kept) AS BIGINT) AS n_kept,
-        |       CAST(coalesce(list_sum(kept), 0) AS BIGINT) AS kept_sum
-        |FROM k ORDER BY doc_id""".stripMargin,
-
-    "q_token_diversity" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, toks FROM s2 WHERE starts_with(did, 'doc_')),
-        |g AS (SELECT did,
-        |        list_transform(range(0, greatest(len(toks) - 2, 0)),
-        |                       i -> toks[i + 1 : i + 3]) AS gl
-        |      FROM corpus),
-        |g2 AS (SELECT did, len(gl) AS wins, unnest(gl) AS gr
-        |       FROM g WHERE len(gl) > 0),
-        |d AS (SELECT did,
-        |        round(count(DISTINCT gr) / any_value(wins), 6) AS gd
-        |      FROM g2 GROUP BY did)
-        |SELECT c.did AS doc_id, d.gd AS gram_diversity
-        |FROM corpus c LEFT JOIN d ON c.did = d.did
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_quarantine_clean" ->
-      s"""WITH $SeqTableCte,
-        |v AS (SELECT *,
-        |  (did IS NULL OR regexp_matches(did, '^\\s*$$'))
-        |  OR (NOT regexp_matches(did, '^(?:doc_[0-9]{12})$$'))
-        |  OR (n_tok <> len(toks))
-        |  OR (NOT (list_max(toks) < 50000 AND list_min(toks) >= 0))
-        |  OR (source NOT IN ('web','books','code','wiki')) AS bad
-        |  FROM s2)
-        |SELECT count(*) AS n_clean, CAST(sum(n_tok) AS BIGINT) AS sum_ntok,
-        |       CAST(sum(len(toks)) AS BIGINT) AS sum_size,
-        |       min(did) AS min_doc, max(did) AS max_doc
-        |FROM v WHERE NOT bad""".stripMargin,
-
-    "q_quarantine_dirty" ->
-      s"""WITH $SeqTableCte,
-        |v AS (SELECT array_to_string(list_filter([
-        |    CASE WHEN did IS NULL OR regexp_matches(did, '^\\s*$$')
-        |         THEN 'R_NONNULL_DOCID' END,
-        |    CASE WHEN NOT regexp_matches(did, '^(?:doc_[0-9]{12})$$')
-        |         THEN 'R_REGEX_DOCID' END,
-        |    CASE WHEN n_tok <> len(toks) THEN 'R_NTOK_EQ_SIZE' END,
-        |    CASE WHEN NOT (list_max(toks) < 50000 AND list_min(toks) >= 0)
-        |         THEN 'R_TOKEN_RANGE' END,
-        |    CASE WHEN source NOT IN ('web','books','code','wiki')
-        |         THEN 'R_ENUM_SOURCE' END], x -> x IS NOT NULL), ',') AS rules
-        |  FROM s2)
-        |SELECT rules, count(*) AS n_rows FROM v WHERE rules <> ''
-        |GROUP BY rules ORDER BY rules""".stripMargin,
-
-    "q_concat_pack" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, n_tok FROM s2 WHERE starts_with(did, 'doc_')),
-        |o AS (SELECT did, n_tok,
-        |        CAST(coalesce(sum(n_tok) OVER (ORDER BY did
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS BIGINT) AS tok_offset
-        |      FROM corpus)
-        |SELECT did AS doc_id, CAST(n_tok AS BIGINT) AS n_tok, tok_offset,
-        |       tok_offset // 512 AS first_window,
-        |       CASE WHEN n_tok > 0 THEN (tok_offset + n_tok - 1) // 512
-        |            ELSE tok_offset // 512 END AS last_window
-        |FROM o ORDER BY doc_id""".stripMargin,
-
-    "q_decontaminate" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, toks FROM s2 WHERE starts_with(did, 'doc_')),
-        |bench AS (
-        |  SELECT list_transform(range(1, doc_id % 7 + 5),
-        |                        i -> (doc_id * 31 + i * 17) % 50000) AS btoks
-        |  FROM documents WHERE doc_id % 89 = 0),
-        |bg AS (SELECT DISTINCT g FROM (
-        |  SELECT unnest(list_transform(range(0, greatest(len(btoks) - 2, 0)),
-        |                               i -> btoks[i + 1 : i + 3])) AS g
-        |  FROM bench)),
-        |cg AS (SELECT DISTINCT did, g FROM (
-        |  SELECT did, unnest(list_transform(range(0, greatest(len(toks) - 2, 0)),
-        |                                    i -> toks[i + 1 : i + 3])) AS g
-        |  FROM corpus)),
-        |ng AS (SELECT did, count(*) AS n_grams FROM cg GROUP BY did),
-        |m AS (SELECT did, count(*) AS n_matched
-        |      FROM cg JOIN bg USING (g) GROUP BY did)
-        |SELECT m.did AS doc_id, ng.n_grams, m.n_matched,
-        |       round(m.n_matched / ng.n_grams, 6) AS contamination_rate
-        |FROM m JOIN ng USING (did)
-        |WHERE m.n_matched >= 1
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_decontam_clean" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, toks, n_tok FROM s2 WHERE starts_with(did, 'doc_')),
-        |bench AS (
-        |  SELECT list_transform(range(1, doc_id % 7 + 5),
-        |                        i -> (doc_id * 31 + i * 17) % 50000) AS btoks
-        |  FROM documents WHERE doc_id % 89 = 0),
-        |bg AS (SELECT DISTINCT g FROM (
-        |  SELECT unnest(list_transform(range(0, greatest(len(btoks) - 2, 0)),
-        |                               i -> btoks[i + 1 : i + 3])) AS g
-        |  FROM bench)),
-        |cg AS (SELECT DISTINCT did, g FROM (
-        |  SELECT did, unnest(list_transform(range(0, greatest(len(toks) - 2, 0)),
-        |                                    i -> toks[i + 1 : i + 3])) AS g
-        |  FROM corpus)),
-        |bad AS (SELECT DISTINCT did FROM cg JOIN bg USING (g))
-        |SELECT count(*) AS n_clean, CAST(sum(n_tok) AS BIGINT) AS sum_ntok
-        |FROM corpus WHERE did NOT IN (SELECT did FROM bad)""".stripMargin,
-
-    "q_line_dedup" ->
-      """WITH aug AS (
-        |  SELECT doc_id, text ||
-        |    (CASE WHEN doc_id % 3 = 0
-        |          THEN chr(10) || 'follow us on example social' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 7 = 0
-        |          THEN chr(10) || 'all rights reserved' ELSE '' END) AS text
-        |  FROM documents),
-        |l AS (
-        |  SELECT doc_id, unnest(sp) AS line, unnest(range(0, len(sp))) AS pos
-        |  FROM (SELECT doc_id, string_split(text, chr(10)) AS sp FROM aug)),
-        |f AS (SELECT line FROM l GROUP BY line HAVING count(*) >= 3),
-        |k AS (SELECT doc_id, pos, line FROM l
-        |      WHERE line NOT IN (SELECT line FROM f))
-        |SELECT a.doc_id,
-        |       coalesce(s.txt, '') AS text
-        |FROM aug a LEFT JOIN (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS txt
-        |  FROM k GROUP BY doc_id) s USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // TF-IDF replicated exactly: same word split as q_word_jaccard, raw
-    // idf = ln(N/df), ties on (score desc, word asc) — identical (tf,
-    // df) inputs yield bit-identical doubles in both engines
-    "q_tfidf" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '')) AS word
-        |  FROM documents),
-        |tf AS (SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2),
-        |dfc AS (SELECT word, count(*) AS dfc FROM tf GROUP BY 1),
-        |n AS (SELECT count(*)::DOUBLE AS n FROM documents)
-        |SELECT doc_id, rank, word, round(score, 6) AS tfidf FROM (
-        |  SELECT tf.doc_id, tf.word, tf.tf * ln(n.n / dfc.dfc) AS score,
-        |         CAST(row_number() OVER (PARTITION BY tf.doc_id
-        |           ORDER BY tf.tf * ln(n.n / dfc.dfc) DESC, tf.word)
-        |           AS INTEGER) AS rank
-        |  FROM tf JOIN dfc USING (word), n)
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // within-doc first-occurrence dedup: min-subscript per (doc, unit),
-    // rejoin in first-appearance order; n_dropped = total − distinct
-    "q_intradoc_dedup" ->
-      """WITH l AS (SELECT doc_id, string_split(text, ' ') AS ls
-        |           FROM documents),
-        |e AS (SELECT doc_id, unnest(ls) AS line,
-        |             generate_subscripts(ls, 1) AS idx FROM l),
-        |g AS (SELECT doc_id, line, min(idx) AS mi, count(*) AS c
-        |      FROM e GROUP BY 1, 2)
-        |SELECT doc_id,
-        |       CAST(sum(c) - count(*) AS BIGINT) AS n_dropped,
-        |       string_agg(line, ' ' ORDER BY mi) AS text
-        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // cross-doc chunk dedup: winner per chunk CONTENT at min (doc_id,
-    // pos); rebuild per doc in position order, '' when nothing survives
-    "q_chunk_dedup" ->
-      """WITH w AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '') AS ws FROM documents),
-        |c AS (
-        |  SELECT doc_id, generate_subscripts(chunks, 1) - 1 AS pos,
-        |         unnest(chunks) AS chunk
-        |  FROM (SELECT doc_id,
-        |          CASE WHEN len(ws) = 0 THEN CAST([] AS VARCHAR[])
-        |          ELSE list_transform(range(0, (len(ws) - 1) // 12 + 1),
-        |            i -> array_to_string(ws[(i*12+1):(i*12+12)], ' '))
-        |          END AS chunks
-        |        FROM w)),
-        |win AS (
-        |  SELECT doc_id, pos, chunk FROM c
-        |  QUALIFY row_number() OVER (PARTITION BY chunk
-        |                             ORDER BY doc_id, pos) = 1),
-        |kept AS (
-        |  SELECT doc_id, count(*) AS n_kept,
-        |         array_to_string(list(chunk ORDER BY pos), ' ')
-        |           AS text_deduped
-        |  FROM win GROUP BY doc_id)
-        |SELECT w.doc_id,
-        |  CAST(CASE WHEN len(w.ws) = 0 THEN 0
-        |       ELSE (len(w.ws) - 1) // 12 + 1 END AS BIGINT) AS n_chunks,
-        |  CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
-        |  coalesce(k.text_deduped, '') AS text_deduped
-        |FROM w LEFT JOIN kept k ON w.doc_id = k.doc_id
-        |ORDER BY w.doc_id""".stripMargin,
-
-    // BM25: per-term tf from the word list, corpus stats in one
-    // aggregate, the Lucene ln(1 + (N-df+0.5)/(df+0.5)) idf; constants
-    // spelled as the same double arithmetic Spark folds ((1.2+1.0),
-    // (1.0-0.75)) so scores are bit-identical before the 6dp round
-    "q_bm25" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x <> '')) AS dl,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x = 'spark')) AS tf_spark,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x = 'window')) AS tf_window,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x = 'merge')) AS tf_merge
-        |  FROM documents),
-        |stats AS (
-        |  SELECT count(*) AS n, avg(dl) AS avgdl,
-        |    sum(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END) AS df_spark,
-        |    sum(CASE WHEN tf_window > 0 THEN 1 ELSE 0 END) AS df_window,
-        |    sum(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-        |  FROM base)
-        |SELECT doc_id, round(
-        |    CAST(tf_spark AS DOUBLE) * (1.2 + 1.0)
-        |      / (tf_spark + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-        |      * ln(1 + (n - df_spark + 0.5) / (df_spark + 0.5))
-        |  + CAST(tf_window AS DOUBLE) * (1.2 + 1.0)
-        |      / (tf_window + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-        |      * ln(1 + (n - df_window + 0.5) / (df_window + 0.5))
-        |  + CAST(tf_merge AS DOUBLE) * (1.2 + 1.0)
-        |      / (tf_merge + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-        |      * ln(1 + (n - df_merge + 0.5) / (df_merge + 0.5)), 6)
-        |  AS bm25
-        |FROM base, stats
-        |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin,
-
-    // order-1 LM quality proxy: ln p(w) under the corpus unigram
-    // distribution; 6dp absorbs distributed-vs-sequential sum order
-    "q_unigram_logprob" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(
-        |    lower(trim(text)), '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |freq AS (SELECT w, count(*) AS n FROM tok GROUP BY w),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM freq),
-        |sc AS (
-        |  SELECT tok.doc_id, count(*) AS n_words,
-        |         round(sum(ln(CAST(freq.n AS DOUBLE) / tot.total))
-        |           / count(*), 6) AS avg_logprob
-        |  FROM tok JOIN freq USING (w), tot
-        |  GROUP BY tok.doc_id)
-        |SELECT d.doc_id, CAST(coalesce(sc.n_words, 0) AS BIGINT) AS n_words,
-        |       sc.avg_logprob
-        |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Zipf fit: OLS of ln(freq) on ln(rank) over the vocab-sized
-    // frequency frame (rank deterministic: freq desc, word asc)
-    "q_zipf_fit" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(
-        |    lower(trim(text)), '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |freq AS (SELECT w, count(*) AS n FROM tok GROUP BY w),
-        |r AS (SELECT n, row_number() OVER (ORDER BY n DESC, w) AS rk
-        |      FROM freq)
-        |SELECT round(regr_slope(ln(n), ln(rk)), 6) AS zipf_slope,
-        |       round(regr_r2(ln(n), ln(rk)), 6) AS zipf_r2,
-        |       count(*) AS vocab_size
-        |FROM r""".stripMargin,
-
-    // inverted index: df / total tf / the 10 smallest doc_ids per word
-    // (the oracle materializes full posting lists — tiny at sf; the
-    // engine's CollectMinK never does)
-    "q_postings" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(
-        |    lower(trim(text)), '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |tf AS (SELECT w, doc_id, count(*) AS tf FROM tok GROUP BY 1, 2)
-        |SELECT w AS word, count(*) AS df,
-        |       CAST(sum(tf) AS BIGINT) AS tf_total,
-        |       array_to_string(list_sort(list(doc_id))[1:10], ' ')
-        |         AS postings
-        |FROM tf GROUP BY w ORDER BY word""".stripMargin,
-
-    // bigram conditional logprob: lead() forms the bigrams, MLE
-    // p(next|prev) from the corpus's own counts; 6dp absorbs
-    // distributed-vs-sequential sum order (the unigram convention)
-    "q_bigram_logprob" ->
-      """WITH tok AS (
-        |  SELECT doc_id, generate_subscripts(ws, 1) AS pos,
-        |         unnest(ws) AS w
-        |  FROM (SELECT doc_id, list_filter(string_split_regex(
-        |          lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |bp AS (
-        |  SELECT doc_id, w AS p,
-        |         lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS x
-        |  FROM tok QUALIFY x IS NOT NULL),
-        |cnt AS (SELECT p, x, count(*) AS n FROM bp GROUP BY 1, 2),
-        |ctx AS (SELECT p, CAST(sum(n) AS BIGINT) AS tot FROM cnt
-        |        GROUP BY 1),
-        |sc AS (
-        |  SELECT bp.doc_id, count(*) AS n_bigrams,
-        |         round(sum(ln(CAST(cnt.n AS DOUBLE) / ctx.tot))
-        |           / count(*), 6) AS avg_logprob
-        |  FROM bp JOIN cnt USING (p, x) JOIN ctx USING (p)
-        |  GROUP BY bp.doc_id)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(sc.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |       sc.avg_logprob
-        |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // outlink extraction replayed by DuckDB's own regex engine over the
-    // identically-synthesized pages, rolled to per-doc degrees
-    "q_outlinks" ->
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |pg AS (
-        |  SELECT doc_id,
-        |    '<html><body><nav><a href="/home">Home</a></nav><p>filler</p>'
-        |    || CASE WHEN doc_id % 17 <> 0 THEN
-        |         '<a href="doc://' || CAST((doc_id*7+1) % nn.n AS VARCHAR)
-        |         || '">a</a> <a href="doc://'
-        |         || CAST((doc_id*13+3) % nn.n AS VARCHAR)
-        |         || '">b</a> <a href="doc://'
-        |         || CAST((doc_id+1) % nn.n AS VARCHAR) || '">c</a>'
-        |       ELSE '' END || '</body></html>' AS html
-        |  FROM documents, nn),
-        |e AS (SELECT DISTINCT doc_id AS src, CAST(dst AS BIGINT) AS dst
-        |      FROM (SELECT doc_id, unnest(regexp_extract_all(
-        |              html, 'href="doc://(\d+)"', 1)) AS dst FROM pg)),
-        |outd AS (SELECT src, count(*) AS c FROM e GROUP BY 1),
-        |ind AS (SELECT dst, count(*) AS c FROM e GROUP BY 1)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(outd.c, 0) AS BIGINT) AS out_degree,
-        |       CAST(coalesce(ind.c, 0) AS BIGINT) AS in_degree
-        |FROM documents d
-        |LEFT JOIN outd ON d.doc_id = outd.src
-        |LEFT JOIN ind ON d.doc_id = ind.dst
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // PageRank: the four iterations replayed as chained CTEs — same
-    // init 1/N, same (1-d)/N + d*(contrib + dangling/N) update, same
-    // 6dp terminal round (FP sum-order differences are ~1e-15)
-    "q_pagerank" ->
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT doc_id AS src, unnest([(doc_id*7+1) % nn.n,
-        |    (doc_id*13+3) % nn.n, (doc_id+1) % nn.n]) AS dst
-        |  FROM documents, nn WHERE doc_id % 17 <> 0)),
-        |od AS (SELECT src, CAST(count(*) AS DOUBLE) AS od FROM e GROUP BY 1),
-        |v AS (SELECT d.doc_id AS id, od.od FROM documents d
-        |      LEFT JOIN od ON d.doc_id = od.src),
-        |nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-        |r0 AS (SELECT id, od, 1.0/nd.n AS r FROM v, nd),
-        |m1 AS (SELECT coalesce(sum(r), 0) AS m FROM r0 WHERE od IS NULL),
-        |c1 AS (SELECT e.dst AS id, sum(r0.r/r0.od) AS c FROM e
-        |       JOIN r0 ON e.src = r0.id GROUP BY 1),
-        |r1 AS (SELECT v.id, v.od,
-        |         0.15/nd.n + 0.85*(coalesce(c1.c, 0) + m1.m/nd.n) AS r
-        |       FROM v CROSS JOIN nd CROSS JOIN m1
-        |       LEFT JOIN c1 ON v.id = c1.id),
-        |m2 AS (SELECT coalesce(sum(r), 0) AS m FROM r1 WHERE od IS NULL),
-        |c2 AS (SELECT e.dst AS id, sum(r1.r/r1.od) AS c FROM e
-        |       JOIN r1 ON e.src = r1.id GROUP BY 1),
-        |r2 AS (SELECT v.id, v.od,
-        |         0.15/nd.n + 0.85*(coalesce(c2.c, 0) + m2.m/nd.n) AS r
-        |       FROM v CROSS JOIN nd CROSS JOIN m2
-        |       LEFT JOIN c2 ON v.id = c2.id),
-        |m3 AS (SELECT coalesce(sum(r), 0) AS m FROM r2 WHERE od IS NULL),
-        |c3 AS (SELECT e.dst AS id, sum(r2.r/r2.od) AS c FROM e
-        |       JOIN r2 ON e.src = r2.id GROUP BY 1),
-        |r3 AS (SELECT v.id, v.od,
-        |         0.15/nd.n + 0.85*(coalesce(c3.c, 0) + m3.m/nd.n) AS r
-        |       FROM v CROSS JOIN nd CROSS JOIN m3
-        |       LEFT JOIN c3 ON v.id = c3.id),
-        |m4 AS (SELECT coalesce(sum(r), 0) AS m FROM r3 WHERE od IS NULL),
-        |c4 AS (SELECT e.dst AS id, sum(r3.r/r3.od) AS c FROM e
-        |       JOIN r3 ON e.src = r3.id GROUP BY 1),
-        |r4 AS (SELECT v.id, v.od,
-        |         0.15/nd.n + 0.85*(coalesce(c4.c, 0) + m4.m/nd.n) AS r
-        |       FROM v CROSS JOIN nd CROSS JOIN m4
-        |       LEFT JOIN c4 ON v.id = c4.id)
-        |SELECT id AS doc_id, round(r, 6) AS rank FROM r4
-        |ORDER BY doc_id""".stripMargin,
-
-    // hourly volume z-scores: same trailing ROWS frame, same
-    // sd>0-guarded z, anomaly from the ROUNDED z on both sides
-    "q_volume_anomaly" ->
-      """WITH c AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS h, count(*) AS n
-        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |w AS (
-        |  SELECT event_type, h, n,
-        |         avg(CAST(n AS DOUBLE)) OVER win AS mu,
-        |         stddev_samp(CAST(n AS DOUBLE)) OVER win AS sd
-        |  FROM c WINDOW win AS (PARTITION BY event_type ORDER BY h
-        |    ROWS BETWEEN 6 PRECEDING AND 1 PRECEDING)),
-        |z AS (
-        |  SELECT event_type, h, n,
-        |         CASE WHEN sd > 0
-        |           THEN round((CAST(n AS DOUBLE) - mu)/sd, 6) END AS z
-        |  FROM w)
-        |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, n, z,
-        |       coalesce(abs(z) >= 2.0, false) AS anomaly
-        |FROM z ORDER BY event_type, hour""".stripMargin,
-
-    // key-skew diagnostics: per-key counts then one global fold; the
-    // hot-key tie (uniform keys!) breaks on (count, key-string) in both
-    // engines
-    "q_key_skew" ->
-      """WITH pk AS (
-        |  SELECT coalesce(CAST(o_custkey AS VARCHAR), '<null>') AS k,
-        |         count(*) AS n
-        |  FROM orders GROUP BY 1)
-        |SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |       count(*) AS n_keys,
-        |       (SELECT k FROM pk ORDER BY n DESC, k DESC LIMIT 1)
-        |         AS max_key,
-        |       CAST(max(n) AS BIGINT) AS max_count,
-        |       round(CAST(max(n) AS DOUBLE)/sum(n), 6) AS max_share,
-        |       round(sum(CAST(n AS DOUBLE)*CAST(n AS DOUBLE))
-        |         / (CAST(sum(n) AS DOUBLE)*CAST(sum(n) AS DOUBLE)), 6)
-        |         AS hhi,
-        |       round(ln(CAST(sum(n) AS DOUBLE))
-        |         - sum(CAST(n AS DOUBLE)*ln(CAST(n AS DOUBLE)))
-        |           / CAST(sum(n) AS DOUBLE), 6) AS entropy
-        |FROM pk""".stripMargin,
-
-    // HITS: both iterations replayed as chained CTEs — same hub₀=1,
-    // same L1 sum normalization, same 6dp terminal round (the pagerank
-    // FP argument: sum-order differences are ~1e-15, far under 6dp)
-    "q_hits" ->
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT doc_id AS src, unnest([(doc_id*7+1) % nn.n,
-        |    (doc_id*13+3) % nn.n, (doc_id+1) % nn.n]) AS dst
-        |  FROM documents, nn WHERE doc_id % 17 <> 0)),
-        |v AS (SELECT doc_id AS id FROM documents),
-        |h0 AS (SELECT id, 1.0 AS h FROM v),
-        |a1r AS (SELECT e.dst AS id, sum(h0.h) AS a FROM e
-        |        JOIN h0 ON e.src = h0.id GROUP BY 1),
-        |a1f AS (SELECT v.id, coalesce(a1r.a, 0) AS a
-        |        FROM v LEFT JOIN a1r ON v.id = a1r.id),
-        |a1s AS (SELECT sum(a) AS s FROM a1f),
-        |a1 AS (SELECT id, CASE WHEN a1s.s > 0 THEN a / a1s.s
-        |                       ELSE 0.0 END AS a FROM a1f, a1s),
-        |h1r AS (SELECT e.src AS id, sum(a1.a) AS h FROM e
-        |        JOIN a1 ON e.dst = a1.id GROUP BY 1),
-        |h1f AS (SELECT v.id, coalesce(h1r.h, 0) AS h
-        |        FROM v LEFT JOIN h1r ON v.id = h1r.id),
-        |h1s AS (SELECT sum(h) AS s FROM h1f),
-        |h1 AS (SELECT id, CASE WHEN h1s.s > 0 THEN h / h1s.s
-        |                       ELSE 0.0 END AS h FROM h1f, h1s),
-        |a2r AS (SELECT e.dst AS id, sum(h1.h) AS a FROM e
-        |        JOIN h1 ON e.src = h1.id GROUP BY 1),
-        |a2f AS (SELECT v.id, coalesce(a2r.a, 0) AS a
-        |        FROM v LEFT JOIN a2r ON v.id = a2r.id),
-        |a2s AS (SELECT sum(a) AS s FROM a2f),
-        |a2 AS (SELECT id, CASE WHEN a2s.s > 0 THEN a / a2s.s
-        |                       ELSE 0.0 END AS a FROM a2f, a2s),
-        |h2r AS (SELECT e.src AS id, sum(a2.a) AS h FROM e
-        |        JOIN a2 ON e.dst = a2.id GROUP BY 1),
-        |h2f AS (SELECT v.id, coalesce(h2r.h, 0) AS h
-        |        FROM v LEFT JOIN h2r ON v.id = h2r.id),
-        |h2s AS (SELECT sum(h) AS s FROM h2f),
-        |h2 AS (SELECT id, CASE WHEN h2s.s > 0 THEN h / h2s.s
-        |                       ELSE 0.0 END AS h FROM h2f, h2s)
-        |SELECT h2.id AS doc_id, round(h2.h, 6) AS hub,
-        |       round(a2.a, 6) AS authority
-        |FROM h2 JOIN a2 ON h2.id = a2.id
-        |ORDER BY doc_id""".stripMargin,
-
-    // power-of-two in-degree histogram: same ln-ratio bucket with the
-    // same +1e-12 exact-power guard on both sides
-    "q_degree_dist" ->
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT doc_id AS src, unnest([(doc_id*7+1) % nn.n,
-        |    (doc_id*13+3) % nn.n, (doc_id+1) % nn.n]) AS dst
-        |  FROM documents, nn WHERE doc_id % 17 <> 0)),
-        |ind AS (SELECT dst, count(*) AS c FROM e GROUP BY 1),
-        |deg AS (SELECT d.doc_id, coalesce(ind.c, 0) AS dg
-        |        FROM documents d LEFT JOIN ind ON d.doc_id = ind.dst)
-        |SELECT CASE WHEN dg <= 0 THEN CAST(-1 AS BIGINT)
-        |            ELSE CAST(floor(ln(CAST(dg AS DOUBLE))/ln(2.0) + 1e-12)
-        |                      AS BIGINT) END AS bucket,
-        |       CAST(count(*) AS BIGINT) AS n_vertices
-        |FROM deg GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // PMI over the head vocab: same top-30 vocab (count desc, word asc
-    // — the q_tokenize spelling), document-level pair counts a < b,
-    // ln of the exact integer ratio, ranked on the ROUNDED score
-    "q_pmi" ->
-      """WITH wl AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '') AS l FROM documents),
-        |allw AS (SELECT doc_id, unnest(l) AS word FROM wl),
-        |vocab AS (SELECT word FROM (
-        |  SELECT word, count(*) AS n FROM allw GROUP BY 1
-        |  ORDER BY n DESC, word LIMIT 30)),
-        |tok AS (SELECT DISTINCT doc_id, word FROM allw
-        |        WHERE word IN (SELECT word FROM vocab)),
-        |cw AS (SELECT word, count(*) AS c FROM tok GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |pr AS (SELECT a.word AS word_a, b.word AS word_b,
-        |              count(*) AS pair_n
-        |       FROM tok a JOIN tok b
-        |         ON a.doc_id = b.doc_id AND a.word < b.word
-        |       GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT word_a, word_b, pair_n,
-        |       round(ln(pair_n * 1.0 * nn.n / (ca.c * cb.c)), 6) AS pmi
-        |FROM pr, nn
-        |JOIN cw ca ON pr.word_a = ca.word
-        |JOIN cw cb ON pr.word_b = cb.word
-        |ORDER BY pmi DESC, word_a, word_b LIMIT 25""".stripMargin,
-
-    // word-set containment: same first-half prefix construction (floor
-    // of the same float division), same NULL-for-empty-query contract
-    "q_containment" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-        |wl AS (SELECT doc_id, list_filter(string_split_regex(
-        |         lower(trim(text)), '\s+'), x -> x <> '') AS l FROM d),
-        |q AS (SELECT doc_id + 1000000 AS q_id,
-        |             l[1:CAST(floor((len(l)+1)/2) AS BIGINT)] AS ql FROM wl),
-        |qtok AS (SELECT q_id, unnest(list_distinct(ql)) AS w FROM q),
-        |dtok AS (SELECT doc_id AS d_id, unnest(list_distinct(l)) AS w FROM wl),
-        |pairs AS (SELECT doc_id + 1000000 AS q_id, doc_id AS d_id FROM d
-        |          UNION ALL
-        |          SELECT doc_id + 1000000, (doc_id + 1) % 200 FROM d),
-        |inter AS (SELECT p.q_id, p.d_id, count(*) AS ni
-        |          FROM pairs p
-        |          JOIN qtok ON p.q_id = qtok.q_id
-        |          JOIN dtok ON p.d_id = dtok.d_id AND qtok.w = dtok.w
-        |          GROUP BY 1, 2),
-        |den AS (SELECT q_id, count(*) AS nd FROM qtok GROUP BY 1)
-        |SELECT p.q_id, p.d_id,
-        |       CASE WHEN den.nd IS NOT NULL
-        |            THEN round(coalesce(inter.ni, 0) * 1.0 / den.nd, 6)
-        |       END AS containment
-        |FROM pairs p
-        |LEFT JOIN inter ON p.q_id = inter.q_id AND p.d_id = inter.d_id
-        |LEFT JOIN den ON p.q_id = den.q_id
-        |ORDER BY p.q_id, p.d_id""".stripMargin,
-
-    // percent_rank is rank-based — ties share a value, deterministic
-    // in both engines without an id tie-break
-    "q_quantile_norm" ->
-      """SELECT doc_id, source, n_chars,
-        |       round(percent_rank() OVER (
-        |         PARTITION BY source ORDER BY n_chars), 6) AS pct_rank
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // retention cohorts: distinct (user, day) activity, min-day cohort,
-    // integer day offsets — exact on both sides
-    "q_retention" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id AS u,
-        |         CAST(date_trunc('day', ts) AS DATE) AS day
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |coh AS (SELECT u, min(day) AS cohort_day FROM act GROUP BY 1)
-        |SELECT strftime(coh.cohort_day, '%Y-%m-%d') AS cohort_day,
-        |       CAST(date_diff('day', coh.cohort_day, act.day) AS BIGINT)
-        |         AS day_offset,
-        |       CAST(count(*) AS BIGINT) AS n_users
-        |FROM act JOIN coh ON act.u = coh.u
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // URL features: same synthesized URL, same RE2-safe extraction
-    // chain (anchored single-occurrence patterns — no 'g' flag needed)
-    "q_url_features" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END)
-        |    || 'www.' || lower(source) || '.example.com'
-        |    || (CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END)
-        |    || '/a/b' || (CASE WHEN doc_id % 4 = 0 THEN '/c/d' ELSE '' END)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN '?x=1&y=2&' ELSE '' END)
-        |    || (CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END) AS url
-        |  FROM documents),
-        |f AS (SELECT doc_id, url,
-        |  regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) AS s0,
-        |  regexp_replace(regexp_replace(
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1),
-        |    '^[^@]*@', ''), ':[0-9]*$', '') AS h1,
-        |  regexp_extract(url,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(/[^?#]*)', 1) AS path,
-        |  regexp_extract(url, '\?([^#]*)', 1) AS q FROM u)
-        |SELECT doc_id,
-        |  CASE WHEN s0 <> '' THEN lower(s0) END AS scheme,
-        |  CASE WHEN h1 <> '' THEN lower(h1) END AS host,
-        |  CAST(len(list_filter(string_split(path, '/'), x -> x <> ''))
-        |       AS BIGINT) AS path_depth,
-        |  CASE WHEN q = '' THEN CAST(0 AS BIGINT)
-        |       ELSE CAST(len(list_filter(string_split(q, '&'),
-        |                                 x -> x <> '')) AS BIGINT)
-        |  END AS n_params,
-        |  contains(url, '#') AS has_fragment
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // data card: same canonical word split, fractions from integer
-    // counts in the same expression order
-    "q_data_card" ->
-      """WITH d AS (SELECT source, lang,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS nt
-        |  FROM documents)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  round(CAST(sum(nt) AS DOUBLE) / count(*), 6) AS avg_tokens,
-        |  round(CAST(sum(CASE WHEN nt < 20 THEN 1 ELSE 0 END) AS DOUBLE)
-        |        / count(*), 6) AS short_frac,
-        |  CAST(sum(CASE WHEN nt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty,
-        |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // conversion funnel: chained min-after-previous-stage CTEs; a
-    // zero-user stage still reports its row
-    "q_conversion" ->
-      """WITH e AS (SELECT user_id AS u, ts, event_type FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |s1 AS (SELECT u, min(ts) AS t FROM e
-        |       WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.u, min(e.ts) AS t FROM e
-        |       JOIN s1 ON e.u = s1.u AND e.ts > s1.t
-        |       WHERE e.event_type = 'click' GROUP BY 1),
-        |s3 AS (SELECT e.u, min(e.ts) AS t FROM e
-        |       JOIN s2 ON e.u = s2.u AND e.ts > s2.t
-        |       WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) AS stage_idx, 'view' AS stage,
-        |         CAST(count(*) AS BIGINT) AS n_users FROM s1
-        |  UNION ALL SELECT 2, 'click', CAST(count(*) AS BIGINT) FROM s2
-        |  UNION ALL SELECT 3, 'purchase', CAST(count(*) AS BIGINT) FROM s3)
-        |ORDER BY stage_idx""".stripMargin,
-
-    // confusion matrix: the q_langid_dist scoring CTEs with the lang
-    // label joined back for the (label, prediction) rollup
-    "q_lang_confusion" ->
-      """WITH dw AS (
-        |  SELECT DISTINCT doc_id, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> '')) AS word
-        |  FROM documents),
-        |sc AS (
-        |  SELECT doc_id,
-        |    sum(CASE WHEN word IN ('der','die','und','das','ist','von','den','mit','für','auf') THEN 1 ELSE 0 END) AS s_de,
-        |    sum(CASE WHEN word IN ('the','and','of','to','in','is','that','it','was','for') THEN 1 ELSE 0 END) AS s_en,
-        |    sum(CASE WHEN word IN ('el','la','de','que','y','en','los','se','del','las') THEN 1 ELSE 0 END) AS s_es,
-        |    sum(CASE WHEN word IN ('le','la','les','de','des','et','est','dans','que','une') THEN 1 ELSE 0 END) AS s_fr
-        |  FROM dw GROUP BY doc_id),
-        |zh AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN strpos(text,'的')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'了')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'是')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'在')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'我')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'有')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'他')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'这')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'中')>0 THEN 1 ELSE 0 END
-        |   + CASE WHEN strpos(text,'大')>0 THEN 1 ELSE 0 END)::BIGINT AS s_zh
-        |  FROM documents),
-        |pick AS (
-        |  SELECT d.doc_id, d.lang,
-        |    list_max([
-        |      {'s': coalesce(sc.s_de, 0)::BIGINT, 'l': 'de'},
-        |      {'s': coalesce(sc.s_en, 0)::BIGINT, 'l': 'en'},
-        |      {'s': coalesce(sc.s_es, 0)::BIGINT, 'l': 'es'},
-        |      {'s': coalesce(sc.s_fr, 0)::BIGINT, 'l': 'fr'},
-        |      {'s': zh.s_zh, 'l': 'zh'}]) AS best
-        |  FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |  JOIN zh ON d.doc_id = zh.doc_id)
-        |SELECT lang, lang_pred, count(*) AS n FROM (
-        |  SELECT lang, CASE WHEN best.s > 0 THEN best.l ELSE 'und' END
-        |    AS lang_pred FROM pick)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // dyadic-probability exact percentiles: idx = p·(n−1) linear
-    // interpolation on integer inputs — bit-identical in both engines
-    "q_len_percentiles" ->
-      """SELECT source,
-        |       quantile_cont(n_chars, 0.25) AS p25,
-        |       quantile_cont(n_chars, 0.5)  AS p50,
-        |       quantile_cont(n_chars, 0.75) AS p75
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // md5 matches across engines (the oracle-parity convention)
-    "q_dup_hist" ->
-      """WITH planted AS (
-        |  SELECT text FROM documents
-        |  UNION ALL SELECT text FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL SELECT text FROM documents WHERE doc_id % 20 = 0)
-        |SELECT sz AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
-        |FROM (SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS sz
-        |      FROM planted GROUP BY 1)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Gini over ascending (mass, source)-ranked sums — same rank order,
-    // same integer sums, same expression order into the 6dp round;
-    // all-NULL-mass groups dropped on both sides (NULL rank order
-    // differs between engines)
-    "q_token_gini" ->
-      """WITH m AS (
-        |  SELECT source AS g,
-        |    CAST(sum(len(list_filter(string_split_regex(lower(trim(text)),
-        |      '\s+'), x -> x <> ''))) AS BIGINT) AS m
-        |  FROM documents GROUP BY 1
-        |  HAVING m IS NOT NULL),
-        |r AS (SELECT CAST(row_number() OVER (ORDER BY m, g) AS BIGINT) AS i,
-        |             m FROM m)
-        |SELECT CAST(count(*) AS BIGINT) AS n_groups,
-        |       CAST(sum(m) AS BIGINT) AS total_weight,
-        |       round(2.0 * CAST(sum(i * m) AS DOUBLE)
-        |               / (count(*) * CAST(sum(m) AS BIGINT))
-        |             - CAST(count(*) + 1 AS DOUBLE) / count(*), 6) AS gini
-        |FROM r""".stripMargin,
-
-    // day-grain trend: same lag-over-present-days window, ratio of
-    // exact integer counts, NULL on each group's first day
-    "q_daily_trend" ->
-      """WITH c AS (
-        |  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-        |         count(*) AS n
-        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2)
-        |SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
-        |       CAST(n AS BIGINT) AS n,
-        |       round(n * 1.0 / lag(n) OVER (
-        |         PARTITION BY event_type ORDER BY day), 6) AS ratio
-        |FROM c ORDER BY event_type, day""".stripMargin,
-
-    "q_rolling_distinct" ->
-      """WITH d AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
-        |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |daily AS (SELECT day, count(*) AS n_events,
-        |                 count(DISTINCT user_id) AS day_distinct
-        |          FROM d GROUP BY 1),
-        |r AS (SELECT a.day, count(DISTINCT b.user_id) AS rolling_distinct
-        |      FROM (SELECT DISTINCT day FROM d) a
-        |      JOIN d b ON b.day BETWEEN a.day - 6 AND a.day
-        |      GROUP BY 1)
-        |SELECT strftime(daily.day, '%Y-%m-%d') AS day, daily.n_events,
-        |       daily.day_distinct, r.rolling_distinct
-        |FROM daily JOIN r USING (day) ORDER BY day""".stripMargin,
-
-    "q_growth_accounting" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id AS u,
-        |         CAST(date_trunc('day', ts) AS DATE) AS d
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |cl AS (SELECT u, d, lag(d) OVER (PARTITION BY u ORDER BY d)
-        |         AS prev FROM ud),
-        |c2 AS (SELECT d, CASE WHEN prev IS NULL THEN 'new'
-        |                      WHEN d - prev = 1 THEN 'retained'
-        |                      ELSE 'resurrected' END AS cls FROM cl),
-        |daily AS (SELECT d AS day, count(*) AS n_active,
-        |  sum(CASE WHEN cls = 'new' THEN 1 ELSE 0 END) AS n_new,
-        |  sum(CASE WHEN cls = 'retained' THEN 1 ELSE 0 END) AS n_retained,
-        |  sum(CASE WHEN cls = 'resurrected' THEN 1 ELSE 0 END)
-        |    AS n_resurrected
-        |  FROM c2 GROUP BY 1),
-        |w AS (SELECT *, lag(n_active) OVER (ORDER BY day) AS pa,
-        |        lag(day) OVER (ORDER BY day) AS pd FROM daily)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, n_active, n_new,
-        |  n_retained, n_resurrected,
-        |  CASE WHEN pd IS NULL THEN NULL
-        |       WHEN day - pd = 1 THEN pa - n_retained
-        |       ELSE pa END AS n_churned
-        |FROM w ORDER BY day""".stripMargin,
-
-    "q_gate_ztest" ->
-      """WITH per AS (
-        |  SELECT coalesce(source, '<null>') AS g, count(*) AS n,
-        |         sum(CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END) AS k
-        |  FROM documents GROUP BY 1),
-        |tot AS (SELECT sum(n) AS nn, sum(k) AS kk FROM per)
-        |SELECT per.g AS source, per.n, per.k AS n_success,
-        |  round(per.k::DOUBLE / per.n, 6) AS rate,
-        |  CASE WHEN (tot.nn - per.n) = 0 OR tot.kk::DOUBLE / tot.nn <= 0
-        |         OR tot.kk::DOUBLE / tot.nn >= 1 THEN NULL
-        |       ELSE round((per.k::DOUBLE / per.n
-        |                   - (tot.kk - per.k)::DOUBLE / (tot.nn - per.n))
-        |            / sqrt(tot.kk::DOUBLE / tot.nn
-        |                   * (1 - tot.kk::DOUBLE / tot.nn)
-        |                   * (1.0::DOUBLE / per.n
-        |                      + 1.0::DOUBLE / (tot.nn - per.n))), 6)
-        |  END AS z
-        |FROM per, tot ORDER BY source""".stripMargin,
-
-    "q_clustering" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |e0 AS (
-        |  SELECT doc_id AS src, (doc_id + 1) % nn.n AS dst
-        |  FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id + 2) % nn.n FROM documents, nn
-        |  WHERE doc_id % 17 <> 0),
-        |e AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |      FROM e0 WHERE src <> dst),
-        |w AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        |      FROM e e1 JOIN e e2 ON e2.u = e1.v),
-        |tri AS (SELECT w.a, w.b, w.c FROM w
-        |        JOIN e ON e.u = w.a AND e.v = w.c),
-        |pn AS (SELECT node, count(*) AS n_tri FROM (
-        |         SELECT a AS node FROM tri UNION ALL SELECT b FROM tri
-        |         UNION ALL SELECT c FROM tri) GROUP BY 1),
-        |deg AS (SELECT node, count(*) AS degree FROM (
-        |          SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-        |        GROUP BY 1)
-        |SELECT deg.node, deg.degree, coalesce(pn.n_tri, 0) AS n_triangles,
-        |  round(CASE WHEN deg.degree >= 2
-        |    THEN 2.0::DOUBLE * coalesce(pn.n_tri, 0)
-        |         / (deg.degree * (deg.degree - 1))
-        |    ELSE 0 END, 6) AS clustering
-        |FROM deg LEFT JOIN pn USING (node) ORDER BY node""".stripMargin,
-
-    "q_assortativity" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |e0 AS (
-        |  SELECT doc_id AS src, (doc_id + 1) % nn.n AS dst
-        |  FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id + 2) % nn.n FROM documents, nn
-        |  WHERE doc_id % 17 <> 0),
-        |e AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |      FROM e0 WHERE src <> dst),
-        |deg AS (SELECT node, count(*) AS degree FROM (
-        |          SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-        |        GROUP BY 1),
-        |sym AS (
-        |  SELECT du.degree AS x, dv.degree AS y FROM e
-        |  JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-        |  UNION ALL
-        |  SELECT dv.degree, du.degree FROM e
-        |  JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v),
-        |st AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-        |       FROM sym)
-        |SELECT n // 2 AS n_edges,
-        |  CASE WHEN (n * sxx - sx * sx) <= 0 OR (n * syy - sy * sy) <= 0
-        |       THEN NULL
-        |       ELSE round((n * sxy - sx * sy)::DOUBLE
-        |            / sqrt((n * sxx - sx * sx)::DOUBLE
-        |                   * (n * syy - sy * sy)::DOUBLE), 6)
-        |  END AS assortativity
-        |FROM st""".stripMargin,
-
-    "q_audience_overlap" ->
-      """WITH base AS (
-        |  SELECT DISTINCT event_type AS g, user_id AS k FROM events
-        |  WHERE event_type IS NOT NULL AND user_id IS NOT NULL),
-        |d AS (SELECT g, count(*) AS nd FROM base GROUP BY 1),
-        |pairs AS (SELECT a.g AS ga, b.g AS gb FROM d a
-        |          JOIN d b ON a.g < b.g),
-        |ov AS (SELECT p.ga, p.gb, count(*) AS ovl
-        |       FROM pairs p JOIN base x ON x.g = p.ga
-        |       JOIN base y ON y.g = p.gb AND y.k = x.k
-        |       GROUP BY 1, 2)
-        |SELECT p.ga AS group_a, p.gb AS group_b, da.nd AS distinct_a,
-        |  db.nd AS distinct_b,
-        |  da.nd + db.nd - coalesce(ov.ovl, 0) AS distinct_union,
-        |  coalesce(ov.ovl, 0) AS est_overlap,
-        |  round(coalesce(ov.ovl, 0)::DOUBLE
-        |        / (da.nd + db.nd - coalesce(ov.ovl, 0)), 6) AS jaccard
-        |FROM pairs p JOIN d da ON da.g = p.ga JOIN d db ON db.g = p.gb
-        |LEFT JOIN ov ON ov.ga = p.ga AND ov.gb = p.gb
-        |ORDER BY group_a, group_b""".stripMargin,
-
-    // BPE: generated chained-CTE oracle (see bpeOracle above)
-    "q_bpe_merges" -> bpeOracle,
-
-    // BPE apply: re-derive the merges, replay the stacked-replace chain
-    // per document word, count subword tokens (see bpeEncodeOracle)
-    "q_bpe_encode" -> bpeEncodeOracle,
-
-    // fertility: same derivation grouped by source (see bpeFertilityOracle)
-    "q_bpe_fertility" -> bpeFertilityOracle,
-
-    // OOV vs the top-100 (count desc, word asc) corpus vocabulary;
-    // zero-word docs keep a row with NULL rate via the LEFT JOIN
-    "q_oov_rate" ->
-      """WITH ws AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(
-        |    lower(trim(text)), '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |vocab AS (
-        |  SELECT w FROM ws GROUP BY w ORDER BY count(*) DESC, w LIMIT 100),
-        |per AS (
-        |  SELECT d.doc_id,
-        |         CAST(count(ws.w) AS BIGINT) AS n_words,
-        |         CAST(coalesce(sum(CASE WHEN ws.w IS NOT NULL
-        |           AND v.w IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT)
-        |           AS n_oov
-        |  FROM documents d
-        |  LEFT JOIN ws ON ws.doc_id = d.doc_id
-        |  LEFT JOIN vocab v ON ws.w = v.w
-        |  GROUP BY 1)
-        |SELECT doc_id, n_words, n_oov,
-        |       CASE WHEN n_words > 0
-        |            THEN round(n_oov * 1.0 / n_words, 6) END AS oov_rate
-        |FROM per ORDER BY doc_id""".stripMargin,
-
-    // rank ensemble: ties share percent_rank, NULL signals rank first
-    // (worst) — deterministic without an id tie-break
-    "q_rank_ensemble" ->
-      """WITH s AS (
-        |  SELECT doc_id, source, n_chars,
-        |         CAST(len(list_filter(string_split_regex(
-        |           lower(trim(text)), '\s+'), x -> x <> '')) AS BIGINT)
-        |           AS n_words
-        |  FROM documents)
-        |SELECT doc_id, source,
-        |  round((percent_rank() OVER (PARTITION BY source
-        |           ORDER BY n_chars ASC NULLS FIRST)
-        |       + percent_rank() OVER (PARTITION BY source
-        |           ORDER BY n_words ASC NULLS FIRST)) / 2, 6)
-        |    AS ensemble_score
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // --- token-structure health tier ---------------------------------
-
-    // BOS/EOS framing: rebuild the framed sequences (same planted
-    // defects), then the three flag predicates verbatim — DuckDB
-    // list_position returns NULL when absent (Spark array_position
-    // returns 0), both coalesced to false
-    "q_token_boundaries" ->
-      s"""WITH $SeqTableCte,
-        |sq AS (SELECT toks, source, CAST(substr(did, 5) AS BIGINT) AS id
-        |       FROM s2 WHERE starts_with(did, 'doc_')),
-        |fr AS (
-        |  SELECT source,
-        |    CASE WHEN id % 23 = 5 THEN list_concat(toks, [50002])
-        |         WHEN id % 23 = 7 THEN list_concat([50001], toks)
-        |         WHEN id % 23 = 11 THEN
-        |           list_concat(list_concat(list_concat([50001],
-        |             list_slice(toks, 1, 2)), [50002]),
-        |             list_concat(list_slice(toks, 3, len(toks)), [50002]))
-        |         ELSE list_concat(list_concat([50001], toks), [50002])
-        |    END AS f
-        |  FROM sq)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_seqs,
-        |  CAST(sum(CASE WHEN len(f) = 0 OR f[1] <> 50001
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_miss_bos,
-        |  CAST(sum(CASE WHEN len(f) = 0 OR f[-1] <> 50002
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_miss_eos,
-        |  CAST(sum(CASE WHEN coalesce(list_position(
-        |             list_slice(f, 2, len(f) - 1), 50002), 0) > 0
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_interior_eos
-        |FROM fr GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // positional stats: (pos, token) counts for the first 4 positions,
-    // entropy/top-share over 64 ID buckets — all ratios of exact
-    // integer counts, entropy 6dp-rounded
-    "q_position_entropy" ->
-      s"""WITH $SeqTableCte,
-        |pt AS (
-        |  SELECT CAST(i - 1 AS INT) AS pos, toks[i] AS t,
-        |         count(*) AS n
-        |  FROM (SELECT toks,
-        |          unnest(range(1, least(len(toks), 4) + 1)) AS i
-        |        FROM s2)
-        |  GROUP BY 1, 2),
-        |pp AS (SELECT pos, CAST(sum(n) AS BIGINT) AS n_seqs,
-        |              CAST(count(*) AS BIGINT) AS n_distinct_tokens
-        |       FROM pt GROUP BY 1),
-        |pb AS (SELECT pos, t % 64 AS b, CAST(sum(n) AS BIGINT) AS nb
-        |       FROM pt GROUP BY 1, 2),
-        |pe AS (SELECT pos,
-        |         round(ln(CAST(sum(nb) AS DOUBLE))
-        |               - sum(CAST(nb AS DOUBLE) * ln(CAST(nb AS DOUBLE)))
-        |                 / CAST(sum(nb) AS DOUBLE), 6) AS bucket_entropy,
-        |         round(CAST(max(nb) AS DOUBLE) / CAST(sum(nb) AS DOUBLE), 6)
-        |           AS top_bucket_share
-        |       FROM pb GROUP BY 1)
-        |SELECT pp.pos, n_seqs, n_distinct_tokens, bucket_entropy,
-        |       top_bucket_share
-        |FROM pp JOIN pe ON pp.pos = pe.pos ORDER BY 1""".stripMargin,
-
-    // vocab coverage: exact distinct IDs and integer-ratio outputs per
-    // source over the (source, token) pair counts
-    "q_vocab_coverage" ->
-      s"""WITH $SeqTableCte,
-        |pt AS (SELECT source, t, count(*) AS n
-        |       FROM (SELECT source, unnest(toks) AS t FROM s2)
-        |       GROUP BY 1, 2)
-        |SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens,
-        |       CAST(count(*) AS BIGINT) AS n_distinct,
-        |       round(CAST(count(*) AS DOUBLE) / 50000.0, 6)
-        |         AS vocab_coverage,
-        |       round(CAST(count(*) AS DOUBLE) / CAST(sum(n) AS DOUBLE), 6)
-        |         AS type_token_ratio
-        |FROM pt GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // duplicated 3-gram mass: every gram start replayed via
-    // generate-series, ratios of exact integer sums
-    "q_token_dup_mass" ->
-      s"""WITH $SeqTableCte,
-        |g AS (
-        |  SELECT toks[i] AS g0, toks[i + 1] AS g1, toks[i + 2] AS g2
-        |  FROM (SELECT toks,
-        |          unnest(range(1, greatest(len(toks) - 2, 0) + 1)) AS i
-        |        FROM s2)),
-        |c AS (SELECT g0, g1, g2, count(*) AS n FROM g GROUP BY 1, 2, 3)
-        |SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS n_grams,
-        |       CAST(count(*) AS BIGINT) AS n_distinct_grams,
-        |       CAST(coalesce(sum(CASE WHEN n > 1 THEN n ELSE 0 END), 0)
-        |            AS BIGINT) AS n_dup_occurrences,
-        |       round(CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(n) AS DOUBLE), 6) AS dup_mass
-        |FROM c""".stripMargin,
-
-    // token-ID KS drift: both snapshots bucketed with the HistogramAgg
-    // binning (underflow 0 / 1+min(63, floor(x/50000*64)) / overflow
-    // 65), ecdf over the filled 66-bin frame, asymptotic critical value
-    // at alpha 0.01 — the q_seq_drift spelling over unnested tokens
-    "q_token_drift" ->
-      s"""WITH $SeqTableCte,
-        |sq AS (SELECT toks, CAST(substr(did, 5) AS BIGINT) AS id
-        |       FROM s2 WHERE starts_with(did, 'doc_')),
-        |bt AS (SELECT unnest(toks) AS t FROM sq WHERE id % 2 = 0),
-        |ct AS (SELECT CAST(floor(t / 2.0) AS BIGINT) AS t
-        |       FROM (SELECT unnest(toks) AS t FROM sq WHERE id % 2 = 1)),
-        |bb AS (SELECT CASE WHEN t < 0 THEN 0 WHEN t >= 50000 THEN 65
-        |         ELSE 1 + least(63, CAST(floor((t / 50000.0) * 64) AS INT))
-        |       END AS b FROM bt),
-        |cb AS (SELECT CASE WHEN t < 0 THEN 0 WHEN t >= 50000 THEN 65
-        |         ELSE 1 + least(63, CAST(floor((t / 50000.0) * 64) AS INT))
-        |       END AS b FROM ct),
-        |bins AS (SELECT unnest(range(0, 66)) AS b),
-        |filled AS (
-        |  SELECT bins.b AS b,
-        |    coalesce(nb.n, 0) AS nb, coalesce(nc.n, 0) AS nc
-        |  FROM bins
-        |  LEFT JOIN (SELECT b, count(*) AS n FROM bb GROUP BY 1) nb
-        |    ON bins.b = nb.b
-        |  LEFT JOIN (SELECT b, count(*) AS n FROM cb GROUP BY 1) nc
-        |    ON bins.b = nc.b),
-        |ec AS (
-        |  SELECT b,
-        |    sum(nb) OVER (ORDER BY b)
-        |      / (SELECT CAST(sum(nb) AS DOUBLE) FROM filled) AS fb,
-        |    sum(nc) OVER (ORDER BY b)
-        |      / (SELECT CAST(sum(nc) AS DOUBLE) FROM filled) AS fc
-        |  FROM filled),
-        |ks AS (SELECT max(abs(fc - fb)) AS stat FROM ec),
-        |nn AS (SELECT CAST((SELECT sum(nb) FROM filled) AS DOUBLE) AS n1,
-        |              CAST((SELECT sum(nc) FROM filled) AS DOUBLE) AS n2),
-        |crit AS (SELECT sqrt(-0.5 * ln(0.005))
-        |                * sqrt((n2 + n1) / (n2 * n1)) AS v FROM nn)
-        |SELECT CAST((SELECT sum(nb) FROM filled) AS BIGINT) AS n_base,
-        |       CAST((SELECT sum(nc) FROM filled) AS BIGINT) AS n_cur,
-        |       round((SELECT stat FROM ks), 6) AS ks_stat,
-        |       round((SELECT v FROM crit), 6) AS ks_critical,
-        |       (SELECT stat FROM ks) > (SELECT v FROM crit) AS ks_drifted""".stripMargin,
-
-    // anchor aggregation: pages rebuilt like q_outlinks (plus the
-    // anchor-word arithmetic), DuckDB's regex engine replays the
-    // two-group extraction, the top anchor via the same deterministic
-    // (count desc, text) window
-    "q_anchor_text" ->
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |w AS (SELECT ['home', 'read more', 'reference', 'details',
-        |              'source'] AS ws),
-        |pg AS (
-        |  SELECT doc_id,
-        |    '<html><body><nav><a href="/home">Home</a></nav><p>filler</p>'
-        |    || CASE WHEN doc_id % 17 <> 0 THEN
-        |         '<a href="doc://' || CAST((doc_id*7+1) % nn.n AS VARCHAR)
-        |         || '">' || list_extract(w.ws, CAST(doc_id % 5 AS INT) + 1)
-        |         || '</a> <a href="doc://'
-        |         || CAST((doc_id*13+3) % nn.n AS VARCHAR)
-        |         || '">' || list_extract(w.ws, CAST((doc_id*3+1) % 5 AS INT) + 1)
-        |         || '</a> <a href="doc://'
-        |         || CAST((doc_id+1) % nn.n AS VARCHAR)
-        |         || '">' || list_extract(w.ws, CAST((doc_id*11+2) % 5 AS INT) + 1)
-        |         || '</a>'
-        |       ELSE '' END || '</body></html>' AS html
-        |  FROM documents, nn, w),
-        |a AS (
-        |  SELECT doc_id AS src,
-        |    CAST(regexp_extract(tag,
-        |      '<a href="doc://(\d+)">([^<]*)</a>', 1) AS BIGINT) AS dst,
-        |    regexp_extract(tag,
-        |      '<a href="doc://(\d+)">([^<]*)</a>', 2) AS anchor
-        |  FROM (SELECT doc_id, unnest(regexp_extract_all(html,
-        |          '<a href="doc://(\d+)">([^<]*)</a>')) AS tag FROM pg)),
-        |pt AS (SELECT dst, anchor, count(*) AS n FROM a GROUP BY 1, 2),
-        |tp AS (SELECT dst, anchor, n,
-        |         row_number() OVER (PARTITION BY dst
-        |           ORDER BY n DESC, anchor) AS rn,
-        |         sum(n) OVER (PARTITION BY dst) AS na,
-        |         count(*) OVER (PARTITION BY dst) AS nt
-        |       FROM pt),
-        |ps AS (SELECT dst, count(*) AS ns
-        |       FROM (SELECT DISTINCT dst, src FROM a) GROUP BY 1)
-        |SELECT tp.dst AS doc_id, CAST(na AS BIGINT) AS n_anchors,
-        |       CAST(nt AS BIGINT) AS n_texts, CAST(ns AS BIGINT) AS n_srcs,
-        |       anchor AS top_anchor
-        |FROM tp JOIN ps ON tp.dst = ps.dst
-        |WHERE rn = 1 ORDER BY 1""".stripMargin,
-
-    // split leakage: same planted cross-split copies, same md5 grouping
-    // (NULL texts excluded on both sides), spanning count over the
-    // already-distinct (split, hash) pairs
-    "q_split_leakage" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 999983, text FROM documents
-        |  WHERE doc_id % 31 = 0),
-        |sp AS (
-        |  SELECT CASE WHEN doc_id % 100 < 80 THEN 'train'
-        |              WHEN doc_id % 100 < 90 THEN 'val'
-        |              ELSE 'test' END AS split,
-        |         md5(text) AS h
-        |  FROM corpus WHERE text IS NOT NULL),
-        |ph AS (SELECT split, h, count(*) AS n FROM sp GROUP BY 1, 2),
-        |sn AS (SELECT h, count(*) AS ns FROM ph GROUP BY 1)
-        |SELECT split, CAST(sum(n) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS BIGINT) AS n_distinct_texts,
-        |       CAST(sum(CASE WHEN ns > 1 THEN n ELSE 0 END) AS BIGINT)
-        |         AS n_leaked_docs,
-        |       CAST(sum(CASE WHEN ns > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_leaked_texts,
-        |       round(CAST(sum(CASE WHEN ns > 1 THEN n ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(n) AS DOUBLE), 6) AS leak_rate
-        |FROM ph JOIN sn USING (h) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // packing efficiency: the q_pack_documents recursive walk plus the
-    // per-pack and per-source rollups — every output an integer or a
-    // ratio of integers
-    "q_pack_efficiency" ->
-      """WITH RECURSIVE ordered AS (
-        |  SELECT source, doc_id, n_chars,
-        |         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |packed AS (
-        |  SELECT source, doc_id, n_chars, rn,
-        |         CAST(0 AS BIGINT) AS pack_id, 0 AS pack_pos, n_chars AS acc
-        |  FROM ordered WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.source, o.doc_id, o.n_chars, o.rn,
-        |         CASE WHEN p.acc + o.n_chars <= 1000
-        |              THEN p.pack_id ELSE p.pack_id + 1 END,
-        |         CASE WHEN p.acc + o.n_chars <= 1000
-        |              THEN p.pack_pos + 1 ELSE 0 END,
-        |         CASE WHEN p.acc + o.n_chars <= 1000
-        |              THEN p.acc + o.n_chars ELSE o.n_chars END
-        |  FROM packed p JOIN ordered o
-        |    ON o.source = p.source AND o.rn = p.rn + 1),
-        |per AS (
-        |  SELECT source, pack_id, sum(n_chars) AS used, count(*) AS docs
-        |  FROM packed GROUP BY 1, 2)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_packs,
-        |       CAST(sum(docs) AS BIGINT) AS n_docs,
-        |       CAST(sum(used) AS BIGINT) AS used_total,
-        |       CAST(count(*) * 1000 AS BIGINT) AS capacity,
-        |       round(CAST(sum(used) AS DOUBLE)
-        |             / CAST(count(*) * 1000 AS DOUBLE), 6) AS fill_rate,
-        |       CAST(sum(CASE WHEN used < 1000 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_underfull,
-        |       CAST(sum(CASE WHEN used > 1000 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_oversize
-        |FROM per GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // epoch budget: the same literal normalized weights (no
-    // renormalization arithmetic on either engine), floor targets,
-    // integer-ratio epochs; full join keeps weight-0 'scraped' loud
-    "q_epoch_budget" ->
-      s"""WITH $SeqTableCte,
-        |av AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS available_tokens
-        |       FROM s2 GROUP BY 1),
-        |w AS (SELECT * FROM (VALUES ('web', 0.5), ('books', 0.25),
-        |        ('code', 0.15), ('wiki', 0.1)) AS t(source, w))
-        |SELECT coalesce(av.source, w.source) AS source,
-        |  CAST(coalesce(available_tokens, 0) AS BIGINT) AS available_tokens,
-        |  round(coalesce(w.w, 0), 6) AS weight,
-        |  CAST(floor(1000000 * coalesce(w.w, 0)) AS BIGINT) AS target_tokens,
-        |  CASE WHEN coalesce(available_tokens, 0) > 0 THEN
-        |    round(CAST(floor(1000000 * coalesce(w.w, 0)) AS DOUBLE)
-        |          / CAST(available_tokens AS DOUBLE), 6) END AS epochs
-        |FROM av FULL JOIN w ON av.source = w.source
-        |ORDER BY 1""".stripMargin,
-
-    // signal correlation: HUGEINT sufficient stats (exactly Spark's
-    // decimal(38,0) path), identical double conversion and r formula
-    "q_signal_corr" ->
-      """WITH s AS (
-        |  SELECT source, n_chars,
-        |    CAST(len(list_filter(string_split_regex(
-        |      lower(trim(text)), '\s+'), x -> x <> '')) AS BIGINT) AS n_words
-        |  FROM documents),
-        |a AS (
-        |  SELECT source, count(*) AS n, sum(n_chars) AS sx,
-        |         sum(n_words) AS sy, sum(n_chars * n_words) AS sxy,
-        |         sum(n_chars * n_chars) AS sxx,
-        |         sum(n_words * n_words) AS syy
-        |  FROM s WHERE n_chars IS NOT NULL AND n_words IS NOT NULL
-        |  GROUP BY 1)
-        |SELECT source, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
-        |        AND CAST(n * syy - sy * sy AS DOUBLE) > 0 THEN
-        |    round(CAST(n * sxy - sx * sy AS DOUBLE)
-        |          / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-        |             * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-        |  END AS pearson_r
-        |FROM a ORDER BY source""".stripMargin,
-
-    // contingency chi-square over the FULL margin grid (empty cells
-    // contribute their expectation), '<null>' category for NULLs
-    "q_chi_contingency" ->
-      """WITH cnt AS (
-        |  SELECT coalesce(source, '<null>') AS a,
-        |         coalesce(lang, '<null>') AS b, count(*) AS n
-        |  FROM documents GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(n) AS na FROM cnt GROUP BY 1),
-        |cb AS (SELECT b, sum(n) AS nb FROM cnt GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS DOUBLE) AS t,
-        |               count(DISTINCT a) AS ka, count(DISTINCT b) AS kb
-        |        FROM cnt),
-        |grid AS (
-        |  SELECT ra.a, cb.b, ra.na, cb.nb, coalesce(cnt.n, 0) AS o
-        |  FROM ra CROSS JOIN cb
-        |  LEFT JOIN cnt ON cnt.a = ra.a AND cnt.b = cb.b)
-        |SELECT CAST(sum(o) AS BIGINT) AS n,
-        |       CAST((max(tot.ka) - 1) * (max(tot.kb) - 1) AS BIGINT) AS dof,
-        |       round(sum((CAST(o AS DOUBLE)
-        |                  - CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / tot.t)
-        |                 * (CAST(o AS DOUBLE)
-        |                    - CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / tot.t)
-        |                 / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / tot.t)),
-        |             6) AS chi_square
-        |FROM grid CROSS JOIN tot""".stripMargin,
-
-    // calibration: the q_logistic_quality feature CTE, sigmoid of the
-    // 6dp-rounded log-odds, floor bins, integer label n_chars >= 500
-    "q_calibration" ->
-      """WITH feat AS (
-        |  SELECT doc_id, n_chars,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, n_chars, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |sc AS (
-        |  SELECT 1.0 / (1.0 + exp(-round(mwl * 0.5 + n_words * 0.02
-        |           + punct_ratio * -8.0 + stop_ratio * 4.0 + -2.0, 6))) AS score,
-        |         CASE WHEN coalesce(n_chars, 0) >= 500 THEN 1 ELSE 0 END AS y
-        |  FROM feat
-        |  WHERE round(mwl * 0.5 + n_words * 0.02 + punct_ratio * -8.0
-        |              + stop_ratio * 4.0 + -2.0, 6) IS NOT NULL)
-        |SELECT CAST(least(floor(score * 10), 9) AS INT) AS bin,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(y) AS BIGINT) AS n_pos,
-        |       round(avg(score), 6) AS mean_score,
-        |       round(CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-        |         AS pos_rate,
-        |       round(abs(avg(score) - CAST(sum(y) AS DOUBLE)
-        |                               / CAST(count(*) AS DOUBLE)), 6) AS gap
-        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // novelty curve: md5 first-day reduce over (day, hash) pairs,
-    // NULL text excluded on both sides
-    "q_novelty_curve" ->
-      """WITH ph AS (
-        |  SELECT CAST(doc_id % 30 AS INT) AS day, md5(text) AS h,
-        |         count(*) AS n
-        |  FROM documents WHERE text IS NOT NULL GROUP BY 1, 2),
-        |fd AS (SELECT h, min(day) AS d0 FROM ph GROUP BY 1)
-        |SELECT day, CAST(sum(n) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS BIGINT) AS n_distinct,
-        |       CAST(sum(CASE WHEN day = d0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_novel,
-        |       round(CAST(sum(CASE WHEN day = d0 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(n) AS DOUBLE), 6) AS novelty_rate
-        |FROM ph JOIN fd USING (h) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // CDC md5 mode replayed exactly: boundary at i ⇔ md5 of the 8-char
-    // window ending at i starts with hex '0'; cuts = 0 ++ boundaries<len
-    // ++ len (the array_distinct spelling: only len can repeat)
-    "q_cdc_chunks" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0),
-         |b AS (
-         |  SELECT doc_id, text,
-         |    [0] || list_filter(list_filter(
-         |        generate_series(8, length(text)),
-         |        i -> substr(md5(substr(text, i - 7, 8)), 1, 1) = '0'),
-         |      i -> i < length(text))
-         |      || [length(text)] AS cuts
-         |  FROM d),
-         |e AS (
-         |  SELECT doc_id, text, cuts,
-         |         unnest(generate_series(1, len(cuts) - 1)) AS j
-         |  FROM b),
-         |c AS (
-         |  SELECT doc_id,
-         |         md5(substr(text, cuts[j] + 1, cuts[j + 1] - cuts[j]))
-         |           AS h,
-         |         cuts[j + 1] - cuts[j] AS l
-         |  FROM e)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |       CAST(count(DISTINCT h) AS BIGINT) AS n_distinct_chunks,
-         |       CAST(max(l) AS BIGINT) AS max_chunk_len
-         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // CDC shift recall, FULLY oracled (md5 boundaries are seed-free):
-    // same chunking over base+planted, pair discovery restricted to
-    // hashes shared by 2..200 docs (the maxBucket cap), overlap vs the
-    // smaller doc, recovered = planted (id, id+1e6) pairs at >= 0.5
-    "q_cdc_shift_recall" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, text FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0),
-         |planted AS (
-         |  SELECT doc_id + 1000000 AS doc_id,
-         |         'BOILERPLATE HEADER INSERTED. ' || text AS text
-         |  FROM base WHERE doc_id % 29 = 0 AND length(text) >= 64),
-         |corpus AS (
-         |  SELECT * FROM base UNION ALL SELECT * FROM planted),
-         |b AS (
-         |  SELECT doc_id, text,
-         |    [0] || list_filter(list_filter(
-         |        generate_series(8, length(text)),
-         |        i -> substr(md5(substr(text, i - 7, 8)), 1, 1) = '0'),
-         |      i -> i < length(text))
-         |      || [length(text)] AS cuts
-         |  FROM corpus),
-         |e AS (
-         |  SELECT doc_id, text, cuts,
-         |         unnest(generate_series(1, len(cuts) - 1)) AS j
-         |  FROM b),
-         |pd AS (
-         |  SELECT DISTINCT doc_id,
-         |    md5(substr(text, cuts[j] + 1, cuts[j + 1] - cuts[j])) AS h
-         |  FROM e),
-         |sz AS (SELECT doc_id, count(*) AS n FROM pd GROUP BY 1),
-         |hh AS (SELECT h FROM pd GROUP BY h
-         |       HAVING count(*) > 1 AND count(*) <= 200),
-         |pr AS (
-         |  SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
-         |         count(*) AS n_shared
-         |  FROM pd a JOIN hh USING (h) JOIN pd b2 USING (h)
-         |  WHERE a.doc_id < b2.doc_id GROUP BY 1, 2),
-         |ov AS (
-         |  SELECT id_a, id_b,
-         |         round(n_shared * 1.0 / least(sa.n, sb.n), 6) AS overlap
-         |  FROM pr
-         |  JOIN sz sa ON sa.doc_id = pr.id_a
-         |  JOIN sz sb ON sb.doc_id = pr.id_b)
-         |SELECT CAST((SELECT count(*) FROM planted) AS BIGINT)
-         |         AS n_planted,
-         |       CAST(count(*) AS BIGINT) AS n_recovered
-         |FROM ov
-         |WHERE overlap >= 0.5 AND id_b = id_a + 1000000""".stripMargin,
-
-    // JSONL-column ingest: identical record synthesis, json_valid +
-    // path extraction mirror get_json_object's null-on-malformed
-    "q_json_extract" ->
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 13 = 0 THEN 'X' || j ELSE j END AS js
-         |  FROM (
-         |    SELECT doc_id,
-         |      '{"doc_id":' || doc_id
-         |        || ',"lang":"' || coalesce(lang, 'und')
-         |        || '","source":"' || coalesce(source, 'unknown')
-         |        || '","n_chars":' || coalesce(n_chars, -1) || '}' AS j
-         |    FROM documents))
-         |SELECT doc_id,
-         |  (CASE WHEN json_valid(js)
-         |        THEN json_extract_string(js, '$$.doc_id') END)
-         |    IS NOT NULL AS json_ok,
-         |  CASE WHEN json_valid(js)
-         |       THEN json_extract_string(js, '$$.lang') END AS ex_lang,
-         |  CASE WHEN json_valid(js)
-         |       THEN json_extract_string(js, '$$.source') END AS ex_source,
-         |  CAST(CASE WHEN json_valid(js)
-         |       THEN json_extract_string(js, '$$.n_chars') END AS BIGINT)
-         |    AS ex_n
-         |FROM p ORDER BY doc_id""".stripMargin,
-
-    // the one-pass QC rollup over the same parsed frame
-    "q_json_qc" ->
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 13 = 0 THEN 'X' || j ELSE j END AS js
-         |  FROM (
-         |    SELECT doc_id,
-         |      '{"doc_id":' || doc_id
-         |        || ',"lang":"' || coalesce(lang, 'und')
-         |        || '","source":"' || coalesce(source, 'unknown')
-         |        || '","n_chars":' || coalesce(n_chars, -1) || '}' AS j
-         |    FROM documents)),
-         |e AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN json_valid(js)
-         |          THEN json_extract_string(js, '$$.doc_id') END)
-         |      IS NOT NULL AS json_ok,
-         |    CASE WHEN json_valid(js)
-         |         THEN json_extract_string(js, '$$.lang') END AS ex_lang,
-         |    CASE WHEN json_valid(js)
-         |         THEN json_extract_string(js, '$$.source') END
-         |      AS ex_source,
-         |    CAST(CASE WHEN json_valid(js)
-         |         THEN json_extract_string(js, '$$.n_chars') END AS BIGINT)
-         |      AS ex_n
-         |  FROM p)
-         |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(sum(CASE WHEN json_ok THEN 0 ELSE 1 END) AS BIGINT)
-         |    AS n_malformed,
-         |  CAST(sum(CASE WHEN json_ok AND ex_lang IS NULL THEN 1 ELSE 0
-         |    END) AS BIGINT) AS n_null_ex_lang,
-         |  CAST(sum(CASE WHEN json_ok AND ex_source IS NULL THEN 1 ELSE 0
-         |    END) AS BIGINT) AS n_null_ex_source,
-         |  CAST(sum(CASE WHEN json_ok AND ex_n IS NULL THEN 1 ELSE 0
-         |    END) AS BIGINT) AS n_null_ex_n
-         |FROM e""".stripMargin,
-
-    // the salted join must be invisible in the result: plain join oracle
-    "q_skew_join" ->
-      """SELECT o.o_orderstatus,
-        |       CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(l.l_quantity) AS DOUBLE) AS sum_qty
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // encoding QC on the same planted defects (chr spellings); length()
-    // is character length in both engines, patterns RE2-safe
-    "q_encoding_qc" ->
-      """WITH p AS (
-        |  SELECT doc_id, text
-        |    || CASE WHEN doc_id % 11 = 0 THEN chr(65533) ELSE '' END
-        |    || CASE WHEN doc_id % 13 = 0 THEN chr(7) ELSE '' END
-        |    || CASE WHEN doc_id % 17 = 0 THEN chr(233) ELSE '' END AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(length(t) - length(regexp_replace(t, chr(65533), '', 'g'))
-        |    AS BIGINT) AS n_replacement,
-        |  CAST(length(t) - length(regexp_replace(t,
-        |    '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g')) AS BIGINT)
-        |    AS n_control,
-        |  CAST(length(t) - length(regexp_replace(t, '[^\x00-\x7F]', '',
-        |    'g')) AS BIGINT) AS n_non_ascii,
-        |  round(CAST(length(regexp_replace(t, '[^\x20-\x7E\t\n\r]', '',
-        |    'g')) AS DOUBLE) / greatest(length(t), 1), 6)
-        |    AS printable_ratio
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    "q_temperature_mix" ->
-      """WITH c AS (SELECT source, count(*)::DOUBLE AS n
-        |           FROM documents WHERE source IS NOT NULL GROUP BY 1),
-        |r AS (SELECT source, pow(n, 1.0 / 2.0) / n AS ratio FROM c),
-        |m AS (SELECT max(ratio) AS mx FROM r),
-        |t AS (SELECT source, CAST(round(ratio / mx * 10000) AS BIGINT)
-        |        AS thr FROM r, m)
-        |SELECT d.source, count(*) AS n_kept
-        |FROM documents d JOIN t USING (source)
-        |WHERE d.doc_id % 10000 < t.thr
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_weighted_sample" ->
-      """SELECT doc_id, n_chars FROM (
-        |  SELECT doc_id, n_chars,
-        |    ln((((doc_id * 2654435761 + 7) % 4294967296) + 0.5)
-        |       / 4294967296.0) / n_chars AS key
-        |  FROM documents WHERE n_chars > 0
-        |  ORDER BY key DESC, doc_id LIMIT 50)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_group_zscore" ->
-      """WITH st AS (
-        |  SELECT source, count(n_chars) AS n, sum(n_chars) AS s,
-        |         sum(n_chars * n_chars) AS ss
-        |  FROM documents GROUP BY 1)
-        |SELECT doc_id, d.source,
-        |  round(CASE
-        |    WHEN n_chars IS NULL THEN NULL
-        |    WHEN (ss * 1.0 / n - (s * 1.0 / n) * (s * 1.0 / n)) <= 0 THEN 0
-        |    ELSE (n_chars - s * 1.0 / n)
-        |         / sqrt(ss * 1.0 / n - (s * 1.0 / n) * (s * 1.0 / n))
-        |  END, 6) AS z
-        |FROM documents d
-        |LEFT JOIN st ON d.source IS NOT DISTINCT FROM st.source
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_warc_extract" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    e'WARC/1.0\r\nWARC-Type: response\r\n'
-        |    || 'WARC-Target-URI: http://' || lower(source)
-        |    || '.example.com/p/' || doc_id || e'\r\n'
-        |    || CASE WHEN doc_id % 7 = 0
-        |         THEN e'Content-Length: garbled\r\n'
-        |         ELSE 'Content-Length: ' || n_chars || e'\r\n' END
-        |    || e'Content-Type: text/plain\r\n'
-        |    || CASE WHEN doc_id % 13 = 0 THEN ''
-        |         ELSE e'\r\n' || text END AS rec
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, rec, strpos(rec, e'\r\n\r\n') AS sep FROM r),
-        |x AS (
-        |  SELECT doc_id,
-        |    nullif(regexp_extract(rec,
-        |      '(?m)^WARC-Type: ([^\r\n]+)', 1), '') AS warc_type,
-        |    nullif(regexp_extract(rec,
-        |      '(?m)^WARC-Target-URI: ([^\r\n]+)', 1), '') AS target_uri,
-        |    nullif(regexp_extract(rec,
-        |      '(?m)^Content-Type: ([^\r\n]+)', 1), '') AS content_type,
-        |    try_cast(nullif(regexp_extract(rec,
-        |      '(?m)^Content-Length: ([^\r\n]+)', 1), '') AS BIGINT)
-        |      AS content_length,
-        |    CASE WHEN sep > 0 THEN substring(rec, sep + 4) END AS payload
-        |  FROM p)
-        |SELECT doc_id, warc_type, target_uri, content_type,
-        |  content_length,
-        |  CAST(coalesce(length(payload), 0) AS BIGINT) AS payload_len
-        |FROM x ORDER BY doc_id""".stripMargin,
-
-    "q_robots_parse" ->
-      """WITH b AS (
-        |  SELECT DISTINCT source,
-        |    e'# synthetic robots\nUser-agent: *\n'
-        |    || e'Disallow: /private  # keep out\nAllow: /private/'
-        |    || lower(source)
-        |    || e'\nCrawl-delay: 5\nDisallow:\n\n'
-        |    || e'User-agent: badbot\nDisallow: /\n' AS body
-        |  FROM documents),
-        |l AS (
-        |  SELECT source, generate_subscripts(ls, 1) - 1 AS pos,
-        |         trim(regexp_replace(unnest(ls), '#.*', '')) AS l
-        |  FROM (SELECT source, string_split(body, e'\n') AS ls FROM b)),
-        |d AS (
-        |  SELECT source, pos,
-        |    lower(regexp_extract(l, '^([A-Za-z-]+):', 1)) AS dn,
-        |    trim(regexp_extract(l, '^[A-Za-z-]+:(.*)$', 1)) AS dv
-        |  FROM l),
-        |f AS (
-        |  SELECT source, pos, dn, dv,
-        |    last_value(CASE WHEN dn = 'user-agent' THEN dv END
-        |      IGNORE NULLS) OVER (PARTITION BY source ORDER BY pos
-        |        ROWS UNBOUNDED PRECEDING) AS user_agent
-        |  FROM d)
-        |SELECT source, CAST(pos AS BIGINT) AS line_no, user_agent,
-        |       dn = 'allow' AS allow, dv AS prefix
-        |FROM f
-        |WHERE dn IN ('allow', 'disallow') AND dv <> ''
-        |  AND user_agent IS NOT NULL
-        |ORDER BY source, line_no""".stripMargin,
-
-    "q_ndcg" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x <> '')) AS dl,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x = 'spark')) AS tf_spark,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x = 'window')) AS tf_window,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x = 'merge')) AS tf_merge
-        |  FROM documents),
-        |stats AS (
-        |  SELECT count(*) AS n, avg(dl) AS avgdl,
-        |    sum(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END) AS df_spark,
-        |    sum(CASE WHEN tf_window > 0 THEN 1 ELSE 0 END) AS df_window,
-        |    sum(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-        |  FROM base),
-        |sc AS (
-        |  SELECT doc_id, round(
-        |      CAST(tf_spark AS DOUBLE) * (1.2 + 1.0)
-        |        / (tf_spark + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-        |        * ln(1 + (n - df_spark + 0.5) / (df_spark + 0.5))
-        |    + CAST(tf_window AS DOUBLE) * (1.2 + 1.0)
-        |        / (tf_window + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-        |        * ln(1 + (n - df_window + 0.5) / (df_window + 0.5))
-        |    + CAST(tf_merge AS DOUBLE) * (1.2 + 1.0)
-        |        / (tf_merge + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-        |        * ln(1 + (n - df_merge + 0.5) / (df_merge + 0.5)), 6)
-        |    AS bm25
-        |  FROM base, stats),
-        |rel AS (
-        |  SELECT doc_id, CAST(len(list_intersect(
-        |    list_distinct(list_filter(string_split_regex(
-        |      lower(trim(text)), '\s+'), x -> x <> '')),
-        |    ['spark', 'window', 'merge'])) AS BIGINT) AS rel
-        |  FROM documents),
-        |j AS (SELECT sc.doc_id, sc.bm25, rel.rel
-        |      FROM sc JOIN rel USING (doc_id)),
-        |d AS (SELECT sum((pow(2.0, rel) - 1.0) / log2(pos + 1.0)) AS dcg
-        |      FROM (SELECT rel, row_number() OVER (
-        |              ORDER BY bm25 DESC, doc_id) AS pos
-        |            FROM j ORDER BY bm25 DESC, doc_id LIMIT 10)),
-        |i AS (SELECT sum((pow(2.0, rel) - 1.0) / log2(pos + 1.0)) AS idcg
-        |      FROM (SELECT rel, row_number() OVER (
-        |              ORDER BY rel DESC, doc_id) AS pos
-        |            FROM j ORDER BY rel DESC, doc_id LIMIT 10))
-        |SELECT 10 AS k, round(coalesce(d.dcg, 0.0), 6) AS dcg,
-        |  round(coalesce(i.idcg, 0.0), 6) AS idcg,
-        |  CASE WHEN coalesce(i.idcg, 0.0) > 0
-        |       THEN round(d.dcg / i.idcg, 6) END AS ndcg
-        |FROM d, i""".stripMargin,
-
-    "q_host_reputation" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN lower(source) || '.example.com'
-        |         WHEN doc_id % 3 = 1
-        |           THEN 'www.' || lower(source) || '.example.com'
-        |         ELSE lower(source) || '.net' END AS host,
-        |    n_chars BETWEEN 200 AND 3000 AS keep
-        |  FROM documents)
-        |SELECT host, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-        |  round(CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / count(*), 6) AS keep_rate
-        |FROM u GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_jaccard_hist" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> x <> ''))) AS word
-        |  FROM documents WHERE doc_id < 100),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS nc
-        |  FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT round(nc * 1.0 / (sa.n + sb.n - nc), 6) AS j
-        |  FROM common
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b)
-        |SELECT CAST(least(floor(j * 10), 9) AS BIGINT) AS bucket,
-        |       count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_daily_psi" ->
-      """WITH c AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        |         coalesce(CAST(event_type AS VARCHAR), '<null>') AS cat,
-        |         count(*) AS n
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |d0 AS (SELECT min(day) AS day FROM c),
-        |b AS (SELECT cat, n AS nb FROM c JOIN d0 USING (day)),
-        |tb AS (SELECT CAST(sum(nb) AS BIGINT) AS tb FROM b),
-        |t AS (SELECT day, CAST(sum(n) AS BIGINT) AS t FROM c GROUP BY 1),
-        |g AS (SELECT d.day, k.cat FROM (SELECT DISTINCT day FROM c) d,
-        |      (SELECT DISTINCT cat FROM c) k),
-        |j AS (
-        |  SELECT g.day, t.t AS tt,
-        |    greatest(CAST(coalesce(c.n, 0) AS DOUBLE)
-        |      / CAST(t.t AS DOUBLE), 0.0001) AS po,
-        |    greatest(CAST(coalesce(b.nb, 0) AS DOUBLE)
-        |      / CAST(tb.tb AS DOUBLE), 0.0001) AS pb
-        |  FROM g LEFT JOIN c ON g.day = c.day AND g.cat = c.cat
-        |  LEFT JOIN b ON g.cat = b.cat
-        |  JOIN t ON g.day = t.day
-        |  CROSS JOIN tb)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, max(tt) AS n_rows,
-        |       round(sum((po - pb) * ln(po / pb)), 6) AS psi
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_template_headers" ->
-      """WITH d2 AS (
-        |  SELECT source, CASE WHEN doc_id % 4 = 0
-        |    THEN 'tpl hdr one two three four five six ' || text
-        |    ELSE text END AS text
-        |  FROM documents),
-        |w AS (SELECT source, list_filter(string_split_regex(
-        |        lower(trim(text)), '\s+'), x -> x <> '') AS ws FROM d2),
-        |p AS (SELECT source, array_to_string(ws[1:8], ' ') AS pfx
-        |      FROM w WHERE len(ws) > 0),
-        |c AS (SELECT source, pfx, count(*) AS n FROM p GROUP BY 1, 2),
-        |r AS (SELECT source, pfx, n,
-        |        CAST(sum(n) OVER (PARTITION BY source) AS BIGINT)
-        |          AS n_docs,
-        |        row_number() OVER (PARTITION BY source
-        |          ORDER BY n DESC, pfx DESC) AS rn
-        |      FROM c)
-        |SELECT source, pfx AS top_prefix, n_docs, n AS top_n,
-        |  round(CAST(n AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-        |    AS top_share
-        |FROM r WHERE rn = 1 ORDER BY source""".stripMargin,
-
-    "q_lang_conflicts" ->
-      """WITH u AS (
-        |  SELECT text, lang FROM documents
-        |  UNION ALL
-        |  SELECT text, 'xx' AS lang FROM documents WHERE doc_id % 25 = 0),
-        |p AS (SELECT md5(text) AS content_hash,
-        |        coalesce(CAST(lang AS VARCHAR), '<null>') AS l FROM u),
-        |c AS (SELECT content_hash, l, count(*) AS n FROM p GROUP BY 1, 2)
-        |SELECT content_hash, CAST(sum(n) AS BIGINT) AS n_docs,
-        |  count(*) AS n_labels,
-        |  array_to_string(list_sort(list(l)), ',') AS labels
-        |FROM c GROUP BY 1 HAVING count(*) > 1
-        |ORDER BY 1""".stripMargin,
-
-    "q_embedding_dispersion" ->
-      """WITH e AS (
-        |  SELECT label, vec_id, generate_subscripts(embedding, 1) AS dim,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |cen AS (SELECT label, dim, avg(v) AS c FROM e GROUP BY 1, 2),
-        |pv AS (SELECT e.label, e.vec_id, sum(e.v * cen.c) AS vc,
-        |         sum(e.v * e.v) AS vv, sum(cen.c * cen.c) AS cc
-        |       FROM e JOIN cen ON e.label = cen.label AND e.dim = cen.dim
-        |       GROUP BY 1, 2),
-        |cs AS (SELECT label, CASE WHEN vv > 0 AND cc > 0
-        |         THEN vc / sqrt(vv * cc) END AS c FROM pv),
-        |cn AS (SELECT label, count(*) AS n_vectors FROM embeddings
-        |       GROUP BY 1)
-        |SELECT cn.label, cn.n_vectors, count(cs.c) AS n_scored,
-        |  round(avg(cs.c), 6) AS avg_cos, round(min(cs.c), 6) AS min_cos
-        |FROM cn LEFT JOIN cs ON cn.label = cs.label
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-    "q_ngram_novelty" ->
-      """WITH tok AS (
-        |  SELECT doc_id, generate_subscripts(ws, 1) AS pos, unnest(ws) AS w
-        |  FROM (SELECT doc_id, list_filter(string_split_regex(
-        |          lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |tg AS (
-        |  SELECT doc_id, w AS w1,
-        |    lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,
-        |    lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3
-        |  FROM tok QUALIFY w3 IS NOT NULL),
-        |ref AS (SELECT DISTINCT w1, w2, w3 FROM tg WHERE doc_id % 2 = 0),
-        |dg AS (SELECT DISTINCT doc_id, w1, w2, w3 FROM tg
-        |       WHERE doc_id % 2 = 1),
-        |sc AS (
-        |  SELECT dg.doc_id, count(*) AS n_grams,
-        |    CAST(sum(CASE WHEN r.w1 IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS novel
-        |  FROM dg LEFT JOIN ref r ON dg.w1 = r.w1 AND dg.w2 = r.w2
-        |                          AND dg.w3 = r.w3
-        |  GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(sc.n_grams, 0) AS BIGINT) AS n_grams,
-        |  round(CAST(sc.novel AS DOUBLE) / CAST(sc.n_grams AS DOUBLE), 6)
-        |    AS novelty
-        |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_badword_filter" ->
-      """WITH w AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '') AS ws
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(len(list_filter(ws, x ->
-        |      list_contains(['merge', 'shuffle', 'spill'], x))) AS BIGINT)
-        |      AS n_bad
-        |  FROM w)
-        |SELECT doc_id, n_words, n_bad,
-        |  round(CAST(n_bad AS DOUBLE)
-        |    / CAST(greatest(n_words, 1) AS DOUBLE), 6) AS bad_ratio,
-        |  round(CAST(n_bad AS DOUBLE)
-        |    / CAST(greatest(n_words, 1) AS DOUBLE), 6) <= 0.05 AS keep
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_stratified_sample" ->
-      """WITH r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY (doc_id * 2654435761 + 11) % 4294967296, doc_id)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT doc_id, source FROM r
-        |WHERE rn <= CAST(ceil(n * 0.1) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_trigram_backoff" ->
-      """WITH tok AS (
-        |  SELECT doc_id, generate_subscripts(ws, 1) AS pos, unnest(ws) AS w
-        |  FROM (SELECT doc_id, list_filter(string_split_regex(
-        |          lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |tg AS (
-        |  SELECT doc_id, w AS w1,
-        |    lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,
-        |    lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3
-        |  FROM tok QUALIFY w3 IS NOT NULL),
-        |bg AS (
-        |  SELECT doc_id, w AS w1,
-        |    lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-        |  FROM tok QUALIFY w2 IS NOT NULL),
-        |uni AS (SELECT w, count(*) AS c1 FROM tok WHERE doc_id % 2 = 0
-        |        GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS n,
-        |               count(*) AS v FROM uni),
-        |bi AS (SELECT w1, w2, count(*) AS c2 FROM bg WHERE doc_id % 2 = 0
-        |       GROUP BY 1, 2),
-        |ctx2 AS (SELECT w1 AS w, CAST(sum(c2) AS BIGINT) AS cw FROM bi
-        |         GROUP BY 1),
-        |tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM tg
-        |        WHERE doc_id % 2 = 0 GROUP BY 1, 2, 3),
-        |ctx3 AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS c12 FROM tri
-        |         GROUP BY 1, 2),
-        |sc AS (
-        |  SELECT sg.doc_id, count(*) AS n_trigrams,
-        |    round(sum(CASE
-        |      WHEN tri.c3 IS NOT NULL THEN
-        |        ln(CAST(tri.c3 AS DOUBLE) / CAST(ctx3.c12 AS DOUBLE))
-        |      WHEN b23.c2 IS NOT NULL THEN
-        |        ln(0.4 * CAST(b23.c2 AS DOUBLE) / CAST(c2w.cw AS DOUBLE))
-        |      ELSE ln(0.4 * 0.4
-        |        * (CAST(coalesce(u3.c1, 0) AS DOUBLE) + 1.0)
-        |        / CAST(tot.n + tot.v AS DOUBLE))
-        |    END) / count(*), 6) AS avg_logprob
-        |  FROM tg sg
-        |  LEFT JOIN tri ON sg.w1 = tri.w1 AND sg.w2 = tri.w2
-        |                AND sg.w3 = tri.w3
-        |  LEFT JOIN ctx3 ON sg.w1 = ctx3.w1 AND sg.w2 = ctx3.w2
-        |  LEFT JOIN bi b23 ON sg.w2 = b23.w1 AND sg.w3 = b23.w2
-        |  LEFT JOIN ctx2 c2w ON sg.w2 = c2w.w
-        |  LEFT JOIN uni u3 ON sg.w3 = u3.w
-        |  CROSS JOIN tot
-        |  WHERE sg.doc_id % 2 = 1
-        |  GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(sc.n_trigrams, 0) AS BIGINT) AS n_trigrams,
-        |  sc.avg_logprob
-        |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_ccnet_buckets" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(
-        |    lower(trim(text)), '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |freq AS (SELECT w, count(*) AS n FROM tok GROUP BY w),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM freq),
-        |sc AS (
-        |  SELECT tok.doc_id,
-        |         round(sum(ln(CAST(freq.n AS DOUBLE) / tot.total))
-        |           / count(*), 6) AS avg_logprob
-        |  FROM tok JOIN freq USING (w), tot
-        |  GROUP BY tok.doc_id),
-        |scored AS (
-        |  SELECT d.doc_id, d.lang, sc.avg_logprob
-        |  FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id),
-        |b AS (
-        |  SELECT doc_id, lang, avg_logprob,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY avg_logprob, doc_id) AS rnk,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM scored WHERE avg_logprob IS NOT NULL)
-        |SELECT doc_id, lang, avg_logprob,
-        |  CASE WHEN rnk <= n // 3 THEN 'tail'
-        |       WHEN rnk <= (n * 2) // 3 THEN 'middle'
-        |       ELSE 'head' END AS bucket
-        |FROM b
-        |UNION ALL
-        |SELECT doc_id, lang, avg_logprob, NULL AS bucket
-        |FROM scored WHERE avg_logprob IS NULL
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_savings" ->
-      """WITH u AS (
-        |  SELECT doc_id, text, source, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, source, n_chars FROM documents
-        |  WHERE doc_id % 10 = 0),
-        |h AS (SELECT doc_id, source, n_chars, md5(text) AS hh FROM u),
-        |w AS (SELECT hh, min(doc_id) AS win FROM h GROUP BY 1)
-        |SELECT source, count(*) AS n_dropped,
-        |       CAST(sum(n_chars) AS BIGINT) AS size_saved
-        |FROM h JOIN w USING (hh) WHERE doc_id <> win
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_k_anonymity" ->
-      """SELECT source, lang,
-        |  CAST(floor(n_chars / 1000.0) AS BIGINT) AS len_bucket,
-        |  count(*) AS n, count(*) < 5 AS at_risk
-        |FROM documents
-        |GROUP BY 1, 2, 3
-        |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_l_diversity" ->
-      """WITH p AS (
-        |  SELECT DISTINCT source,
-        |    CAST(floor(n_chars / 1000.0) AS BIGINT) AS len_bucket, lang
-        |  FROM documents)
-        |SELECT source, len_bucket, count(*) AS l_div,
-        |       count(*) < 2 AS at_risk
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_doremi_step" ->
-      """WITH l AS (
-        |  SELECT source, count(*) AS n,
-        |    CAST(sum(n_chars % 97) AS DOUBLE)
-        |      / CAST(count(n_chars) AS DOUBLE) AS loss
-        |  FROM documents GROUP BY 1),
-        |g AS (
-        |  SELECT CAST(sum(n_chars % 97) AS DOUBLE)
-        |           / CAST(count(n_chars) AS DOUBLE) AS ref_loss
-        |  FROM documents),
-        |sc AS (
-        |  SELECT source,
-        |    greatest(coalesce(loss - ref_loss, 0.0), 0.0) AS excess,
-        |    CAST(n AS DOUBLE)
-        |      * exp(0.1 * greatest(coalesce(loss - ref_loss, 0.0), 0.0))
-        |      AS raw
-        |  FROM l, g),
-        |z AS (SELECT sum(raw) AS z FROM sc)
-        |SELECT source, round(excess, 6) AS excess,
-        |       round(raw / z, 6) AS weight
-        |FROM sc, z ORDER BY source""".stripMargin,
-
-    "q_robots_filter" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN lower(source) || '.example.com'
-        |         WHEN doc_id % 3 = 1
-        |           THEN 'www.' || lower(source) || '.example.com'
-        |         ELSE lower(source) || '.net' END AS host,
-        |    '/p/' || doc_id AS path
-        |  FROM documents),
-        |r AS (SELECT * FROM (VALUES
-        |    ('src1.example.com', '/', false),
-        |    ('src1.example.com', '/p/1', true),
-        |    ('www.src2.example.com', '/p', false),
-        |    ('src4.net', '/p/4', false),
-        |    ('src4.net', '/p/44', true),
-        |    ('src7.net', '/', false),
-        |    ('src7.net', '/p/7', false)) t(host, prefix, allow)),
-        |m AS (
-        |  SELECT doc_id, allow, row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY length(prefix) DESC, allow DESC) AS rn
-        |  FROM u JOIN r ON u.host = r.host
-        |              AND starts_with(u.path, r.prefix))
-        |SELECT u.doc_id, u.host,
-        |       coalesce(m.allow, true) AS allowed
-        |FROM u LEFT JOIN (SELECT doc_id, allow FROM m WHERE rn = 1) m
-        |  ON u.doc_id = m.doc_id
-        |ORDER BY u.doc_id""".stripMargin,
-
-    "q_vocab_overlap" ->
-      """WITH w AS (
-        |  SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(trim(text)),
-        |      '\s+'), x -> x <> '')) AS word
-        |  FROM documents WHERE source IS NOT NULL),
-        |c AS (SELECT source, word, count(*) AS n FROM w GROUP BY 1, 2),
-        |t AS (SELECT source, word FROM (
-        |    SELECT source, word, row_number() OVER (PARTITION BY source
-        |      ORDER BY n DESC, word ASC) AS r FROM c)
-        |  WHERE r <= 30),
-        |s AS (SELECT source, count(*) AS sz FROM t GROUP BY 1)
-        |SELECT a.source AS source_a, b.source AS source_b,
-        |  count(*) AS n_common,
-        |  round(CAST(count(*) AS DOUBLE)
-        |    / (sa.sz + sb.sz - count(*)), 6) AS jaccard
-        |FROM t a JOIN t b ON a.word = b.word AND a.source < b.source
-        |JOIN s sa ON sa.source = a.source
-        |JOIN s sb ON sb.source = b.source
-        |GROUP BY a.source, b.source, sa.sz, sb.sz
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q_centroid_drift" ->
-      """WITH cnt AS (
-        |  SELECT label,
-        |    count(*) FILTER (vec_id % 2 = 0) AS n_base,
-        |    count(*) FILTER (vec_id % 2 = 1) AS n_cur
-        |  FROM embeddings GROUP BY 1),
-        |e AS (
-        |  SELECT label, vec_id % 2 AS snap,
-        |    generate_subscripts(embedding, 1) AS dim,
-        |    CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |m AS (
-        |  SELECT label, dim,
-        |    avg(CASE WHEN snap = 0 THEN v END) AS a,
-        |    avg(CASE WHEN snap = 1 THEN v END) AS b
-        |  FROM e GROUP BY 1, 2),
-        |g AS (
-        |  SELECT label, sum(a * b) AS ab, sum(a * a) AS aa,
-        |         sum(b * b) AS bb
-        |  FROM m GROUP BY 1)
-        |SELECT cnt.label, cnt.n_base, cnt.n_cur,
-        |  CASE WHEN g.aa > 0 AND g.bb > 0
-        |       THEN round(g.ab / sqrt(g.aa * g.bb), 6) END AS centroid_cos
-        |FROM cnt LEFT JOIN g ON cnt.label = g.label
-        |ORDER BY cnt.label""".stripMargin,
-
-    "q_funnel" ->
-      """WITH base AS (
-        |  SELECT n_chars, source,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        x -> x <> '')) AS nw
-        |  FROM documents)
-        |SELECT 'input' AS stage, count(*) AS n_rows,
-        |       CAST(coalesce(sum(n_chars), 0) AS BIGINT) AS mass FROM base
-        |UNION ALL
-        |SELECT 'len_gate', count(*), CAST(coalesce(sum(n_chars), 0) AS BIGINT)
-        |FROM base WHERE n_chars >= 200
-        |UNION ALL
-        |SELECT 'word_gate', count(*), CAST(coalesce(sum(n_chars), 0) AS BIGINT)
-        |FROM base WHERE n_chars >= 200 AND nw >= 30
-        |UNION ALL
-        |SELECT 'source_gate', count(*), CAST(coalesce(sum(n_chars), 0) AS BIGINT)
-        |FROM base WHERE n_chars >= 200 AND nw >= 30
-        |  AND source NOT IN ('src3', 'src7')
-        |ORDER BY stage""".stripMargin,
-
-    // width = ceil(total/8) exactly as Spark's (total + n - 1) div n;
-    // a doc's shard comes from its START offset (docs never split)
-    "q_balanced_shards" ->
-      """WITH o AS (
-        |  SELECT doc_id, n_chars,
-        |    coalesce(sum(n_chars) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-        |  FROM documents),
-        |w AS (SELECT (sum(n_chars) + 7) // 8 AS w FROM documents)
-        |SELECT CAST(least(o.off // w.w, 7) AS INTEGER) AS shard_id,
-        |       count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS total_cost
-        |FROM o, w GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_difficulty_buckets" ->
-      """WITH t AS (SELECT quantile_cont(n_chars, 0.25) AS q1,
-        |                  quantile_cont(n_chars, 0.50) AS q2,
-        |                  quantile_cont(n_chars, 0.75) AS q3
-        |           FROM documents)
-        |SELECT bucket, count(*) AS n_docs,
-        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM (SELECT n_chars,
-        |        (CASE WHEN n_chars > t.q1 THEN 1 ELSE 0 END
-        |       + CASE WHEN n_chars > t.q2 THEN 1 ELSE 0 END
-        |       + CASE WHEN n_chars > t.q3 THEN 1 ELSE 0 END) AS bucket
-        |      FROM documents, t)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the same extraction chain, step by step, in DuckDB's RE2 dialect
-    // (regexp_replace needs the explicit 'g'/'gs'/'gis' flags that Spark
-    // applies implicitly); entity decode order matches (&amp; last)
-    "q_html_extract" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    '<html><head><style type="text/css">body{x:1}</style>'
-        |    || '<!-- crawler note --></head><body><h1 class="t">'
-        |    || source || '</h1><p>' || text
-        |    || ' &amp; more&nbsp;&#39;quoted&#39;</p>'
-        |    || '<script>var a = 1 < 2;</script></body></html>' AS html
-        |  FROM documents)
-        |SELECT doc_id, trim(regexp_replace(
-        |  replace(replace(replace(replace(replace(replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(
-        |          regexp_replace(html, '<script[^>]*>.*?</script>', ' ', 'gis'),
-        |          '<style[^>]*>.*?</style>', ' ', 'gis'),
-        |        '<!--.*?-->', ' ', 'gs'),
-        |      '<[^>]+>', ' ', 'g'),
-        |    '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-        |    '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
-        |  '\s+', ' ', 'g')) AS text_extracted
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    // the identical block-scoring chain: script/style/comment drop,
-    // split on block-level tags, per-block (clean text, anchor-text
-    // chars) struct, length >= 80 AND link-density <= 1/3 via integer
-    // cross-multiplication, kept blocks joined with one space
-    "q_main_content" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    '<html><head><title>Page</title><script>nav.init(1 < 2);'
-        |    || '</script></head><body><nav><a href="/">Home</a> '
-        |    || '<a href="/about">About</a> <a href="/contact">Contact</a> '
-        |    || '<a href="/faq">FAQ</a></nav><div class="cookie">We use '
-        |    || 'cookies to improve your experience. '
-        |    || '<a href="/accept">Accept</a></div><h1>'
-        |    || source || '</h1><p>' || text
-        |    || '</p><p>Short teaser.</p><footer>'
-        |    || '<a href="/tos">Terms of Service</a> '
-        |    || '<a href="/privacy">Privacy Policy</a> (c) Example Corp'
-        |    || '</footer></body></html>' AS html
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(html,
-        |      '<script[^>]*>.*?</script>', ' ', 'gis'),
-        |      '<style[^>]*>.*?</style>', ' ', 'gis'),
-        |      '<!--.*?-->', ' ', 'gs') AS cl
-        |  FROM h),
-        |b AS (
-        |  SELECT doc_id, list_transform(
-        |    string_split_regex(cl, '(?is)</?(?:html|head|body|div|p|section|article|nav|footer|header|aside|ul|ol|li|h[1-6]|table|tr|td|th|form|main|br|blockquote|pre)\b[^>]*>'),
-        |    x -> {'txt': trim(regexp_replace(replace(replace(replace(replace(replace(replace(
-        |            regexp_replace(x, '<[^>]+>', ' ', 'g'),
-        |            '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |            '&#39;', ''''), '&amp;', '&'), '\s+', ' ', 'g')),
-        |          'll': coalesce(list_sum(list_transform(
-        |            regexp_extract_all(x, '(?is)<a\b[^>]*>(.*?)</a>', 1),
-        |            a -> length(trim(regexp_replace(replace(replace(replace(replace(replace(replace(
-        |              regexp_replace(a, '<[^>]+>', ' ', 'g'),
-        |              '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |              '&#39;', ''''), '&amp;', '&'), '\s+', ' ', 'g'))))), 0)}) AS blks
-        |  FROM c)
-        |SELECT doc_id,
-        |  coalesce(array_to_string(list_transform(list_filter(blks,
-        |    s -> length(s.txt) >= 80 AND s.ll * 3 <= length(s.txt) * 1),
-        |    s -> s.txt), ' '), '') AS main_text
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // top-gram mass: among the grams with the max count, the largest
-    // count×charlen (whitespace-free char mass / total word-char mass);
-    // dup mass: Σ count×charlen over grams occurring ≥ 2
-    "q_char_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '') AS ws
-        |  FROM documents),
-        |den AS (
-        |  -- from t directly, NOT via unnest: a zero-word document must
-        |  -- keep its row (Spark emits (0.0, 0.0) for it)
-        |  SELECT doc_id,
-        |         coalesce(list_sum(list_transform(ws, w -> len(w))), 0)
-        |           ::DOUBLE AS denom
-        |  FROM t),
-        |c2 AS (
-        |  SELECT doc_id, g, count(*) AS cnt, any_value(cl) AS cl FROM (
-        |    SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g,
-        |           len(ws[i]) + len(ws[i+1]) AS cl
-        |    FROM t, LATERAL (SELECT unnest(range(1, len(ws))) AS i)
-        |    WHERE len(ws) >= 2)
-        |  GROUP BY 1, 2),
-        |top2 AS (
-        |  SELECT doc_id, max(cnt * cl) AS mass FROM (
-        |    SELECT doc_id, cnt, cl,
-        |           max(cnt) OVER (PARTITION BY doc_id) AS mc FROM c2)
-        |  WHERE cnt = mc GROUP BY doc_id),
-        |c3 AS (
-        |  SELECT doc_id, g, count(*) AS cnt, any_value(cl) AS cl FROM (
-        |    SELECT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g,
-        |           len(ws[i]) + len(ws[i+1]) + len(ws[i+2]) AS cl
-        |    FROM t, LATERAL (SELECT unnest(range(1, len(ws) - 1)) AS i)
-        |    WHERE len(ws) >= 3)
-        |  GROUP BY 1, 2),
-        |dup3 AS (
-        |  SELECT doc_id,
-        |         coalesce(sum(cnt * cl) FILTER (WHERE cnt >= 2), 0) AS mass
-        |  FROM c3 GROUP BY doc_id)
-        |SELECT den.doc_id,
-        |  round(CASE WHEN den.denom = 0 THEN 0
-        |             ELSE coalesce(top2.mass, 0) / den.denom END, 6)
-        |    AS top2_char_frac,
-        |  round(CASE WHEN den.denom = 0 THEN 0
-        |             ELSE coalesce(dup3.mass, 0) / den.denom END, 6)
-        |    AS dup3_char_frac
-        |FROM den LEFT JOIN top2 USING (doc_id) LEFT JOIN dup3 USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // DSIR replicated exactly: same word split, add-one smoothing over
-    // V = distinct raw words, ln-ratio summed per doc, rounded 6 dp
-    "q_dsir_weights" ->
-      """WITH wr AS (
-        |  SELECT doc_id, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '')) AS word
-        |  FROM documents),
-        |wt AS (SELECT wr.word FROM wr JOIN documents USING (doc_id)
-        |       WHERE source IN ('src1', 'src2')),
-        |cr AS (SELECT word, count(*) AS cr FROM wr GROUP BY 1),
-        |ct AS (SELECT word, count(*) AS ct FROM wt GROUP BY 1),
-        |tot AS (SELECT (SELECT sum(cr)::DOUBLE FROM cr) AS nr,
-        |               (SELECT count(*)::DOUBLE FROM cr) AS v,
-        |               (SELECT coalesce(sum(ct), 0)::DOUBLE FROM ct) AS nt),
-        |lw AS (SELECT cr.word,
-        |         ln((coalesce(ct.ct, 0) + 1.0) / (tot.nt + tot.v))
-        |       - ln((cr.cr + 1.0) / (tot.nr + tot.v)) AS lw
-        |       FROM cr LEFT JOIN ct USING (word), tot)
-        |SELECT doc_id, round(sum(lw), 6) AS dsir_weight
-        |FROM wr JOIN lw USING (word)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the drop rule stated directly: survivor iff no smaller-id vector
-    // at cosine ≥ τ (within-cluster == global at τ=0.999 — see the
-    // Spark-side comment); float vectors cast to DOUBLE for DuckDB's
-    // list_cosine_similarity
-    "q_semdedup" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding::DOUBLE[] FROM embeddings)
-        |SELECT a.vec_id FROM e a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM e b WHERE b.vec_id < a.vec_id
-        |    AND list_cosine_similarity(a.v, b.v) >= 0.999)
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_snapshot_diff" ->
-      """WITH old AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END
-        |           AS text
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |nw AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0)
-        |SELECT coalesce(nw.doc_id, old.doc_id) AS doc_id,
-        |       CASE WHEN old.doc_id IS NULL THEN 'added'
-        |            WHEN nw.doc_id IS NULL THEN 'removed'
-        |            WHEN old.text = nw.text THEN 'unchanged'
-        |            ELSE 'changed' END AS status
-        |FROM old FULL JOIN nw ON old.doc_id = nw.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_partition_digest" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, doc_id % 7 AS part
-        |  FROM documents WHERE doc_id % 3 <> 0 AND doc_id % 5 <> 0),
-        |oldh AS (
-        |  SELECT part,
-        |         (doc_id * 2654435761 +
-        |          length(CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
-        |                      ELSE text END) * 40503 + 7) % 4294967296 AS h
-        |  FROM base WHERE part <> 6),
-        |newh AS (
-        |  SELECT part,
-        |         (doc_id * 2654435761 + length(text) * 40503 + 7)
-        |           % 4294967296 AS h
-        |  FROM base WHERE part <> 5),
-        |od AS (SELECT part, count(*) AS n, bit_xor(h) AS x,
-        |              CAST(sum(h) % 2305843009213693951 AS BIGINT) AS s
-        |       FROM oldh GROUP BY 1),
-        |nd AS (SELECT part, count(*) AS n, bit_xor(h) AS x,
-        |              CAST(sum(h) % 2305843009213693951 AS BIGINT) AS s
-        |       FROM newh GROUP BY 1)
-        |SELECT coalesce(nd.part, od.part) AS part,
-        |       CASE WHEN od.part IS NULL THEN 'added'
-        |            WHEN nd.part IS NULL THEN 'removed'
-        |            WHEN od.n = nd.n AND od.x = nd.x AND od.s = nd.s
-        |              THEN 'unchanged'
-        |            ELSE 'changed' END AS status,
-        |       coalesce(od.n, 0) AS n_rows_old,
-        |       coalesce(nd.n, 0) AS n_rows_new
-        |FROM od FULL JOIN nd ON od.part = nd.part
-        |ORDER BY part""".stripMargin,
-
-    "q_length_buckets" ->
-      """WITH b AS (
-        |  SELECT CAST(CASE WHEN n_chars IS NULL OR n_chars < 1 THEN -1
-        |              ELSE length(bin(n_chars)) - 1 END AS INTEGER)
-        |           AS bucket,
-        |         CASE WHEN n_chars IS NULL OR n_chars < 1 THEN 0
-        |              ELSE n_chars END AS len
-        |  FROM documents),
-        |g AS (SELECT bucket, count(*) AS n_docs,
-        |             CAST(sum(len) AS BIGINT) AS token_mass,
-        |             CAST(max(len) AS BIGINT) AS max_len
-        |      FROM b GROUP BY 1)
-        |SELECT bucket,
-        |       CASE WHEN bucket >= 0 THEN CAST(power(2, bucket) AS BIGINT)
-        |            ELSE 0 END AS bucket_lo,
-        |       CASE WHEN bucket >= 0
-        |            THEN CAST(power(2, bucket + 1) AS BIGINT) - 1
-        |            ELSE 0 END AS bucket_hi,
-        |       n_docs, token_mass, max_len,
-        |       n_docs * max_len AS padded_mass,
-        |       CASE WHEN max_len > 0
-        |            THEN round(token_mass / CAST(n_docs * max_len AS DOUBLE), 6)
-        |            ELSE 0.0 END AS utilization,
-        |       CAST(ceil(n_docs / 64.0) AS BIGINT) AS n_batches
-        |FROM g ORDER BY bucket""".stripMargin,
-
-    "q_dp_counts" ->
-      """WITH g AS (SELECT doc_id % 20 AS grp, count(*) AS n_true
-        |           FROM documents GROUP BY 1),
-        |n AS (SELECT grp, n_true,
-        |        (CAST((grp * 2654435761 + 101) % 4294967296 AS DOUBLE)
-        |          + 0.5) / 4294967296.0 AS u
-        |      FROM g)
-        |SELECT grp, n_true,
-        |  round(-1.0 * (CASE WHEN u > 0.5 THEN 1.0 WHEN u < 0.5 THEN -1.0
-        |                     ELSE 0.0 END)
-        |        * ln(1.0 - 2.0 * abs(u - 0.5)), 6) AS noise,
-        |  round(n_true + (-1.0 * (CASE WHEN u > 0.5 THEN 1.0
-        |                               WHEN u < 0.5 THEN -1.0
-        |                               ELSE 0.0 END)
-        |        * ln(1.0 - 2.0 * abs(u - 0.5))), 6) AS n_dp
-        |FROM n ORDER BY grp""".stripMargin,
-
-    "q_cohen_kappa" ->
-      """WITH l AS (
-        |  SELECT CASE WHEN doc_id % 4 <= 1 THEN 'pos' ELSE 'neg' END AS a,
-        |         CASE WHEN doc_id % 4 = 0 OR doc_id % 7 = 0 THEN 'pos'
-        |              ELSE 'neg' END AS b
-        |  FROM documents),
-        |c AS (SELECT
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) AS DOUBLE) AS t,
-        |  CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS DOUBLE) AS agree,
-        |  CAST(sum(CASE WHEN a = 'pos' THEN 1 ELSE 0 END) AS DOUBLE) AS nap,
-        |  CAST(sum(CASE WHEN b = 'pos' THEN 1 ELSE 0 END) AS DOUBLE) AS nbp
-        |  FROM l)
-        |SELECT n, round(agree / t, 6) AS p_o,
-        |       round((nap / t) * (nbp / t)
-        |             + ((t - nap) / t) * ((t - nbp) / t), 6) AS p_e,
-        |       round((agree / t
-        |               - ((nap / t) * (nbp / t)
-        |                  + ((t - nap) / t) * ((t - nbp) / t)))
-        |             / (1.0 - ((nap / t) * (nbp / t)
-        |                  + ((t - nap) / t) * ((t - nbp) / t))), 6) AS kappa
-        |FROM c""".stripMargin,
-
-    "q_rendezvous" ->
-      """WITH d AS (SELECT doc_id AS k FROM documents),
-        |h AS (SELECT k, s,
-        |        CAST((CAST(xor(h1, h1 >> 16) AS HUGEINT) * 2246822519)
-        |             % 4294967296 AS BIGINT) AS h
-        |      FROM (SELECT k, s,
-        |              ((k + s * 1000003 + 17) * 2654435761)
-        |                % 4294967296 AS h1
-        |            FROM d, range(10) t(s))),
-        |a8 AS (SELECT k, s FROM (
-        |         SELECT k, s, row_number() OVER (PARTITION BY k
-        |           ORDER BY h DESC, s DESC) AS rn
-        |         FROM h WHERE s < 8) WHERE rn = 1),
-        |a10 AS (SELECT k, s FROM (
-        |         SELECT k, s, row_number() OVER (PARTITION BY k
-        |           ORDER BY h DESC, s DESC) AS rn
-        |         FROM h) WHERE rn = 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CASE WHEN a8.s <> a10.s THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_moved,
-        |       round(CAST(sum(CASE WHEN a8.s <> a10.s THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 6) AS moved_frac
-        |FROM a8 JOIN a10 USING (k)""".stripMargin,
-
-    "q_stitch" ->
-      """WITH base AS (SELECT doc_id, text FROM documents
-        |              WHERE doc_id < 300 AND length(text) >= 16),
-        |u AS (SELECT doc_id, text FROM base
-        |      UNION ALL
-        |      SELECT doc_id + 1000000,
-        |             right(text, 16) || ' continuation page' FROM base),
-        |tl AS (SELECT doc_id AS tail_id, right(text, 16) AS g
-        |       FROM u WHERE length(text) >= 16),
-        |hd AS (SELECT doc_id AS head_id, substr(text, 1, 16) AS g
-        |       FROM u WHERE length(text) >= 16)
-        |SELECT tail_id, head_id FROM tl JOIN hd USING (g)
-        |WHERE tail_id <> head_id
-        |ORDER BY tail_id, head_id""".stripMargin,
-
-    "q_crossfield" ->
-      """WITH li AS (SELECT l_orderkey * 100 + l_linenumber AS id, *
-        |            FROM lineitem)
-        |SELECT id, rule_id FROM (
-        |  SELECT id, 'R_HIGH_QTY_DISC' AS rule_id FROM li
-        |  WHERE COALESCE(l_quantity >= 45, FALSE)
-        |    AND NOT COALESCE(l_discount <= 0.05, FALSE)
-        |  UNION ALL
-        |  SELECT id, 'R_RETURN_FINISHED' FROM li
-        |  WHERE COALESCE(l_returnflag = 'R', FALSE)
-        |    AND NOT COALESCE(l_linestatus = 'F', FALSE)
-        |  UNION ALL
-        |  SELECT id, 'R_TAX_PRICE' FROM li
-        |  WHERE COALESCE(l_tax > 0.06, FALSE)
-        |    AND NOT COALESCE(l_extendedprice > 20000, FALSE))
-        |ORDER BY id, rule_id""".stripMargin,
-
-    "q_benford" ->
-      """WITH d AS (SELECT CAST(substr(CAST(CAST(floor(l_extendedprice)
-        |                 AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
-        |           FROM lineitem
-        |           WHERE l_extendedprice IS NOT NULL
-        |             AND l_extendedprice >= 1.0),
-        |g AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS DOUBLE) AS t FROM g),
-        |e AS (SELECT CAST(r.range AS INT) AS digit,
-        |             log10(1.0 + 1.0 / r.range) AS p_exp
-        |      FROM range(1, 10) r)
-        |SELECT e.digit, CAST(COALESCE(g.n, 0) AS BIGINT) AS n,
-        |       round(COALESCE(g.n, 0) / t.t, 6) AS p_obs,
-        |       round(e.p_exp, 6) AS p_exp,
-        |       round(t.t * (COALESCE(g.n, 0) / t.t - e.p_exp)
-        |                 * (COALESCE(g.n, 0) / t.t - e.p_exp)
-        |             / e.p_exp, 6) AS chi_term
-        |FROM e LEFT JOIN g USING (digit), t
-        |ORDER BY e.digit""".stripMargin,
-
-    "q_fd_check" ->
-      """WITH p AS (SELECT l_partkey,
-        |             count(DISTINCT COALESCE(CAST(l_suppkey AS VARCHAR),
-        |                                     '<null>')) AS nd
-        |           FROM lineitem WHERE l_partkey IS NOT NULL
-        |           GROUP BY 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n_keys,
-        |       CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_violating_keys,
-        |       round(CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 6) AS violation_rate,
-        |       CAST(max(nd) AS BIGINT) AS max_distinct_dep
-        |FROM p""".stripMargin,
-
-    "q_key_candidates" ->
-      """WITH a AS (SELECT count(*) AS n,
-        |    count(DISTINCT o_orderkey) AS d0,
-        |    sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS z0,
-        |    count(DISTINCT o_custkey) AS d1,
-        |    sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS z1,
-        |    count(DISTINCT concat_ws(':', CAST(o_orderkey AS VARCHAR),
-        |                             CAST(o_custkey AS VARCHAR))) AS d2,
-        |    sum(CASE WHEN concat_ws(':', CAST(o_orderkey AS VARCHAR),
-        |               CAST(o_custkey AS VARCHAR)) IS NULL
-        |             THEN 1 ELSE 0 END) AS z2
-        |  FROM orders)
-        |SELECT "column", CAST(n AS BIGINT) AS n_rows,
-        |       CAST(d AS BIGINT) AS n_distinct, CAST(z AS BIGINT) AS n_nulls,
-        |       round(CAST(d AS DOUBLE) / n, 6) AS uniq_ratio,
-        |       (d = n AND z = 0) AS is_key
-        |FROM (
-        |  SELECT 'o_orderkey' AS "column", n, d0 AS d, z0 AS z FROM a
-        |  UNION ALL
-        |  SELECT 'o_custkey', n, d1, z1 FROM a
-        |  UNION ALL
-        |  SELECT 'o_orderkey:o_custkey', n, d2, z2 FROM a)
-        |ORDER BY "column"""".stripMargin,
-
-    "q_freshness" ->
-      """WITH p AS (SELECT COALESCE(CAST(event_type AS VARCHAR), '<null>')
-        |             AS event_type,
-        |             count(*) AS n_events,
-        |             min(ts) AS first_ts, max(ts) AS last_ts
-        |           FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |g AS (SELECT max(last_ts) AS gmax FROM p)
-        |SELECT event_type, CAST(n_events AS BIGINT) AS n_events,
-        |       strftime(first_ts, '%Y-%m-%d %H:%M:%S') AS first_ts,
-        |       strftime(last_ts, '%Y-%m-%d %H:%M:%S') AS last_ts,
-        |       round(epoch_us(gmax) / 1e6 - epoch_us(last_ts) / 1e6, 6)
-        |         AS staleness_s,
-        |       CASE WHEN epoch_us(last_ts) / 1e6 - epoch_us(first_ts) / 1e6 > 0
-        |            THEN round(CAST(n_events AS DOUBLE) /
-        |              ((epoch_us(last_ts) / 1e6 - epoch_us(first_ts) / 1e6)
-        |               / 3600.0), 6) END AS events_per_hour
-        |FROM p, g ORDER BY event_type""".stripMargin,
-
-    // TextProfile quality arithmetic replicated exactly: whitespace word
-    // split, BPE-ish token count (alnum runs + non-alnum non-ws chars),
-    // mean word length / punct / stopword ratios rounded to 4, then the
-    // banded composite score (same factor order as qualityScoreFrom)
-    "q_quality_scores" ->
-      """WITH feat AS (
-        |  SELECT doc_id,
-        |    len(ws) AS n_words,
-        |    len(list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), x -> x <> ''))
-        |      + (length(text) - length(regexp_replace(text, '[^A-Za-z0-9 \t\n\v\f\r]', '', 'g')))
-        |      AS n_bpeish_tokens,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents))
-        |SELECT doc_id, n_words, n_bpeish_tokens,
-        |  round(
-        |    (CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1.0
-        |          WHEN n_words > 0 THEN least(n_words / 50.0, 1.0) ELSE 0.0 END)
-        |    * (CASE WHEN mwl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END)
-        |    * (CASE WHEN punct_ratio <= 0.2 THEN 1.0 ELSE 0.5 END)
-        |    * (CASE WHEN stop_ratio >= 0.05 THEN 1.0 ELSE 0.7 END), 4) AS quality_score
-        |FROM feat ORDER BY doc_id""".stripMargin,
-
-    // seven Gopher rules + keep, replicated rule by rule on the same
-    // 4-dp-rounded (6-dp repetition) feature arithmetic the green
-    // q_quality_scores / q_digit_punct / q_repetition oracles pin
-    "q_gopher_filter" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio,
-        |    round((length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS digit_ratio,
-        |    round((length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS upper_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(1.0 - len(list_distinct(ws))::DOUBLE / len(ws), 6)
-        |      ELSE 0.0 END AS rep_ratio
-        |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents))
-        |SELECT doc_id,
-        |  (n_words >= 50 AND n_words <= 100000)::INT AS r_word_count,
-        |  (mwl BETWEEN 3.0 AND 10.0)::INT AS r_mean_word_len,
-        |  (punct_ratio <= 0.2)::INT AS r_punct,
-        |  (stop_ratio >= 0.05)::INT AS r_stopword,
-        |  (digit_ratio <= 0.15)::INT AS r_digit,
-        |  (upper_ratio <= 0.3)::INT AS r_upper,
-        |  (rep_ratio <= 0.6)::INT AS r_repetition,
-        |  (n_words >= 50 AND n_words <= 100000 AND mwl BETWEEN 3.0 AND 10.0
-        |   AND punct_ratio <= 0.2 AND stop_ratio >= 0.05 AND digit_ratio <= 0.15
-        |   AND upper_ratio <= 0.3 AND rep_ratio <= 0.6)::INT AS keep
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // suffix semantics spelled directly: an entry blocks exact host and
-    // every '.'-boundary subdomain
-    "q_domain_filter" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN lower(source) || '.example.com'
-        |         WHEN doc_id % 3 = 1 THEN 'www.' || lower(source) || '.example.com'
-        |         ELSE lower(source) || '.net' END AS host
-        |  FROM documents)
-        |SELECT doc_id, host FROM u
-        |WHERE NOT (host IN ('src3.example.com', 'src7.net', 'src11.example.com')
-        |       OR host LIKE '%.src3.example.com'
-        |       OR host LIKE '%.src7.net'
-        |       OR host LIKE '%.src11.example.com')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_exact_dups" ->
-      """SELECT count(*) AS n_groups, sum(n_docs)::BIGINT AS n_docs_total FROM (
-        |  SELECT text, count(*) AS n_docs FROM (
-        |    SELECT doc_id, text FROM documents
-        |    UNION ALL
-        |    SELECT doc_id + 1000000, text FROM documents)
-        |  GROUP BY text HAVING count(*) > 1)""".stripMargin,
-
-    "q_word_jaccard" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> x <> ''))) AS word
-        |  FROM documents WHERE doc_id < 100),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS nc
-        |  FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |       round(nc * 1.0 / (sa.n + sb.n - nc), 6) AS jaccard
-        |FROM common
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE nc * 1.0 / (sa.n + sb.n - nc) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_contamination" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> x <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(ws) >= 5
-        |    THEN list_transform(range(1, len(ws) - 3),
-        |                        i -> array_to_string(ws[i:i+4], ' '))
-        |    ELSE [array_to_string(ws, ' ')] END)) AS s
-        |  FROM t),
-        |c AS (SELECT doc_id AS corpus_id, s FROM sh),
-        |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id % 50 = 0)
-        |SELECT corpus_id, bench_id, count(*) AS n_shared
-        |FROM c JOIN b USING (s)
-        |GROUP BY 1, 2 HAVING count(*) >= 2
-        |ORDER BY corpus_id, bench_id""".stripMargin,
-
-    "q_ann_topk" ->
-      """SELECT vec_id, round(score, 4) AS score FROM (
-        |  SELECT vec_id, list_cosine_similarity(
-        |    embedding::DOUBLE[],
-        |    (SELECT embedding::DOUBLE[] FROM embeddings ORDER BY vec_id LIMIT 1)) AS score
-        |  FROM embeddings
-        |  ORDER BY score DESC, vec_id LIMIT 10)
-        |ORDER BY round(score, 4) DESC, vec_id""".stripMargin,
-
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE w AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> x <> ''))) AS word
-        |  FROM documents WHERE doc_id < 100),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS nc
-        |  FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |kept AS (
-        |  SELECT id_a, id_b FROM pairs
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE nc * 1.0 / (sa.n + sb.n - nc) >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM kept
-        |  UNION ALL SELECT id_b, id_a FROM kept),
-        |verts AS (SELECT DISTINCT src AS id FROM edges),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM verts
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)
-        |SELECT id, min(r) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin,
-
-    "q_seq_validate" ->
-      s"""WITH $SeqTableCte
-        |SELECT rule_id, count(*) AS n_violations FROM ($SeqViolationsSql)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_rule_cooccur" ->
-      s"""WITH $SeqTableCte,
-        |v AS ($SeqViolationsSql),
-        |d AS (SELECT DISTINCT doc_id, rule_id FROM v)
-        |SELECT a.rule_id AS rule_a, b.rule_id AS rule_b,
-        |       count(*) AS n_docs
-        |FROM d a JOIN d b ON a.doc_id = b.doc_id AND a.rule_id < b.rule_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_seq_violations" ->
-      s"""WITH $SeqTableCte
-        |SELECT doc_id, rule_id, offending_value FROM ($SeqViolationsSql)
-        |ORDER BY doc_id, rule_id, offending_value""".stripMargin,
-
-    "q_token_freq" ->
-      s"""WITH $SeqTableCte
-        |SELECT token, count(*) AS n
-        |FROM (SELECT unnest(toks) AS token FROM s2)
-        |GROUP BY 1 ORDER BY n DESC, token LIMIT 20""".stripMargin,
-
-    "q_seqlen_by_source" ->
-      s"""WITH $SeqTableCte
-        |SELECT source, count(*) AS n_seqs, round(avg(n_tok), 6) AS avg_ntok,
-        |       min(n_tok) AS min_ntok, max(n_tok) AS max_ntok
-        |FROM s2 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_hard_negatives" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv,
-        |         label AS ql
-        |  FROM embeddings WHERE vec_id < 10),
-        |s AS (
-        |  SELECT q.query_id, e.vec_id AS id,
-        |    list_cosine_similarity(e.embedding::DOUBLE[], q.qv) AS score
-        |  FROM embeddings e
-        |  JOIN q ON e.label <> q.ql AND e.vec_id <> q.query_id),
-        |r AS (
-        |  SELECT query_id, id, score,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, id) AS INTEGER) AS rank
-        |  FROM s)
-        |SELECT query_id, id, rank, round(score, 4) AS score
-        |FROM r WHERE rank <= 3
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q_profile_merge" ->
-      """WITH halves AS (
-        |  SELECT l_orderkey % 2 AS h, l_quantity, l_extendedprice,
-        |         l_discount
-        |  FROM lineitem),
-        |p AS (
-        |  SELECT 'l_quantity' AS field, h, count(l_quantity) AS cnt,
-        |    min(l_quantity) AS mn, max(l_quantity) AS mx,
-        |    sum(l_quantity) AS sm FROM halves GROUP BY h
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', h, count(l_extendedprice),
-        |    min(l_extendedprice), max(l_extendedprice),
-        |    sum(l_extendedprice) FROM halves GROUP BY h
-        |  UNION ALL
-        |  SELECT 'l_discount', h, count(l_discount), min(l_discount),
-        |    max(l_discount), sum(l_discount) FROM halves GROUP BY h)
-        |SELECT field, CAST(sum(cnt) AS BIGINT) AS cnt,
-        |  min(mn) AS min, max(mx) AS max,
-        |  round(sum(sm), 4) AS sum,
-        |  CASE WHEN sum(cnt) > 0 THEN round(sum(sm) / sum(cnt), 6) END
-        |    AS avg
-        |FROM p GROUP BY field ORDER BY field""".stripMargin,
-
-    "q_detokenize" ->
-      """WITH wl AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS l
-        |  FROM documents),
-        |words AS (
-        |  SELECT doc_id, unnest(l) AS word,
-        |         CAST(unnest(range(0, len(l))) AS INTEGER) AS pos
-        |  FROM wl),
-        |vocab AS (
-        |  SELECT word,
-        |         CAST(row_number() OVER (ORDER BY n DESC, word) - 1
-        |              AS INTEGER) AS id
-        |  FROM (SELECT word, count(*) AS n FROM words
-        |        GROUP BY 1 ORDER BY n DESC, word LIMIT 20)),
-        |rt AS (
-        |  SELECT w.doc_id, w.pos,
-        |    CASE WHEN v.id IS NOT NULL THEN w.word ELSE '<unk>' END
-        |      AS wout
-        |  FROM words w LEFT JOIN vocab v USING (word))
-        |SELECT d.doc_id,
-        |  coalesce(string_agg(wout, ' ' ORDER BY pos), '') AS round_trip
-        |FROM documents d LEFT JOIN rt ON d.doc_id = rt.doc_id
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    "q_readability" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(lower(trim(text)),
-        |      '\s+'), x -> x <> '')) AS BIGINT) AS n_words,
-        |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-        |      AS BIGINT) AS n_sentences,
-        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |      AS BIGINT) AS n_syllables
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  CASE WHEN n_words > 0 THEN round(
-        |    206.835
-        |      - 1.015 * (CAST(n_words AS DOUBLE) / n_sentences)
-        |      - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words), 6)
-        |  END AS flesch
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_bucketed_join" ->
-      """SELECT o_orderpriority,
-        |  CAST(count(*) AS BIGINT) AS n_items,
-        |  sum(l_quantity) AS sum_qty
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_winnow" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(text) - 6)) AS pos, text
-        |  FROM documents),
-        |g2 AS (
-        |  SELECT doc_id, pos,
-        |    substr(md5(substr(text, pos, 8)), 1, 16) AS h,
-        |    len(text) - 7 AS m
-        |  FROM g),
-        |sel AS (
-        |  SELECT doc_id, pos, m,
-        |    min({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id
-        |      ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |      AS s
-        |  FROM g2)
-        |SELECT DISTINCT doc_id, struct_extract(s, 'h') AS fp
-        |FROM sel WHERE pos >= least(4, m)
-        |ORDER BY doc_id, fp""".stripMargin,
-
-    "q_winnow_pairs" ->
-      """WITH d0 AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, 'ZQ ' || text
-        |  FROM documents WHERE doc_id < 200),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(text) - 6)) AS pos, text
-        |  FROM d0),
-        |g2 AS (
-        |  SELECT doc_id, pos,
-        |    substr(md5(substr(text, pos, 8)), 1, 16) AS h,
-        |    len(text) - 7 AS m
-        |  FROM g),
-        |sel AS (
-        |  SELECT doc_id, pos, m,
-        |    min({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id
-        |      ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |      AS s
-        |  FROM g2),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, struct_extract(s, 'h') AS fp
-        |  FROM sel WHERE pos >= least(4, m)),
-        |a AS (SELECT doc_id AS a, fp FROM fp WHERE doc_id < 1000000),
-        |b AS (SELECT doc_id - 1000000 AS a, fp FROM fp
-        |      WHERE doc_id >= 1000000)
-        |SELECT a.a, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM a JOIN b USING (a, fp)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_embedding_cov" ->
-      """WITH x AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings)
-        |-- + 0 folds IEEE -0.0 to 0.0: the Spark side rounds through
-        |-- BigDecimal (no signed zero), so a tiny negative covariance
-        |-- rounding to zero would otherwise print '-0.0' here only
-        |SELECT a.i AS i, b.i AS j,
-        |  round(avg(a.v * b.v) - avg(a.v) * avg(b.v), 6) + 0 AS cov
-        |FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |GROUP BY a.i, b.i
-        |ORDER BY i, j""".stripMargin,
-
-    "q_token_runs" ->
-      s"""WITH $degenTokensCte
-        |SELECT nn.doc_id, n_tok, max_run, top_token_count, n_distinct,
-        |  CASE WHEN n_tok > 0 THEN
-        |    CAST(top_token_count AS DOUBLE) / n_tok END AS top_share,
-        |  CASE WHEN n_tok > 0 THEN
-        |    CAST(n_distinct AS DOUBLE) / n_tok END AS distinct_ratio
-        |FROM nn JOIN mr USING (doc_id) JOIN tc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_degenerate_filter" ->
-      s"""WITH $degenTokensCte
-        |SELECT nn.doc_id, n_tok
-        |FROM nn JOIN mr USING (doc_id) JOIN tc USING (doc_id)
-        |WHERE max_run < 20
-        |  AND CAST(top_token_count AS DOUBLE) < 0.5 * n_tok
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_chat_roles" ->
-      s"""WITH $chatTurnsCte,
-        |w AS (
-        |  SELECT conv_id, turn_idx, role,
-        |    (content IS NULL OR trim(content) = '') AS blank,
-        |    lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-        |      AS prev_role,
-        |    min(turn_idx) OVER (PARTITION BY conv_id) AS lo,
-        |    max(turn_idx) OVER (PARTITION BY conv_id) AS hi
-        |  FROM turns),
-        |v AS (
-        |  SELECT conv_id, turn_idx, 'R_FIRST_NOT_USER' AS rule_id, role
-        |    FROM w WHERE turn_idx = lo AND role <> 'user'
-        |    AND role <> 'system'
-        |  UNION ALL
-        |  SELECT conv_id, turn_idx, 'R_SYSTEM_NOT_FIRST', role FROM w
-        |    WHERE role = 'system' AND turn_idx <> lo
-        |  UNION ALL
-        |  SELECT conv_id, turn_idx, 'R_BROKEN_ALTERNATION', role FROM w
-        |    WHERE prev_role IS NOT NULL AND role = prev_role
-        |  UNION ALL
-        |  SELECT conv_id, turn_idx, 'R_LAST_NOT_ASSISTANT', role FROM w
-        |    WHERE turn_idx = hi AND role <> 'assistant'
-        |  UNION ALL
-        |  SELECT conv_id, turn_idx, 'R_EMPTY_TURN', role FROM w
-        |    WHERE blank
-        |  UNION ALL
-        |  SELECT conv_id, turn_idx, 'R_BAD_ROLE', role FROM w
-        |    WHERE role NOT IN ('system', 'user', 'assistant'))
-        |SELECT conv_id, turn_idx, rule_id, role AS offending_value
-        |FROM v ORDER BY conv_id, turn_idx, rule_id""".stripMargin,
-
-    "q_chat_stats" ->
-      s"""WITH $chatTurnsCte
-        |SELECT conv_id,
-        |  CAST(count(*) AS BIGINT) AS n_turns,
-        |  CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_user,
-        |  CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_assistant,
-        |  CAST(sum(CASE WHEN role = 'system' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_system,
-        |  CAST(sum(CASE WHEN role = 'user'
-        |    THEN coalesce(length(content), 0) ELSE 0 END) AS BIGINT)
-        |    AS user_chars,
-        |  CAST(sum(CASE WHEN role = 'assistant'
-        |    THEN coalesce(length(content), 0) ELSE 0 END) AS BIGINT)
-        |    AS assistant_chars,
-        |  CAST(sum(coalesce(length(content), 0)) AS BIGINT)
-        |    AS total_chars,
-        |  CAST(max(coalesce(length(content), 0)) AS BIGINT)
-        |    AS max_turn_chars,
-        |  CASE WHEN sum(coalesce(length(content), 0)) > 0 THEN
-        |    CAST(sum(CASE WHEN role = 'assistant'
-        |      THEN coalesce(length(content), 0) ELSE 0 END) AS DOUBLE)
-        |    / CAST(sum(coalesce(length(content), 0)) AS DOUBLE)
-        |  END AS assistant_char_share
-        |FROM turns GROUP BY conv_id ORDER BY conv_id""".stripMargin,
-
-    "q_pref_bias" ->
-      """WITH c AS (
-        |  SELECT doc_id // 2 AS pair_id, text AS chosen
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |r AS (
-        |  SELECT doc_id // 2 AS pair_id, text AS rejected
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |p AS (
-        |  SELECT c.pair_id, chosen,
-        |    CASE WHEN c.pair_id % 50 = 0 THEN chosen ELSE rejected END
-        |      AS rejected
-        |  FROM c JOIN r USING (pair_id)),
-        |s AS (
-        |  SELECT coalesce(length(chosen), 0) AS lc,
-        |         coalesce(length(rejected), 0) AS lr,
-        |         (chosen IS NOT DISTINCT FROM rejected) AS same
-        |  FROM p)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(CASE WHEN same THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_identical,
-        |  CAST(sum(CASE WHEN lc > lr THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_chosen_longer,
-        |  CAST(sum(CASE WHEN lc < lr THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_rejected_longer,
-        |  CAST(sum(CASE WHEN lc = lr THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_len_ties,
-        |  CAST(sum(lc - lr) AS BIGINT) AS len_delta_sum,
-        |  CASE WHEN count(*) > 0 THEN
-        |    CAST(sum(lc - lr) AS DOUBLE) / count(*) END AS mean_len_delta,
-        |  CASE WHEN count(*) > 0 THEN
-        |    CAST(sum(CASE WHEN lc > lr THEN 1 ELSE 0 END) AS DOUBLE)
-        |      / count(*) END AS frac_chosen_longer
-        |FROM s""".stripMargin,
-
-    "q_seq_drift" ->
-      """WITH cnt AS (
-        |  SELECT b, sum(CASE WHEN src = 'c' THEN 1 ELSE 0 END) AS nc,
-        |         sum(CASE WHEN src = 'b' THEN 1 ELSE 0 END) AS nb
-        |  FROM (
-        |    SELECT 'b' AS src, CASE WHEN l_quantity < 0 THEN 0
-        |      WHEN l_quantity >= 55.0 THEN 65
-        |      ELSE 1 + least(63, CAST(floor((l_quantity / 55.0) * 64) AS INT)) END AS b
-        |    FROM lineitem
-        |    UNION ALL
-        |    SELECT 'c', CASE WHEN l_quantity + 5.0 < 0 THEN 0
-        |      WHEN l_quantity + 5.0 >= 55.0 THEN 65
-        |      ELSE 1 + least(63, CAST(floor(((l_quantity + 5.0) / 55.0) * 64) AS INT)) END
-        |    FROM lineitem)
-        |  GROUP BY 1),
-        |bins AS (SELECT unnest(range(0, 66)) AS b),
-        |filled AS (
-        |  SELECT bins.b AS b, coalesce(cnt.nc, 0) AS nc, coalesce(cnt.nb, 0) AS nb
-        |  FROM bins LEFT JOIN cnt ON bins.b = cnt.b),
-        |ec AS (
-        |  SELECT b,
-        |    sum(nc) OVER (ORDER BY b) / (SELECT sum(nc) FROM filled)::DOUBLE AS fc,
-        |    sum(nb) OVER (ORDER BY b) / (SELECT sum(nb) FROM filled)::DOUBLE AS fb
-        |  FROM filled),
-        |ks AS (SELECT max(abs(fc - fb)) AS stat FROM ec),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM lineitem),
-        |crit AS (SELECT sqrt(-0.5 * ln(0.005)) * sqrt((n + n) / (n * n)) AS v FROM nn),
-        |chi AS (
-        |  SELECT sum(((o.n - greatest(b.n / bt.t * ot.t, 0.5))
-        |              * (o.n - greatest(b.n / bt.t * ot.t, 0.5)))
-        |             / greatest(b.n / bt.t * ot.t, 0.5)) AS stat
-        |  FROM (SELECT l_returnflag AS k, count(*)::DOUBLE AS n FROM lineitem GROUP BY 1) o
-        |  FULL JOIN (SELECT l_returnflag AS k, count(*)::DOUBLE AS n FROM lineitem
-        |             WHERE l_orderkey % 2 = 0 GROUP BY 1) b ON o.k = b.k,
-        |       (SELECT sum(n) AS t FROM (SELECT count(*)::DOUBLE AS n FROM lineitem
-        |                                 WHERE l_orderkey % 2 = 0 GROUP BY l_returnflag)) bt,
-        |       (SELECT sum(n) AS t FROM (SELECT count(*)::DOUBLE AS n FROM lineitem
-        |                                 GROUP BY l_returnflag)) ot)
-        |SELECT round((SELECT stat FROM ks), 6) AS ks_stat,
-        |       round((SELECT v FROM crit), 6) AS ks_critical,
-        |       (SELECT stat FROM ks) > (SELECT v FROM crit) AS ks_drifted,
-        |       round((SELECT stat FROM chi), 6) AS chi_square""".stripMargin,
-
-    // brute pair join with the pure length prefilter — same semantics
-    // as the banded candidate join (banding is complete for
-    // |Δlen| <= maxDist when W >= maxDist), no banding needed at
-    // oracle scale
-    "q_editdist_pairs" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |         'rec-' || lpad(CAST(doc_id % 40 AS VARCHAR), 3, '0') ||
-        |         repeat('z', CAST(doc_id % 4 AS INT)) AS k
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         levenshtein(a.k, b.k) AS dist
-        |  FROM r a JOIN r b
-        |    ON a.doc_id < b.doc_id
-        |   AND abs(length(a.k) - length(b.k)) <= 2)
-        |SELECT CAST(dist AS BIGINT) AS dist, count(*) AS n_pairs,
-        |       CAST(sum(id_a) AS BIGINT) AS sum_a,
-        |       CAST(sum(id_b) AS BIGINT) AS sum_b
-        |FROM p WHERE dist <= 2 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_id_gaps" ->
-      """WITH k AS (
-        |  SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id % 13 <> 5),
-        |s AS (
-        |  SELECT count(*) AS n_islands FROM k a
-        |  WHERE NOT EXISTS (SELECT 1 FROM k b WHERE b.id = a.id - 1)),
-        |b AS (
-        |  SELECT count(*) AS n_rows, count(DISTINCT doc_id) AS n_distinct,
-        |         min(doc_id) AS min_id, max(doc_id) AS max_id
-        |  FROM documents WHERE doc_id % 13 <> 5)
-        |SELECT n_rows, n_distinct, min_id, max_id,
-        |       max_id - min_id + 1 - n_distinct AS n_missing,
-        |       CAST(n_islands AS BIGINT) AS n_islands
-        |FROM b, s""".stripMargin,
-
-    "q_out_of_order" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id,
-        |         ts - to_microseconds(((event_id * 2654435761) % 7200)
-        |                              * 1000000) AS et
-        |  FROM events WHERE user_id IS NOT NULL),
-        |o AS (
-        |  SELECT user_id, event_id, et,
-        |         max(et) OVER (PARTITION BY user_id ORDER BY event_id
-        |                       ROWS BETWEEN UNBOUNDED PRECEDING
-        |                       AND 1 PRECEDING) AS prev_max
-        |  FROM e),
-        |l AS (
-        |  SELECT CASE WHEN prev_max IS NOT NULL AND et < prev_max
-        |              THEN (epoch_us(prev_max) - epoch_us(et)) // 1000000
-        |              ELSE 0 END AS late_s
-        |  FROM o)
-        |SELECT count(*) AS n_events,
-        |       CAST(sum(CASE WHEN late_s > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_late,
-        |       round(avg(CASE WHEN late_s > 0 THEN 1.0 ELSE 0.0 END), 6)
-        |         AS frac_late,
-        |       max(late_s) AS max_late_s,
-        |       quantile_cont(CASE WHEN late_s > 0
-        |                          THEN CAST(late_s AS DOUBLE) END, 0.5)
-        |         AS p50_late_s,
-        |       quantile_cont(CASE WHEN late_s > 0
-        |                          THEN CAST(late_s AS DOUBLE) END, 0.9375)
-        |         AS p94_late_s
-        |FROM l""".stripMargin,
-
-    // sorted water-level search: first group (ascending size) whose
-    // equal share of the remaining budget undercuts it fixes the
-    // level; leftover units go one each to the first unsaturated
-    // groups in the same (size, name) order — the exact rule in
-    // Mixing.waterfill
-    "q_waterfill" ->
-      """WITH c AS (
-        |  SELECT CASE WHEN doc_id % 20 < 10 THEN 'g_half'
-        |              WHEN doc_id % 20 < 16 THEN 'g_third'
-        |              WHEN doc_id % 20 < 19 THEN 'g_sixth'
-        |              ELSE 'g_tiny' END AS grp,
-        |         count(*) AS n_rows
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_rows) * 3 // 5 AS BIGINT) AS budget FROM c),
-        |o AS (
-        |  SELECT grp, n_rows,
-        |         CAST(row_number() OVER w AS BIGINT) AS j,
-        |         CAST(coalesce(sum(n_rows) OVER (ORDER BY n_rows, grp
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS BIGINT) AS cum_before,
-        |         CAST(count(*) OVER () AS BIGINT) AS k
-        |  FROM c WINDOW w AS (ORDER BY n_rows, grp)),
-        |lev AS (
-        |  SELECT (budget - cum_before) // (k - j + 1) AS level
-        |  FROM o, t WHERE (budget - cum_before) // (k - j + 1) < n_rows
-        |  ORDER BY j LIMIT 1),
-        |lv AS (SELECT coalesce((SELECT level FROM lev),
-        |                       (SELECT max(n_rows) FROM c)) AS level),
-        |b AS (
-        |  SELECT grp, n_rows, least(n_rows, level) AS base,
-        |         CASE WHEN n_rows > level THEN
-        |           sum(CASE WHEN n_rows > level THEN 1 ELSE 0 END)
-        |             OVER (ORDER BY n_rows, grp ROWS UNBOUNDED PRECEDING)
-        |         ELSE 0 END AS ur
-        |  FROM o, lv),
-        |l AS (SELECT budget - sum(base) AS leftover FROM b, t GROUP BY budget)
-        |SELECT grp, n_rows,
-        |       CAST(base + CASE WHEN ur > 0 AND ur <= leftover
-        |                        THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM b, l ORDER BY grp""".stripMargin,
-
-    // each scaling = w · (target / marginal-sum), replayed as a
-    // window-sum per axis; same op order as Mixing.rake, round-6
-    // absorbs sum-order ulps
-    "q_raking" ->
-      """WITH c AS (
-        |  SELECT lang, 'g' || CAST(doc_id % 3 AS VARCHAR) AS grp,
-        |         count(*) AS n
-        |  FROM documents GROUP BY 1, 2),
-        |t AS (SELECT CAST(sum(n) AS DOUBLE) AS tot,
-        |             1.0 / count(DISTINCT lang) AS rt,
-        |             1.0 / count(DISTINCT grp) AS ct FROM c),
-        |w0 AS (SELECT lang, grp, n, n / tot AS w, rt, ct FROM c, t),
-        |r1 AS (SELECT lang, grp, n, rt, ct,
-        |              w * (rt / sum(w) OVER (PARTITION BY lang)) AS w FROM w0),
-        |c1 AS (SELECT lang, grp, n, rt, ct,
-        |              w * (ct / sum(w) OVER (PARTITION BY grp)) AS w FROM r1),
-        |r2 AS (SELECT lang, grp, n, rt, ct,
-        |              w * (rt / sum(w) OVER (PARTITION BY lang)) AS w FROM c1),
-        |c2 AS (SELECT lang, grp, n, rt, ct,
-        |              w * (ct / sum(w) OVER (PARTITION BY grp)) AS w FROM r2),
-        |r3 AS (SELECT lang, grp, n, rt, ct,
-        |              w * (rt / sum(w) OVER (PARTITION BY lang)) AS w FROM c2),
-        |c3 AS (SELECT lang, grp, n, rt, ct,
-        |              w * (ct / sum(w) OVER (PARTITION BY grp)) AS w FROM r3)
-        |SELECT lang, grp, n AS n_rows, round(w, 6) AS weight
-        |FROM c3 ORDER BY lang, grp""".stripMargin,
-
-    "q_ctfidf" ->
-      """WITH w AS (
-        |  SELECT source AS cls, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '')) AS word
-        |  FROM documents),
-        |tf AS (SELECT cls, word, count(*) AS tf FROM w GROUP BY 1, 2),
-        |cf AS (SELECT word, count(*) AS f FROM w GROUP BY 1),
-        |a AS (SELECT sum(tf)::DOUBLE / count(DISTINCT cls)::DOUBLE AS a
-        |      FROM tf)
-        |SELECT cls, rank, word, round(score, 6) AS ctfidf FROM (
-        |  SELECT tf.cls, tf.word, tf.tf * ln(1.0 + a.a / cf.f) AS score,
-        |         CAST(row_number() OVER (PARTITION BY tf.cls
-        |           ORDER BY tf.tf * ln(1.0 + a.a / cf.f) DESC, tf.word)
-        |           AS BIGINT) AS rank
-        |  FROM tf JOIN cf USING (word), a)
-        |WHERE rank <= 3 ORDER BY cls, rank""".stripMargin,
-
-    "q_luhn_pii" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         'card ' || lpad(CAST((doc_id * 48271 + 11) %
-        |           100000000000000 AS VARCHAR), 14, '0') || ' tail' AS text2
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text2,
-        |    '[0-9][0-9 -]{11,20}[0-9]', 0)) AS raw
-        |  FROM s),
-        |n AS (
-        |  SELECT doc_id, regexp_replace(raw, '[ -]', '', 'g') AS cand
-        |  FROM e)
-        |SELECT doc_id, cand,
-        |       list_sum(list_transform(range(1, length(cand) + 1), i ->
-        |         CASE WHEN i % 2 = 1
-        |              THEN CAST(substr(reverse(cand), CAST(i AS INT), 1)
-        |                        AS INT)
-        |              ELSE CASE WHEN CAST(substr(reverse(cand),
-        |                          CAST(i AS INT), 1) AS INT) * 2 > 9
-        |                   THEN CAST(substr(reverse(cand), CAST(i AS INT),
-        |                             1) AS INT) * 2 - 9
-        |                   ELSE CAST(substr(reverse(cand), CAST(i AS INT),
-        |                             1) AS INT) * 2 END
-        |         END)) % 10 = 0 AS luhn_ok
-        |FROM n WHERE length(cand) BETWEEN 13 AND 19
-        |ORDER BY doc_id, cand""".stripMargin,
-
-    "q_dup_matrix" ->
-      """WITH k AS (
-        |  SELECT DISTINCT
-        |    CASE WHEN doc_id % 9 < 3
-        |         THEN 'shared-' || CAST(doc_id % 50 AS VARCHAR)
-        |         ELSE md5(text) END AS key,
-        |    source
-        |  FROM documents)
-        |SELECT a.source AS src_a, b.source AS src_b,
-        |       count(*) AS n_shared_groups
-        |FROM k a JOIN k b ON a.key = b.key AND a.source < b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_qq_deciles" ->
-      """WITH a AS (
-        |  SELECT quantile_cont(CAST(CAST(round(l_extendedprice * 100)
-        |           AS BIGINT) AS DOUBLE),
-        |         [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) AS qs
-        |  FROM lineitem WHERE l_orderkey % 2 = 0),
-        |b AS (
-        |  SELECT quantile_cont(CAST(CAST(round(l_extendedprice * 100)
-        |           AS BIGINT) AS DOUBLE),
-        |         [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) AS qs
-        |  FROM lineitem WHERE l_orderkey % 2 <> 0),
-        |p AS (
-        |  SELECT unnest([0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) AS p,
-        |         unnest(range(1, 8)) AS i)
-        |SELECT p.p, a.qs[CAST(i AS INT)] AS q_a, b.qs[CAST(i AS INT)] AS q_b,
-        |       b.qs[CAST(i AS INT)] - a.qs[CAST(i AS INT)] AS diff
-        |FROM p, a, b ORDER BY p""".stripMargin,
-
-    // same population mean/var formula shape as VecMomentsAgg-derived
-    // moments; per-dim stats joined back by subscript, weight 0 for
-    // zero-variance dims
-    "q_embed_outliers" ->
-      """WITH x AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |st AS (
-        |  SELECT i, sum(v) / count(*) AS mu,
-        |         sum(v * v) / count(*)
-        |           - (sum(v) / count(*)) * (sum(v) / count(*)) AS var
-        |  FROM x GROUP BY i),
-        |sc AS (
-        |  SELECT vec_id,
-        |         sum((v - mu) * (v - mu) *
-        |             (CASE WHEN var > 0 THEN 1.0 / var ELSE 0.0 END))
-        |           AS score
-        |  FROM x JOIN st USING (i) GROUP BY vec_id)
-        |SELECT vec_id, round(score, 4) AS score
-        |FROM sc ORDER BY vec_id""".stripMargin,
-
-    "q_theil_sen" ->
-      """WITH dy AS (
-        |  SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-        |              AS DOUBLE) AS x,
-        |         CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1),
-        |sl AS (
-        |  SELECT median((b.y - a.y) / (b.x - a.x)) AS slope
-        |  FROM dy a JOIN dy b ON a.x < b.x),
-        |ic AS (
-        |  SELECT median(y - (SELECT slope FROM sl) * x) AS intercept FROM dy)
-        |SELECT (SELECT count(*) FROM dy) AS n_points,
-        |       round((SELECT slope FROM sl), 6) AS slope,
-        |       round((SELECT intercept FROM ic), 6) AS intercept""".stripMargin,
-
-    "q_pct_rank" ->
-      """WITH v AS (
-        |  SELECT CAST(l_quantity AS BIGINT) AS value FROM lineitem
-        |  WHERE l_quantity IS NOT NULL),
-        |r AS (SELECT value, percent_rank() OVER (ORDER BY value) AS pr
-        |      FROM v)
-        |SELECT value, count(*) AS n, round(min(pr), 6) AS pct_rank
-        |FROM r GROUP BY value ORDER BY value""".stripMargin,
-
-    "q_burstiness" ->
-      """WITH e AS (
-        |  SELECT user_id, ts FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND user_id % 10 = 3),
-        |g AS (
-        |  SELECT user_id,
-        |         (epoch_us(ts) - epoch_us(lag(ts) OVER
-        |            (PARTITION BY user_id ORDER BY ts))) // 1000000 AS gap
-        |  FROM e),
-        |a AS (
-        |  SELECT user_id, count(*) AS n_gaps,
-        |         CAST(sum(gap) AS BIGINT) AS s,
-        |         CAST(sum(gap * gap) AS BIGINT) AS ss
-        |  FROM g WHERE gap IS NOT NULL GROUP BY 1),
-        |d AS (
-        |  SELECT user_id, n_gaps,
-        |         CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mean,
-        |         sqrt(greatest(
-        |           (CAST(ss AS DOUBLE)
-        |              - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |                / CAST(n_gaps AS DOUBLE))
-        |             / CAST(n_gaps AS DOUBLE), 0.0)) AS std
-        |  FROM a)
-        |SELECT user_id, n_gaps, round(mean, 6) AS mean_gap_s,
-        |       CASE WHEN mean > 0 THEN round(std / mean, 6) END AS cv,
-        |       CASE WHEN std + mean > 0
-        |            THEN round((std - mean) / (std + mean), 6)
-        |       END AS burstiness
-        |FROM d ORDER BY user_id""".stripMargin,
-
-    "q_hapax" ->
-      """WITH w AS (
-        |  SELECT source AS cls, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '')) AS word
-        |  FROM documents),
-        |c AS (SELECT cls, word, count(*) AS c FROM w GROUP BY 1, 2)
-        |SELECT cls, CAST(sum(c) AS BIGINT) AS n_words,
-        |       count(*) AS n_distinct,
-        |       CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_hapax,
-        |       round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio
-        |FROM c GROUP BY cls ORDER BY cls""".stripMargin,
-
-    // brute pairwise jaccard — same semantics the prefix-filtered
-    // candidate path must reproduce in full
-    "q_ppjoin" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> x <> ''))) AS word
-        |  FROM documents WHERE doc_id < 150),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS nc
-        |  FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |       round(nc * 1.0 / (sa.n + sb.n - nc), 6) AS jaccard
-        |FROM common
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE nc * 1.0 / (sa.n + sb.n - nc) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_interleave" ->
-      """WITH g AS (
-        |  SELECT doc_id, 'g' || CAST(doc_id % 3 AS VARCHAR) AS grp
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, grp,
-        |         CAST(row_number() OVER (PARTITION BY grp ORDER BY doc_id)
-        |              AS BIGINT) AS k
-        |  FROM g),
-        |v AS (
-        |  SELECT doc_id, grp, k,
-        |         CAST(k AS DOUBLE) /
-        |           (CASE grp WHEN 'g0' THEN 0.5 WHEN 'g1' THEN 0.3
-        |                     ELSE 0.2 END) AS vt
-        |  FROM k)
-        |SELECT doc_id, grp, k, round(vt, 6) AS vt FROM v
-        |ORDER BY v.vt, grp, doc_id LIMIT 60""".stripMargin,
-
-    "q_join_estimate" ->
-      """WITH c AS (
-        |  SELECT user_id AS key, count(*) AS n FROM events
-        |  WHERE user_id IS NOT NULL GROUP BY 1)
-        |SELECT key, n AS n_a, n AS n_b, n * n AS rows_out
-        |FROM c ORDER BY rows_out DESC, key LIMIT 10""".stripMargin,
-
-    "q_kcenter" -> kCenterOracle(4),
-
-    "q_mmr" -> mmrOracle(5),
-
-    "q_token_entropy" ->
-      s"""WITH $SeqTableCte,
-        |pr AS (SELECT unnest(toks[1:len(toks)-1]) AS x,
-        |              unnest(toks[2:len(toks)]) AS y
-        |       FROM s2 WHERE toks IS NOT NULL AND len(toks) >= 2),
-        |j AS (SELECT x, y, count(*) AS c FROM pr GROUP BY 1, 2),
-        |n AS (SELECT sum(c)::DOUBLE AS n FROM j),
-        |cx AS (SELECT x, sum(c) AS cx FROM j GROUP BY 1),
-        |cy AS (SELECT y, sum(c) AS cy FROM j GROUP BY 1),
-        |hc AS (SELECT sum(-(j.c / n.n) * ln(j.c::DOUBLE / cx.cx)) AS h
-        |       FROM j JOIN cx USING (x), n),
-        |hm AS (SELECT sum(-(cy.cy / n.n) * ln(cy.cy / n.n)) AS h
-        |       FROM cy, n)
-        |SELECT CAST((SELECT sum(c) FROM j) AS BIGINT) AS n_pairs,
-        |  round(hc.h, 6) AS h_conditional, round(hm.h, 6) AS h_marginal,
-        |  CASE WHEN hm.h > 0 THEN round(1.0::DOUBLE - hc.h / hm.h, 6) END
-        |    AS predictability
-        |FROM hc, hm""".stripMargin,
-
-    "q_shuffle_quality" ->
-      """WITH k0 AS (
-        |  SELECT doc_id,
-        |    ((doc_id % 2147483648) * 4096 + 1 * 81) % 4294967296 AS a0,
-        |    ((doc_id % 2147483648) * 4096 + 2 * 81) % 4294967296 AS b0
-        |  FROM documents),
-        |h1 AS (SELECT doc_id,
-        |    (xor(a0, a0 >> 16) * 569557677) % 4294967296 AS a1,
-        |    (xor(b0, b0 >> 16) * 569557677) % 4294967296 AS b1
-        |  FROM k0),
-        |h2 AS (SELECT doc_id,
-        |    (xor(a1, a1 >> 15) * 1935933847) % 4294967296 AS a2,
-        |    (xor(b1, b1 >> 15) * 1935933847) % 4294967296 AS b2
-        |  FROM h1),
-        |k AS (SELECT doc_id, xor(a2, a2 >> 15) AS k1,
-        |             xor(b2, b2 >> 15) AS k2
-        |      FROM h2),
-        |r AS (SELECT doc_id,
-        |    row_number() OVER (ORDER BY k1, doc_id) AS r1,
-        |    row_number() OVER (ORDER BY k2, doc_id) AS r2
-        |  FROM k),
-        |st AS (SELECT count(*) AS n,
-        |         sum((r1 - r2) * (r1 - r2)) AS d2 FROM r)
-        |SELECT n, CAST(d2 AS BIGINT) AS sum_d2,
-        |  CASE WHEN n >= 2 THEN
-        |    round(1.0::DOUBLE - 6.0::DOUBLE * d2
-        |          / (n::DOUBLE * (n::DOUBLE * n::DOUBLE - 1.0::DOUBLE)),
-        |          6)
-        |  END AS rho
-        |FROM st""".stripMargin,
-
-    "q_boot_diff" ->
-      """WITH fa AS (
-        |  SELECT b, n_chars::DOUBLE AS x,
-        |    ((doc_id % 2147483648) * 4096 + b + 7 * 81) % 4294967296
-        |      AS k0
-        |  FROM documents, (SELECT unnest(range(0, 32)) AS b)
-        |  WHERE n_chars IS NOT NULL AND source = 'src0'),
-        |ha1 AS (SELECT b, x,
-        |  (xor(k0, k0 >> 16) * 569557677) % 4294967296 AS h FROM fa),
-        |ha2 AS (SELECT b, x,
-        |  (xor(h, h >> 15) * 1935933847) % 4294967296 AS h2 FROM ha1),
-        |wa AS (SELECT b, x,
-        |  CASE WHEN xor(h2, h2 >> 15) < 1580030168 THEN 0
-        |       WHEN xor(h2, h2 >> 15) < 3160060337 THEN 1
-        |       WHEN xor(h2, h2 >> 15) < 3950075421 THEN 2
-        |       WHEN xor(h2, h2 >> 15) < 4213413783 THEN 3
-        |       WHEN xor(h2, h2 >> 15) < 4279248373 THEN 4
-        |       WHEN xor(h2, h2 >> 15) < 4292415291 THEN 5
-        |       WHEN xor(h2, h2 >> 15) < 4294609777 THEN 6
-        |       WHEN xor(h2, h2 >> 15) < 4294923276 THEN 7
-        |       WHEN xor(h2, h2 >> 15) < 4294962463 THEN 8
-        |       ELSE 9 END AS w FROM ha2),
-        |ma AS (SELECT b, round(sum(w * x) / sum(w), 6) AS mean_a
-        |       FROM wa GROUP BY b),
-        |fb AS (
-        |  SELECT b, n_chars::DOUBLE AS x,
-        |    ((doc_id % 2147483648) * 4096 + b + 7 * 81) % 4294967296
-        |      AS k0
-        |  FROM documents, (SELECT unnest(range(0, 32)) AS b)
-        |  WHERE n_chars IS NOT NULL AND source = 'src2'),
-        |hb1 AS (SELECT b, x,
-        |  (xor(k0, k0 >> 16) * 569557677) % 4294967296 AS h FROM fb),
-        |hb2 AS (SELECT b, x,
-        |  (xor(h, h >> 15) * 1935933847) % 4294967296 AS h2 FROM hb1),
-        |wb AS (SELECT b, x,
-        |  CASE WHEN xor(h2, h2 >> 15) < 1580030168 THEN 0
-        |       WHEN xor(h2, h2 >> 15) < 3160060337 THEN 1
-        |       WHEN xor(h2, h2 >> 15) < 3950075421 THEN 2
-        |       WHEN xor(h2, h2 >> 15) < 4213413783 THEN 3
-        |       WHEN xor(h2, h2 >> 15) < 4279248373 THEN 4
-        |       WHEN xor(h2, h2 >> 15) < 4292415291 THEN 5
-        |       WHEN xor(h2, h2 >> 15) < 4294609777 THEN 6
-        |       WHEN xor(h2, h2 >> 15) < 4294923276 THEN 7
-        |       WHEN xor(h2, h2 >> 15) < 4294962463 THEN 8
-        |       ELSE 9 END AS w FROM hb2),
-        |mb AS (SELECT b, round(sum(w * x) / sum(w), 6) AS mean_b
-        |       FROM wb GROUP BY b)
-        |SELECT CAST(ma.b AS INT) AS b, ma.mean_a, mb.mean_b,
-        |  round(ma.mean_a - mb.mean_b, 6) AS delta
-        |FROM ma JOIN mb USING (b) ORDER BY b""".stripMargin,
-
-    "q_overdispersion" ->
-      """WITH e AS (
-        |  SELECT coalesce(event_type, '<null>') AS g,
-        |         CAST(date_trunc('day', ts) AS DATE) AS d
-        |  FROM events WHERE ts IS NOT NULL),
-        |bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
-        |days AS (SELECT unnest(generate_series(d0, d1,
-        |           INTERVAL 1 DAY))::DATE AS d FROM bounds),
-        |grps AS (SELECT DISTINCT g FROM e),
-        |cnt AS (SELECT g, d, count(*) AS n FROM e GROUP BY 1, 2),
-        |f AS (SELECT grps.g, days.d, coalesce(cnt.n, 0) AS n1
-        |      FROM grps CROSS JOIN days
-        |      LEFT JOIN cnt ON cnt.g = grps.g AND cnt.d = days.d),
-        |st AS (SELECT g, count(*) AS n, sum(n1 * 1.0::DOUBLE) AS s,
-        |         sum(n1 * 1.0::DOUBLE * n1) AS ss FROM f GROUP BY 1)
-        |SELECT g AS event_type, n AS n_days, round(s / n, 6) AS mean_daily,
-        |  CASE WHEN n < 2 OR s / n <= 0 THEN NULL
-        |       ELSE round(((ss - s * s / n) / (n - 1)) / (s / n), 6)
-        |  END AS dispersion,
-        |  coalesce(CASE WHEN n < 2 OR s / n <= 0 THEN false
-        |       ELSE round(((ss - s * s / n) / (n - 1)) / (s / n), 6)
-        |            > 1.5 END, false) AS flag
-        |FROM st ORDER BY event_type""".stripMargin,
-
-    "q_fisher_ratio" ->
-      """WITH d AS (
-        |  SELECT label::VARCHAR AS l, unnest(embedding) AS x,
-        |         unnest(range(len(embedding))) AS p
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL),
-        |st AS (SELECT l, p, sum(x::DOUBLE) AS s,
-        |         sum(x::DOUBLE * x) AS ss, count(*) AS c
-        |       FROM d GROUP BY 1, 2),
-        |m AS (SELECT l, p, c, s / c AS mu,
-        |        ss / c - (s / c) * (s / c) AS v FROM st),
-        |tr AS (SELECT l, sum(v) AS trace, max(c) AS n FROM m GROUP BY 1),
-        |pairs AS (SELECT a.l AS la, b.l AS lb,
-        |    sum((a.mu - b.mu) * (a.mu - b.mu)) AS d2
-        |  FROM m a JOIN m b ON a.p = b.p AND a.l < b.l GROUP BY 1, 2)
-        |SELECT p.la AS label_a, p.lb AS label_b,
-        |  CAST(ta.n AS BIGINT) AS n_a, CAST(tb.n AS BIGINT) AS n_b,
-        |  round(p.d2, 6) AS dist2,
-        |  CASE WHEN ta.trace + tb.trace > 0
-        |       THEN round(p.d2 / (ta.trace + tb.trace), 6) END AS fisher
-        |FROM pairs p JOIN tr ta ON ta.l = p.la JOIN tr tb ON tb.l = p.lb
-        |ORDER BY label_a, label_b""".stripMargin,
-
-    "q_cvar" ->
-      """WITH b AS (
-        |  SELECT coalesce(source, '<null>') AS g, n_chars::DOUBLE AS v
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |q AS (SELECT g, count(*) AS n, quantile_cont(v, 0.1) AS qv
-        |      FROM b GROUP BY 1)
-        |SELECT b.g AS source, q.n, round(q.qv, 6) AS var_alpha,
-        |  count(*) AS tail_n, round(avg(b.v), 6) AS cvar
-        |FROM b JOIN q ON q.g = b.g WHERE b.v <= q.qv
-        |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
-
-    "q_cross_copies" ->
-      """WITH aug AS (
-        |  SELECT text, source FROM documents
-        |  UNION ALL
-        |  SELECT text, source || '_m' FROM documents
-        |  WHERE doc_id % 23 = 0),
-        |hs AS (SELECT DISTINCT text, source FROM aug
-        |       WHERE text IS NOT NULL)
-        |SELECT a.source AS source_a, b.source AS source_b,
-        |       count(*) AS n_shared_texts
-        |FROM hs a JOIN hs b ON a.text = b.text AND a.source < b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_mass_percentiles" ->
-      """WITH pv AS (
-        |  SELECT n_chars AS value, count(*) AS n,
-        |         CAST(sum(n_chars) AS BIGINT) AS m
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |c AS (
-        |  SELECT value,
-        |         CAST(sum(n) OVER w AS BIGINT) AS cn,
-        |         CAST(sum(m) OVER w AS BIGINT) AS cm
-        |  FROM pv WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)),
-        |t AS (SELECT max(cm) AS tt FROM c),
-        |p AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS p)
-        |SELECT p.p, min(c.value) AS threshold,
-        |       arg_min(c.cn, c.value) AS n_le,
-        |       arg_min(c.cm, c.value) AS mass_le,
-        |       round(CAST(arg_min(c.cm, c.value) AS DOUBLE)
-        |             / CAST(t.tt AS DOUBLE), 6) AS mass_frac
-        |FROM p, t, c
-        |WHERE CAST(c.cm AS DOUBLE) >= p.p * CAST(t.tt AS DOUBLE)
-        |GROUP BY p.p, t.tt ORDER BY p.p""".stripMargin,
-
-    // (1.0 − 0.9) spelled as DOUBLE subtraction — DuckDB's DECIMAL
-    // literals would otherwise yield exact 0.1 vs IEEE 0.0999…8
-    "q_rbo" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         (doc_id * 2654435761 + 7) % 1000000007 AS s1,
-        |         CASE WHEN doc_id % 4 = 0
-        |              THEN (doc_id * 1099511627 + 13) % 1000000007
-        |              ELSE (doc_id * 2654435761 + 7) % 1000000007
-        |         END AS s2
-        |  FROM documents),
-        |ra AS (SELECT doc_id,
-        |              CAST(row_number() OVER (ORDER BY s1 DESC, doc_id)
-        |                   AS BIGINT) AS r
-        |       FROM s ORDER BY s1 DESC, doc_id LIMIT 50),
-        |rb AS (SELECT doc_id,
-        |              CAST(row_number() OVER (ORDER BY s2 DESC, doc_id)
-        |                   AS BIGINT) AS r
-        |       FROM s ORDER BY s2 DESC, doc_id LIMIT 50),
-        |m AS (SELECT greatest(ra.r, rb.r) AS m
-        |      FROM ra JOIN rb USING (doc_id)),
-        |dd AS (SELECT unnest(range(1, 51)) AS d),
-        |x AS (SELECT dd.d,
-        |             (SELECT count(*) FROM m WHERE m.m <= dd.d) AS x
-        |      FROM dd)
-        |SELECT round(sum((CAST(1 AS DOUBLE) - CAST(0.9 AS DOUBLE)) *
-        |                 pow(CAST(0.9 AS DOUBLE), x.d - 1) *
-        |                 (CAST(x.x AS DOUBLE) / CAST(x.d AS DOUBLE))), 6)
-        |         AS rbo,
-        |       CAST(max(x.x) AS BIGINT) AS n_common,
-        |       CAST(50 AS BIGINT) AS k
-        |FROM x""".stripMargin,
-
-    "q_blocking_quality" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |         'rec-' || lpad(CAST(doc_id % 40 AS VARCHAR), 3, '0') ||
-        |         repeat('z', CAST(doc_id % 4 AS INT)) AS k
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |n AS (SELECT count(*) AS n FROM r),
-        |pairs AS (
-        |  SELECT length(a.k) AS la, length(b.k) AS lb,
-        |         length(a.k) // 2 AS ba, length(b.k) // 2 AS bb,
-        |         levenshtein(a.k, b.k) AS dist
-        |  FROM r a JOIN r b ON a.doc_id < b.doc_id),
-        |agg AS (
-        |  SELECT count(*) AS total,
-        |         CAST(sum(CASE WHEN abs(la - lb) <= 2
-        |                        AND abs(ba - bb) <= 1
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS cand,
-        |         CAST(sum(CASE WHEN dist <= 2 THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS n_true,
-        |         CAST(sum(CASE WHEN abs(la - lb) <= 2
-        |                        AND abs(ba - bb) <= 1 AND dist <= 2
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_found
-        |  FROM pairs)
-        |SELECT n.n AS n_items, agg.total AS n_pairs_total,
-        |       agg.cand AS n_candidates,
-        |       round(CAST(1 AS DOUBLE)
-        |             - CAST(agg.cand AS DOUBLE)
-        |               / CAST(agg.total AS DOUBLE), 6) AS reduction_ratio,
-        |       agg.n_true, agg.n_found,
-        |       round(CAST(agg.n_found AS DOUBLE)
-        |             / CAST(agg.n_true AS DOUBLE), 6) AS completeness
-        |FROM n, agg""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(lang, '<all>') AS lang,
-        |       coalesce(source, '<all>') AS source,
-        |       CAST(GROUPING(lang, source) AS BIGINT) AS gid,
-        |       count(*) AS n
-        |FROM documents GROUP BY CUBE(lang, source)
-        |ORDER BY gid, lang, source""".stripMargin,
-
-    // exact CosineSimilarity replica — dot/(√na·√nb + 1e-30), each sum
-    // in dimension order — so the (cos DESC, nid) neighbor ranking is
-    // bit-identical and the k-th neighbor never flips cross-engine
-    "q_label_noise" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding, CAST(label AS VARCHAR) AS l
-        |  FROM embeddings WHERE vec_id < 200),
-        |p AS (
-        |  SELECT a.vec_id AS id, a.l AS label, b.l AS nlabel,
-        |         b.vec_id AS nid,
-        |         list_sum(list_transform(range(1, 65), i ->
-        |           CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) *
-        |           CAST(b.embedding[CAST(i AS INT)] AS DOUBLE))) /
-        |         (sqrt(list_sum(list_transform(range(1, 65), i ->
-        |            CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) *
-        |            CAST(a.embedding[CAST(i AS INT)] AS DOUBLE)))) *
-        |          sqrt(list_sum(list_transform(range(1, 65), i ->
-        |            CAST(b.embedding[CAST(i AS INT)] AS DOUBLE) *
-        |            CAST(b.embedding[CAST(i AS INT)] AS DOUBLE)))) +
-        |          1e-30) AS cos
-        |  FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-        |r AS (
-        |  SELECT id, label, nlabel,
-        |         row_number() OVER (PARTITION BY id
-        |                            ORDER BY cos DESC, nid) AS rk
-        |  FROM p)
-        |SELECT id, label,
-        |       CAST(sum(CASE WHEN nlabel <> label THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_diff,
-        |       round(CAST(sum(CASE WHEN nlabel <> label THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / 5, 6) AS disagreement
-        |FROM r WHERE rk <= 5 GROUP BY 1, 2 ORDER BY id""".stripMargin,
-
-    "q_layout_audit" ->
-      """SELECT regexp_extract(filename, 'source=([^/]+)', 1) AS part,
-        |       count(*) AS n_rows,
-        |       CAST(count(DISTINCT filename) AS BIGINT) AS n_files
-        |FROM read_parquet('/tmp/graft_layout_audit/**/*.parquet',
-        |                  filename=true)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_path_rollup" ->
-      """WITH u AS (
-        |  SELECT 'https://ex.com/sec' || CAST(doc_id % 5 AS VARCHAR) ||
-        |         '/sub' || CAST(doc_id % 17 AS VARCHAR) ||
-        |         '/p' || CAST(doc_id % 50 AS VARCHAR) || '.html' ||
-        |         CASE WHEN doc_id % 3 = 0 THEN '?page=2' ELSE '' END AS url
-        |  FROM documents),
-        |p AS (
-        |  SELECT coalesce(nullif(regexp_extract(url,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(/[^?#]*)', 1), ''), '/')
-        |    AS path
-        |  FROM u),
-        |s AS (SELECT path,
-        |             list_filter(string_split(path, '/'), x -> x <> '')
-        |               AS segs
-        |      FROM p)
-        |SELECT '/' || array_to_string(segs[1:2], '/') AS prefix,
-        |       count(*) AS n_pages,
-        |       CAST(count(DISTINCT path) AS BIGINT) AS n_paths
-        |FROM s GROUP BY 1 ORDER BY n_pages DESC, prefix""".stripMargin,
-
-    "q_char_entropy" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, t, unnest(range(1, length(t) + 1)) AS i FROM d)
-        |SELECT d.doc_id,
-        |       coalesce(h.h, 0.0) AS h
-        |FROM d LEFT JOIN (
-        |  SELECT doc_id, round(entropy(substr(t, CAST(i AS INT), 1)), 4) AS h
-        |  FROM c GROUP BY doc_id) h USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // script-mix: identical planted-text CASE, identical RE2 character
-    // classes, identical priority-order dominant tie-break
-    "q_script_mix" ->
-      """WITH x AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 19 = 0
-        |           THEN repeat('привет мир данные ',
-        |                       CAST(doc_id % 5 + 2 AS INT))
-        |         WHEN doc_id % 23 = 0
-        |           THEN repeat('数据质量检查 ', CAST(doc_id % 4 + 2 AS INT))
-        |         WHEN doc_id % 7 = 0
-        |           THEN substr(text, 1, 30) ||
-        |                ' αβγδεζηθικλμνξοπρστυφχψω αβγδεζηθικλμνξο'
-        |         ELSE text END AS t
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(t, '[A-Za-z]')) AS BIGINT)
-        |      AS n_latin,
-        |    CAST(len(regexp_extract_all(t, '[\x{0400}-\x{04FF}]'))
-        |      AS BIGINT) AS n_cyrillic,
-        |    CAST(len(regexp_extract_all(t, '[\x{4E00}-\x{9FFF}]'))
-        |      AS BIGINT) AS n_cjk,
-        |    CAST(len(regexp_extract_all(t, '[\x{0370}-\x{03FF}]'))
-        |      AS BIGINT) AS n_greek
-        |  FROM x),
-        |e AS (
-        |  SELECT *, n_latin + n_cyrillic + n_cjk + n_greek
-        |           AS n_script_chars,
-        |         greatest(n_latin, n_cyrillic, n_cjk, n_greek) AS top
-        |  FROM c)
-        |SELECT doc_id, n_latin, n_cyrillic, n_cjk, n_greek,
-        |  n_script_chars,
-        |  CASE WHEN n_script_chars = 0 THEN 'none'
-        |       WHEN n_latin = top THEN 'latin'
-        |       WHEN n_cyrillic = top THEN 'cyrillic'
-        |       WHEN n_cjk = top THEN 'cjk' ELSE 'greek' END AS dominant,
-        |  CASE WHEN n_script_chars = 0 THEN NULL
-        |       ELSE round(CAST(top AS DOUBLE)
-        |                  / CAST(n_script_chars AS DOUBLE), 6)
-        |  END AS purity,
-        |  CASE WHEN n_script_chars = 0 THEN FALSE
-        |       ELSE round(CAST(top AS DOUBLE)
-        |                  / CAST(n_script_chars AS DOUBLE), 6) < 0.8
-        |  END AS mixed
-        |FROM e ORDER BY doc_id""".stripMargin,
-
-    // Heaps fit: cumulative tokens / cumulative first-seen vocab in
-    // doc_id order (the oracle's window cumsum replays the engine's
-    // two-level prefix sum), OLS in log-log space
-    "q_heaps_fit" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(
-        |    lower(trim(text)), '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |pt AS (SELECT doc_id, count(*) AS nt FROM tok GROUP BY doc_id),
-        |fs AS (SELECT w, min(doc_id) AS doc_id FROM tok GROUP BY w),
-        |pv AS (SELECT doc_id, count(*) AS nv FROM fs GROUP BY doc_id),
-        |cum AS (
-        |  SELECT pt.doc_id,
-        |         sum(pt.nt) OVER (ORDER BY pt.doc_id) AS cn,
-        |         sum(coalesce(pv.nv, 0)) OVER (ORDER BY pt.doc_id) AS cv
-        |  FROM pt LEFT JOIN pv USING (doc_id))
-        |SELECT round(regr_slope(ln(cv), ln(cn)), 6) AS heaps_beta,
-        |       round(exp(regr_intercept(ln(cv), ln(cn))), 6) AS heaps_k,
-        |       round(regr_r2(ln(cv), ln(cn)), 6) AS heaps_r2,
-        |       count(*) AS n_docs
-        |FROM cum WHERE cn > 0 AND cv > 0""".stripMargin,
-
-    // runs test: transitions by the same pos+1 self-join; moments from
-    // the three integer counts in the identical expression order
-    "q_runs_test" ->
-      """WITH m AS (SELECT median(CAST(n_chars AS DOUBLE)) AS med
-        |           FROM documents),
-        |b AS (SELECT doc_id AS p,
-        |             (CAST(n_chars AS DOUBLE) > m.med) AS f
-        |      FROM documents, m),
-        |c AS (SELECT count(*) AS n,
-        |             CAST(coalesce(sum(CASE WHEN f THEN 1 ELSE 0 END), 0)
-        |                  AS BIGINT) AS n1
-        |      FROM b),
-        |t AS (SELECT count(*) AS n_pairs,
-        |             CAST(coalesce(sum(CASE WHEN a.f <> d.f THEN 1
-        |                                    ELSE 0 END), 0) AS BIGINT)
-        |               AS tr
-        |      FROM b a JOIN b d ON a.p + 1 = d.p)
-        |SELECT c.n, c.n1, c.n - c.n1 AS n2, t.n_pairs,
-        |  CASE WHEN c.n > 0 THEN t.tr + 1 ELSE 0 END AS n_runs,
-        |  CASE WHEN c.n > 0 THEN round(1.0 + 2.0 * CAST(c.n1 AS DOUBLE)
-        |         * CAST(c.n - c.n1 AS DOUBLE) / CAST(c.n AS DOUBLE), 6)
-        |       ELSE NULL END AS mu_runs,
-        |  CASE WHEN c.n > 1 AND
-        |            (2.0 * CAST(c.n1 AS DOUBLE)
-        |              * CAST(c.n - c.n1 AS DOUBLE)
-        |              * (2.0 * CAST(c.n1 AS DOUBLE)
-        |                  * CAST(c.n - c.n1 AS DOUBLE)
-        |                  - CAST(c.n AS DOUBLE)))
-        |            / (CAST(c.n AS DOUBLE) * CAST(c.n AS DOUBLE)
-        |               * (CAST(c.n AS DOUBLE) - 1.0)) > 0
-        |       THEN round((CAST(t.tr + 1 AS DOUBLE)
-        |              - (1.0 + 2.0 * CAST(c.n1 AS DOUBLE)
-        |                  * CAST(c.n - c.n1 AS DOUBLE)
-        |                  / CAST(c.n AS DOUBLE)))
-        |            / sqrt((2.0 * CAST(c.n1 AS DOUBLE)
-        |                * CAST(c.n - c.n1 AS DOUBLE)
-        |                * (2.0 * CAST(c.n1 AS DOUBLE)
-        |                    * CAST(c.n - c.n1 AS DOUBLE)
-        |                    - CAST(c.n AS DOUBLE)))
-        |              / (CAST(c.n AS DOUBLE) * CAST(c.n AS DOUBLE)
-        |                 * (CAST(c.n AS DOUBLE) - 1.0))), 6)
-        |       ELSE NULL END AS z
-        |FROM c, t""".stripMargin,
-
-    // conservation: identical multiplicative id digest (doc_id ≥ 0 so
-    // % == pmod), identical length-tier split; residual deltas all 0
-    "q_conservation" ->
-      """WITH h AS (
-        |  SELECT doc_id, n_chars,
-        |         (doc_id % 1000000007) * 2654435761 % 1000000007 AS hh,
-        |         CASE WHEN n_chars >= 500 THEN 'long'
-        |              WHEN n_chars >= 200 THEN 'mid'
-        |              ELSE 'short' END AS part
-        |  FROM documents),
-        |s AS (
-        |  SELECT 'input' AS stage, count(*) AS n_rows,
-        |         CAST(coalesce(sum(n_chars), 0) AS BIGINT) AS mass,
-        |         coalesce(bit_xor(hh), 0) AS digest FROM h
-        |  UNION ALL
-        |  SELECT 'long', count(*),
-        |         CAST(coalesce(sum(n_chars), 0) AS BIGINT),
-        |         coalesce(bit_xor(hh), 0) FROM h WHERE part = 'long'
-        |  UNION ALL
-        |  SELECT 'mid', count(*),
-        |         CAST(coalesce(sum(n_chars), 0) AS BIGINT),
-        |         coalesce(bit_xor(hh), 0) FROM h WHERE part = 'mid'
-        |  UNION ALL
-        |  SELECT 'short', count(*),
-        |         CAST(coalesce(sum(n_chars), 0) AS BIGINT),
-        |         coalesce(bit_xor(hh), 0) FROM h WHERE part = 'short'),
-        |r AS (
-        |  SELECT '~residual' AS stage,
-        |    CAST((SELECT n_rows FROM s WHERE stage = 'input')
-        |      - (SELECT sum(n_rows) FROM s WHERE stage <> 'input')
-        |      AS BIGINT) AS n_rows,
-        |    CAST((SELECT mass FROM s WHERE stage = 'input')
-        |      - (SELECT sum(mass) FROM s WHERE stage <> 'input')
-        |      AS BIGINT) AS mass,
-        |    (SELECT bit_xor(digest) FROM s) AS digest)
-        |SELECT stage, n_rows, mass, digest
-        |FROM (SELECT * FROM s UNION ALL SELECT * FROM r)
-        |ORDER BY stage""".stripMargin,
-
-    // autocorrelation: integer bucket counts, pairs via bucket+lag
-    // hash join, r from integer sums in the identical IEEE order
-    "q_autocorr" ->
-      """WITH c AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS b,
-        |         count(*) AS x
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |g AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS s,
-        |             CAST(sum(x * x) AS BIGINT) AS q FROM c),
-        |l AS (SELECT CAST(unnest([1, 2, 3, 6, 12, 24]) AS BIGINT)
-        |        AS lag),
-        |p AS (
-        |  SELECT l.lag, count(*) AS n_pairs,
-        |         CAST(sum(a.x * d.x) AS BIGINT) AS sxy,
-        |         CAST(sum(a.x) AS BIGINT) AS sx,
-        |         CAST(sum(d.x) AS BIGINT) AS sy
-        |  FROM l JOIN c a ON TRUE JOIN c d ON a.b + l.lag = d.b
-        |  GROUP BY l.lag)
-        |SELECT l.lag, coalesce(p.n_pairs, 0) AS n_pairs,
-        |  CASE WHEN p.n_pairs IS NOT NULL
-        |            AND (CAST(g.q AS DOUBLE)
-        |                 - CAST(g.n AS DOUBLE)
-        |                   * (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE))
-        |                   * (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE)))
-        |                > 0
-        |       THEN round((CAST(p.sxy AS DOUBLE)
-        |           - (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE))
-        |             * CAST(p.sx AS DOUBLE)
-        |           - (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE))
-        |             * CAST(p.sy AS DOUBLE)
-        |           + CAST(p.n_pairs AS DOUBLE)
-        |             * (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE))
-        |             * (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE)))
-        |         / (CAST(g.q AS DOUBLE)
-        |            - CAST(g.n AS DOUBLE)
-        |              * (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE))
-        |              * (CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE))), 6)
-        |       ELSE NULL END AS r
-        |FROM l LEFT JOIN p USING (lag), g ORDER BY lag""".stripMargin,
-
-    // phrase scan: the phrases are borderless (no proper prefix ==
-    // suffix), so non-overlapping replace-counting provably equals the
-    // automaton's all-positions count
-    "q_phrase_scan" ->
-      """WITH p(phrase) AS (VALUES ('table scan'), ('batch stream'),
-        |                          ('slow join'), ('spark'),
-        |                          ('data quality')),
-        |c AS (
-        |  SELECT doc_id, phrase,
-        |         CAST((length(text) - length(replace(text, phrase, '')))
-        |              // length(phrase) AS BIGINT) AS n
-        |  FROM documents, p)
-        |SELECT doc_id, phrase, n FROM c WHERE n > 0
-        |ORDER BY doc_id, phrase""".stripMargin,
-
-    // Jaro–Winkler: DuckDB's OWN independent implementation is the
-    // oracle — same pair construction, both engines round the same
-    // bit-identical double (byte-level match window, boost>0.7,
-    // 4-byte prefix cap; fuzz-pinned on 30k random pairs)
-    "q_jaro_winkler" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |         'user_' || source || '_' ||
-        |           CAST(doc_id % 97 AS VARCHAR) AS a
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, a,
-        |    CASE WHEN doc_id % 4 = 0 THEN a
-        |         WHEN doc_id % 4 = 1 THEN substr(a, 2)
-        |         WHEN doc_id % 4 = 2 THEN a || 'x'
-        |         ELSE translate(a, 'aeu', 'eaé') END AS b
-        |  FROM p)
-        |SELECT doc_id, round(jaro_winkler_similarity(a, b), 6) AS jw
-        |FROM q ORDER BY doc_id""".stripMargin,
-
-    // Spearman: identical doubled average ranks (2·less + n + 1) from
-    // the same O(distinct) cumulative frames, HUGEINT sufficient
-    // statistics, identical IEEE expression order for rho
-    "q_spearman" ->
-      """WITH b AS (
-        |  SELECT CAST(n_chars AS BIGINT) AS x,
-        |         CAST(len(list_filter(string_split_regex(trim(text),
-        |           '\s+'), s -> s <> '')) AS BIGINT) AS y
-        |  FROM documents
-        |  WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-        |cx AS (SELECT x AS value, count(*) AS n FROM b GROUP BY 1),
-        |rx AS (SELECT value,
-        |         2 * coalesce(sum(n) OVER (ORDER BY value
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |             0) + n + 1 AS r2
-        |       FROM cx),
-        |cy AS (SELECT y AS value, count(*) AS n FROM b GROUP BY 1),
-        |ry AS (SELECT value,
-        |         2 * coalesce(sum(n) OVER (ORDER BY value
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |             0) + n + 1 AS r2
-        |       FROM cy),
-        |j AS (SELECT CAST(rx.r2 AS HUGEINT) AS rv,
-        |             CAST(ry.r2 AS HUGEINT) AS sv
-        |      FROM b JOIN rx ON b.x = rx.value JOIN ry ON b.y = ry.value),
-        |g AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-        |             sum(rv) AS sx, sum(sv) AS sy, sum(rv * sv) AS sxy,
-        |             sum(rv * rv) AS sxx, sum(sv * sv) AS syy
-        |      FROM j)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
-        |            AND CAST(n * syy - sy * sy AS DOUBLE) > 0
-        |       THEN round(CAST(n * sxy - sx * sy AS DOUBLE)
-        |                  / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-        |                     * sqrt(CAST(n * syy - sy * sy AS DOUBLE))),
-        |                  6)
-        |       ELSE NULL END AS spearman_rho
-        |FROM g""".stripMargin,
-
-    // attention waste: the q_concat_pack placement CTE extended with
-    // per-window segment sums — all integers until the final ratio
-    "q_attention_waste" ->
-      s"""WITH $SeqTableCte,
-        |corpus AS (SELECT did, n_tok FROM s2
-        |           WHERE starts_with(did, 'doc_')),
-        |o AS (SELECT did, n_tok,
-        |        CAST(coalesce(sum(n_tok) OVER (ORDER BY did
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS BIGINT) AS off
-        |      FROM corpus),
-        |w AS (SELECT off, n_tok,
-        |        unnest(range(off // 512, (off + n_tok - 1) // 512 + 1))
-        |          AS window_id
-        |      FROM o WHERE n_tok > 0),
-        |seg AS (SELECT CAST(window_id AS BIGINT) AS window_id,
-        |          least(off + n_tok, (window_id + 1) * 512)
-        |            - greatest(off, window_id * 512) AS l
-        |        FROM w),
-        |a AS (SELECT window_id, CAST(sum(l) AS BIGINT) AS n_tokens,
-        |             CAST(count(*) AS BIGINT) AS n_segments,
-        |             CAST(sum(l * l) AS BIGINT) AS sumsq
-        |      FROM seg WHERE l > 0 GROUP BY 1)
-        |SELECT window_id, n_tokens, n_segments,
-        |  (n_tokens * n_tokens - sumsq) // 2 AS n_cross_pairs,
-        |  (n_tokens * (n_tokens - 1)) // 2 AS n_pairs,
-        |  CASE WHEN n_tokens > 1
-        |       THEN round(CAST((n_tokens * n_tokens - sumsq) // 2
-        |                       AS DOUBLE)
-        |                  / CAST((n_tokens * (n_tokens - 1)) // 2
-        |                         AS DOUBLE), 6)
-        |       ELSE NULL END AS waste
-        |FROM a ORDER BY window_id""".stripMargin,
-
-    // zone map: DuckDB re-reads the files Spark wrote and rebuilds the
-    // per-file (rows, min, max) triples — file identity dropped, the
-    // zone map is the multiset
-    "q_zone_map" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |       min(n_chars) AS min_val, max(n_chars) AS max_val
-        |FROM read_parquet('/tmp/graft_zonemap/*.parquet', filename=true)
-        |GROUP BY filename
-        |ORDER BY min_val, max_val, n_rows""".stripMargin,
-
-    "q_zone_skip" ->
-      """WITH zm AS (
-        |  SELECT filename, CAST(count(*) AS BIGINT) AS n_rows,
-        |         min(n_chars) AS mn, max(n_chars) AS mx
-        |  FROM read_parquet('/tmp/graft_zoneskip/*.parquet',
-        |                    filename=true)
-        |  GROUP BY filename)
-        |SELECT CAST(count(*) AS BIGINT) AS n_files,
-        |  CAST(sum(n_rows) AS BIGINT) AS n_rows,
-        |  CAST(sum(CASE WHEN mx < 100 OR mn > 150 THEN 1 ELSE 0 END)
-        |       AS BIGINT) AS n_files_skipped,
-        |  CAST(sum(CASE WHEN mx < 100 OR mn > 150 THEN n_rows ELSE 0 END)
-        |       AS BIGINT) AS n_rows_skipped,
-        |  CASE WHEN count(*) > 0
-        |       THEN round(CAST(sum(CASE WHEN mx < 100 OR mn > 150
-        |                                THEN 1 ELSE 0 END) AS DOUBLE)
-        |                  / CAST(count(*) AS DOUBLE), 6)
-        |       ELSE NULL END AS skip_fraction,
-        |  CASE WHEN sum(n_rows) > 0
-        |       THEN round(CAST(sum(CASE WHEN mx < 100 OR mn > 150
-        |                                THEN n_rows ELSE 0 END) AS DOUBLE)
-        |                  / CAST(sum(n_rows) AS DOUBLE), 6)
-        |       ELSE NULL END AS row_skip_fraction
-        |FROM zm""".stripMargin,
-
-    // Good–Turing: identical word split, count-of-counts, and the
-    // fixed order (r+1)·N_{r+1} / N_r — all integer inputs
-    "q_good_turing" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-        |    '\s+'), x -> x <> '')) AS w
-        |  FROM documents),
-        |wc AS (SELECT w, CAST(count(*) AS BIGINT) AS r
-        |       FROM tok GROUP BY w),
-        |coc AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r
-        |        FROM wc GROUP BY r),
-        |tot AS (SELECT CAST(sum(r) AS BIGINT) AS N FROM wc),
-        |obs AS (
-        |  SELECT c.r, c.n_r,
-        |         CAST((c.r + 1) * nx.n_r AS DOUBLE)
-        |           / CAST(c.n_r AS DOUBLE) AS rstar_raw,
-        |         CAST((c.r + 1) * nx.n_r AS DOUBLE)
-        |           / CAST(c.n_r AS DOUBLE) * CAST(c.n_r AS DOUBLE) AS mass
-        |  FROM coc c LEFT JOIN coc nx ON nx.r = c.r + 1),
-        |uns AS (
-        |  SELECT CAST(0 AS BIGINT) AS r, CAST(0 AS BIGINT) AS n_r,
-        |         CAST(NULL AS DOUBLE) AS rstar_raw,
-        |         CAST(n_r AS DOUBLE) AS mass
-        |  FROM coc WHERE r = 1),
-        |all_r AS (SELECT * FROM obs UNION ALL SELECT * FROM uns)
-        |SELECT r, n_r, round(rstar_raw, 6) AS r_star,
-        |  CASE WHEN r = 0 THEN round(mass / CAST(tot.N AS DOUBLE), 9)
-        |       ELSE round(rstar_raw / CAST(tot.N AS DOUBLE), 9)
-        |  END AS p_gt
-        |FROM all_r, tot ORDER BY r""".stripMargin,
-
-    // dedup saturation: identical planted boilerplate, md5 content
-    // keys, bucket arithmetic and cumulative window
-    "q_dup_saturation" ->
-      """WITH x AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 0
-        |         THEN 'boilerplate page ' || CAST(doc_id % 3 AS VARCHAR)
-        |         ELSE text END AS t
-        |  FROM documents),
-        |h AS (SELECT doc_id, md5(t) AS hh FROM x),
-        |f AS (SELECT hh, min(doc_id) AS fst FROM h GROUP BY hh),
-        |fl AS (SELECT h.doc_id // 50 AS bucket,
-        |              (h.doc_id > f.fst) AS dup
-        |       FROM h JOIN f USING (hh)),
-        |b AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |             CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT)
-        |               AS n_dups
-        |      FROM fl GROUP BY bucket),
-        |c AS (SELECT *,
-        |        CAST(sum(n_docs) OVER (ORDER BY bucket) AS BIGINT)
-        |          AS cum_docs,
-        |        CAST(sum(n_dups) OVER (ORDER BY bucket) AS BIGINT)
-        |          AS cum_dups
-        |      FROM b)
-        |SELECT bucket, n_docs, n_dups,
-        |  round(CAST(n_dups AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-        |    AS dup_rate,
-        |  cum_dups,
-        |  round(CAST(cum_dups AS DOUBLE) / CAST(cum_docs AS DOUBLE), 6)
-        |    AS cum_rate
-        |FROM c ORDER BY bucket""".stripMargin,
-
-    // Hill tail index: the ln-sum replayed in the SAME descending-value
-    // order via an ordered window cumsum
-    "q_hill_tail" ->
-      """WITH t AS (
-        |  SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_extendedprice > 0
-        |  ORDER BY x DESC LIMIT 51),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x DESC) AS rn FROM t),
-        |c AS (SELECT rn,
-        |        sum(ln(x / (SELECT min(x) FROM t)))
-        |          OVER (ORDER BY rn
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          AS s
-        |      FROM r WHERE rn <= 50)
-        |SELECT CAST(50 AS BIGINT) AS k,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM t) AS n_used,
-        |  CASE WHEN (SELECT count(*) FROM t) >= 51
-        |       THEN (SELECT min(x) FROM t) END AS x_tail,
-        |  CASE WHEN (SELECT count(*) FROM t) >= 51
-        |            AND (SELECT s FROM c WHERE rn = 50) > 0
-        |       THEN round(50.0 / (SELECT s FROM c WHERE rn = 50), 6)
-        |  END AS hill_alpha""".stripMargin,
-
-    // key containment: identical planted NULL keys, distinct-key
-    // frames, and fraction spellings
-    "q_key_containment" ->
-      """WITH lft AS (
-        |  SELECT CASE WHEN c_custkey % 37 = 0 THEN NULL
-        |              ELSE c_custkey END AS k
-        |  FROM customer),
-        |lr AS (SELECT CAST(count(*) AS BIGINT) AS n_left_rows,
-        |              CAST(count(k) AS BIGINT) AS n_left_nonnull
-        |       FROM lft),
-        |lk AS (SELECT k, CAST(count(*) AS BIGINT) AS c FROM lft
-        |       WHERE k IS NOT NULL GROUP BY k),
-        |rk AS (SELECT DISTINCT user_id AS k FROM events
-        |       WHERE user_id IS NOT NULL),
-        |sh AS (SELECT CAST(count(*) AS BIGINT) AS n_shared_keys,
-        |              CAST(coalesce(sum(lk.c), 0) AS BIGINT)
-        |                AS n_left_rows_matched
-        |       FROM lk JOIN rk USING (k)),
-        |ks AS (SELECT CAST(count(*) AS BIGINT) AS n_left_keys FROM lk),
-        |kr AS (SELECT CAST(count(*) AS BIGINT) AS n_right_keys FROM rk)
-        |SELECT lr.n_left_rows, lr.n_left_nonnull, ks.n_left_keys,
-        |  kr.n_right_keys, sh.n_shared_keys, sh.n_left_rows_matched,
-        |  CASE WHEN ks.n_left_keys > 0
-        |       THEN round(CAST(sh.n_shared_keys AS DOUBLE)
-        |                  / CAST(ks.n_left_keys AS DOUBLE), 6)
-        |  END AS key_containment,
-        |  CASE WHEN lr.n_left_nonnull > 0
-        |       THEN round(CAST(sh.n_left_rows_matched AS DOUBLE)
-        |                  / CAST(lr.n_left_nonnull AS DOUBLE), 6)
-        |  END AS row_coverage
-        |FROM lr, ks, kr, sh""".stripMargin,
-
-    // type inference: identical regex ladder (RE2-compatible classes,
-    // anchored) and the same calendar-validity try_cast for dates
-    "q_type_infer" ->
-      """WITH x AS (
-        |  SELECT CASE WHEN doc_id % 7 = 0 THEN '123'
-        |              WHEN doc_id % 7 = 1 THEN '-4.5e2'
-        |              WHEN doc_id % 7 = 2 THEN '2024-01-15'
-        |              WHEN doc_id % 7 = 3 THEN '2024-13-40'
-        |              WHEN doc_id % 7 = 4 THEN 'true'
-        |              WHEN doc_id % 7 = 5 THEN 'abc' END AS mixed,
-        |         CAST(doc_id % 1000 AS VARCHAR) AS ints,
-        |         CASE WHEN doc_id % 2 = 0 THEN '1.5' ELSE '7' END AS dbls,
-        |         CASE WHEN doc_id % 3 = 0 THEN '1999-12-31'
-        |              ELSE '2000-01-02' END AS dates
-        |  FROM documents),
-        |u AS (
-        |  SELECT 'dbls' AS col_name, dbls AS v FROM x UNION ALL
-        |  SELECT 'dates', dates FROM x UNION ALL
-        |  SELECT 'ints', ints FROM x UNION ALL
-        |  SELECT 'mixed', mixed FROM x),
-        |a AS (
-        |  SELECT col_name, CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_null,
-        |    CAST(sum(CASE WHEN regexp_matches(v, '^[+-]?[0-9]+$')
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_bigint,
-        |    CAST(sum(CASE WHEN regexp_matches(v,
-        |        '^[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?$')
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_double,
-        |    CAST(sum(CASE WHEN regexp_matches(v,
-        |        '^[0-9]{4}-[0-9]{2}-[0-9]{2}$')
-        |                  AND try_cast(v AS DATE) IS NOT NULL
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_date,
-        |    CAST(sum(CASE WHEN lower(v) IN ('true', 'false')
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_bool
-        |  FROM u GROUP BY col_name)
-        |SELECT col_name AS "column", n_rows, n_null, n_bigint, n_double,
-        |  n_date, n_bool,
-        |  CASE WHEN n_rows - n_null = 0 THEN 'empty'
-        |       WHEN n_bigint = n_rows - n_null THEN 'bigint'
-        |       WHEN n_double = n_rows - n_null THEN 'double'
-        |       WHEN n_date = n_rows - n_null THEN 'date'
-        |       WHEN n_bool = n_rows - n_null THEN 'boolean'
-        |       ELSE 'string' END AS suggested
-        |FROM a ORDER BY col_name""".stripMargin,
-
-    // event dups: identical planted replays; the oracle is the PLAIN
-    // quadratic self-join — banded candidates proven result-identical
-    "q_event_dups" ->
-      """WITH base AS (
-        |  SELECT event_id, user_id, event_type, ts FROM events),
-        |pl AS (
-        |  SELECT event_id + 1000000 AS event_id, user_id, event_type,
-        |         ts + INTERVAL 3 SECOND AS ts
-        |  FROM base WHERE event_id % 50 = 0),
-        |e AS (SELECT *, CAST(floor(epoch(ts)) AS BIGINT) AS s
-        |      FROM (SELECT * FROM base UNION ALL SELECT * FROM pl))
-        |SELECT a.user_id, a.event_type,
-        |       a.event_id AS id_a, b.event_id AS id_b,
-        |       abs(a.s - b.s) AS gap_s
-        |FROM e a JOIN e b
-        |  ON a.user_id = b.user_id AND a.event_type = b.event_type
-        | AND a.event_id < b.event_id AND abs(a.s - b.s) <= 10
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // CUSUM: same present-bucket counts, S_i = cum_int − i·(T/d)
-    "q_cusum" ->
-      """WITH c AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS bucket,
-        |         CAST(count(*) AS BIGINT) AS n_events
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_events) AS BIGINT) AS tt,
-        |             CAST(count(*) AS BIGINT) AS d FROM c),
-        |s AS (SELECT bucket, n_events,
-        |        CAST(sum(n_events) OVER (ORDER BY bucket) AS DOUBLE)
-        |          - CAST(row_number() OVER (ORDER BY bucket) AS DOUBLE)
-        |            * (CAST(t.tt AS DOUBLE) / CAST(t.d AS DOUBLE)) AS sv
-        |      FROM c, t),
-        |m AS (SELECT max(abs(sv)) AS mx FROM s),
-        |pb AS (SELECT min(bucket) AS pb FROM s, m WHERE abs(sv) = m.mx)
-        |SELECT bucket, n_events, round(sv, 6) AS cusum,
-        |       (bucket = pb.pb) AS is_peak
-        |FROM s, pb ORDER BY bucket""".stripMargin,
-
-    // Cramér's V: same contingency cells, margins re-aggregated, full
-    // grid with zero-observed cells contributing expected mass
-    "q_cramers_v" ->
-      """WITH cells AS (
-        |  SELECT coalesce(CAST(lang AS VARCHAR), '<null>') AS a,
-        |         coalesce(CAST(source AS VARCHAR), '<null>') AS b,
-        |         CAST(count(*) AS BIGINT) AS o
-        |  FROM documents GROUP BY 1, 2),
-        |ra AS (SELECT a, CAST(sum(o) AS BIGINT) AS ra FROM cells
-        |       GROUP BY a),
-        |cb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb FROM cells
-        |       GROUP BY b),
-        |n AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-        |             CAST(count(DISTINCT a) AS BIGINT) AS r,
-        |             CAST(count(DISTINCT b) AS BIGINT) AS c FROM cells),
-        |grid AS (
-        |  SELECT ra.a, cb.b, ra.ra, cb.cb,
-        |         coalesce(cells.o, 0) AS obs
-        |  FROM ra CROSS JOIN cb
-        |  LEFT JOIN cells ON cells.a = ra.a AND cells.b = cb.b),
-        |chi AS (
-        |  SELECT sum(
-        |    (CAST(obs AS DOUBLE)
-        |     - CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)
-        |       / CAST(n.n AS DOUBLE))
-        |    * (CAST(obs AS DOUBLE)
-        |       - CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)
-        |         / CAST(n.n AS DOUBLE))
-        |    / (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)
-        |       / CAST(n.n AS DOUBLE))) AS chi
-        |  FROM grid, n)
-        |SELECT n.n AS n, n.r AS r, n.c AS c,
-        |  round(chi.chi, 6) AS chi_square,
-        |  CASE WHEN least(n.r, n.c) > 1
-        |       THEN round(sqrt(chi.chi / (CAST(n.n AS DOUBLE)
-        |                  * CAST(least(n.r, n.c) - 1 AS DOUBLE))), 6)
-        |  END AS cramers_v
-        |FROM chi, n""".stripMargin,
-
-    // crawl traps: identical URL construction, host/path/prefix
-    // regex family, and the two trap signals
-    "q_crawl_traps" ->
-      """WITH u AS (
-        |  SELECT CASE WHEN doc_id % 4 = 0
-        |    THEN 'https://trap.example.com/calendar/p'
-        |         || CAST(doc_id % 7 AS VARCHAR) || '?page='
-        |         || CAST(doc_id AS VARCHAR)
-        |    ELSE 'https://' || source || '.example.com/sec'
-        |         || CAST(doc_id % 5 AS VARCHAR) || '/art'
-        |         || CAST(doc_id AS VARCHAR) END AS url
-        |  FROM documents),
-        |p AS (
-        |  SELECT coalesce(nullif(regexp_replace(regexp_replace(
-        |      regexp_extract(url,
-        |        '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1),
-        |      '^[^@]*@', ''), ':[0-9]*$', ''), ''), '<null>') AS host,
-        |    coalesce(nullif(regexp_extract(url,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(/[^?#]*)', 1), ''),
-        |      '/') AS path
-        |  FROM u),
-        |seg AS (
-        |  SELECT host, path,
-        |    '/' || array_to_string(
-        |      list_filter(string_split(path, '/'), x -> x <> '')[1:1],
-        |      '/') AS prefix
-        |  FROM p),
-        |tot AS (SELECT host, CAST(count(*) AS BIGINT) AS n_pages,
-        |               CAST(count(DISTINCT path) AS BIGINT) AS n_paths
-        |        FROM seg GROUP BY host),
-        |tp AS (SELECT host, CAST(max(c) AS BIGINT) AS top FROM (
-        |         SELECT host, prefix, count(*) AS c
-        |         FROM seg GROUP BY host, prefix) GROUP BY host)
-        |SELECT tot.host, tot.n_pages, tot.n_paths,
-        |  round(1.0 - CAST(tot.n_paths AS DOUBLE)
-        |              / CAST(tot.n_pages AS DOUBLE), 6)
-        |    AS path_dup_ratio,
-        |  round(CAST(tp.top AS DOUBLE) / CAST(tot.n_pages AS DOUBLE), 6)
-        |    AS top_prefix_share,
-        |  (tot.n_pages >= 50 AND
-        |   (round(1.0 - CAST(tot.n_paths AS DOUBLE)
-        |                / CAST(tot.n_pages AS DOUBLE), 6) > 0.5
-        |    OR round(CAST(tp.top AS DOUBLE)
-        |             / CAST(tot.n_pages AS DOUBLE), 6) > 0.5)) AS trap
-        |FROM tot JOIN tp USING (host) ORDER BY host""".stripMargin,
-
-    // magic sniff: identical hex prefixes (both engines uppercase),
-    // identical lying declared types
-    "q_magic_sniff" ->
-      """WITH x AS (
-        |  SELECT doc_id,
-        |    unhex(CASE WHEN doc_id % 5 = 0 THEN '89504E470D0A1A0A0000'
-        |               WHEN doc_id % 5 = 1 THEN 'FFD8FFE000104A464946'
-        |               WHEN doc_id % 5 = 2
-        |                 THEN '524946460800000057415645'
-        |               WHEN doc_id % 5 = 3 THEN '504B030414000000'
-        |               ELSE 'DEADBEEF00' END) AS bin,
-        |    CASE WHEN doc_id % 5 = 0 THEN 'image/png'
-        |         WHEN doc_id % 5 = 1 THEN 'image/png'
-        |         WHEN doc_id % 5 = 2 THEN 'audio/wav'
-        |         WHEN doc_id % 5 = 3 THEN NULL
-        |         ELSE 'image/png' END AS declared
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, declared, hex(bin) AS hx FROM x),
-        |v AS (
-        |  SELECT doc_id, declared,
-        |    CASE WHEN hx IS NULL THEN NULL
-        |         WHEN substr(hx, 1, 8) = '89504E47' THEN 'image/png'
-        |         WHEN substr(hx, 1, 6) = 'FFD8FF' THEN 'image/jpeg'
-        |         WHEN substr(hx, 1, 8) = '47494638' THEN 'image/gif'
-        |         WHEN substr(hx, 1, 8) = '52494646'
-        |              AND substr(hx, 17, 8) = '57415645'
-        |           THEN 'audio/wav'
-        |         WHEN substr(hx, 1, 8) = '52494646'
-        |              AND substr(hx, 17, 8) = '41564920'
-        |           THEN 'video/avi'
-        |         WHEN substr(hx, 1, 8) = '52494646' THEN 'riff/unknown'
-        |         WHEN substr(hx, 1, 8) = '25504446'
-        |           THEN 'application/pdf'
-        |         WHEN substr(hx, 1, 8) = '504B0304'
-        |           THEN 'application/zip'
-        |         ELSE 'unknown' END AS sniffed
-        |  FROM s)
-        |SELECT doc_id, declared, sniffed,
-        |  CASE WHEN declared IS NOT NULL THEN declared <> sniffed
-        |  END AS mismatch
-        |FROM v ORDER BY doc_id""".stripMargin,
-
-    // Neyman allocation: exact HUGEINT moments, the same fixed sigma /
-    // weight order, ordered-cumsum ΣW, identical largest-remainder
-    // ranking (remainder desc, stratum asc)
-    "q_neyman_alloc" ->
-      """WITH a AS (
-        |  SELECT coalesce(CAST(source AS VARCHAR), '<null>') AS stratum,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(n_chars AS HUGEINT)) AS sx,
-        |    sum(CAST(n_chars AS HUGEINT) * CAST(n_chars AS HUGEINT))
-        |      AS sxx
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |s AS (
-        |  SELECT stratum, n,
-        |    CASE WHEN n > 0 AND CAST(n * sxx - sx * sx AS DOUBLE) > 0
-        |         THEN sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-        |              / CAST(n AS DOUBLE)
-        |         ELSE 0.0 END AS sigma
-        |  FROM a),
-        |w AS (SELECT *, CAST(n AS DOUBLE) * sigma AS wt FROM s),
-        |tw AS (
-        |  SELECT max(cw) AS tot FROM (
-        |    SELECT sum(wt) OVER (ORDER BY stratum
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw
-        |    FROM w)),
-        |r AS (
-        |  SELECT w.*, CASE WHEN tw.tot > 0
-        |                   THEN 100.0 * wt / tw.tot ELSE 0.0 END AS raw
-        |  FROM w, tw),
-        |b AS (SELECT *, CAST(floor(raw) AS BIGINT) AS base,
-        |             raw - floor(raw) AS rem FROM r),
-        |lo AS (SELECT CASE WHEN (SELECT tot FROM tw) > 0
-        |                   THEN 100 - sum(base) ELSE 0 END AS l FROM b),
-        |rk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, stratum)
-        |              AS rn FROM b)
-        |SELECT stratum, n AS n_rows, round(sigma, 6) AS sigma,
-        |  round(wt, 6) AS weight,
-        |  least(base + CASE WHEN rn <= lo.l THEN 1 ELSE 0 END, n)
-        |    AS alloc,
-        |  (base + CASE WHEN rn <= lo.l THEN 1 ELSE 0 END) > n AS capped
-        |FROM rk, lo ORDER BY stratum""".stripMargin,
-
-    // winsorize: identical dyadic quantile_cont thresholds, identical
-    // clip CASE
-    "q_winsorize" ->
-      """WITH t AS (
-        |  SELECT quantile_cont(CAST(n_chars AS DOUBLE), 0.0625) AS lo,
-        |         quantile_cont(CAST(n_chars AS DOUBLE), 0.9375) AS hi
-        |  FROM documents WHERE n_chars IS NOT NULL)
-        |SELECT doc_id, n_chars,
-        |  CASE WHEN n_chars IS NULL THEN NULL
-        |       WHEN CAST(n_chars AS DOUBLE) < t.lo THEN t.lo
-        |       WHEN CAST(n_chars AS DOUBLE) > t.hi THEN t.hi
-        |       ELSE CAST(n_chars AS DOUBLE) END AS clipped,
-        |  CASE WHEN n_chars IS NULL THEN NULL
-        |       ELSE CAST(n_chars AS DOUBLE) < t.lo
-        |            OR CAST(n_chars AS DOUBLE) > t.hi
-        |  END AS was_clipped
-        |FROM documents, t ORDER BY doc_id""".stripMargin,
-
-    // JSON key discovery: identical planted keys; malformed rows are
-    // NULL in both engines and vanish at the explode/unnest
-    "q_json_keys" ->
-      """WITH x AS (
-        |  SELECT CASE
-        |    WHEN doc_id % 13 = 0 THEN '{bad'
-        |    WHEN doc_id % 3 = 0
-        |      THEN '{"k":' || CAST(doc_id % 100 AS VARCHAR)
-        |           || ',"extra":1}'
-        |    WHEN doc_id % 5 = 0
-        |      THEN '{"k":' || CAST(doc_id % 100 AS VARCHAR)
-        |           || ',"utm":"x","ts":0}'
-        |    ELSE '{"k":' || CAST(doc_id % 100 AS VARCHAR) || '}'
-        |  END AS props
-        |  FROM documents),
-        |keys AS (
-        |  SELECT unnest(CASE WHEN json_valid(props)
-        |                     THEN json_keys(props) END) AS key
-        |  FROM x)
-        |SELECT key, CAST(count(*) AS BIGINT) AS n
-        |FROM keys GROUP BY key
-        |ORDER BY n DESC, key LIMIT 10""".stripMargin,
-
-    // round-trip loss: the q_tokenize/q_detokenize CTEs composed into
-    // the one corpus rate; equality iff no OOV word in the doc
-    "q_roundtrip_loss" ->
-      """WITH wl AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS l
-        |  FROM documents),
-        |words AS (
-        |  SELECT doc_id, unnest(l) AS word,
-        |         CAST(unnest(range(0, len(l))) AS INTEGER) AS pos
-        |  FROM wl),
-        |vocab AS (
-        |  SELECT word FROM (SELECT word, count(*) AS n FROM words
-        |                    GROUP BY 1 ORDER BY n DESC, word LIMIT 20)),
-        |rt AS (
-        |  SELECT w.doc_id, w.pos,
-        |    CASE WHEN v.word IS NOT NULL THEN w.word ELSE '<unk>' END
-        |      AS wout
-        |  FROM words w LEFT JOIN vocab v USING (word)),
-        |r2 AS (
-        |  SELECT d.doc_id,
-        |    coalesce(string_agg(wout, ' ' ORDER BY pos), '') AS rt
-        |  FROM documents d LEFT JOIN rt ON d.doc_id = rt.doc_id
-        |  GROUP BY d.doc_id),
-        |canon AS (SELECT doc_id, array_to_string(l, ' ') AS canon
-        |          FROM wl)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN rt = canon THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_exact,
-        |  round(CAST(count(*) - sum(CASE WHEN rt = canon THEN 1 ELSE 0
-        |                            END) AS DOUBLE)
-        |        / CAST(count(*) AS DOUBLE), 6) AS loss_rate
-        |FROM r2 JOIN canon USING (doc_id)""".stripMargin,
-
-    // shard manifest: identical 60-bit md5-prefix XOR digest — hex
-    // casts agree ('0x…'::BIGINT here, conv(…,16,10) there)
-    "q_shard_manifest" ->
-      """SELECT doc_id % 8 AS shard_id,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(coalesce(length(text), 0)) AS BIGINT) AS char_mass,
-        |  bit_xor(CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT))
-        |    AS digest
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // z-order skipping: DuckDB re-reads the z-clustered files and
-    // replays the per-dimension skip rule
-    "q_zorder_skip" ->
-      """WITH zm AS (
-        |  SELECT filename, CAST(count(*) AS BIGINT) AS n_rows,
-        |         min(n_chars) AS mn1, max(n_chars) AS mx1,
-        |         min(bucket2) AS mn2, max(bucket2) AS mx2
-        |  FROM read_parquet('/tmp/graft_zorder/*.parquet',
-        |                    filename=true)
-        |  GROUP BY filename),
-        |d1 AS (
-        |  SELECT 'n_chars' AS dim, CAST(count(*) AS BIGINT) AS n_files,
-        |    CAST(sum(n_rows) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN mx1 < 100 OR mn1 > 150 THEN 1 ELSE 0
-        |             END) AS BIGINT) AS n_files_skipped,
-        |    CAST(sum(CASE WHEN mx1 < 100 OR mn1 > 150 THEN n_rows
-        |             ELSE 0 END) AS BIGINT) AS n_rows_skipped
-        |  FROM zm),
-        |d2 AS (
-        |  SELECT 'bucket2' AS dim, CAST(count(*) AS BIGINT) AS n_files,
-        |    CAST(sum(n_rows) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN mx2 < 0 OR mn2 > 31 THEN 1 ELSE 0
-        |             END) AS BIGINT) AS n_files_skipped,
-        |    CAST(sum(CASE WHEN mx2 < 0 OR mn2 > 31 THEN n_rows
-        |             ELSE 0 END) AS BIGINT) AS n_rows_skipped
-        |  FROM zm),
-        |u AS (SELECT * FROM d1 UNION ALL SELECT * FROM d2)
-        |SELECT n_files, n_rows, n_files_skipped, n_rows_skipped,
-        |  CASE WHEN n_files > 0
-        |       THEN round(CAST(n_files_skipped AS DOUBLE)
-        |                  / CAST(n_files AS DOUBLE), 6)
-        |  END AS skip_fraction,
-        |  CASE WHEN n_rows > 0
-        |       THEN round(CAST(n_rows_skipped AS DOUBLE)
-        |                  / CAST(n_rows AS DOUBLE), 6)
-        |  END AS row_skip_fraction,
-        |  dim
-        |FROM u ORDER BY dim""".stripMargin,
-
-    // rule triage: counts + distinct docs + min/max exemplars over the
-    // flagship violation rows
-    "q_rule_examples" ->
-      s"""WITH $SeqTableCte,
-        |v AS ($SeqViolationsSql)
-        |SELECT rule_id, CAST(count(*) AS BIGINT) AS n_violations,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM v GROUP BY rule_id ORDER BY rule_id""".stripMargin,
-
-    // rare categories: identical planted one-doc source, exact shares
-    "q_rare_categories" ->
-      """WITH x AS (
-        |  SELECT CASE WHEN doc_id = 499 THEN 'exotic' ELSE source END
-        |    AS category
-        |  FROM documents),
-        |c AS (SELECT coalesce(category, '<null>') AS category,
-        |             CAST(count(*) AS BIGINT) AS n
-        |      FROM x GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM c)
-        |SELECT category, n,
-        |  round(CAST(n AS DOUBLE) / CAST(t.t AS DOUBLE), 6) AS share,
-        |  round(CAST(n AS DOUBLE) / CAST(t.t AS DOUBLE), 6) < 0.02
-        |    AS rare
-        |FROM c, t ORDER BY category""".stripMargin,
-
-    // score explanation: the q_logistic_quality feature CTE with the
-    // additive terms ranked (contribution desc, feature asc); ±0.0
-    // canonicalized on BOTH sides so ordering and output agree
-    "q_score_explain" ->
-      """WITH feat AS (
-        |  SELECT doc_id,
-        |    len(ws) AS n_words,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(list_sum(list_transform(ws, x -> length(x)))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS mwl,
-        |    round((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g')))::DOUBLE
-        |      / greatest(length(text), 1), 4) AS punct_ratio,
-        |    CASE WHEN len(ws) > 0
-        |      THEN round(len(list_filter(ws, x -> x IN
-        |        ('the','and','of','to','in','is','that','it','was','for')))::DOUBLE / len(ws), 4)
-        |      ELSE 0.0 END AS stop_ratio
-        |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |terms AS (
-        |  SELECT doc_id, f, c + 0.0 AS c FROM (
-        |    SELECT doc_id,
-        |      unnest(['mean_word_len', 'n_words', 'punct_ratio',
-        |              'stopword_ratio']) AS f,
-        |      unnest([mwl * 0.5, n_words * 0.02, punct_ratio * -8.0,
-        |              stop_ratio * 4.0]) AS c
-        |    FROM feat)),
-        |r AS (SELECT doc_id, f, c,
-        |        row_number() OVER (PARTITION BY doc_id
-        |                           ORDER BY c DESC, f) AS rn
-        |      FROM terms)
-        |SELECT feat.doc_id,
-        |  max(CASE WHEN rn = 1 THEN f END) AS top1_feature,
-        |  round(max(CASE WHEN rn = 1 THEN c END), 6) AS top1_contrib,
-        |  max(CASE WHEN rn = 2 THEN f END) AS top2_feature,
-        |  round(max(CASE WHEN rn = 2 THEN c END), 6) AS top2_contrib,
-        |  round(mwl * 0.5 + n_words * 0.02 + punct_ratio * -8.0
-        |        + stop_ratio * 4.0 + -2.0, 6) AS log_odds
-        |FROM feat JOIN r USING (doc_id)
-        |GROUP BY feat.doc_id, mwl, n_words, punct_ratio, stop_ratio
-        |ORDER BY doc_id""".stripMargin)
-
-  /** DuckDB CTE rebuilding [[seqFromDocs]] byte-identically from the
-    * documents parquet (shared by the two flagship oracles). */
-  private val SeqTableCte: String =
-    """s0 AS (
-      |  SELECT doc_id AS id,
-      |    CASE WHEN doc_id % 97 = 0 THEN '  '
-      |         WHEN doc_id % 97 = 1 THEN 'DOC-' || CAST(doc_id AS VARCHAR)
-      |         ELSE printf('doc_%012d', doc_id) END AS did,
-      |    (doc_id % 7 + 5) AS ln,
-      |    list_transform(range(0, doc_id % 7 + 5),
-      |      i -> (doc_id * 31 + i * 17) % 50000) AS toks0
-      |  FROM documents),
-      |s2 AS (
-      |  SELECT did,
-      |    CASE WHEN id % 97 = 3 THEN list_concat([50007], toks0[2:])
-      |         ELSE toks0 END AS toks,
-      |    CASE WHEN id % 97 = 2 THEN ln + 1 ELSE ln END AS n_tok,
-      |    CASE WHEN id % 97 = 4 THEN 'scraped'
-      |         ELSE list_extract(['web','books','code','wiki'],
-      |                CAST(id % 4 AS INT) + 1) END AS source
-      |  FROM s0)""".stripMargin
-
-  /** Violation rows over the CTE — one SELECT per seq constraint,
-    * mirroring ValidationPass.seqConstraints semantics exactly. */
-  private val SeqViolationsSql: String =
-    """SELECT did AS doc_id, 'R_NONNULL_DOCID' AS rule_id, did AS offending_value
-      |  FROM s2 WHERE did IS NULL OR regexp_matches(did, '^\s*$')
-      |  UNION ALL
-      |  SELECT did, 'R_REGEX_DOCID', did
-      |  FROM s2 WHERE NOT regexp_matches(did, '^(?:doc_[0-9]{12})$')
-      |  UNION ALL
-      |  SELECT did, 'R_NTOK_EQ_SIZE',
-      |    'n_tok=' || CAST(n_tok AS VARCHAR) || ' size=' || CAST(len(toks) AS VARCHAR)
-      |  FROM s2 WHERE n_tok <> len(toks)
-      |  UNION ALL
-      |  SELECT did, 'R_TOKEN_RANGE',
-      |    'min=' || CAST(list_min(toks) AS VARCHAR) || ' max=' || CAST(list_max(toks) AS VARCHAR)
-      |  FROM s2 WHERE NOT (list_max(toks) < 50000 AND list_min(toks) >= 0)
-      |  UNION ALL
-      |  SELECT did, 'R_ENUM_SOURCE', source
-      |  FROM s2 WHERE source NOT IN ('web','books','code','wiki')""".stripMargin
+  /** Every driver query, family by family. */
+  val specs: Seq[QuerySpec] = Seq(
+    ProfileQueries.specs, DriftQueries.specs, EventQueries.specs,
+    TextQueries.specs, DedupQueries.specs, EmbeddingQueries.specs,
+    SeqQueries.specs, CurationQueries.specs, LayoutQueries.specs).flatten
+
+  private val duplicates = specs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+  require(duplicates.isEmpty, s"query names defined twice: ${duplicates.toSeq.sorted.mkString(", ")}")
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+
+  /** The DuckDB oracle of every query that has one (rows-only ones are
+    * absent, as the driver expects). */
+  val oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(name, _, Sql(text)) => name -> text }.toMap
 }

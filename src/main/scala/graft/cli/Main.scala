@@ -3,9 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.model.Violation
 import graft.operators.{Drift, Uniqueness, ValidationPass}
-import graft.report.{Report, ReportCollector}
 import graft.sources.SeqTableGen
 
 /** spark-submit entry point for the validation engine.
@@ -97,7 +95,7 @@ object Main {
         docs.repartition(4).write.mode("overwrite").parquet(landing)
         val stream = spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = graft.streaming.StreamingValidation.runToMemorySink(
+        graft.streaming.StreamingValidation.runToMemorySink(
           gates(stream).select("doc_id"), "stream_curate_out")
         val kept = spark.table("stream_curate_out").count()
         val batchKept = gates(docs).count()
@@ -334,10 +332,11 @@ object Main {
     val stored = spark.read.parquet(path)
     val partitioned = stored.columns.contains("part_bucket")
     val df = if (partitioned) stored else stored.withColumn("part_bucket", lit("all"))
-    val partitions =
-      if (partitioned) df.select("part_bucket").distinct()
-        .collect().map(_.get(0).toString).sorted.toSeq
-      else Seq("all")
+    // one scan of the partition column gives the partition list and
+    // every partition's row count (the verdicts' `rows`)
+    val rowsByPart = df.groupBy("part_bucket").count()
+      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val partitions = if (partitioned) rowsByPart.keys.toSeq.sorted else Seq("all")
     val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
     val todo = partitions.filterNot(mf.isComplete)
     println(s"""{"mode":"validate","partitions":${partitions.size},"todo":${todo.size}}""")
@@ -359,7 +358,7 @@ object Main {
     // from THIS run's rows — never from the sink. Building it reads the
     // slice three times (the fused constraint pass, the uniqueness
     // aggregate and its join-back); the partition list and the row
-    // counts each scan the partition column once more.
+    // counts came from one earlier scan of the partition column.
     // (Re-reading $out/violations was wrong: a pending partition with
     // zero violations writes no directory, so stale files from an earlier
     // run into the same out dir would be counted and the partition
@@ -383,10 +382,8 @@ object Main {
       .partitionBy("part_bucket")
       .parquet(s"$out/violations")
 
-    // per-partition verdicts: two tiny aggregates (shuffle rows =
+    // per-partition verdicts: one tiny aggregate (shuffle rows =
     // O(partitions))
-    val rowsByPart = slice.groupBy("part_bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
     val violByPart = all
       .groupBy("part_bucket").agg(count(lit(1)).as("n"))
       .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
@@ -607,7 +604,6 @@ object Main {
 
   /** In-memory demo: generate → validate → render report. */
   def demo(spark: SparkSession, n: Long): Unit = {
-    import graft.norm.Normalize
     val t0 = System.nanoTime()
     val df = SeqTableGen.generate(spark, n)
     val constraints = ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout advisors: the storage-side validation tier that
@@ -46,7 +46,6 @@ object StorageAudit {
                     rleRunLen: Double = 4.0,
                     dictRatio: Double = 0.01): DataFrame = {
     require(cols.nonEmpty, "encodingAudit needs at least one column")
-    val spark = df.sparkSession
     val narrow = df.select(
       (col(idCol).cast("long").as("__id") +:
         cols.map(c => col(c).cast("string").as(c))): _*)

@@ -1643,7 +1643,7 @@ object TextAnalysis {
         col("n_script_chars") > 0 && col("purity") < minPurity)
       // shuffle boundary before the sort: range partitioning samples
       // its child first, and without it the 4-regex projection above
-      // evaluates twice per action (the SparkEntry orderedOnce note)
+      // evaluates twice per action (the queries.Fixtures.orderedOnce note)
       .repartition(col(idCol))
       .orderBy(col(idCol))
   }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, StringWriter}
+import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
